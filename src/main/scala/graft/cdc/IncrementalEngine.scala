@@ -17,8 +17,8 @@ import org.apache.spark.sql.types.StringType
   * 5 000, `sync.py:1443-1493`) and re-run the assembly query per chunk.
   *
   * Spark-first redesign:
-  *   - affected-root resolution = ONE lineage-table hash join
-  *     ([[Lineage.resolve]]) ∪ an FK walk-up join chain — no chunking, no
+  *   - affected-root resolution = ONE lineage-table hash join on the
+  *     batch's key values ∪ an FK walk-up join chain — no chunking, no
   *     65 536-term cap, no sink round-trip.
   *   - re-assembly = the same single [[DocAssembler]] plan with the root
   *     scan semi-joined to the affected id set (broadcast — a batch of
@@ -197,22 +197,49 @@ final class IncrementalEngine(
     }
 
     // 2. Lineage resolution: child/through pk values → root ids (replaces
-    //    the reference's ES `_meta` terms search, sync.py:835-1052).
-    val keyTables = treePks.collect { case (t, _) if t != root.table && touches(t) => t }
-    val keyParts = for {
-      (t, pks) <- treePks if t != root.table && touches(t)
-      pk <- pks
-    } yield changes
-      .filter(col("tbl") === t && col("tg_op") =!= Changes.Truncate)
-      .select(bothPayloads)
-      .select(lit(t).as("tbl"), lit(pk).as("pk"), get_json_object(col("__p"), s"$$.$pk").as("value"))
-      .filter(col("value").isNotNull)
-    keyParts.reduceOption(_ unionAll _).foreach { keys =>
+    //    the reference's ES `_meta` terms search, sync.py:835-1052). A
+    //    change row resolves to the roots whose lineage holds EVERY one of
+    //    its pk values — the reference's per-payload AND of `terms` filters
+    //    — so a lineitem (X, k) hits order X, not every order with a k-th
+    //    line. All values go through one broadcast lineage join; a key's
+    //    per-column matches are then joined on root_id and semi-joined on
+    //    the rows' key tuples.
+    val keyTables = treePks.filter { case (t, pks) => t != root.table && pks.nonEmpty && touches(t) }
+    if (keyTables.nonEmpty) {
+      def keyTuples(t: String, pks: Seq[String]): DataFrame =
+        changes
+          .filter(col("tbl") === t && col("tg_op") =!= Changes.Truncate)
+          .select(bothPayloads)
+          .select(jsonVals(col("__p"), pks).zipWithIndex.map { case (c, i) => c.as(s"__v$i") }: _*)
+          .na.drop("any")
+      val keys = keyTables
+        .flatMap { case (t, pks) =>
+          pks.zipWithIndex.map { case (pk, i) =>
+            keyTuples(t, pks).select(lit(t).as("tbl"), lit(pk).as("pk"), col(s"__v$i").as("value"))
+          }
+        }
+        .reduce(_ unionAll _)
       // pre-filter the (large) lineage side by the tables this batch touches
       // — an ordinary pushed predicate, so a tbl-sorted/partitioned lineage
       // layout prunes row groups before the join
-      val pruned = lineage.filter(col("tbl").isin(keyTables: _*))
-      parts :+= Lineage.resolve(pruned, keys.distinct()).select(col("root_id").as("_id"))
+      val matched = lineage
+        .filter(col("tbl").isin(keyTables.map(_._1): _*))
+        .join(broadcast(keys.distinct()), Seq("tbl", "pk", "value"))
+      keyTables.foreach { case (t, pks) =>
+        val perColumn = pks.indices.map { i =>
+          matched
+            .filter(col("tbl") === t && col("pk") === pks(i))
+            .select(col("root_id"), col("value").as(s"__v$i"))
+        }
+        // a single-column key is matched whole by the lineage join already
+        val roots =
+          if (pks.size == 1) perColumn.head
+          else
+            perColumn
+              .reduce(_.join(_, "root_id"))
+              .join(broadcast(keyTuples(t, pks).distinct()), pks.indices.map(i => s"__v$i"), "left_semi")
+        parts :+= roots.select(col("root_id").as("_id"))
+      }
     }
 
     // 3. FK walk-up for rows not yet in any doc's lineage (inserts; also the

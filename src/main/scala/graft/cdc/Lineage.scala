@@ -69,13 +69,4 @@ object Lineage {
     fromDocs(docs.select(
       col(DocAssembler.IdColumn),
       from_json(col(metaJsonCol), metaType).as(DocAssembler.MetaColumn)))
-
-  /** Root ids whose lineage intersects `keys` (columns: tbl, pk, value).
-    * `keys` is the small side (one batch of changes) — broadcast it.
-    */
-  def resolve(lineage: DataFrame, keys: DataFrame): DataFrame =
-    lineage
-      .join(broadcast(keys), Seq("tbl", "pk", "value"))
-      .select(col("root_id"))
-      .distinct()
 }

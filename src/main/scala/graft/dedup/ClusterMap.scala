@@ -504,7 +504,14 @@ object ClusterMap {
     // by this tier's ceiling), so the collect is safe even when the cc
     // itself ran distributed
     val labelRows: Array[Row] = staged("cc") {
-      Dedup.connectedComponents(contracted, maxIter, ccInMemPairs).collect()
+      val labels = Dedup.connectedComponents(contracted, maxIter, ccInMemPairs)
+      // the distributed loop returns a localCheckpoint-pinned frame: release
+      // its blocks now instead of at driver GC (one leak per stream batch)
+      try labels.collect()
+      finally {
+        try org.apache.spark.sql.GraftColumnBridge.unpersistLocalCheckpoint(labels)
+        catch { case scala.util.control.NonFatal(_) => () }
+      }
     }
     val labelsLocal = spark.createDataFrame(
       java.util.Arrays.asList(labelRows: _*),

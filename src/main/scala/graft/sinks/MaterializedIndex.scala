@@ -3,10 +3,14 @@ package graft.sinks
 import graft.assemble.DocAssembler
 import graft.cdc.Lineage
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
 import java.nio.charset.StandardCharsets
 
@@ -24,6 +28,13 @@ import java.nio.charset.StandardCharsets
   * flips atomically after the new buckets are written, preserving the
   * idempotent-upsert-by-`_id` guarantee the reference relies on
   * (`sync.py:1947-1983`).
+  *
+  * The manifest is also the index's FILE index (the Delta Lake log's role):
+  * each write records every bucket's parquet file and length, and every
+  * read scans exactly those files through a manifest-backed
+  * [[org.apache.spark.sql.execution.datasources.FileIndex]] — no directory
+  * listing, so no Spark listing job per read however many buckets it
+  * spans. Each bucket holds exactly one file per version.
   */
 final class MaterializedIndex(spark: SparkSession, dir: String, nBuckets: Int = 64) {
 
@@ -98,75 +109,112 @@ final class MaterializedIndex(spark: SparkSession, dir: String, nBuckets: Int = 
 
   def exists: Boolean = currentVersion >= 0
 
-  // ---- manifest: bucket → version that owns its current data ---------------
+  // ---- manifest: bucket → version that owns its current data, and its file --
 
-  private def manifestPath(v: Long) = new Path(dir, s"v_$v/manifest")
+  private val root = fs.makeQualified(new Path(dir))
 
-  /** Lines `kind,bucket,version`. */
-  private def readManifest(v: Long): Map[(String, Int), Long] =
-    if (!fs.exists(manifestPath(v))) Map.empty
+  private def manifestPath(v: Long) = new Path(root, s"v_$v/manifest")
+
+  private def kindDir(kind: String, v: Long) = new Path(root, s"v_$v/$kind")
+
+  private def bucketDir(kind: String, b: Int, v: Long) = new Path(kindDir(kind, v), s"bucket=$b")
+
+  /** One data file of bucket `bucket`, written by version `version`. */
+  private final case class BucketFile(kind: String, bucket: Int, version: Long, length: Long, name: String) {
+    def path: Path = new Path(bucketDir(kind, bucket, version), name)
+  }
+
+  /** Lines `kind,bucket,version,length,file`. A manifest from before the
+    * file field has no file list to read from; such an index is rebuilt by
+    * a snapshot.
+    */
+  private def readManifest(v: Long): Seq[BucketFile] =
+    if (!fs.exists(manifestPath(v))) Nil
     else
-      readText(manifestPath(v)).split("\n").filter(_.nonEmpty).map { line =>
-        val Array(kind, b, ver) = line.split(",")
-        (kind, b.toInt) -> ver.toLong
-      }.toMap
+      readText(manifestPath(v)).split("\n").filter(_.nonEmpty).toSeq.map { line =>
+        line.split(",", 5) match {
+          case Array(kind, b, ver, len, name) => BucketFile(kind, b.toInt, ver.toLong, len.toLong, name)
+          case _ =>
+            throw new IllegalStateException(
+              s"$dir: manifest of v_$v has no file list ('$line'); rebuild the index with a snapshot")
+        }
+      }
 
-  private def writeManifest(v: Long, m: Map[(String, Int), Long]): Unit = {
-    val body = m.toSeq.sortBy(e => (e._1._1, e._1._2))
-      .map { case ((kind, b), ver) => s"$kind,$b,$ver" }
-      .mkString("\n")
-    writeText(manifestPath(v), body)
+  private def writeManifest(v: Long, files: Seq[BucketFile]): Unit =
+    writeText(
+      manifestPath(v),
+      files.sortBy(f => (f.kind, f.bucket, f.name))
+        .map(f => s"${f.kind},${f.bucket},${f.version},${f.length},${f.name}")
+        .mkString("\n"))
+
+  /** The data files a write left under `v_<v>/<kind>`: one recursive
+    * listing of the just-written directory, keeping `bucket=<b>/<file>`
+    * entries and skipping Spark's `_SUCCESS`, `_temporary` and `.crc` ones.
+    */
+  private def listWritten(kind: String, v: Long): Seq[BucketFile] = {
+    val out = kindDir(kind, v)
+    val files = Seq.newBuilder[BucketFile]
+    if (fs.exists(out)) {
+      val prefix = out.toUri.getPath + "/"
+      val it = fs.listFiles(out, true)
+      while (it.hasNext) {
+        val st = it.next()
+        st.getPath.toUri.getPath.stripPrefix(prefix).split("/") match {
+          case Array(b, name) if b.startsWith("bucket=") && !name.startsWith("_") && !name.startsWith(".") =>
+            files += BucketFile(kind, b.stripPrefix("bucket=").toInt, v, st.getLen, name)
+          case _ =>
+        }
+      }
+    }
+    files.result()
   }
 
-  private def bucketDir(kind: String, b: Int, v: Long) = s"$dir/v_$v/$kind/bucket=$b"
+  /** Scan exactly `files` (see [[MaterializedIndex.ManifestFileIndex]]). */
+  private def scan(schema: StructType, files: Seq[BucketFile]): DataFrame =
+    spark.baseRelationToDataFrame(
+      HadoopFsRelation(
+        MaterializedIndex.ManifestFileIndex(files.map(f => new FileStatus(f.length, false, 0, 0L, 0L, f.path))),
+        partitionSchema = new StructType(),
+        dataSchema = schema,
+        bucketSpec = None,
+        fileFormat = new ParquetFileFormat,
+        options = Map.empty
+      )(spark))
 
-  private def read(kind: String, schema: StructType, version: Long = -1L): DataFrame = {
-    val at = if (version >= 0) version else currentVersion
-    val paths = readManifest(at).collect {
-      case ((k, b), v) if k == kind => bucketDir(kind, b, v)
-    }.toSeq
-    if (paths.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(paths: _*)
-  }
+  private def read(kind: String, schema: StructType, version: Long = -1L): DataFrame =
+    scan(schema, readManifest(if (version >= 0) version else currentVersion).filter(_.kind == kind))
 
   def docs: DataFrame = read("docs", docsSchema)
 
   def lineage: DataFrame = read("lineage", Lineage.schema)
 
-  /** Read ONLY the given buckets' files of the current version — the
-    * manifest is the pruning index, so per-batch reads are O(affected
-    * buckets) like the writes (no full-index scan + re-hash filter).
-    */
-  private def readBuckets(kind: String, schema: StructType, buckets: Set[Int]): DataFrame = {
-    val paths = readManifest(currentVersion).collect {
-      case ((k, b), v) if k == kind && buckets.contains(b) => bucketDir(kind, b, v)
-    }.toSeq
-    if (paths.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(paths: _*)
-  }
-
   /** Time travel: the document set as of an earlier (un-vacuumed) version. */
   def docsAt(version: Long): DataFrame = read("docs", docsSchema, version)
 
-  /** Write `df` partitioned by bucket under version `v`; returns the bucket
-    * ids actually written (empty buckets produce no directory).
+  /** Write `df` partitioned by bucket under version `v`; returns the files
+    * written (empty buckets produce none).
     */
-  private def writeBuckets(kind: String, v: Long, df: DataFrame, idCol: String): Set[Int] = {
-    val out = s"$dir/v_$v/$kind"
-    // repartition ON the bucket id before partitionBy: otherwise every write
-    // task emits a file into every bucket directory (tasks × nBuckets small
-    // files per version — the classic small-files failure, and measurably
-    // the dominant cost of the snapshot→incremental lifecycle even at
-    // sf0.1). One shuffle keyed by bucket bounds it at one file per bucket.
+  private def writeBuckets(kind: String, v: Long, df: DataFrame, idCol: String): Seq[BucketFile] = {
+    writeBucketed(df, idCol, kindDir(kind, v), SaveMode.Overwrite, nBuckets)
+    listWritten(kind, v)
+  }
+
+  /** Write `df` partitioned by its bucket hash of `idCol` into `out`, with
+    * `buckets` = the number of buckets the rows can fall into.
+    *
+    * The shuffle is ON the bucket id before partitionBy: otherwise every
+    * write task emits a file into every bucket directory (tasks × nBuckets
+    * small files per version — the classic small-files failure). Each
+    * bucket lands in exactly one task, so it still gets exactly one file,
+    * while the task count is min(buckets, spark.sql.shuffle.partitions):
+    * sized to the cluster rather than to the bucket count, whose extra
+    * tasks at batch scale are per-task overhead with almost no data.
+    */
+  private def writeBucketed(df: DataFrame, idCol: String, out: Path, mode: SaveMode, buckets: Int): Unit = {
+    val tasks = math.max(1, math.min(buckets, spark.conf.get("spark.sql.shuffle.partitions").toInt))
     df.withColumn("bucket", bucketOf(col(idCol)))
-      .repartition(nBuckets, col("bucket"))
-      .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(out)
-    fs.listStatus(new Path(out))
-      .map(_.getPath.getName)
-      .collect { case s if s.startsWith("bucket=") => s.stripPrefix("bucket=").toInt }
-      .toSet
+      .repartition(tasks, col("bucket"))
+      .write.mode(mode).partitionBy("bucket").parquet(out.toString)
   }
 
   /** Bootstrap from a full snapshot of structured docs (assemble() output:
@@ -204,18 +252,18 @@ final class MaterializedIndex(spark: SparkSession, dir: String, nBuckets: Int = 
     val d = writeBuckets("docs", 0L, flat, DocAssembler.IdColumn)
     val metaType = structuredDocs.schema(DocAssembler.MetaColumn).dataType
     val l =
-      if (d.isEmpty) Set.empty[Int]
+      if (d.isEmpty) Nil
       else {
-        val written = spark.read
-          .schema(StructType(Seq(
+        val written = scan(
+          StructType(Seq(
             StructField(DocAssembler.IdColumn, StringType),
-            StructField(MetaSidecarColumn, StringType))))
-          .parquet(d.map(b => bucketDir("docs", b, 0L)).toSeq: _*)
+            StructField(MetaSidecarColumn, StringType))),
+          d)
         writeBuckets(
           "lineage", 0L,
           Lineage.fromMetaJson(written, MetaSidecarColumn, metaType), "root_id")
       }
-    writeManifest(0L, (d.map(b => ("docs", b) -> 0L) ++ l.map(b => ("lineage", b) -> 0L)).toMap)
+    writeManifest(0L, d ++ l)
     flipCurrent(0L)
   }
 
@@ -301,12 +349,9 @@ final class MaterializedIndex(spark: SparkSession, dir: String, nBuckets: Int = 
         to_json(struct(payload: _*)).as("doc")
       )
       def writeChunk(kind: String, df: DataFrame, idCol: String): Unit = {
-        val out = s"$dir/v_0/$kind"
-        (0 until nBuckets).filter(_ % nChunks == chunk)
-          .foreach(b => fs.delete(new Path(s"$out/bucket=$b"), true))
-        df.withColumn("bucket", bucketOf(col(idCol)))
-          .repartition(math.max(1, nBuckets / nChunks), col("bucket"))
-          .write.mode(SaveMode.Append).partitionBy("bucket").parquet(out)
+        val chunkBuckets = (0 until nBuckets).filter(_ % nChunks == chunk)
+        chunkBuckets.foreach(b => fs.delete(bucketDir(kind, b, 0L), true))
+        writeBucketed(df, idCol, kindDir(kind, 0L), SaveMode.Append, chunkBuckets.size)
       }
       inParallel(
         writeChunk("docs", flat, DocAssembler.IdColumn),
@@ -316,23 +361,12 @@ final class MaterializedIndex(spark: SparkSession, dir: String, nBuckets: Int = 
     } finally cached.unpersist(false)
   }
 
-  /** Publish a completed resumable snapshot: manifest every bucket dir
+  /** Publish a completed resumable snapshot: manifest every bucket file
     * written under v_0, flip CURRENT, drop the progress file. Callers run
     * this once after every chunk reports complete.
     */
   def finalizeSnapshot(): Unit = {
-    def listBuckets(kind: String): Set[Int] = {
-      val p = new Path(s"$dir/v_0/$kind")
-      if (!fs.exists(p)) Set.empty[Int]
-      else
-        fs.listStatus(p)
-          .map(_.getPath.getName)
-          .collect { case s if s.startsWith("bucket=") => s.stripPrefix("bucket=").toInt }
-          .toSet
-    }
-    val d = listBuckets("docs")
-    val l = listBuckets("lineage")
-    writeManifest(0L, (d.map(b => ("docs", b) -> 0L) ++ l.map(b => ("lineage", b) -> 0L)).toMap)
+    writeManifest(0L, listWritten("docs", 0L) ++ listWritten("lineage", 0L))
     flipCurrent(0L)
     fs.delete(snapshotProgressPtr, false)
   }
@@ -358,14 +392,17 @@ final class MaterializedIndex(spark: SparkSession, dir: String, nBuckets: Int = 
   def commit(affected: DataFrame, newDocs: DataFrame, newLineage: DataFrame): Unit = {
     val v = currentVersion
     val next = v + 1
-    val prev = readManifest(v)
     val affectedBuckets = affected
       .select(bucketOf(col(DocAssembler.IdColumn)).as("b")).distinct()
       .collect().map(_.getInt(0)).toSet
+    // the manifest is the pruning index: only the affected buckets' files
+    // are read, so per-batch reads are O(affected buckets) like the writes
+    val (rewritten, inherited) = readManifest(v).partition(f => affectedBuckets.contains(f.bucket))
+    def affectedFiles(kind: String) = rewritten.filter(_.kind == kind)
 
-    val keptDocs = readBuckets("docs", docsSchema, affectedBuckets)
+    val keptDocs = scan(docsSchema, affectedFiles("docs"))
       .join(broadcast(affected.select(col(DocAssembler.IdColumn))), Seq(DocAssembler.IdColumn), "left_anti")
-    val keptLineage = readBuckets("lineage", Lineage.schema, affectedBuckets)
+    val keptLineage = scan(Lineage.schema, affectedFiles("lineage"))
       .join(
         broadcast(affected.select(col(DocAssembler.IdColumn).as("root_id"))),
         Seq("root_id"),
@@ -376,16 +413,9 @@ final class MaterializedIndex(spark: SparkSession, dir: String, nBuckets: Int = 
       writeBuckets("lineage", next, keptLineage.unionByName(newLineage), "root_id")
     )
 
-    // new manifest: untouched buckets inherit, affected buckets point at the
-    // new version (or drop out entirely if now empty)
-    val inherited = prev.filter {
-      case (("docs", b), _)    => !affectedBuckets.contains(b)
-      case (("lineage", b), _) => !affectedBuckets.contains(b)
-    }
-    val updated = inherited ++
-      writtenDocs.map(b => ("docs", b) -> next) ++
-      writtenLineage.map(b => ("lineage", b) -> next)
-    writeManifest(next, updated)
+    // new manifest: untouched buckets inherit their files, affected buckets
+    // point at the new version's (or drop out entirely if now empty)
+    writeManifest(next, inherited ++ writtenDocs ++ writtenLineage)
     flipCurrent(next)
   }
 
@@ -408,10 +438,9 @@ final class MaterializedIndex(spark: SparkSession, dir: String, nBuckets: Int = 
     */
   def vacuum(keepLast: Int = 2): Unit = {
     val cur = currentVersion
-    val root = new Path(dir)
     if (cur < 0 || !fs.exists(root)) return
     val keptVersions = (math.max(0L, cur - keepLast + 1) to cur)
-    val referenced = keptVersions.flatMap(v => readManifest(v).values).toSet ++ keptVersions
+    val referenced = keptVersions.flatMap(v => readManifest(v).map(_.version)).toSet ++ keptVersions
     fs.listStatus(root).foreach { st =>
       val name = st.getPath.getName
       if (name.startsWith("v_")) {
@@ -429,4 +458,19 @@ object MaterializedIndex {
     * batch size + feed disorder — see [[MaterializedIndex.checkpointState]]).
     */
   final case class TxCheckpoint(watermark: Long, applied: Set[Long])
+
+  /** A [[FileIndex]] over a fixed file list taken from the manifest:
+    * listing is a constant, so constructing a read launches no Spark job,
+    * and a case class so two reads of the same files compare equal (plan
+    * reuse, cache lookup).
+    */
+  private final case class ManifestFileIndex(files: Seq[FileStatus]) extends FileIndex {
+    override def rootPaths: Seq[Path] = files.map(_.getPath.getParent).distinct
+    override def listFiles(partitionFilters: Seq[Expression], dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      Seq(PartitionDirectory(InternalRow.empty, files.toArray))
+    override def inputFiles: Array[String] = files.map(_.getPath.toString).toArray
+    override def refresh(): Unit = ()
+    override def sizeInBytes: Long = files.map(_.getLen).sum
+    override def partitionSchema: StructType = new StructType()
+  }
 }

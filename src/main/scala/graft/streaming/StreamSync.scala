@@ -117,7 +117,13 @@ final class StreamSync(
   ): StreamingQuery = {
     val writer = changes.writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) => afterBatch(applyBatch(batch, opsSink)) }
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        // the engine caches each batch until the next one arrives; the
+        // micro-batch is done here, so release it (the last batch's cache
+        // would otherwise outlive the query)
+        try afterBatch(applyBatch(batch, opsSink))
+        finally { batch.unpersist(); () }
+      }
     trigger.fold(writer)(writer.trigger).start()
   }
 }

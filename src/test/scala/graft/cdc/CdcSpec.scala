@@ -138,6 +138,34 @@ class CdcSpec extends SparkSpec {
     assert(docs == fullRecompute())
   }
 
+  test("composite-key child UPDATE resolves to its own root, whichever PK column is declared first") {
+    val tree = SchemaDef.parseNodes(
+      """{"table": "orders", "columns": ["o_orderkey"],
+          "children": [{"table": "lineitem", "label": "lines", "columns": ["l_linenumber", "l_qty"],
+            "relationship": {"type": "one_to_many", "variant": "object"}}]}"""
+    )
+    val src = Map(
+      "orders" -> (1L to 3L).map(Tuple1(_)).toDF("o_orderkey"),
+      "lineitem" -> (for (o <- 1L to 3L; n <- 1 to 2) yield (o, n, 10)).toDF("l_orderkey", "l_linenumber", "l_qty")
+    )
+    Seq(Seq("l_orderkey", "l_linenumber"), Seq("l_linenumber", "l_orderkey")).foreach { pk =>
+      val orderCat = Catalog(Map(
+        "orders" -> TableMeta("orders", Seq("o_orderkey")),
+        "lineitem" -> TableMeta("lineitem", pk,
+          Seq(ForeignKey("lineitem", Seq("l_orderkey"), "orders", Seq("o_orderkey"))))))
+      val state = new MaterializedIndex(spark, Files.createTempDirectory("graft-composite").toString)
+      new StreamSync(tree, orderCat, src, state).snapshot()
+      val update = ch(Changes.Update, "lineitem",
+        """{"l_orderkey": 2, "l_linenumber": 1, "l_qty": 10}""",
+        """{"l_orderkey": 2, "l_linenumber": 1, "l_qty": 11}""")
+      val affected = new IncrementalEngine(tree, orderCat, src)
+        .affectedRoots(update, state.lineage).collect().map(_.getString(0)).toSet
+      update.unpersist()
+      // per-column matching would also hit orders 1 and 3 (they have a line 1)
+      assert(affected == Set("2"), s"PK declared as $pk")
+    }
+  }
+
   test("child FK-change UPDATE re-assembles both old and new roots") {
     reset()
     val (sync, state) = newSync()

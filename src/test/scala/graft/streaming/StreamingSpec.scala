@@ -55,6 +55,7 @@ class StreamingSpec extends SparkSpec {
         col("_1").as("tg_op"), col("_2").as("tbl"),
         col("_3").as("old"), col("_4").as("new"), col("_5").as("txid")
       )
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val query = sync.start(changes, s"$dir/checkpoint")
 
     // batch 1: new item lands on order 2
@@ -72,6 +73,9 @@ class StreamingSpec extends SparkSpec {
     assert(docs2 == Set("2"))
 
     query.stop()
+    // no micro-batch's cache outlives the query (the last batch included)
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- cachedBefore
+    assert(leaked.isEmpty, s"persistent RDDs left after stop: $leaked")
     // checkpoint directory materialized offsets/commits (restart safety)
     assert(Files.exists(java.nio.file.Paths.get(s"$dir/checkpoint/offsets")))
   }
