@@ -210,7 +210,8 @@ final class GraftSync(
     } finally prepared.unpersist()
   }
 
-  /** Start continuous maintenance from a streaming change feed; `opsSink`
+  /** Start continuous maintenance from a streaming change feed — the
+    * doc-only form of [[graft.streaming.SyncPipeline.start]]; `opsSink`
     * additionally publishes each micro-batch's ops (the continuous form of
     * [[publishChanges]] — pass `ops => BulkHttp.write(ops, bulkConfig(ep))`).
     */
@@ -220,7 +221,7 @@ final class GraftSync(
       opsSink: Option[DataFrame => Unit] = None
   ): StreamingQuery =
     sync.start(
-      prepare(changes), checkpointDir, trigger = None, opsSink = opsSink,
+      prepare(changes), checkpointDir, opsSink = opsSink,
       afterBatch = n => {
         progress.batchesApplied.incrementAndGet()
         progress.docsResynced.addAndGet(n)
@@ -266,13 +267,6 @@ final class GraftSync(
     progress.docsPublished.addAndGet(result.succeeded)
     result
   }
-
-  /** Derive index/delete ops for a change batch against the CURRENT local
-    * lineage — the stream a remote index consumes. Composes with
-    * [[publishChanges]] or a caller's own sink.
-    */
-  def changeOps(batch: DataFrame): DataFrame =
-    engine.process(prepare(batch), state.lineage)
 
   /** Apply one change batch locally (watermark + bucket commit, keeping the
     * lineage current for the next resolution) AND bulk-publish the same

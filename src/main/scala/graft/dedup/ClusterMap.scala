@@ -252,6 +252,11 @@ object ClusterMap {
     * and the component splits silently. There is no incremental heal —
     * run [[rebuild]] (one-time, from the surviving pair set) before
     * relying on the guarantee for a pre-fix map.
+    *
+    * `stageTimer`, when set, receives (label, seconds) per sub-operator.
+    * Callers pass the same callback to stages that run on other threads
+    * ([[graft.streaming.ClusterStream.seed]] overlaps two legs), so it may
+    * be called concurrently and must record thread-safely.
     */
   def applyBatch(
       spark: SparkSession,

@@ -185,9 +185,11 @@ object SignatureIndex {
     // eager local checkpoint: the matched-row frame feeds BOTH the
     // degenerate-key guard aggregate and the candidate join — without it
     // the bucket scan runs twice per micro-batch. Probe-matched rows are
-    // batch-sized; the blocks are reclaimed by the context cleaner once
-    // the caller's materialized result drops the reference (the
-    // ClusterStream caching discipline).
+    // batch-sized; once everything derived from the result is
+    // materialized, the caller releases the blocks with
+    // GraftColumnBridge.unpersistLocalCheckpoint on the returned frame (a
+    // long-running stream would otherwise hold one checkpoint per batch
+    // until the context cleaner collects it).
     val stored = storedMatched(spark, dataDir, keyed, kbs).localCheckpoint(true)
     val ok = stored
       .groupBy(col("key"))

@@ -2,86 +2,38 @@ package graft.streaming
 
 import graft.ann.Ann
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.functions.col
 
-/** Continuous vector ingestion into a persisted ANN index: each micro-batch
-  * appends into the bucket-partitioned LSH layout ([[Ann.appendLshIndex]] —
-  * O(batch), the on-disk partitions are never read or rewritten), so the
-  * index is probe-able ([[Ann.lshTopKIndexed]]) while the stream runs and
-  * outlives it. Checkpointing gives at-least-once appends; replayed batches
-  * re-append the same (neighbor_id, v, bucket) rows, which probing
-  * deduplicates only by (qid, neighbor_id) rank order — run
-  * [[Ann.compactLshIndex]] with a dedup-on-id pass if exact-once storage
-  * matters, or keep ids idempotent upstream. Mirrors
-  * [[DedupStream.start]]'s external-index protocol.
+/** CDC maintenance of persisted ANN indexes from a change feed carrying
+  * `tg_op` (INSERT/UPDATE/DELETE), so deletes reach the ANN probe surface
+  * (reference parity: `sync.py:1254-1306`). Each batch deletes ALL batch
+  * ids (tombstones — [[graft.sources.IndexState]]), then appends the
+  * INSERT/UPDATE vectors into the bucket-partitioned layout — O(batch), the
+  * on-disk partitions are never read or rewritten, so the index is
+  * probe-able while a stream runs and outlives it. Deleting first makes
+  * at-least-once replay converge to the single-delivery state: the
+  * replayed batch tombstones its own earlier append before re-appending.
+  * One final op per id per batch; UPDATE rows carry the new vector.
+  * [[SyncPipeline.AnnLshConsumer]] and [[SyncPipeline.AnnPqConsumer]] run
+  * these per micro-batch; both also serve batch-mode backfills.
   */
 object AnnStream {
 
-  def start(
-      vecs: DataFrame,
-      indexPath: String,
-      checkpointDir: String,
-      id: String,
-      vec: String,
-      planes: Int = 6,
-      dim: Int = 64,
-      trigger: Option[Trigger] = None
-  ): StreamingQuery = {
-    val writer = vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Ann.appendLshIndex(batch, indexPath, id, vec, planes, dim)
-        ()
-      }
-    trigger.fold(writer)(writer.trigger).start()
-  }
-
-  /** CDC form: maintain the LSH index from a CHANGE FEED carrying `tg_op`
-    * (INSERT/UPDATE/DELETE), so deletes reach the ANN probe surface
-    * (reference parity: `sync.py:1254-1306`). Per batch ([[applyCdcBatch]]):
-    * delete ALL batch ids (tombstones — [[graft.sources.IndexState]]), then
-    * append the INSERT/UPDATE vectors. Deleting first makes at-least-once
-    * replay converge to the single-delivery state (the replayed batch
-    * tombstones its own earlier append before re-appending), which also
-    * retires [[start]]'s documented replay-duplicates wart for feeds that
-    * can carry ops. One final op per id per batch; UPDATE rows carry the
-    * new vector.
+  /** One LSH CDC batch under the parameters persisted at
+    * [[Ann.writeLshIndex]] time — no caller-held model state (the
+    * [[graft.ann.AnnModels]] sidecar read is a driver-side model fetch, no
+    * corpus work). With `autoCompactRatio`, the batch ends with the
+    * [[Ann.maybeCompactLshIndex]] dead-fraction check — the [[Bm25Stream]]
+    * policy, so tombstones cannot accumulate unboundedly.
     */
-  def startCdc(
-      changes: DataFrame,
-      indexPath: String,
-      checkpointDir: String,
-      id: String,
-      vec: String,
-      planes: Int = 6,
-      dim: Int = 64,
-      trigger: Option[Trigger] = None,
-      autoCompactRatio: Option[Double] = None
-  ): StreamingQuery = {
-    val writer = changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyCdcBatch(batch, indexPath, id, vec, planes, dim, autoCompactRatio)
-        ()
-      }
-    trigger.fold(writer)(writer.trigger).start()
-  }
-
-  /** One CDC batch; also usable for batch-mode backfills. With
-    * `autoCompactRatio`, the batch ends with the
-    * [[Ann.maybeCompactLshIndex]] dead-fraction check — the
-    * [[Bm25Stream]] policy, so tombstones cannot accumulate unboundedly.
-    */
-  def applyCdcBatch(
+  def applyCdcBatchResumed(
       batch: DataFrame,
       indexPath: String,
       id: String,
       vec: String,
-      planes: Int,
-      dim: Int,
       autoCompactRatio: Option[Double] = None
   ): Unit = {
-    import org.apache.spark.sql.functions.col
+    val (planes, dim) = graft.ann.AnnModels.readLsh(batch.sparkSession, indexPath)
     Ann.deleteFromLshIndex(
       batch.sparkSession,
       indexPath,
@@ -94,51 +46,15 @@ object AnnStream {
     autoCompactRatio.foreach { r => Ann.maybeCompactLshIndex(batch.sparkSession, indexPath, r); () }
   }
 
-  /** [[applyCdcBatch]] under the parameters persisted at
-    * [[Ann.writeLshIndex]] time — the restart/composition path: no
-    * caller-held model state (the [[graft.ann.AnnModels]] sidecar read is a
-    * driver-side model fetch, no corpus work).
-    */
-  def applyCdcBatchResumed(
-      batch: DataFrame,
-      indexPath: String,
-      id: String,
-      vec: String,
-      autoCompactRatio: Option[Double] = None
-  ): Unit = {
-    val (planes, dim) = graft.ann.AnnModels.readLsh(batch.sparkSession, indexPath)
-    applyCdcBatch(batch, indexPath, id, vec, planes, dim, autoCompactRatio)
-  }
-
-  /** [[startCdc]] for a [[Ann.writePqIndex]] layout: maintain an IVF-PQ
-    * index from a change feed under the models FROZEN at build time
-    * ([[Ann.appendPqIndexResumed]] re-reads the cell/codebook sidecar per
-    * batch — a driver-side model read, no corpus work). Same
-    * delete-all-batch-ids-then-append convergence argument as the LSH and
-    * BM25 maintainers; with `autoCompactRatio`, each batch ends with the
+  /** One IVF-PQ CDC batch for a [[Ann.writePqIndex]] layout, under the
+    * models FROZEN at build time ([[Ann.appendPqIndexResumed]] re-reads the
+    * cell/codebook sidecar per batch — a driver-side model read, no corpus
+    * work). Same delete-first convergence as the LSH batch; with
+    * `autoCompactRatio`, the batch ends with the
     * [[Ann.maybeCompactPqIndex]] dead-fraction check. Codebook drift under
     * a shifting distribution remains a model refresh (retrain + rewrite),
     * not a streaming concern.
     */
-  def startCdcPq(
-      changes: DataFrame,
-      indexPath: String,
-      checkpointDir: String,
-      id: String,
-      vec: String,
-      trigger: Option[Trigger] = None,
-      autoCompactRatio: Option[Double] = None
-  ): StreamingQuery = {
-    val writer = changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyCdcPqBatch(batch, indexPath, id, vec, autoCompactRatio)
-        ()
-      }
-    trigger.fold(writer)(writer.trigger).start()
-  }
-
-  /** One PQ CDC batch; also usable for batch-mode backfills. */
   def applyCdcPqBatch(
       batch: DataFrame,
       indexPath: String,
@@ -146,7 +62,6 @@ object AnnStream {
       vec: String,
       autoCompactRatio: Option[Double] = None
   ): Unit = {
-    import org.apache.spark.sql.functions.col
     Ann.deleteFromPqIndex(
       batch.sparkSession,
       indexPath,

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.functions.Retrieval
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** CDC maintenance of a persisted BM25 index
   * ([[graft.functions.Retrieval.writeBm25Index]]) from a change feed —
@@ -32,45 +31,25 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object Bm25Stream {
 
-  /** `changes` must be a streaming DataFrame with columns `tg_op`
-    * (INSERT/UPDATE/DELETE), `id`, and `text` (null allowed on DELETE).
-    * With `autoCompactRatio` set, each batch ends with BOTH compaction
-    * policy checks (cheap — sidecar counts only, the postings are never
-    * scanned to decide): [[Retrieval.maybeCompactBm25Index]] bounds
-    * tombstone growth under a delete-heavy feed, and — when the dead-ratio
-    * leg did not fire — [[Retrieval.maybeCompactBm25ByImpactGrowth]] at
-    * `impactGrowthMultiple` bounds the pruned probe's cap×batches volume
-    * under an APPEND-ONLY feed, where no tombstone ever accumulates and
-    * the first policy alone would let per-batch impact caps pile up
-    * forever. Probes issued BETWEEN batches (the single-process
-    * sequential case this maintainer implements) always see a complete
-    * index, and a crash mid-swap self-heals on the next open
-    * ([[graft.sources.IndexState.recoverSwap]]); a probe from a SEPARATE
-    * process racing the swap's rename window is not protected — route
-    * concurrent readers through a version indirection if that matters.
+  /** One batch of the protocol — per micro-batch under
+    * [[SyncPipeline.Bm25Consumer]], or directly for batch-mode backfills.
+    * `batch` carries columns `tg_op` (INSERT/UPDATE/DELETE), `id`, and
+    * `text` (null allowed on DELETE). With `autoCompactRatio` set, the
+    * batch ends with BOTH compaction policy checks (cheap — sidecar counts
+    * only, the postings are never scanned to decide):
+    * [[Retrieval.maybeCompactBm25Index]] bounds tombstone growth under a
+    * delete-heavy feed, and — when the dead-ratio leg did not fire —
+    * [[Retrieval.maybeCompactBm25ByImpactGrowth]] at `impactGrowthMultiple`
+    * bounds the pruned probe's cap×batches volume under an APPEND-ONLY
+    * feed, where no tombstone ever accumulates and the first policy alone
+    * would let per-batch impact caps pile up forever. Probes issued BETWEEN
+    * batches (the single-process sequential case this maintainer
+    * implements) always see a complete index, and a crash mid-swap
+    * self-heals on the next open ([[graft.sources.IndexState.recoverSwap]]);
+    * a probe from a SEPARATE process racing the swap's rename window is not
+    * protected — route concurrent readers through a version indirection if
+    * that matters.
     */
-  def start(
-      changes: DataFrame,
-      indexPath: String,
-      checkpointDir: String,
-      id: String,
-      text: String,
-      trigger: Option[Trigger] = None,
-      autoCompactRatio: Option[Double] = None,
-      impactGrowthMultiple: Double = 64.0
-  ): StreamingQuery = {
-    val writer = changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyBatch(
-          batch.sparkSession, batch, indexPath, id, text, autoCompactRatio,
-          impactGrowthMultiple)
-        ()
-      }
-    trigger.fold(writer)(writer.trigger).start()
-  }
-
-  /** One batch of the protocol; also usable for batch-mode backfills. */
   def applyBatch(
       spark: SparkSession,
       batch: DataFrame,

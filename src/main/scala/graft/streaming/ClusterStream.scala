@@ -3,7 +3,6 @@ package graft.streaming
 import graft.dedup.{ClusterMap, Dedup, SignatureIndex}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming near-duplicate CLUSTER maintenance: the arriving-data form of
   * `minhashLsh → connectedComponents`. Each micro-batch of upserted
@@ -29,6 +28,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * distinct). DELETE events are intentionally ignored — removing a document
   * never splits a component (the [[ClusterMap]] no-split contract); filter
   * assignments against the live corpus instead.
+  *
+  * [[SyncPipeline.ClusterConsumer]] runs [[seed]] and [[applyBatch]] over a
+  * change feed; both also serve batch-mode runs directly.
   */
 object ClusterStream {
 
@@ -61,7 +63,9 @@ object ClusterStream {
     * way [[applyBatch]]'s does — (label, seconds) for sig-write / pairs /
     * merge. Both pair operators already materialize eagerly (their results
     * are `localCheckpoint(true)`), so timing adds no materialization the
-    * unprofiled seed doesn't do.
+    * unprofiled seed doesn't do. The callback may be called CONCURRENTLY
+    * from two threads: a non-portable seed runs its sig-write and pairs
+    * legs in parallel, so whatever it records into must be thread-safe.
     */
   def seed(
       corpus: DataFrame,
@@ -154,7 +158,9 @@ object ClusterStream {
     * [[graft.tools.MutationScale]]) can attribute the per-batch cost below
     * consumer granularity. Profiling forces materialization at the stage
     * boundaries of frames that are cached/checkpointed anyway, so the
-    * attributed total matches the unprofiled run.
+    * attributed total matches the unprofiled run. The callback may be
+    * called concurrently (the [[seed]] contract); record into a thread-safe
+    * structure.
     */
   def applyBatch(
       spark: SparkSession,
@@ -245,33 +251,14 @@ object ClusterStream {
               SignatureIndex.compact(spark, sigPath); ()
             }
           }
-        } finally { candPairs.unpersist(); () }
+        } finally {
+          candPairs.unpersist()
+          // the probe's matched index rows are a local checkpoint (see
+          // SignatureIndex.candidates); nothing reads them past this point
+          try org.apache.spark.sql.GraftColumnBridge.unpersistLocalCheckpoint(cand)
+          catch { case scala.util.control.NonFatal(_) => () }
+        }
       } finally { batchKeys.unpersist(); () }
     } finally { docs.unpersist(); () }
   }
-
-  /** Standalone ingest stream (no CDC feed): `docs` is a streaming
-    * DataFrame of arriving documents (`id`, `text` columns) — each
-    * micro-batch is an insert-only change batch. Restarts resume from the
-    * checkpoint; replays converge per the object contract above.
-    */
-  def start(
-      docs: DataFrame,
-      corpus: DataFrame,
-      sigPath: String,
-      clusterPath: String,
-      id: String,
-      text: String,
-      checkpointDir: String,
-      autoCompactRatio: Option[Double] = None
-  ): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyBatch(
-          batch.sparkSession,
-          batch.select(lit("INSERT").as("tg_op"), col(id), col(text)),
-          corpus, sigPath, clusterPath, id, text, autoCompactRatio)
-      }
-      .start()
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.dedup.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming exact dedup: the arriving-data form of
   * [[graft.dedup.Dedup.exactIncremental]]. Documents stream in; any whose
@@ -17,17 +16,17 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *     store (RocksDB-backed on a real cluster), scales with DISTINCT
   *     digests and is managed/checkpointed by Spark. Use when dedup is a
   *     stage inside a larger streaming plan.
-  *   - [[start]] — the external-index form: `foreachBatch` joins each
-  *     micro-batch against a persisted (h, keep_id) parquet index and
-  *     appends the batch's new digests, exactly the
-  *     [[graft.dedup.Dedup.exactIncremental]] state transition. The index
-  *     outlives the stream: batch jobs can join it, a rebuilt stream
-  *     reuses it, auditors can replay it — the same reasons the reference
-  *     keeps sync state queryable rather than buried in worker memory
-  *     (`pgsync/sync.py:1581-1656` checkpoint files).
+  *   - [[applyBatch]] — the external-index form, run per micro-batch by
+  *     [[SyncPipeline.DedupConsumer]]: each batch joins a persisted
+  *     (h, keep_id) parquet index and appends the batch's new digests,
+  *     exactly the [[graft.dedup.Dedup.exactIncremental]] state
+  *     transition. The index outlives the stream: batch jobs can join it,
+  *     a rebuilt stream reuses it, auditors can replay it — the same
+  *     reasons the reference keeps sync state queryable rather than buried
+  *     in worker memory (`pgsync/sync.py:1581-1656` checkpoint files).
   *
-  * At 100 TB the [[start]] index read is the batch side of a digest-keyed
-  * join: store the index bucketed by digest prefix (the
+  * At 100 TB the [[applyBatch]] index read is the batch side of a
+  * digest-keyed join: store the index bucketed by digest prefix (the
   * [[graft.sinks.MaterializedIndex]] layout idiom) so only the arriving
   * batch shuffles.
   */
@@ -51,35 +50,14 @@ object DedupStream {
     deduped.drop("__h")
   }
 
-  /** Start the external-index stream: `docs` must be a streaming DataFrame
-    * with columns `id` and `text`. Per micro-batch: resolve against the
-    * persisted index at `indexPath`, hand the surviving (new-digest)
-    * documents to `onSurvivors`, then append the new (h, keep_id) rows to
-    * the index. Restarts resume from the checkpoint; a replayed batch
-    * re-resolves against an index that already contains its digests, so
-    * its documents dedup to zero survivors — the append is idempotent at
-    * the semantic level even though delivery is at-least-once.
-    */
-  def start(
-      docs: DataFrame,
-      indexPath: String,
-      checkpointDir: String,
-      id: String,
-      text: String,
-      onSurvivors: DataFrame => Unit,
-      trigger: Option[org.apache.spark.sql.streaming.Trigger] = None
-  ): StreamingQuery = {
-    val writer = docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyBatch(batch.sparkSession, batch, indexPath, id, text, onSurvivors)
-        ()
-      }
-    trigger.fold(writer)(writer.trigger).start()
-  }
-
-  /** One batch of the external-index protocol; also usable directly for
-    * batch-mode backfills. Returns the number of surviving documents.
+  /** One batch of the external-index protocol; `batch` carries columns
+    * `id` and `text`. Resolves the batch against the persisted index at
+    * `indexPath`, hands the surviving (new-digest) documents to
+    * `onSurvivors`, then appends the new (h, keep_id) rows to the index. A
+    * replayed batch re-resolves against an index that already contains its
+    * digests, so its documents dedup to zero survivors — the append is
+    * idempotent at the semantic level even though delivery is
+    * at-least-once. Returns the number of surviving documents.
     */
   def applyBatch(
       spark: SparkSession,

@@ -98,32 +98,42 @@ final class StreamSync(
 
   /** Start the stream: `changes` must be a streaming DataFrame with
     * [[Changes.schema]] columns. Checkpointing makes restarts resume from
-    * the last committed batch. `trigger` sets the micro-batch cadence — the
-    * engine-native form of the reference's size-based batching
-    * (`LOGICAL_SLOT_CHUNK_SIZE` 5 000 / `REDIS_POLL_INTERVAL`,
-    * `settings.py:40,277`); None = as-fast-as-possible. `opsSink` publishes
-    * each micro-batch's (`op`, `_id`, `doc`) rows (e.g. to
-    * [[graft.sinks.BulkHttp]]) from the same engine pass as the local
-    * commit — the reference's continuous `poll → bulk` loop
-    * (`sync.py:1985-2043`); Structured Streaming's checkpoint makes
-    * delivery at-least-once, idempotent via upsert-by-`_id`.
+    * the last committed batch; micro-batches run as fast as the feed
+    * delivers (the engine-native form of the reference's size-based
+    * batching, `LOGICAL_SLOT_CHUNK_SIZE` 5 000 / `REDIS_POLL_INTERVAL`,
+    * `settings.py:40,277`). `opsSink` publishes each micro-batch's (`op`,
+    * `_id`, `doc`) rows (e.g. to [[graft.sinks.BulkHttp]]) from the same
+    * engine pass as the local commit — the reference's continuous
+    * `poll → bulk` loop (`sync.py:1985-2043`); Structured Streaming's
+    * checkpoint makes delivery at-least-once, idempotent via
+    * upsert-by-`_id`.
     */
   def start(
       changes: DataFrame,
       checkpointDir: String,
-      trigger: Option[org.apache.spark.sql.streaming.Trigger] = None,
       opsSink: Option[DataFrame => Unit] = None,
       afterBatch: Long => Unit = _ => ()
-  ): StreamingQuery = {
-    val writer = changes.writeStream
+  ): StreamingQuery =
+    StreamSync.foreachBatch(changes, checkpointDir)(batch => afterBatch(applyBatch(batch, opsSink)))
+}
+
+object StreamSync {
+
+  /** The one micro-batch loop behind every change-feed query (the doc
+    * sync's and each [[SyncPipeline]] consumer's): runs `apply` on each
+    * micro-batch of `changes` under the checkpoint at `checkpointDir`, then
+    * releases the batch — the doc engine caches each batch until the next
+    * one arrives, so the last batch's cache would otherwise outlive the
+    * query.
+    */
+  private[streaming] def foreachBatch(changes: DataFrame, checkpointDir: String)(
+      apply: DataFrame => Unit
+  ): StreamingQuery =
+    changes.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // the engine caches each batch until the next one arrives; the
-        // micro-batch is done here, so release it (the last batch's cache
-        // would otherwise outlive the query)
-        try afterBatch(applyBatch(batch, opsSink))
+        try apply(batch)
         finally { batch.unpersist(); () }
       }
-    trigger.fold(writer)(writer.trigger).start()
-  }
+      .start()
 }

@@ -10,11 +10,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
 /** The COMPOSED product entry: one change feed fans into every consumer a
   * search product maintains — the materialized document index (+ lineage)
   * via [[graft.GraftSync]], and any set of secondary indexes (persisted
-  * BM25, LSH ANN, IVF-PQ ANN, exact-dedup registry) — each consumer with
-  * its OWN Structured Streaming checkpoint, so a restart resumes every
-  * index from its own high-water mark and at-least-once replay converges
-  * per the delete-first protocols ([[Bm25Stream]]/[[AnnStream]]) or
-  * first-writer-wins semantics ([[DedupStream]]).
+  * BM25, LSH ANN, IVF-PQ ANN, exact-dedup registry, near-dup cluster map)
+  * — each consumer with its OWN Structured Streaming checkpoint, so a
+  * restart resumes every index from its own high-water mark and
+  * at-least-once replay converges per that consumer's protocol
+  * (delete-first for the BM25 and ANN indexes, first-writer-wins for the
+  * dedup registry, no-split merges for the cluster map — see each
+  * [[SyncPipeline.Consumer]]).
   *
   * Reference shape: one `Sync` object owns the whole consumer side —
   * snapshot then continuous consumption (`/root/reference/pgsync/sync.py:
@@ -33,6 +35,9 @@ object SyncPipeline {
 
   /** One secondary-index consumer wired to the pipeline's change feed.
     * `name` keys the checkpoint directory — must be unique per pipeline.
+    * Each consumer owns its protocol: [[seed]] builds its index from the
+    * full source table, [[apply]] maintains it from one batch of
+    * [[changeRows]].
     */
   sealed trait Consumer {
     def name: String
@@ -40,12 +45,22 @@ object SyncPipeline {
 
     /** The source-table column this consumer needs per upsert. */
     def payloadColumn: String
+
+    /** Build this consumer's index from the full source table `src`. */
+    private[streaming] def seed(src: DataFrame, pk: String): Unit
+
+    /** Apply one batch of `rows` in [[changeRows]] shape (`tg_op`, `pk`,
+      * [[payloadColumn]]). `source` reads the CURRENT source table; the
+      * BM25, dedup and cluster protocols take their session from it.
+      */
+    private[streaming] def apply(rows: DataFrame, pk: String, source: () => DataFrame): Unit
   }
 
-  /** Persisted BM25 maintenance ([[Bm25Stream]] protocol). With
-    * `autoCompactRatio` set, both compaction policies run per batch — the
-    * dead-ratio leg for delete-heavy feeds and the impact-growth leg (at
-    * `impactGrowthMultiple`) for append-only feeds; see [[Bm25Stream.start]].
+  /** Persisted BM25 maintenance ([[Bm25Stream.applyBatch]]: delete every
+    * batch id, then append the upserts, so a replayed batch converges).
+    * With `autoCompactRatio` set, both compaction policies run per batch —
+    * the dead-ratio leg for delete-heavy feeds and the impact-growth leg
+    * (at `impactGrowthMultiple`) for append-only feeds.
     */
   final case class Bm25Consumer(
       indexPath: String,
@@ -54,11 +69,22 @@ object SyncPipeline {
       autoCompactRatio: Option[Double] = None,
       impactGrowthMultiple: Double = 64.0,
       name: String = "bm25"
-  ) extends Consumer { def payloadColumn: String = textCol }
+  ) extends Consumer {
+    def payloadColumn: String = textCol
 
-  /** Persisted LSH ANN maintenance ([[AnnStream]] CDC protocol); `planes`
-    * and `dim` are used at [[SyncPipeline.seed]] time and frozen into the
-    * model sidecar — batches resume from the sidecar.
+    private[streaming] def seed(src: DataFrame, pk: String): Unit =
+      Retrieval.writeBm25Index(src, pk, textCol, indexPath, buckets)
+
+    private[streaming] def apply(rows: DataFrame, pk: String, source: () => DataFrame): Unit =
+      Bm25Stream.applyBatch(
+        source().sparkSession, rows, indexPath, pk, textCol, autoCompactRatio,
+        impactGrowthMultiple)
+  }
+
+  /** Persisted LSH ANN maintenance ([[AnnStream.applyCdcBatchResumed]]:
+    * delete-first, like BM25); `planes` and `dim` are used at
+    * [[SyncPipeline.seed]] time and frozen into the model sidecar —
+    * batches resume from the sidecar.
     */
   final case class AnnLshConsumer(
       indexPath: String,
@@ -67,10 +93,19 @@ object SyncPipeline {
       dim: Int = 64,
       autoCompactRatio: Option[Double] = None,
       name: String = "ann_lsh"
-  ) extends Consumer { def payloadColumn: String = vecCol }
+  ) extends Consumer {
+    def payloadColumn: String = vecCol
 
-  /** Persisted IVF-PQ ANN maintenance; models are TRAINED at seed time from
-    * the source table and frozen ([[Ann.appendPqIndexResumed]] contract).
+    private[streaming] def seed(src: DataFrame, pk: String): Unit =
+      Ann.writeLshIndex(src, indexPath, pk, vecCol, planes, dim)
+
+    private[streaming] def apply(rows: DataFrame, pk: String, source: () => DataFrame): Unit =
+      AnnStream.applyCdcBatchResumed(rows, indexPath, pk, vecCol, autoCompactRatio)
+  }
+
+  /** Persisted IVF-PQ ANN maintenance ([[AnnStream.applyCdcPqBatch]]);
+    * models are TRAINED at seed time from the source table and frozen
+    * ([[Ann.appendPqIndexResumed]] contract).
     */
   final case class AnnPqConsumer(
       indexPath: String,
@@ -80,20 +115,50 @@ object SyncPipeline {
       codeK: Int = 16,
       autoCompactRatio: Option[Double] = None,
       name: String = "ann_pq"
-  ) extends Consumer { def payloadColumn: String = vecCol }
+  ) extends Consumer {
+    def payloadColumn: String = vecCol
 
-  /** Exact-dedup registry maintenance ([[DedupStream]]): INSERT/UPDATE
-    * documents stream through first-writer-wins digest resolution;
-    * survivors go to `onSurvivors`. DELETEs do not retract digests — the
-    * registry remembers every content ever seen (the dedup contract:
-    * re-ingesting deleted content is still a duplicate).
+    private[streaming] def seed(src: DataFrame, pk: String): Unit = {
+      // one corpus prefix collect trains both models (seed sets nest)
+      val (cells, books) = Ann.trainIvfPqModels(src, pk, vecCol, nlists, m, codeK)
+      Ann.writePqIndex(src, indexPath, pk, vecCol, cells, books)
+    }
+
+    private[streaming] def apply(rows: DataFrame, pk: String, source: () => DataFrame): Unit =
+      AnnStream.applyCdcPqBatch(rows, indexPath, pk, vecCol, autoCompactRatio)
+  }
+
+  /** Exact-dedup registry maintenance ([[DedupStream.applyBatch]]):
+    * INSERT/UPDATE documents stream through first-writer-wins digest
+    * resolution; survivors go to `onSurvivors` as (pk, text) rows. DELETEs
+    * do not retract digests — the registry remembers every content ever
+    * seen (the dedup contract: re-ingesting deleted content is still a
+    * duplicate). A replayed batch finds its digests already registered, so
+    * it yields zero survivors.
     */
   final case class DedupConsumer(
       indexPath: String,
       textCol: String,
       onSurvivors: DataFrame => Unit = _ => (),
       name: String = "dedup"
-  ) extends Consumer { def payloadColumn: String = textCol }
+  ) extends Consumer {
+    def payloadColumn: String = textCol
+
+    // the seed corpus is just the first (big) batch: registers every
+    // digest, first writer wins, survivors reported like any batch
+    private[streaming] def seed(src: DataFrame, pk: String): Unit =
+      register(src.sparkSession, src, pk)
+
+    private[streaming] def apply(rows: DataFrame, pk: String, source: () => DataFrame): Unit =
+      register(source().sparkSession, rows.filter(col("tg_op") =!= "DELETE"), pk)
+
+    // one (pk, text) survivor shape for seed and batches
+    private def register(spark: SparkSession, docs: DataFrame, pk: String): Unit = {
+      DedupStream.applyBatch(
+        spark, docs.select(col(pk), col(textCol)), indexPath, pk, textCol, onSurvivors)
+      ()
+    }
+  }
 
   /** Near-dup cluster-map maintenance ([[ClusterStream]]): upserts derive
     * pairs in-batch and against the persisted signature index at
@@ -123,6 +188,15 @@ object SyncPipeline {
     def model: graft.dedup.SignatureIndex.Model =
       graft.dedup.SignatureIndex.Model(
         portable, shingleN, bands, rowsPerBand, threshold, maxBucket, sigBuckets)
+
+    private[streaming] def seed(src: DataFrame, pk: String): Unit =
+      ClusterStream.seed(src, sigPath, indexPath, pk, textCol, model, mapBuckets)
+
+    private[streaming] def apply(rows: DataFrame, pk: String, source: () => DataFrame): Unit = {
+      val corpus = source()
+      ClusterStream.applyBatch(
+        corpus.sparkSession, rows, corpus, sigPath, indexPath, pk, textCol, autoCompactRatio)
+    }
   }
 
   /** The running queries of a started pipeline: the doc-sync query plus one
@@ -234,7 +308,8 @@ final class SyncPipeline(
     s"consumer names must be unique (they key checkpoints): ${consumers.map(_.name)}"
   )
 
-  private def spark: SparkSession = load(table).sparkSession
+  /** The CURRENT source table, read afresh at each use. */
+  private val source: () => DataFrame = () => load(table)
 
   /** Snapshot the doc index and build every secondary index from the
     * current source-table state — the composed `pull()`
@@ -255,35 +330,15 @@ final class SyncPipeline(
     * consumers (each corpus-scale build may hold its own persisted frame —
     * the BM25 token frame is DISK_ONLY by discipline, the snapshot path no
     * longer persists at all). At the 100 TB design scale, bound the fan-out
-    * by seeding consumers in waves (call [[seedConsumer]]-shaped subsets
-    * through your own pool) if the cluster's scratch provisioning cannot
+    * by seeding in waves if the cluster's scratch provisioning cannot
     * carry all builds at once; the engine keeps full overlap as the default
     * because seed time is dominated by exactly these independent builds.
     */
   def seed(): Unit = {
-    val src = load(table)
+    val src = source()
     runOverlapped(
       ("seed: docs" -> (() => sync.snapshot())) +:
-        consumers.map(c => s"seed: ${c.name}" -> (() => seedConsumer(c, src))))
-  }
-
-  private def seedConsumer(c: Consumer, src: DataFrame): Unit = c match {
-    case c: Bm25Consumer =>
-      Retrieval.writeBm25Index(src, pk, c.textCol, c.indexPath, c.buckets)
-    case c: AnnLshConsumer =>
-      Ann.writeLshIndex(src, c.indexPath, pk, c.vecCol, c.planes, c.dim)
-    case c: AnnPqConsumer =>
-      // one corpus prefix collect trains both models (seed sets nest)
-      val (cells, books) = Ann.trainIvfPqModels(src, pk, c.vecCol, c.nlists, c.m, c.codeK)
-      Ann.writePqIndex(src, c.indexPath, pk, c.vecCol, cells, books)
-    case c: DedupConsumer =>
-      // the seed corpus is just the first (big) batch: registers every
-      // digest, first writer wins, survivors reported like any batch
-      DedupStream.applyBatch(
-        spark, src.select(col(pk), col(c.textCol)), c.indexPath, pk, c.textCol, c.onSurvivors)
-      ()
-    case c: ClusterConsumer =>
-      ClusterStream.seed(src, c.sigPath, c.indexPath, pk, c.textCol, c.model, c.mapBuckets)
+        consumers.map(c => s"seed: ${c.name}" -> (() => c.seed(src, pk))))
   }
 
   /** Apply one raw change batch to EVERY consumer — the batch-mode form.
@@ -326,7 +381,7 @@ final class SyncPipeline(
       ("apply: docs" -> (() => sync.applyChanges(batch))) +:
         consumers.map(c =>
           s"apply: ${c.name}" ->
-            (() => applyConsumerRows(c, rows.select(col("tg_op"), col(pk), col(c.payloadColumn))))))
+            (() => c.apply(rows.select(col("tg_op"), col(pk), col(c.payloadColumn)), pk, source))))
     finally { rows.unpersist(); () }
   }
 
@@ -340,7 +395,7 @@ final class SyncPipeline(
     */
   private def runOverlapped(labeled: Seq[(String, () => Unit)]): Unit = {
     if (labeled.sizeIs <= 1) { labeled.foreach(_._2()); return }
-    val sc = spark.sparkContext
+    val sc = source().sparkSession.sparkContext
     val pool = java.util.concurrent.Executors.newFixedThreadPool(labeled.size)
     try {
       import scala.concurrent.{Await, ExecutionContext, Future}
@@ -360,47 +415,20 @@ final class SyncPipeline(
     } finally pool.shutdown()
   }
 
-  private def applyConsumerBatch(c: Consumer, batch: DataFrame): Unit =
-    applyConsumerRows(c, changeRows(batch, load, table, pk, Seq(c.payloadColumn)))
-
-  private def applyConsumerRows(c: Consumer, rows: DataFrame): Unit = {
-    c match {
-      case c: Bm25Consumer =>
-        Bm25Stream.applyBatch(
-          spark, rows, c.indexPath, pk, c.textCol, c.autoCompactRatio,
-          c.impactGrowthMultiple)
-      case c: AnnLshConsumer =>
-        AnnStream.applyCdcBatchResumed(rows, c.indexPath, pk, c.vecCol, c.autoCompactRatio)
-      case c: AnnPqConsumer =>
-        AnnStream.applyCdcPqBatch(rows, c.indexPath, pk, c.vecCol, c.autoCompactRatio)
-      case c: DedupConsumer =>
-        // same (pk, text) survivor shape as the seed pass — consumers of
-        // onSurvivors see one stable schema
-        DedupStream.applyBatch(
-          spark,
-          rows.filter(col("tg_op") =!= "DELETE").select(col(pk), col(c.textCol)),
-          c.indexPath, pk, c.textCol, c.onSurvivors)
-        ()
-      case c: ClusterConsumer =>
-        ClusterStream.applyBatch(
-          spark, rows, load(table), c.sigPath, c.indexPath, pk, c.textCol, c.autoCompactRatio)
-    }
-  }
-
   /** Start continuous maintenance: the doc sync plus one streaming query
     * per consumer, all reading the same feed, each with its own checkpoint
     * under `checkpointBase/<name>` — so restarts resume per consumer and a
     * replayed micro-batch converges per that consumer's protocol. `feed`
     * is a FACTORY because each query owns its streaming source instance.
+    * This is the one continuous entry point; [[graft.GraftSync.stream]] is
+    * its doc-only form.
     */
   def start(feed: () => DataFrame): Handles = {
     val doc = sync.stream(feed(), s"$checkpointBase/docs")
     val rest = consumers.map { c =>
-      val q = feed().writeStream
-        .option("checkpointLocation", s"$checkpointBase/${c.name}")
-        .foreachBatch { (batch: DataFrame, _: Long) => applyConsumerBatch(c, batch) }
-        .start()
-      c.name -> q
+      c.name -> StreamSync.foreachBatch(feed(), s"$checkpointBase/${c.name}") { batch =>
+        c.apply(changeRows(batch, load, table, pk, Seq(c.payloadColumn)), pk, source)
+      }
     }.toMap
     Handles(doc, rest)
   }

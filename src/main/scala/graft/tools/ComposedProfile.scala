@@ -27,12 +27,15 @@ object ComposedProfile {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
+    // stage callbacks may run concurrently (ClusterStream.seed overlaps
+    // legs), so every write goes through the map's lock
     val stages = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    def record(label: String, sec: Double): Unit = stages.synchronized { stages(label) = sec }
     def timed[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime()
       val r = f
       val sec = (System.nanoTime() - t0) / 1e9
-      stages(label) = sec
+      record(label, sec)
       println(f"[stage] $label%-28s $sec%7.2f s")
       r
     }
@@ -81,7 +84,7 @@ object ComposedProfile {
       graft.streaming.ClusterStream.seed(
         src, s"$root/sig", s"$root/cluster", "doc_id", "text", cModel, mapBuckets = 16,
         stageTimer = Some((label, sec) => {
-          stages(s"cluster seed/$label") = sec
+          record(s"cluster seed/$label", sec)
           println(f"[stage]   seed/$label%-20s $sec%7.2f s")
         })))
 
@@ -116,7 +119,7 @@ object ComposedProfile {
         spark, rows.select(col("tg_op"), col("doc_id"), col("text")), load("media"),
         s"$root/sig", s"$root/cluster", "doc_id", "text",
         stageTimer = Some((label, sec) => {
-          stages(s"cluster applyBatch/$label") = sec
+          record(s"cluster applyBatch/$label", sec)
           println(f"[stage]   cluster/$label%-18s $sec%7.2f s")
         })))
     rows.unpersist()

@@ -187,7 +187,7 @@ object MutationScale {
     val (cApply, _) = time(
       graft.streaming.ClusterStream.applyBatch(
         spark, cBatch, docs, cSig, cMap, "doc_id", "text",
-        stageTimer = Some((label, sec) => { cStages(label) = sec; () })))
+        stageTimer = Some((label, sec) => cStages.synchronized { cStages(label) = sec; () })))
     val cAssignSec = minOf3(cAssign())
     val (cReplay, _) = time(
       graft.streaming.ClusterStream.applyBatch(spark, cBatch, docs, cSig, cMap, "doc_id", "text"))

@@ -273,6 +273,24 @@ class GraftSyncSpec extends SparkSpec {
     assert(Files.exists(java.nio.file.Paths.get(s"$base/idx_b/CURRENT")))
   }
 
+  test("fromConfigSource reads a local config file into the same syncs as fromConfig") {
+    tables = Map(
+      "order_summary" -> Seq((1L, "open")).toDF("id", "status"),
+      "item" -> Seq.empty[(Long, Long, String)].toDF("id", "order_id", "sku")
+    )
+    val config =
+      """[
+        {"database": "db", "index": "idx_a", "nodes": {"table": "order_summary", "columns": ["id"]}},
+        {"database": "db", "nodes": {"table": "item", "columns": ["id", "sku"]}}
+      ]"""
+    val base = Files.createTempDirectory("graft-config-source").toString
+    val file = Files.write(java.nio.file.Paths.get(s"$base/config.json"), config.getBytes)
+    def shape(syncs: Seq[GraftSync]) = syncs.map(s => (s.indexName, s.schema.root.table))
+    val fromFile = GraftSync.fromConfigSource(spark, file.toString, cat, load, s"$base/idx")
+    assert(shape(fromFile) == shape(GraftSync.fromConfig(spark, config, cat, load, s"$base/idx")))
+    assert(shape(fromFile) == Seq(("idx_a", "order_summary"), ("item", "item")))
+  }
+
   test("runAll: 2-index config snapshots concurrently then streams each feed (sync.py:2114-2153,2383-2416)") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     tables = Map(

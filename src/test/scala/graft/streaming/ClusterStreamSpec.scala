@@ -5,7 +5,6 @@ import graft.dedup.{ClusterMap, Dedup, SignatureIndex}
 import graft.sources.IndexState
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import java.nio.file.Files
 
@@ -102,43 +101,30 @@ class ClusterStreamSpec extends SparkSpec {
   }
 
   test("standalone ingest stream resumes from its checkpoint across a restart") {
-    val dir = Files.createTempDirectory("graft-cstream-run").toString
-    val (sig, map, feed, ckpt) = (s"$dir/sig", s"$dir/map", s"$dir/feed", s"$dir/ckpt")
-    Files.createDirectories(java.nio.file.Paths.get(feed))
-    val m = SignatureIndex.Model(
-      portable = false, shingleN = 3, bands = 16, rowsPerBand = 4,
-      threshold = 0.5, maxBucket = 1000, buckets = 8)
-    ClusterStream.seed(corpusDf.limit(0), sig, map, "id", "text", m, mapBuckets = 8)
+    val h = new PipelineHarness(spark, "doc", "id", corpusDf.filter(pmod(col("id"), lit(3)) === 0))
+    val (sig, map) = (s"${h.dir}/sig", s"${h.dir}/map")
+    def pipeline = h.pipeline(SyncPipeline.ClusterConsumer(
+      map, sig, "text", portable = false, shingleN = 3, bands = 16, rowsPerBand = 4,
+      threshold = 0.5, maxBucket = 1000, sigBuckets = 8, mapBuckets = 8))
+    pipeline.seed()
 
-    val schema = StructType(Seq(StructField("id", LongType), StructField("text", StringType)))
-    def docStream = spark.readStream.schema(schema).parquet(feed)
-    def run(): Unit = {
-      val q = ClusterStream.start(docStream, corpusDf, sig, map, "id", "text", ckpt)
-      try { q.processAllAvailable() } finally q.stop()
-    }
-
-    // the file source lists the feed dir flat — land each batch's part
-    // file directly in it (staged write, then move)
+    // batch n inserts every doc with id % 3 == n
     def land(n: Int): Unit = {
-      val stage = s"$dir/stage$n"
-      corpusDf.filter(pmod(col("id"), lit(3)) === n).coalesce(1).write.parquet(stage)
-      new java.io.File(stage).listFiles().filter(_.getName.endsWith(".parquet"))
-        .zipWithIndex.foreach { case (f, i) =>
-          Files.move(f.toPath, java.nio.file.Paths.get(s"$feed/b$n-$i.parquet"))
-        }
+      h.rows = corpusDf.filter(pmod(col("id"), lit(3)) <= n)
+      h.land(corpus.map(_._1).filter(_ % 3 == n).map(id => ("INSERT", id)): _*)
     }
-    land(0); land(1)
-    run()
-    // batch 2 lands while the stream is DOWN; the restart picks it up from
-    // the checkpoint without replaying batches 0/1
+    land(1)
+    h.run(pipeline)
+    // batch 2 lands while the pipeline is DOWN; the restart picks it up
+    // from the checkpoint without replaying batch 1
     land(2)
-    run()
+    h.run(pipeline)
     assert(assignments(map) == expected, "restarted stream reaches the batch-rebuild state")
     val memberRows = spark.read.parquet(IndexState.dataPath(spark, map))
       .select(col("id"), col("root")).count()
     assert(memberRows == corpus.size.toLong,
       "exactly one member row per doc: the restart resumed, it did not replay")
-    graft.util.TempDirs.delete(java.nio.file.Paths.get(dir))
+    graft.util.TempDirs.delete(java.nio.file.Paths.get(h.dir))
   }
 
   test("portable seed (shared banding pass) equals the portable batch rebuild") {

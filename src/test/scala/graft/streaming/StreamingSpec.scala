@@ -249,29 +249,34 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming dedup (external index): first writer wins across batches, index is the state") {
-    val dir = Files.createTempDirectory("graft-dedup-stream").toString
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[(Long, String)]
-    val docs = stream.toDF().select(col("_1").as("doc_id"), col("_2").as("text"))
+    val h = new PipelineHarness(spark, "doc", "doc_id", Seq((0L, "zero")).toDF("doc_id", "text"))
+    val dir = h.dir
     val emitted = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
-    val query = DedupStream.start(
-      docs, s"$dir/index", s"$dir/ckpt", "doc_id", "text",
-      survivors => emitted ++= survivors.collect().map(r => (r.getLong(0), r.getString(1)))
-    )
+    val p = h.pipeline(SyncPipeline.DedupConsumer(s"$dir/index", "text",
+      survivors => emitted.synchronized {
+        emitted ++= survivors.collect().map(r => (r.getLong(0), r.getString(1)))
+      }))
+    p.seed()
+    assert(emitted.toSet == Set((0L, "zero")))
+    emitted.clear()
+    val query = h.start(p)
     // batch 1: within-batch dup (1,3 same text) → canonical min id survives
-    stream.addData((1L, "alpha"), (2L, "beta"), (3L, "alpha"))
+    h.rows = Seq((0L, "zero"), (1L, "alpha"), (2L, "beta"), (3L, "alpha")).toDF("doc_id", "text")
+    h.land(("INSERT", 1L), ("INSERT", 2L), ("INSERT", 3L))
     query.processAllAvailable()
     assert(emitted.toSet == Set((1L, "alpha"), (2L, "beta")))
     // batch 2: cross-batch dup (alpha again) dropped, new text survives
     emitted.clear()
-    stream.addData((4L, "alpha"), (5L, "gamma"))
+    h.rows = Seq((0L, "zero"), (1L, "alpha"), (2L, "beta"), (3L, "alpha"), (4L, "alpha"), (5L, "gamma"))
+      .toDF("doc_id", "text")
+    h.land(("INSERT", 4L), ("INSERT", 5L))
     query.processAllAvailable()
     assert(emitted.toSet == Set((5L, "gamma")))
-    query.stop()
+    query.stopAll()
     // the index holds one row per distinct digest, canonical ids
     val idx = spark.read.parquet(s"$dir/index")
       .collect().map(r => r.getAs[Long]("keep_id")).toSet
-    assert(idx == Set(1L, 2L, 5L))
+    assert(idx == Set(0L, 1L, 2L, 5L))
     // a batch-mode backfill over already-seen texts yields zero survivors
     val n = DedupStream.applyBatch(
       spark, Seq((6L, "alpha"), (7L, "beta")).toDF("doc_id", "text"),
@@ -289,6 +294,7 @@ class StreamingSpec extends SparkSpec {
       !spark.read.parquet(s"$dir/index").collect().exists(_.isNullAt(0)),
       "index must hold no null-digest rows"
     )
+    graft.util.TempDirs.delete(java.nio.file.Paths.get(dir))
   }
 
   test("streaming dedup (state-store form): dropDuplicates keeps first per digest") {
@@ -309,123 +315,84 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("composition: doc sync + dedup + ANN streams share one change feed across a restart") {
-    import graft.GraftSync
-    val dir = Files.createTempDirectory("graft-compose").toString
-    val feed = s"$dir/feed"
-    Files.createDirectories(java.nio.file.Paths.get(feed))
-    def writeFeed(n: Int, ids: Seq[Long], txid: Long): Unit =
-      Files.write(
-        java.nio.file.Paths.get(s"$feed/batch$n.json"),
-        ids.map(i => s"""{"tg_op":"INSERT","tbl":"note","old":null,"new":"{\\"id\\": $i}","txid":$txid}""")
-          .mkString("\n").getBytes
-      )
+    // seed notes carry distinct texts; streamed notes cycle through three
     def mkNotes(n: Int) = (1 to n).map { i =>
-      (i.toLong, s"note text ${i % 3}",
+      (i.toLong, if (i <= 4) s"seed note $i" else s"note text ${i % 3}",
         Array.tabulate(16)(j => (math.cos((i % 4) * 3 + j) + 0.05 * math.sin(i * 17 + j)).toFloat))
     }
-    @volatile var notes = mkNotes(4)
-    def noteDf = notes.toDF("id", "text", "embedding")
-    val noteCat = Catalog(Map("note" -> TableMeta("note", Seq("id"))))
-    val noteSchema =
-      """{"database":"db","index":"notes","nodes":{"table":"note","columns":["id","text"]}}"""
-    val loadNote: String => DataFrame = _ => noteDf.select(col("id"), col("text"))
-    val sync = GraftSync(spark, noteSchema, noteCat, loadNote, s"$dir/index")
+    def noteDf(n: Int) = mkNotes(n).toDF("id", "text", "embedding")
+    val h = new PipelineHarness(spark, "note", "id", noteDf(4), Seq("id", "text"))
+    val (dir, sync) = (h.dir, h.sync)
 
-    // all three consumers read THE SAME feed, each with its own checkpoint
-    def changeDocs = Changes.fileStream(spark, feed)
-      .filter(col("tbl") === "note")
-      .select(get_json_object(col("new"), "$.id").cast("long").as("nid"))
-      .join(noteDf, col("nid") === col("id"))
+    // all three queries read THE SAME feed, each with its own checkpoint
     val survivors = scala.collection.mutable.ArrayBuffer.empty[Long]
-    def startDedup() = DedupStream.start(
-      changeDocs.select(col("id").as("doc_id"), col("text")),
-      s"$dir/dedup-index", s"$dir/dedup-ckpt", "doc_id", "text",
-      s => survivors.synchronized { survivors ++= s.collect().map(_.getLong(0)) }
-    )
-    def startAnn() = AnnStream.start(
-      changeDocs.select(col("id").as("vec_id"), col("embedding")),
-      s"$dir/ann-index", s"$dir/ann-ckpt", "vec_id", "embedding", planes = 6, dim = 16
-    )
+    def pipeline = h.pipeline(
+      SyncPipeline.DedupConsumer(s"$dir/dedup-index", "text",
+        s => survivors.synchronized { survivors ++= s.collect().map(_.getLong(0)) }),
+      SyncPipeline.AnnLshConsumer(s"$dir/ann-index", "embedding", planes = 6, dim = 16))
+    pipeline.seed()
+    assert(survivors.toSet == (1L to 4L).toSet)
+    survivors.clear()
 
-    // phase 1: runAll snapshots then streams; dedup + ANN run beside it
-    notes = mkNotes(6)
-    writeFeed(1, Seq(5L, 6L), txid = 1L)
-    val handles = GraftSync.runAll(
-      Seq(sync), s"$dir/ckpt",
-      changeFeed = _ => Some(Changes.fileStream(spark, feed))
-    )
-    val q1 = handles.head.get
-    val d1 = startDedup()
-    val a1 = startAnn()
-    Seq(q1, d1, a1).foreach(_.processAllAvailable())
-    Seq(q1, d1, a1).foreach(_.stop()) // the "crash"
+    // phase 1: two inserts stream through every query, then the "crash"
+    h.rows = noteDf(6)
+    h.land(("INSERT", 5L), ("INSERT", 6L))
+    h.run(pipeline)
 
     // phase 2: more data lands while everything is down
-    notes = mkNotes(8)
-    writeFeed(2, Seq(7L, 8L), txid = 2L)
-    val q2 = sync.stream(Changes.fileStream(spark, feed), s"$dir/ckpt/notes")
-    val d2 = startDedup()
-    val a2 = startAnn()
-    Seq(q2, d2, a2).foreach(_.processAllAvailable())
-    Seq(q2, d2, a2).foreach(_.stop())
+    h.rows = noteDf(8)
+    h.land(("INSERT", 7L), ("INSERT", 8L))
+    h.run(pipeline)
 
     // doc index: snapshot (1-4) + streamed inserts (5-8), batch 1 not replayed
     assert(sync.state.docs.collect().map(_.getString(0)).toSet == (1 to 8).map(_.toString).toSet)
-    // dedup: texts cycle i%3 — streamed ids 5..8 hold 3 distinct digests,
+    // dedup: streamed texts cycle i%3 — ids 5..8 hold 3 distinct digests,
     // first writer wins (8 duplicates 5's text), replays added nothing
     assert(survivors.toSet == Set(5L, 6L, 7L))
     val dedupIdx = spark.read.parquet(s"$dir/dedup-index")
       .collect().map(_.getAs[Long]("keep_id")).toSet
-    assert(dedupIdx == Set(5L, 6L, 7L))
-    // ANN: the appended index probes exactly like a batch rebuild over the
-    // same streamed vectors
-    val streamed = mkNotes(8).filter(_._1 >= 5L)
-      .toDF("vec_id", "text", "embedding").drop("text")
-    val queries = streamed.filter(col("vec_id") <= 6L)
+    assert(dedupIdx == Set(1L, 2L, 3L, 4L, 5L, 6L, 7L))
+    // ANN: the maintained index probes exactly like a batch rebuild over
+    // the same vectors
+    val all = noteDf(8).drop("text")
+    val queries = all.filter(col("id").isin(5L, 6L))
     def rows(d: DataFrame) =
       d.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     val probed = graft.ann.Ann.lshTopKIndexed(
-      s"$dir/ann-index", queries, "vec_id", "embedding", 3, planes = 6, dim = 16)
-    val rebuiltDir = graft.util.TempDirs.scratch("compose-ann-rebuild").toString
-    graft.ann.Ann.writeLshIndex(streamed, rebuiltDir, "vec_id", "embedding", planes = 6, dim = 16)
+      s"$dir/ann-index", queries, "id", "embedding", 3, planes = 6, dim = 16)
+    graft.ann.Ann.writeLshIndex(all, s"$dir/ann-rebuilt", "id", "embedding", planes = 6, dim = 16)
     val rebuilt = graft.ann.Ann.lshTopKIndexed(
-      rebuiltDir, queries, "vec_id", "embedding", 3, planes = 6, dim = 16)
+      s"$dir/ann-rebuilt", queries, "id", "embedding", 3, planes = 6, dim = 16)
     assert(rows(probed) == rows(rebuilt))
-    graft.util.TempDirs.delete(java.nio.file.Paths.get(rebuiltDir))
+    graft.util.TempDirs.delete(java.nio.file.Paths.get(dir))
   }
 
   test("streaming BM25 CDC: appends and deletes from a change feed, restart mid-stream") {
     import graft.functions.Retrieval
-    implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-bm25-stream").toString
     val texts = Map(
       1L -> "spark spark spark", 2L -> "spark filler filler", 3L -> "window join window",
       4L -> "spark spark other words", 5L -> "spark window spark", 6L -> "join join filler"
     )
+    def docs(ids: Long*) = ids.map(i => (i, texts(i))).toDF("doc_id", "text")
     // seed with docs 1-4, stream CDC batches on top
-    Retrieval.writeBm25Index(
-      texts.filterKeys(_ <= 4L).toSeq.toDF("doc_id", "text"), "doc_id", "text",
-      s"$dir/index", buckets = 8)
-    val stream = MemoryStream[(String, Long, String)]
-    val changes = stream.toDF()
-      .select(col("_1").as("tg_op"), col("_2").as("doc_id"), col("_3").as("text"))
-    def startQ() = Bm25Stream.start(changes, s"$dir/index", s"$dir/ckpt", "doc_id", "text")
-    // batch 1: two inserts, one delete
-    val q1 = startQ()
-    stream.addData(("INSERT", 5L, texts(5L)), ("INSERT", 6L, texts(6L)), ("DELETE", 2L, null))
-    q1.processAllAvailable()
-    q1.stop() // the "crash"
-    // batch 2 lands after restart: update doc 1's text, delete doc 5
-    val q2 = startQ()
-    stream.addData(("UPDATE", 1L, "rewritten spark text"), ("DELETE", 5L, null))
-    q2.processAllAvailable()
-    q2.stop()
-    // final live state: {1 (updated), 3, 4, 6} — probe equals a rebuild
-    // bit-for-bit (stats and df must track deletes exactly)
-    val queries = Seq((100L, "spark filler"), (200L, "window join")).toDF("qid", "qtext")
+    val h = new PipelineHarness(spark, "doc", "doc_id", docs(1L, 2L, 3L, 4L))
+    val dir = h.dir
+    def pipeline = h.pipeline(SyncPipeline.Bm25Consumer(s"$dir/index", "text", buckets = 8))
+    pipeline.seed()
+    // batch 1: two inserts, one delete; then the "crash"
+    h.rows = docs(1L, 3L, 4L, 5L, 6L)
+    h.land(("INSERT", 5L), ("INSERT", 6L), ("DELETE", 2L))
+    h.run(pipeline)
+    // batch 2 lands for the restart: update doc 1's text, delete doc 5
     val finalDocs = Seq(
       (1L, "rewritten spark text"), (3L, texts(3L)), (4L, texts(4L)), (6L, texts(6L))
     ).toDF("doc_id", "text")
+    h.rows = finalDocs
+    h.land(("UPDATE", 1L), ("DELETE", 5L))
+    h.run(pipeline)
+    // final live state: {1 (updated), 3, 4, 6} — probe equals a rebuild
+    // bit-for-bit (stats and df must track deletes exactly)
+    val queries = Seq((100L, "spark filler"), (200L, "window join")).toDF("qid", "qtext")
     val rebuiltDir = s"$dir/rebuilt"
     Retrieval.writeBm25Index(finalDocs, "doc_id", "text", rebuiltDir, buckets = 8)
     def rows(p: String) =
@@ -451,28 +418,27 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming BM25 CDC with auto-compaction: delete-heavy feed keeps the index tombstone-free") {
     import graft.functions.Retrieval
-    implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-bm25-autocompact-stream").toString
-    val seed = (1L to 10L).map(i => (i, s"spark doc$i shared words here")).toDF("doc_id", "text")
-    Retrieval.writeBm25Index(seed, "doc_id", "text", s"$dir/index", buckets = 8)
-    val stream = MemoryStream[(String, Long, String)]
-    val changes = stream.toDF()
-      .select(col("_1").as("tg_op"), col("_2").as("doc_id"), col("_3").as("text"))
+    def docs(ids: Seq[Long]) = ids.map(i => (i, s"spark doc$i shared words here")).toDF("doc_id", "text")
+    val h = new PipelineHarness(spark, "doc", "doc_id", docs(1L to 10L))
+    val dir = h.dir
     // a 0.3 dead-ratio policy: the 4-delete batch (4/10 dead) must trigger a
     // mid-stream compaction-and-swap; the next batch then mutates the
     // compacted index without noticing the swap happened
-    val q = Bm25Stream.start(changes, s"$dir/index", s"$dir/ckpt", "doc_id", "text",
-      autoCompactRatio = Some(0.3))
-    stream.addData(("DELETE", 1L, null), ("DELETE", 2L, null), ("DELETE", 3L, null), ("DELETE", 4L, null))
+    val p = h.pipeline(
+      SyncPipeline.Bm25Consumer(s"$dir/index", "text", buckets = 8, autoCompactRatio = Some(0.3)))
+    p.seed()
+    val q = h.start(p)
+    h.rows = docs(5L to 10L)
+    h.land(("DELETE", 1L), ("DELETE", 2L), ("DELETE", 3L), ("DELETE", 4L))
     q.processAllAvailable()
     assert(!graft.sources.IndexState.hasTombstones(spark, s"$dir/index"),
       "delete-heavy batch must have compacted the tombstones away")
-    stream.addData(("INSERT", 11L, "spark doc11 shared words here"), ("DELETE", 5L, null))
-    q.processAllAvailable()
-    q.stop()
     // final live docs {6..11}: probe equals a rebuild bit-for-bit
-    val finalDocs = ((6L to 10L).map(i => (i, s"spark doc$i shared words here")) :+
-      (11L, "spark doc11 shared words here")).toDF("doc_id", "text")
+    val finalDocs = docs(6L to 11L)
+    h.rows = finalDocs
+    h.land(("INSERT", 11L), ("DELETE", 5L))
+    q.processAllAvailable()
+    q.stopAll()
     Retrieval.writeBm25Index(finalDocs, "doc_id", "text", s"$dir/rebuilt", buckets = 8)
     val queries = Seq((100L, "spark shared")).toDF("qid", "qtext")
     def rows(p: String) =
@@ -484,31 +450,30 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming BM25 CDC auto-compaction: append-only feed keeps the pruned probe bounded") {
     import graft.functions.Retrieval
-    implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-bm25-growth-stream").toString
-    val seed = (1L to 4L).map(i => (i, s"spark doc$i shared words")).toDF("doc_id", "text")
-    Retrieval.writeBm25Index(seed, "doc_id", "text", s"$dir/index", buckets = 8)
+    val seed = (1L to 4L).map(i => (i, s"spark doc$i shared words"))
+    val h = new PipelineHarness(spark, "doc", "doc_id", seed.toDF("doc_id", "text"))
+    val dir = h.dir
     def termdfMultiple(): Long = {
       val p = s"${graft.sources.IndexState.dataPath(spark, s"$dir/index")}/${Retrieval.TermDfDir}"
       spark.read.parquet(p)
         .groupBy(col("term")).agg(count(lit(1)).as("n"))
         .agg(max(col("n"))).collect()(0).getLong(0)
     }
-    val stream = MemoryStream[(String, Long, String)]
-    val changes = stream.toDF()
-      .select(col("_1").as("tg_op"), col("_2").as("doc_id"), col("_3").as("text"))
     // a DELETE-FREE feed: the dead-ratio policy can never fire (no
     // tombstone ever exists), so only the impact-growth leg bounds the
     // pruned probe's per-term cap accumulation — multiple 3 means the hot
     // term 'spark' may carry at most 3 sidecar generations before the
     // auto-rewrite resets it to one, with no manual compaction call
-    val q = Bm25Stream.start(changes, s"$dir/index", s"$dir/ckpt", "doc_id", "text",
-      autoCompactRatio = Some(0.3), impactGrowthMultiple = 3.0)
+    val p = h.pipeline(SyncPipeline.Bm25Consumer(s"$dir/index", "text", buckets = 8,
+      autoCompactRatio = Some(0.3), impactGrowthMultiple = 3.0))
+    p.seed()
+    val q = h.start(p)
     (10L to 17L).foreach { i =>
-      stream.addData(("INSERT", i, s"spark doc$i fresh words"))
+      h.rows = (seed ++ (10L to i).map(j => (j, s"spark doc$j fresh words"))).toDF("doc_id", "text")
+      h.land(("INSERT", i))
       q.processAllAvailable()
     }
-    q.stop()
+    q.stopAll()
     assert(
       termdfMultiple() <= 3L,
       s"append-only feed must keep the hot term's sidecar multiple bounded, got ${termdfMultiple()}")
@@ -524,31 +489,24 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming ANN CDC: deletes reach the probe surface, replay converges") {
-    implicit val sqlCtx = spark.sqlContext
     import graft.ann.Ann
     def mkVec(i: Long) =
       Array.tabulate(16)(j => (math.cos((i % 4) * 3 + j) + 0.05 * math.sin(i * 17 + j)).toFloat)
-    val dir = graft.util.TempDirs.scratch("ann-cdc-stream").toString
-    Ann.writeLshIndex(
-      (0L until 40L).map(i => (i, mkVec(i))).toDF("vec_id", "embedding"),
-      s"$dir/index", "vec_id", "embedding", planes = 6, dim = 16)
-    val stream = MemoryStream[(String, Long, Array[Float])]
-    val changes = stream.toDF()
-      .select(col("_1").as("tg_op"), col("_2").as("vec_id"), col("_3").as("embedding"))
-    def startQ() = AnnStream.startCdc(
-      changes, s"$dir/index", s"$dir/ckpt", "vec_id", "embedding", planes = 6, dim = 16)
-    val q1 = startQ()
-    stream.addData(
-      (40L until 50L).map(i => ("INSERT", i, mkVec(i))) :+ (("DELETE", 1L, null)): _*)
-    q1.processAllAvailable()
-    q1.stop()
-    val q2 = startQ()
-    stream.addData(("UPDATE", 5L, mkVec(45L)), ("DELETE", 44L, null))
-    q2.processAllAvailable()
-    q2.stop()
+    def vecs(ids: Seq[Long]) = ids.map(i => (i, mkVec(i))).toDF("vec_id", "embedding")
+    val h = new PipelineHarness(spark, "vec", "vec_id", vecs(0L until 40L))
+    val dir = h.dir
+    def pipeline =
+      h.pipeline(SyncPipeline.AnnLshConsumer(s"$dir/index", "embedding", planes = 6, dim = 16))
+    pipeline.seed()
+    h.rows = vecs((0L until 50L).filterNot(_ == 1L))
+    h.land((40L until 50L).map(i => ("INSERT", i)) :+ (("DELETE", 1L)): _*)
+    h.run(pipeline)
     // final live state: 0..49 minus {1, 44}, with 5 carrying vec(45)
     val finalVecs = ((0L until 50L).filterNot(i => i == 1L || i == 44L))
       .map(i => (i, if (i == 5L) mkVec(45L) else mkVec(i))).toDF("vec_id", "embedding")
+    h.rows = finalVecs
+    h.land(("UPDATE", 5L), ("DELETE", 44L))
+    h.run(pipeline)
     val queries = finalVecs.filter(col("vec_id").isin(0L, 2L, 3L))
     def rows(p: String) =
       Ann.lshTopKIndexed(p, queries, "vec_id", "embedding", 5, planes = 6, dim = 16)
@@ -559,7 +517,7 @@ class StreamingSpec extends SparkSpec {
     // replaying the last batch converges (no duplicate rows, same probe)
     val replay = Seq(("UPDATE", 5L, mkVec(45L)), ("DELETE", 44L, null))
       .toDF("tg_op", "vec_id", "embedding")
-    AnnStream.applyCdcBatch(replay, s"$dir/index", "vec_id", "embedding", 6, 16)
+    AnnStream.applyCdcBatchResumed(replay, s"$dir/index", "vec_id", "embedding")
     assert(rows(s"$dir/index") == rows(rebuiltDir))
     // compaction keeps exactly one physical generation per live id
     val staged = s"$dir/compacted"
@@ -572,38 +530,33 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming PQ CDC: deletes reach the probe surface, auto-compaction, replay converges") {
-    implicit val sqlCtx = spark.sqlContext
     import graft.ann.Ann
     def mkVec(i: Long) =
       Array.tabulate(16)(j => (math.cos((i % 4) * 3 + j) + 0.05 * math.sin(i * 17 + j)).toFloat)
-    val dir = graft.util.TempDirs.scratch("pq-cdc-stream").toString
-    val seed = (0L until 40L).map(i => (i, mkVec(i))).toDF("vec_id", "embedding")
-    // models are FROZEN at build time; appends encode under them (sidecar)
+    def vecs(ids: Seq[Long]) = ids.map(i => (i, mkVec(i))).toDF("vec_id", "embedding")
+    val seed = vecs(0L until 40L)
+    val h = new PipelineHarness(spark, "vec", "vec_id", seed)
+    val dir = h.dir
+    // models are TRAINED at seed and FROZEN; appends encode under them
+    // (sidecar). The same training here gives the rebuild the same models.
     val cells = Ann.trainIvfCells(seed, "vec_id", "embedding", nlists = 4)
     val books = Ann.pqTrain(seed, "vec_id", "embedding", m = 4, codeK = 8)
-    Ann.writePqIndex(seed, s"$dir/index", "vec_id", "embedding", cells, books)
-    val stream = MemoryStream[(String, Long, Array[Float])]
-    val changes = stream.toDF()
-      .select(col("_1").as("tg_op"), col("_2").as("vec_id"), col("_3").as("embedding"))
-    def startQ() = AnnStream.startCdcPq(
-      changes, s"$dir/index", s"$dir/ckpt", "vec_id", "embedding",
-      autoCompactRatio = Some(0.03))
-    val q1 = startQ()
-    stream.addData(
-      (40L until 50L).map(i => ("INSERT", i, mkVec(i))) :+ (("DELETE", 1L, null)): _*)
-    q1.processAllAvailable()
-    q1.stop()
+    def pipeline = h.pipeline(SyncPipeline.AnnPqConsumer(
+      s"$dir/index", "embedding", nlists = 4, m = 4, codeK = 8, autoCompactRatio = Some(0.03)))
+    pipeline.seed()
+    h.rows = vecs((0L until 50L).filterNot(_ == 1L))
+    h.land((40L until 50L).map(i => ("INSERT", i)) :+ (("DELETE", 1L)): _*)
+    h.run(pipeline)
     // the 0.03 policy must have compacted the batch's churn away mid-stream
-    assert(!graft.sources.IndexState.hasTombstones(spark, s"$dir/index"))
-    val q2 = startQ()
-    stream.addData(("UPDATE", 5L, mkVec(45L)), ("DELETE", 44L, null))
-    q2.processAllAvailable()
-    q2.stop()
     assert(!graft.sources.IndexState.hasTombstones(spark, s"$dir/index"))
     // final live state: 0..49 minus {1, 44}, with 5 carrying vec(45) —
     // probe equals an index of the final state under the SAME frozen models
     val finalVecs = ((0L until 50L).filterNot(i => i == 1L || i == 44L))
       .map(i => (i, if (i == 5L) mkVec(45L) else mkVec(i))).toDF("vec_id", "embedding")
+    h.rows = finalVecs
+    h.land(("UPDATE", 5L), ("DELETE", 44L))
+    h.run(pipeline)
+    assert(!graft.sources.IndexState.hasTombstones(spark, s"$dir/index"))
     val queries = finalVecs.filter(col("vec_id").isin(0L, 2L, 3L))
     def rows(p: String) =
       Ann.pqTopKIndexedResumed(p, queries, "vec_id", "embedding", 5, nprobe = 4)
@@ -622,25 +575,22 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming ANN ingest: appended micro-batches probe like a full rebuild") {
-    implicit val sqlCtx = spark.sqlContext
     def mk(range: Range) = range.map { i =>
       val c = i % 4
       (i.toLong, Array.tabulate(16)(j => (math.cos(c * 3 + j) + 0.05 * math.sin(i * 17 + j)).toFloat))
     }
-    val indexDir = graft.util.TempDirs.scratch("ann-stream-index").toString
-    val ckpt = graft.util.TempDirs.scratch("ann-stream-ckpt").toString
-    // seed the layout with a batch write, then stream two micro-batches in
-    graft.ann.Ann.writeLshIndex(
-      mk(0 until 40).toDF("vec_id", "embedding"), indexDir, "vec_id", "embedding",
-      planes = 6, dim = 16)
-    val stream = MemoryStream[(Long, Array[Float])]
-    val vecs = stream.toDF().select(col("_1").as("vec_id"), col("_2").as("embedding"))
-    val query = AnnStream.start(vecs, indexDir, ckpt, "vec_id", "embedding", planes = 6, dim = 16)
-    stream.addData(mk(40 until 60): _*)
-    query.processAllAvailable()
-    stream.addData(mk(60 until 80): _*)
-    query.processAllAvailable()
-    query.stop()
+    // seed the layout from the source table, then stream two insert batches in
+    val h = new PipelineHarness(spark, "vec", "vec_id", mk(0 until 40).toDF("vec_id", "embedding"))
+    val indexDir = s"${h.dir}/index"
+    val p = h.pipeline(SyncPipeline.AnnLshConsumer(indexDir, "embedding", planes = 6, dim = 16))
+    p.seed()
+    val query = h.start(p)
+    for (batch <- Seq(40 until 60, 60 until 80)) {
+      h.rows = mk(0 until batch.end).toDF("vec_id", "embedding")
+      h.land(batch.map(i => ("INSERT", i.toLong)): _*)
+      query.processAllAvailable()
+    }
+    query.stopAll()
     val all = mk(0 until 80).toDF("vec_id", "embedding")
     val queries = all.filter(col("vec_id") < 4)
     def rows(d: org.apache.spark.sql.DataFrame) =
@@ -650,8 +600,7 @@ class StreamingSpec extends SparkSpec {
     val rebuilt = graft.ann.Ann.lshTopK(
       all, queries, "vec_id", "embedding", "vec_id", "embedding", 5, planes = 6, dim = 16)
     assert(rows(probed) == rows(rebuilt))
-    graft.util.TempDirs.delete(java.nio.file.Paths.get(indexDir))
-    graft.util.TempDirs.delete(java.nio.file.Paths.get(ckpt))
+    graft.util.TempDirs.delete(java.nio.file.Paths.get(h.dir))
   }
 
   test("random BM25 CDC op sequences probe like a rebuild of the final corpus") {
@@ -762,14 +711,14 @@ class StreamingSpec extends SparkSpec {
           } else { live += i; version += i -> (i + 31L * (b + 1)); ("INSERT", i, cur(i)) }
         }
         if (lastBatch.nonEmpty)
-          AnnStream.applyCdcBatch(
+          AnnStream.applyCdcBatchResumed(
             lastBatch.toDF("tg_op", "vec_id", "embedding"),
-            s"$dir/index", "vec_id", "embedding", 6, 16)
+            s"$dir/index", "vec_id", "embedding")
       }
       if (lastBatch.nonEmpty)
-        AnnStream.applyCdcBatch(
+        AnnStream.applyCdcBatchResumed(
           lastBatch.toDF("tg_op", "vec_id", "embedding"),
-          s"$dir/index", "vec_id", "embedding", 6, 16)
+          s"$dir/index", "vec_id", "embedding")
 
       val finalVecs = live.toSeq.sorted.map(i => (i, cur(i))).toDF("vec_id", "embedding")
       val queries = finalVecs.limit(4)

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.{GraftSync, SparkSpec}
 import graft.ann.Ann
 import graft.catalog.{Catalog, TableMeta}
-import graft.cdc.Changes
 import graft.functions.Retrieval
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -35,64 +34,46 @@ class SyncPipelineSpec extends SparkSpec {
     else (i, s"note text number$i shared words", mkVec(i))
 
   test("one feed, six consumers, restart mid-stream: every surface equals a final-state rebuild") {
-    val dir = Files.createTempDirectory("graft-pipeline").toString
-    val feed = s"$dir/feed"
-    Files.createDirectories(java.nio.file.Paths.get(feed))
-
     // the mutable "database": seed {1..4}; phase 1 deletes 1, adds 5,6;
     // phase 2 (after the crash) updates 2, deletes 5, adds 7,8
     val updated2 = (2L, "note text REWRITTEN two", mkVec(42L))
     val seedState: Seq[(Long, String, Array[Float])] = (1L to 4L).map(note)
     val phase1State: Seq[(Long, String, Array[Float])] = (2L to 6L).map(note)
     val finalState = Seq(updated2) ++ Seq(3L, 4L, 6L, 7L, 8L).map(note)
-    @volatile var notes = seedState
-    def noteDf = notes.toDF("id", "text", "embedding")
-    val load: String => DataFrame = { case "note" => noteDf }
-
-    val cat = Catalog(Map("note" -> TableMeta("note", Seq("id"))))
-    val schema = """{"database":"db","index":"notes","nodes":{"table":"note","columns":["id","text"]}}"""
-    val sync = GraftSync(spark, schema, cat, load, s"$dir/docs-index")
+    val h = new PipelineHarness(
+      spark, "note", "id", seedState.toDF("id", "text", "embedding"), Seq("id", "text"))
+    val (dir, sync) = (h.dir, h.sync)
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val survivors = scala.collection.mutable.ArrayBuffer.empty[Long]
-    def pipeline = new SyncPipeline(
-      sync, load, "note", "id",
-      Seq(
-        SyncPipeline.Bm25Consumer(s"$dir/bm25", "text", buckets = 8),
-        SyncPipeline.AnnLshConsumer(s"$dir/ann-lsh", "embedding", planes = 6, dim = 16),
-        SyncPipeline.AnnPqConsumer(s"$dir/ann-pq", "embedding", nlists = 2, m = 4, codeK = 4),
-        SyncPipeline.DedupConsumer(s"$dir/dedup", "text",
-          s => survivors.synchronized { survivors ++= s.collect().map(_.getLong(0)) }),
-        SyncPipeline.ClusterConsumer(
-          s"$dir/cluster", s"$dir/cluster-sig", "text", sigBuckets = 8, mapBuckets = 8)
-      ),
-      s"$dir/ckpt"
+    def pipeline = h.pipeline(
+      SyncPipeline.Bm25Consumer(s"$dir/bm25", "text", buckets = 8),
+      SyncPipeline.AnnLshConsumer(s"$dir/ann-lsh", "embedding", planes = 6, dim = 16),
+      SyncPipeline.AnnPqConsumer(s"$dir/ann-pq", "embedding", nlists = 2, m = 4, codeK = 4),
+      SyncPipeline.DedupConsumer(s"$dir/dedup", "text",
+        s => survivors.synchronized { survivors ++= s.collect().map(_.getLong(0)) }),
+      SyncPipeline.ClusterConsumer(
+        s"$dir/cluster", s"$dir/cluster-sig", "text", sigBuckets = 8, mapBuckets = 8)
     )
 
-    def ev(op: String, id: Long, txid: Long): String =
-      s"""{"tg_op":"$op","tbl":"note","old":${if (op == "DELETE") s"""\"{\\\"id\\\": $id}\"""" else "null"},"new":${if (op == "DELETE") "null" else s"""\"{\\\"id\\\": $id}\""""},"txid":$txid}"""
-    def writeFeed(n: Int, lines: Seq[String]): Unit =
-      Files.write(java.nio.file.Paths.get(s"$feed/batch$n.json"), lines.mkString("\n").getBytes)
-
-    // ---- seed: snapshot + all four index builds from state {1..4} ----------
-    val p1 = pipeline
-    p1.seed()
+    // ---- seed: snapshot + all five index builds from state {1..4} ----------
+    pipeline.seed()
     assert(sync.state.docs.count() == 4)
     assert(survivors.toSet == (1L to 4L).toSet, "seed corpus survivors are the 4 distinct texts")
     survivors.clear()
 
     // ---- phase 1: DELETE 1, INSERT 5, INSERT 6; then "crash" ---------------
-    notes = phase1State
-    writeFeed(1, Seq(ev("DELETE", 1L, 1L), ev("INSERT", 5L, 2L), ev("INSERT", 6L, 3L)))
-    val h1 = p1.start(() => Changes.fileStream(spark, feed))
-    h1.processAllAvailable()
-    h1.stopAll()
+    h.rows = phase1State.toDF("id", "text", "embedding")
+    h.land(("DELETE", 1L), ("INSERT", 5L), ("INSERT", 6L))
+    h.run(pipeline)
     assert(sync.state.docs.collect().map(_.getString(0)).toSet == (2L to 6L).map(_.toString).toSet)
 
     // ---- phase 2: land changes while everything is DOWN, then restart ------
-    notes = finalState
-    writeFeed(2, Seq(ev("UPDATE", 2L, 4L), ev("DELETE", 5L, 5L), ev("INSERT", 7L, 6L), ev("INSERT", 8L, 7L)))
-    val h2 = pipeline.start(() => Changes.fileStream(spark, feed))
-    h2.processAllAvailable()
-    h2.stopAll()
+    h.rows = finalState.toDF("id", "text", "embedding")
+    h.land(("UPDATE", 2L), ("DELETE", 5L), ("INSERT", 7L), ("INSERT", 8L))
+    h.run(pipeline)
+    // no micro-batch of any of the six queries outlives its query
+    val leaked = spark.sparkContext.getPersistentRDDs -- cachedBefore
+    assert(leaked.isEmpty, s"persistent RDDs left after stopAll: ${leaked.values.mkString(", ")}")
 
     // ---- doc index: exactly the final state, update visible ----------------
     val docs = sync.state.docs.collect().map(r => r.getString(0) -> r.getString(1)).toMap

@@ -3,8 +3,8 @@
 a change checkout, each run in its own fresh JVM, alternating which side
 goes first per seed so host drift falls on both sides evenly.
 
-    python3 ab.py run PARENT_DIR CHANGE_DIR OUT_DIR
-    python3 ab.py summarize OUT_DIR
+    python3 tools/ab.py run PARENT_DIR CHANGE_DIR OUT_DIR
+    python3 tools/ab.py summarize OUT_DIR
 
 `run` does, per workload, one untraced run per seed and side, then one
 traced run per side, and copies each run's result line (`*.line`) and full
