@@ -545,18 +545,60 @@ object Ann {
     // compaction refusal memo for nothing) and no empty file group on disk
     if (rows.isEmpty) return
     val seq = IndexState.bumpSeq(batch.sparkSession, path)
-    rows
-      .select(
-        col(id).as("neighbor_id"),
-        col(vec).as("v"),
-        lit(seq).as("seq"),
-        VF.hyperplaneBucket(col(vec), planes, dim).as("bucket")
-      )
+    lshRows(rows, id, vec, seq, planes, dim)
       .repartition(col("bucket"))
       .write
       .mode("append")
       .partitionBy("bucket")
       .parquet(IndexState.dataPath(batch.sparkSession, path))
+  }
+
+  /** The persisted row shape of an LSH append stamped with `seq`. */
+  private def lshRows(rows: DataFrame, id: String, vec: String, seq: Long, planes: Int, dim: Int) =
+    rows.select(
+      col(id).as("neighbor_id"),
+      col(vec).as("v"),
+      lit(seq).as("seq"),
+      VF.hyperplaneBucket(col(vec), planes, dim).as("bucket")
+    )
+
+  /** The driver-fused tier of one LSH CDC batch: [[deleteFromLshIndex]] of
+    * every id in `ids`, then [[appendLshIndex]] of `upserts`, with the same
+    * persisted rows — for batches the caller bounds (the
+    * [[graft.streaming.SyncPipeline]] literal tier). `upserts` is a
+    * driver-local relation, so the hyperplane buckets are the append's own
+    * Catalyst expression folded over it without a job. Three writes, each
+    * one single-stage job over a local relation: seq (both numbers
+    * reserved by one counter write) → tombstones → bucket rows (one file per
+    * hit bucket). An empty id set writes no tombstone and an empty upsert
+    * set no rows; neither bumps the seq.
+    */
+  private[graft] def mutateLshIndexFused(
+      spark: org.apache.spark.sql.SparkSession,
+      path: String,
+      ids: Seq[Long],
+      upserts: DataFrame,
+      id: String,
+      vec: String,
+      planes: Int,
+      dim: Int
+  ): Unit = {
+    val del = ids.distinct
+    val rows = upserts.filter(col(vec).isNotNull)
+    val appends = !rows.isEmpty
+    if (del.isEmpty && !appends) return
+    val s0 = IndexState.readSeq(spark, path, strictEmpty = true)
+    val delSeq = if (del.nonEmpty) s0 + 1L else s0
+    val seq = if (appends) delSeq + 1L else delSeq
+    IndexState.writeSeq(spark, path, seq)
+    IndexState.appendTombstoneIds(spark, del, path, delSeq)
+    if (appends)
+      lshRows(rows, id, vec, seq, planes, dim)
+        .coalesce(1)
+        .write
+        .mode("append")
+        .partitionBy("bucket")
+        .parquet(IndexState.dataPath(spark, path))
   }
 
   /** Remove vectors from a [[writeLshIndex]] layout — the DELETE leg of CDC

@@ -115,7 +115,9 @@ object AnnModels {
     // compaction swap before touching the sidecar
     graft.sources.IndexState.recoverSwap(spark, indexPath)
     val metas =
-      try spark.read.parquet(s"${modelDir(indexPath)}/meta").as[MetaRow].collect()
+      // explicit schema: no footer-inference job per model read
+      try spark.read.schema(org.apache.spark.sql.Encoders.product[MetaRow].schema)
+        .parquet(s"${modelDir(indexPath)}/meta").as[MetaRow].collect()
       catch {
         case e: Exception =>
           throw new IllegalStateException(

@@ -250,7 +250,7 @@ object Retrieval {
           withDl, postingsOf(withDl), path, buckets, seq = 0L,
           org.apache.spark.sql.SaveMode.Overwrite)
       )
-      writeBm25Stats(spark, path, s.getLong(0), s.getLong(1), buckets, statsSeq = 0L)
+      writeBm25Stats(spark, path, Bm25Stats(s.getLong(0), s.getLong(1), buckets, 0L, 0L))
       // impacts derive from the postings JUST WRITTEN (a pruned columnar
       // re-scan) rather than re-running the (id, dl, term) aggregation
       // over the token frame — one corpus shuffle saved per build
@@ -269,7 +269,7 @@ object Retrieval {
     * failing stats aggregate can no longer abandon the postings write
     * mid-flight for a retry to race). Only used where the two outputs have
     * no crash-ordering contract between them (one-time builds into fresh
-    * directories, compaction rewrites into staging).
+    * directories, compaction rewrites into staging) and for reads.
     */
   private def inParallel[A, B](a: => A, b: => B): (A, B) = graft.util.Par.both(a, b)
 
@@ -332,6 +332,10 @@ object Retrieval {
   }
 
   private val DoclensDir = "_graft_doclens"
+  private val DoclensSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("id", LongType),
+    org.apache.spark.sql.types.StructField("dl", LongType),
+    org.apache.spark.sql.types.StructField("seq", LongType)))
 
   /** Impact-ordered capped postings — the sidecars that make the indexed
     * probe CANDIDATE-bounded instead of corpus-bounded (the round-10
@@ -449,7 +453,10 @@ object Retrieval {
     else { impacts(); termdf() }
   }
 
-  /** `statsSeq` is the mutation seq these counters COVER: every postings/
+  /** The `_graft_stats` sidecar: integer corpus counters plus two coverage
+    * markers.
+    *
+    * `statsSeq` is the mutation seq these counters COVER: every postings/
     * doclens row with `seq <= statsSeq` is counted in `n_docs`/`dl_sum`,
     * rows with a higher seq are not (they can exist only as the orphan tail
     * of an append that crashed between its postings write and this stats
@@ -457,18 +464,31 @@ object Retrieval {
     * compaction carry it — under the single-writer at-least-once contract
     * only the LAST batch can be orphaned, and its replay runs before any
     * later mutation, so "counted iff seq <= statsSeq" stays exact.
+    *
+    * `tombSeq` is the delete-side twin: every tombstone with
+    * `del_seq <= tombSeq` is reflected in the counters. A tombstone above it
+    * is the tail of a delete leg that crashed between its tombstone write
+    * and its stats overwrite; the next delete leg decrements those ids'
+    * rows too ([[deleteFromBm25Index]]), so the replay converges although
+    * the ids are no longer live. Deletes advance it; appends and compaction
+    * carry it.
     */
-  private def writeBm25Stats(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
+  private final case class Bm25Stats(
       nDocs: Long,
       dlSum: Long,
       buckets: Int,
-      statsSeq: Long
+      statsSeq: Long,
+      tombSeq: Long
+  )
+
+  private def writeBm25Stats(
+      spark: org.apache.spark.sql.SparkSession,
+      path: String,
+      st: Bm25Stats
   ): Unit = {
     import spark.implicits._
-    Seq((nDocs, dlSum, buckets, statsSeq))
-      .toDF("n_docs", "dl_sum", "buckets", "stats_seq")
+    Seq((st.nDocs, st.dlSum, st.buckets, st.statsSeq, st.tombSeq))
+      .toDF("n_docs", "dl_sum", "buckets", "stats_seq", "tomb_seq")
       .coalesce(1)
       .write
       .mode("overwrite")
@@ -479,16 +499,17 @@ object Retrieval {
     org.apache.spark.sql.types.StructField("n_docs", org.apache.spark.sql.types.LongType),
     org.apache.spark.sql.types.StructField("dl_sum", org.apache.spark.sql.types.LongType),
     org.apache.spark.sql.types.StructField("buckets", org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("stats_seq", org.apache.spark.sql.types.LongType)))
+    org.apache.spark.sql.types.StructField("stats_seq", org.apache.spark.sql.types.LongType),
+    org.apache.spark.sql.types.StructField("tomb_seq", org.apache.spark.sql.types.LongType)))
 
-  /** `(n_docs, dl_sum, buckets, stats_seq)`. A pre-marker stats file reads
-    * `stats_seq` as null → Long.MaxValue, i.e. "every row covered" — exactly
-    * the assumption the pre-marker delete leg made.
+  /** A stats file written before a marker existed reads it as null →
+    * Long.MaxValue, i.e. "every row / every tombstone covered" — exactly
+    * the assumption the delete leg made before that marker.
     */
   private def readBm25Stats(
       spark: org.apache.spark.sql.SparkSession,
       path: String
-  ): (Long, Long, Int, Long) = {
+  ): Bm25Stats = {
     // every probe and mutation opens the index through this read, so an
     // interrupted compaction swap self-heals here (IndexState.recoverSwap)
     IndexState.recoverSwap(spark, path)
@@ -507,12 +528,16 @@ object Retrieval {
         val rows = spark.read.schema(StatsSchema).parquet(p).collect()
         if (rows.nonEmpty) {
           val st = rows(0)
-          val seqIdx = st.fieldIndex("stats_seq")
-          return (
+          def marker(name: String): Long = {
+            val i = st.fieldIndex(name)
+            if (st.isNullAt(i)) Long.MaxValue else st.getLong(i)
+          }
+          return Bm25Stats(
             st.getLong(st.fieldIndex("n_docs")),
             st.getLong(st.fieldIndex("dl_sum")),
             st.getInt(st.fieldIndex("buckets")),
-            if (st.isNullAt(seqIdx)) Long.MaxValue else st.getLong(seqIdx)
+            marker("stats_seq"),
+            marker("tomb_seq")
           )
         }
         // listable but no rows yet: the same window, fall through to retry
@@ -549,7 +574,7 @@ object Retrieval {
     // an empty batch is not a mutation: no seq bump (which would stale the
     // compaction refusal memo for nothing) and no empty file group on disk
     if (docs.isEmpty) return
-    val (nDocs, dlSum, buckets, _) = readBm25Stats(spark, path)
+    val st = readBm25Stats(spark, path)
     val seq = IndexState.bumpSeq(spark, path)
     // Same single-tokenization discipline as [[writeBm25Index]], but
     // MEMORY_AND_DISK, not DISK_ONLY: the no-memory-pinning rule targets
@@ -568,7 +593,7 @@ object Retrieval {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val data = IndexState.dataPath(spark, path)
-      writeBm25Postings(withDl, posted, data, buckets, seq, org.apache.spark.sql.SaveMode.Append)
+      writeBm25Postings(withDl, posted, data, st.buckets, seq, org.apache.spark.sql.SaveMode.Append)
       val s = withDl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("dl_sum")).collect()(0)
       val (bn, bs) = if (s.isNullAt(0) || s.isNullAt(1)) (0L, 0L) else (s.getLong(0), s.getLong(1))
       // per-batch impact caps (superset carriers of the global cap — the
@@ -585,10 +610,10 @@ object Retrieval {
       // postings and stats replays without stats drift").
       if (bn > 0L)
         writeBm25Impacts(
-          posted, data, buckets,
-          avgdl = (dlSum + bs).toDouble / (nDocs + bn), seq = seq,
+          posted, data, st.buckets,
+          avgdl = (st.dlSum + bs).toDouble / (st.nDocs + bn), seq = seq,
           org.apache.spark.sql.SaveMode.Append)
-      writeBm25Stats(spark, path, nDocs + bn, dlSum + bs, buckets, statsSeq = seq)
+      writeBm25Stats(spark, path, st.copy(nDocs = st.nDocs + bn, dlSum = st.dlSum + bs, statsSeq = seq))
     } finally { withDl.unpersist(); posted.unpersist(); () }
   }
 
@@ -605,15 +630,28 @@ object Retrieval {
     * deleted) are ignored: double-delete is a no-op and stats never drift.
     * `ids` must expose a BIGINT `id` column. Run [[compactBm25Index]] to
     * reclaim the tombstoned rows' space.
+    *
+    * Crash recovery: tombstones above the stats' `tomb_seq` are the tail of
+    * a delete that crashed before its stats overwrite ([[Bm25Stats]]).
+    * Their ids' rows are decremented here as well — as they stood under the
+    * reflected tombstones only — and the stats then cover them, even when
+    * nothing of this batch is live.
     */
   def deleteFromBm25Index(spark: org.apache.spark.sql.SparkSession, path: String, ids: DataFrame): Unit = {
-    val (nDocs, dlSum, buckets, statsSeq) = readBm25Stats(spark, path)
+    import spark.implicits._
+    val st = readBm25Stats(spark, path)
+    val data = IndexState.dataPath(spark, path)
+    val pending: Array[(Long, Long)] =
+      if (st.tombSeq == Long.MaxValue || !IndexState.hasTombstonesAt(spark, data)) Array.empty
+      else IndexState.tombstoneRowsAt(spark, data).filter(col("del_seq") > st.tombSeq)
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
     val del = ids.select(col("id").cast("long").as("id")).distinct()
-    val bucketKeys = del
-      .select(pmod(xxhash64(col("id")), lit(buckets.toLong)).as("b"))
+    val targets =
+      if (pending.isEmpty) del else del.union(pending.map(_._1).toSeq.toDF("id")).distinct()
+    val bucketKeys = targets
+      .select(pmod(xxhash64(col("id")), lit(st.buckets.toLong)).as("b"))
       .distinct().collect().map(_.getLong(0)).sorted
     if (bucketKeys.isEmpty) return
-    val data = IndexState.dataPath(spark, path)
     val dlens = spark.read
       .parquet(s"$data/$DoclensDir")
       .filter(col("dbucket").isInCollection(bucketKeys.toSeq))
@@ -622,26 +660,177 @@ object Retrieval {
     val live = IndexState
       .visibleAt(dlens, data, "id")
       .join(del, Seq("id"), "left_semi")
+    // the pending tail's ids count as they stood before their crashed delete
+    val reflected =
+      if (pending.isEmpty) live
+      else IndexState.visibleAt(dlens, data, "id", upTo = st.tombSeq).join(targets, Seq("id"), "left_semi")
     // Decrement ONLY rows the stats cover (seq <= stats_seq). Rows above
     // stats_seq are the orphan tail of an append that crashed before its
     // stats overwrite — the counters never included them, so decrementing
     // would leave stats permanently low after the crashed batch replays.
     // They are still TOMBSTONED below (the delete means the doc, not a
     // generation), which is also what keeps the replayed append exactly-once.
-    val counted = live
-      .filter(col("seq") <= statsSeq)
+    val counted = reflected
+      .filter(col("seq") <= st.statsSeq)
       .groupBy(col("id"))
       .agg(max_by(col("dl"), col("seq")).as("dl"))
     val s = counted.agg(count(lit(1)).as("n"), sum(col("dl")).as("d")).collect()(0)
     val (dn, dd) = if (s.isNullAt(1)) (0L, 0L) else (s.getLong(0), s.getLong(1))
-    // nothing live at all (neither counted nor orphan): double-delete no-op
-    if (dn == 0L && live.isEmpty) return
-    val seq = IndexState.bumpSeq(spark, path)
-    IndexState.appendTombstones(live.select(col("id")).distinct(), path, seq)
+    val anyLive = (pending.isEmpty && dn > 0L) || !live.isEmpty
+    // nothing live at all (neither counted nor orphan) and no pending tail:
+    // double-delete no-op
+    if (!anyLive && pending.isEmpty) return
+    val tombSeq =
+      if (!anyLive) pending.map(_._2).max
+      else {
+        val seq = IndexState.bumpSeq(spark, path)
+        IndexState.appendTombstones(live.select(col("id")).distinct(), path, seq)
+        seq
+      }
     // stats_seq does NOT advance on delete: the counters still describe
     // coverage up to the last append, and advancing here would wrongly
     // mark a concurrent orphan tail as covered
-    writeBm25Stats(spark, path, nDocs - dn, dlSum - dd, buckets, statsSeq)
+    writeBm25Stats(spark, path, st.copy(nDocs = st.nDocs - dn, dlSum = st.dlSum - dd, tombSeq = tombSeq))
+  }
+
+  /** The driver-fused tier of one CDC batch: [[deleteFromBm25Index]] of
+    * every id in `ids`, then [[appendBm25Index]] of `upserts`, with the same
+    * persisted rows — for batches the caller bounds (the
+    * [[graft.streaming.SyncPipeline]] literal tier). `upserts` is a
+    * driver-local relation of (`id`, `text`) rows with non-null text.
+    *
+    * Every per-batch derivation runs in driver memory. Tokens, `xxhash64`
+    * buckets and `imp_micro` are the distributed tier's own Catalyst
+    * expressions evaluated over local relations, which the optimizer folds
+    * without a job; `dl`, `tf`, the per-term cap, the df deltas and the
+    * stats deltas are integer counts. Persisted state is read by
+    * batch-bounded collects: stats and seq (overlapped), then one union of
+    * the batch ids' doclens (pruned to their buckets) and tombstones. Each
+    * sidecar is written by one single-stage job over a local relation, one
+    * file per hit bucket. Write order and no-op rules are the two legs': seq (both
+    * numbers reserved by one counter write; a burnt number is harmless) →
+    * tombstones → stats, then postings → doclens → impacts → termdf →
+    * stats.
+    */
+  private[graft] def mutateBm25IndexFused(
+      spark: org.apache.spark.sql.SparkSession,
+      path: String,
+      ids: Seq[Long],
+      upserts: DataFrame,
+      id: String,
+      text: String,
+      cap: Int = ImpactCap,
+      k1: Double = 1.2,
+      b: Double = 0.75
+  ): Unit = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    def local(rows: Seq[Row], schema: StructType): DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    def write(rows: DataFrame, dir: String, part: String): Unit =
+      rows.coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Append).partitionBy(part).parquet(dir)
+    val del = ids.distinct
+    val docs = upserts.select(col(id), TextFunctions.tokens(lower(col(text))))
+      .collect().toSeq.map(r => (r.get(0), r.getSeq[String](1)))
+    if (del.isEmpty && docs.isEmpty) return
+    // the two root sidecar reads are independent: overlap them
+    val (st, s0) = inParallel(readBm25Stats(spark, path), IndexState.readSeq(spark, path, strictEmpty = true))
+    val data = IndexState.dataPath(spark, path)
+
+    // ---- delete leg: which ids are live, what the stats counted --------
+    val hasTombs = IndexState.hasTombstonesAt(spark, data)
+    val fs = new org.apache.hadoop.fs.Path(data).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // doclens (id, dl, seq) and tombstones (id, del_seq) of `xs` — with
+    // `tail`, also every tombstone above tomb_seq — in one collect
+    def state(xs: Seq[Long], tail: Boolean): (Seq[(Long, Long, Long)], Seq[(Long, Long)]) = {
+      val keys = local(xs.map(Row(_)), StructType(Seq(StructField("id", LongType))))
+        .select(pmod(xxhash64(col("id")), lit(st.buckets.toLong)))
+        .collect().map(_.getLong(0)).distinct
+      val dirs = keys.toSeq.map(k => s"$data/$DoclensDir/dbucket=$k")
+        .filter(d => fs.exists(new org.apache.hadoop.fs.Path(d)))
+      val none = lit(null).cast(LongType)
+      val mine = col("id").isin(xs: _*)
+      val doclens = Option.when(dirs.nonEmpty)(
+        spark.read.schema(DoclensSchema).option("basePath", s"$data/$DoclensDir").parquet(dirs: _*)
+          .filter(mine)
+          .select(col("id"), col("dl"), col("seq"), none.as("del_seq")))
+      val tombs = Option.when(hasTombs)(
+        IndexState.tombstoneRowsAt(spark, data)
+          .filter(if (tail && st.tombSeq != Long.MaxValue) mine || col("del_seq") > st.tombSeq else mine)
+          .select(col("id"), none.as("dl"), none.as("seq"), col("del_seq")))
+      val rows = (doclens ++ tombs).reduceOption(_ unionByName _).map(_.collect().toSeq).getOrElse(Nil)
+      val (t, d) = rows.partition(!_.isNullAt(3))
+      (d.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))), t.map(r => (r.getLong(0), r.getLong(3))))
+    }
+    val (dlRows, tombs) =
+      if (del.isEmpty) (Nil, Nil)
+      else {
+        val (d0, t0) = state(del, tail = true)
+        val extra = t0.collect { case (i, s) if s > st.tombSeq => i }.distinct.filterNot(del.toSet)
+        if (extra.isEmpty) (d0, t0)
+        else { val (d1, t1) = state(extra, tail = false); (d0 ++ d1, (t0 ++ t1).distinct) }
+      }
+    val tombsOf = tombs.groupMap(_._1)(_._2)
+    val rowsOf = dlRows.groupMap(_._1)(r => (r._2, r._3))
+    def hidden(i: Long, seq: Long, upTo: Long) =
+      tombsOf.getOrElse(i, Nil).exists(d => d >= seq && d <= upTo)
+    val pending = tombs.filter(_._2 > st.tombSeq)
+    val live = del.filter(i => rowsOf.getOrElse(i, Nil).exists(r => !hidden(i, r._2, Long.MaxValue)))
+    // the deleteFromBm25Index decrement: covered rows (seq <= stats_seq)
+    // visible under the reflected tombstones, latest length per id
+    val counted = (del ++ pending.map(_._1)).distinct.flatMap { i =>
+      rowsOf.getOrElse(i, Nil)
+        .filter(r => r._2 <= st.statsSeq && !hidden(i, r._2, st.tombSeq))
+        .maxByOption(_._2).map(_._1)
+    }
+    val deletes = live.nonEmpty
+    val delSeq = if (deletes) s0 + 1L else s0
+    val seq = if (docs.nonEmpty) delSeq + 1L else delSeq
+    if (seq > s0) IndexState.writeSeq(spark, path, seq)
+    if (deletes) IndexState.appendTombstoneIds(spark, live, path, delSeq)
+    val st1 =
+      if (!deletes && pending.isEmpty) st
+      else {
+        val s1 = st.copy(
+          nDocs = st.nDocs - counted.size, dlSum = st.dlSum - counted.sum,
+          tombSeq = if (deletes) delSeq else pending.map(_._2).max)
+        writeBm25Stats(spark, path, s1)
+        s1
+      }
+
+    // ---- append leg ----------------------------------------------------
+    if (docs.isEmpty) return
+    val idType = upserts.schema(id).dataType
+    val postings = docs.flatMap { case (i, toks) =>
+      toks.groupMapReduce(identity)(_ => 1L)(_ + _).toSeq.map { case (t, tf) => Row(i, toks.size.toLong, t, tf) }
+    }
+    val idDl = Seq(StructField("id", idType), StructField("dl", LongType))
+    val posted = local(postings,
+      StructType(idDl ++ Seq(StructField("term", StringType), StructField("tf", LongType))))
+    val termBucket = pmod(xxhash64(col("term")), lit(st.buckets.toLong))
+    write(posted.withColumn("seq", lit(seq)).withColumn("bucket", termBucket), data, "bucket")
+    write(
+      local(docs.map { case (i, toks) => Row(i, toks.size.toLong) }, StructType(idDl))
+        .select(col("id").cast("long").as("id"), col("dl"), lit(seq).as("seq"))
+        .withColumn("dbucket", pmod(xxhash64(col("id")), lit(st.buckets.toLong))),
+      s"$data/$DoclensDir", "dbucket")
+    val (bn, bs) = (docs.size.toLong, docs.map(_._2.size.toLong).sum)
+    val avgdl = (st1.dlSum + bs).toDouble / (st1.nDocs + bn)
+    val scored = posted.select(
+      col("term"), col("id").cast("long").as("id"), col("tf"), col("dl"),
+      impMicro(col("tf"), col("dl"), avgdl, k1, b).as("imp_micro"))
+    val byImpact = Ordering.Tuple2(Ordering.Long.reverse, Ordering.Long)
+    val capped = scored.collect().toSeq.groupBy(_.getString(0)).values.toSeq
+      .flatMap(_.sortBy(r => (r.getLong(4), r.getLong(1)))(byImpact).take(cap))
+    write(
+      local(capped, scored.schema).withColumn("seq", lit(seq)).withColumn("bucket", termBucket),
+      s"$data/$ImpactsDir", "bucket")
+    val termDf = postings.groupMapReduce(_.getString(2))(_ => 1L)(_ + _).toSeq.map { case (t, n) => Row(t, n) }
+    write(
+      local(termDf, StructType(Seq(StructField("term", StringType), StructField("df", LongType))))
+        .withColumn("seq", lit(seq)).withColumn("bucket", termBucket),
+      s"$data/$TermDfDir", "bucket")
+    writeBm25Stats(spark, path, st1.copy(nDocs = st1.nDocs + bn, dlSum = st1.dlSum + bs, statsSeq = seq))
   }
 
   /** Rewrite a mutated index without its tombstoned rows: surviving
@@ -667,19 +856,21 @@ object Retrieval {
       .visibleAt(spark.read.parquet(s"$data/$DoclensDir"), data, "id")
       .repartition(col("dbucket"))
       .write.mode("overwrite").partitionBy("dbucket").parquet(s"$stagingPath/$DoclensDir")
-    val (n, d, b, statsSeq) = readBm25Stats(spark, path)
-    // carry stats_seq: surviving rows keep their seq stamps, so the
+    val st = readBm25Stats(spark, path)
+    // carry both markers: surviving rows keep their seq stamps, so the
     // covered/orphan boundary is unchanged by the rewrite
-    writeBm25Stats(spark, stagingPath, n, d, b,
-      if (statsSeq == Long.MaxValue) IndexState.readSeq(spark, path) else statsSeq)
+    def carried(m: Long) = if (m == Long.MaxValue) IndexState.readSeq(spark, path) else m
+    writeBm25Stats(spark, stagingPath,
+      st.copy(statsSeq = carried(st.statsSeq), tombSeq = carried(st.tombSeq)))
     // refresh the impact sidecars globally: exact df again (delete drift
     // gone), caps re-derived per term over the surviving postings with the
     // current avgdl — reading the COMPACTED copy just written, so the
     // tombstone subtraction is not paid twice
-    if (n > 0L)
+    if (st.nDocs > 0L)
       writeBm25Impacts(
         spark.read.parquet(stagingPath).select(col("id"), col("dl"), col("term"), col("tf")),
-        stagingPath, b, avgdl = d.toDouble / n, seq = IndexState.readSeq(spark, path),
+        stagingPath, st.buckets, avgdl = st.dlSum.toDouble / st.nDocs,
+        seq = IndexState.readSeq(spark, path),
         org.apache.spark.sql.SaveMode.Overwrite, overlap = true)
     IndexState.writeSeq(spark, stagingPath, IndexState.readSeq(spark, path))
   }
@@ -703,7 +894,7 @@ object Retrieval {
     require(maxDeadRatio > 0 && maxDeadRatio <= 1, s"maxDeadRatio must be in (0,1], got $maxDeadRatio")
     val dead = IndexState.tombstoneCount(spark, path)
     if (dead == 0L) return false
-    val (live, _, _, _) = readBm25Stats(spark, path)
+    val live = readBm25Stats(spark, path).nDocs
     // A fully-deleted index (live == 0) is NOT compacted: rewriting an
     // empty visible set would swap in a directory with no parquet part
     // files, which later reads cannot infer a schema from. Probes on the
@@ -785,7 +976,7 @@ object Retrieval {
       b: Double = 0.75
   ): DataFrame = {
     val spark = queries.sparkSession
-    val (nDocs, dlSum, buckets, _) = readBm25Stats(spark, path)
+    val Bm25Stats(nDocs, dlSum, buckets, _, _) = readBm25Stats(spark, path)
     val avgdl = dlSum.toDouble / nDocs
     val qterms = queries
       .select(
@@ -852,7 +1043,7 @@ object Retrieval {
       cap: Int = ImpactCap
   ): DataFrame = {
     val spark = queries.sparkSession
-    val (nDocs, dlSum, buckets, _) = readBm25Stats(spark, path)
+    val Bm25Stats(nDocs, dlSum, buckets, _, _) = readBm25Stats(spark, path)
     val qterms = queries
       .select(
         col(qid).as("qid"),

@@ -279,18 +279,31 @@ object IndexState {
   private val TombstoneSchema: StructType =
     StructType(Seq(StructField("id", LongType), StructField("del_seq", LongType)))
 
+  /** Raw tombstone rows `(id, del_seq)` of the resolved data dir `dataDir`:
+    * one row per id per delete batch.
+    */
+  private[graft] def tombstoneRowsAt(spark: SparkSession, dataDir: String): DataFrame =
+    spark.read.schema(TombstoneSchema).parquet(s"$dataDir/$TombstoneDir")
+
+  private[graft] def hasTombstonesAt(spark: SparkSession, dataDir: String): Boolean =
+    exists(spark, s"$dataDir/$TombstoneDir")
+
   /** Aggregated tombstones `(ts_id, del_seq)` of the resolved data dir
     * `dataDir` — one row per deleted id, carrying the LATEST delete seq
     * (earlier deletes of the same id are subsumed: any row hidden by an old
     * delete is also hidden by a newer one).
     */
   def readTombstonesAt(spark: SparkSession, dataDir: String): DataFrame =
-    spark.read
-      .schema(TombstoneSchema)
-      .parquet(s"$dataDir/$TombstoneDir")
+    readTombstonesAt(spark, dataDir, Long.MaxValue)
+
+  /** [[readTombstonesAt]] counting only deletes with `del_seq <= upTo`. */
+  private[graft] def readTombstonesAt(spark: SparkSession, dataDir: String, upTo: Long): DataFrame = {
+    val rows = tombstoneRowsAt(spark, dataDir)
+    (if (upTo == Long.MaxValue) rows else rows.filter(col("del_seq") <= upTo))
       .groupBy(col("id").as("ts_id"))
       .agg(max(col("del_seq")).as("del_seq"))
       .select(col("ts_id"), col("del_seq"))
+  }
 
   /** Append a delete batch: `ids` must expose a single BIGINT column named
     * `id`. One new file group per batch; O(batch) write. Lands in the
@@ -304,6 +317,20 @@ object IndexState {
       .write
       .mode("append")
       .parquet(s"${dataPath(ids.sparkSession, indexPath)}/$TombstoneDir")
+
+  /** [[appendTombstones]] for a driver-held id set: one single-stage write
+    * of a local relation, no distinct exchange. Nothing is written for an
+    * empty set.
+    */
+  private[graft] def appendTombstoneIds(spark: SparkSession, ids: Seq[Long], indexPath: String, seq: Long): Unit =
+    if (ids.nonEmpty) {
+      import spark.implicits._
+      ids.distinct.map(_ -> seq).toDF("id", "del_seq")
+        .coalesce(1)
+        .write
+        .mode("append")
+        .parquet(s"${dataPath(spark, indexPath)}/$TombstoneDir")
+    }
 
   /** Number of distinct tombstoned ids — the compaction-policy signal.
     * Cost is a scan of the (delete-batch-sized) sidecar only, never the
@@ -497,11 +524,15 @@ object IndexState {
     * new one mid-plan. No tombstone sidecar ⇒ `rows` unchanged —
     * append-only (and freshly compacted) generations pay nothing.
     */
-  def visibleAt(rows: DataFrame, dataDir: String, idCol: String): DataFrame = {
+  def visibleAt(rows: DataFrame, dataDir: String, idCol: String): DataFrame =
+    visibleAt(rows, dataDir, idCol, Long.MaxValue)
+
+  /** [[visibleAt]] under only the deletes with `del_seq <= upTo`. */
+  private[graft] def visibleAt(rows: DataFrame, dataDir: String, idCol: String, upTo: Long): DataFrame = {
     val spark = rows.sparkSession
-    if (!exists(spark, s"$dataDir/$TombstoneDir")) rows
+    if (!hasTombstonesAt(spark, dataDir)) rows
     else {
-      val ts = readTombstonesAt(spark, dataDir)
+      val ts = readTombstonesAt(spark, dataDir, upTo)
       rows
         .join(ts, rows(idCol) === ts("ts_id"), "left_outer")
         .filter(col("del_seq").isNull || col("seq") > col("del_seq"))

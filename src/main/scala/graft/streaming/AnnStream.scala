@@ -16,6 +16,15 @@ import org.apache.spark.sql.functions.col
   * One final op per id per batch; UPDATE rows carry the new vector.
   * [[SyncPipeline.AnnLshConsumer]] and [[SyncPipeline.AnnPqConsumer]] run
   * these per micro-batch; both also serve batch-mode backfills.
+  *
+  * The LSH batch has two tiers, split by the [[SyncPipeline.Consumer]]
+  * threshold (the doc engine's `IncrementalEngine.Tuning.inSetThreshold`,
+  * 1 000 ids by default). A batch within it arrives as a driver-local
+  * relation and takes the driver-fused tier ([[Ann.mutateLshIndexFused]]:
+  * hyperplane buckets folded on the driver, one seq read, one single-stage
+  * write each for seq, tombstones and bucket rows); a larger one runs
+  * [[Ann.deleteFromLshIndex]] then [[Ann.appendLshIndex]]. Both persist
+  * the same rows. The PQ batch has one tier.
   */
 object AnnStream {
 
@@ -32,18 +41,32 @@ object AnnStream {
       id: String,
       vec: String,
       autoCompactRatio: Option[Double] = None
+  ): Unit = applyLshTier(batch, indexPath, id, vec, autoCompactRatio, fused = false)
+
+  /** [[applyCdcBatchResumed]] on either tier — the [[Bm25Stream]] tier
+    * split: `fused` ([[Ann.mutateLshIndexFused]]) requires `batch` to be a
+    * driver-local relation; otherwise the distributed delete and append.
+    */
+  private[streaming] def applyLshTier(
+      batch: DataFrame,
+      indexPath: String,
+      id: String,
+      vec: String,
+      autoCompactRatio: Option[Double],
+      fused: Boolean
   ): Unit = {
-    val (planes, dim) = graft.ann.AnnModels.readLsh(batch.sparkSession, indexPath)
-    Ann.deleteFromLshIndex(
-      batch.sparkSession,
-      indexPath,
-      batch.select(col(id).cast("long").as("id"))
-    )
-    Ann.appendLshIndex(
-      batch.filter(col("tg_op").isin("INSERT", "UPDATE")),
-      indexPath, id, vec, planes, dim
-    )
-    autoCompactRatio.foreach { r => Ann.maybeCompactLshIndex(batch.sparkSession, indexPath, r); () }
+    val spark = batch.sparkSession
+    val (planes, dim) = graft.ann.AnnModels.readLsh(spark, indexPath)
+    val ids = batch.select(col(id).cast("long").as("id"))
+    val upserts = batch.filter(col("tg_op").isin("INSERT", "UPDATE"))
+    if (fused)
+      Ann.mutateLshIndexFused(
+        spark, indexPath, ids.collect().map(_.getLong(0)).toSeq, upserts, id, vec, planes, dim)
+    else {
+      Ann.deleteFromLshIndex(spark, indexPath, ids)
+      Ann.appendLshIndex(upserts, indexPath, id, vec, planes, dim)
+    }
+    autoCompactRatio.foreach { r => Ann.maybeCompactLshIndex(spark, indexPath, r); () }
   }
 
   /** One IVF-PQ CDC batch for a [[Ann.writePqIndex]] layout, under the

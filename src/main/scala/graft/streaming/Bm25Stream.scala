@@ -28,6 +28,18 @@ import org.apache.spark.sql.functions._
   * The feed must be collapsed to ONE final op per id per batch (the
   * engine's change batches are — [[graft.cdc.IncrementalEngine]] recomputes
   * final state per root), and UPDATE rows must carry the new full text.
+  *
+  * Two tiers run the protocol, chosen per micro-batch by
+  * [[SyncPipeline.Bm25Consumer]] with the threshold the doc sync's engine
+  * uses for its literal id sets (`IncrementalEngine.Tuning.inSetThreshold`,
+  * 1 000 by default). A batch within it arrives as a driver-local relation
+  * and takes the driver-fused tier
+  * ([[graft.functions.Retrieval.mutateBm25IndexFused]]): one collect of
+  * the batch, batch-bounded sidecar reads, one single-stage write per
+  * sidecar. A larger batch takes the distributed tier
+  * ([[Retrieval.deleteFromBm25Index]] then [[Retrieval.appendBm25Index]]).
+  * Both persist the same rows with the same write order, so a batch
+  * replayed through either tier converges.
   */
 object Bm25Stream {
 
@@ -58,15 +70,33 @@ object Bm25Stream {
       text: String,
       autoCompactRatio: Option[Double] = None,
       impactGrowthMultiple: Double = 64.0
+  ): Unit =
+    applyTier(spark, batch, indexPath, id, text, autoCompactRatio, impactGrowthMultiple, fused = false)
+
+  /** [[applyBatch]] on either tier; `fused` requires `batch` to be a
+    * driver-local relation.
+    */
+  private[streaming] def applyTier(
+      spark: SparkSession,
+      batch: DataFrame,
+      indexPath: String,
+      id: String,
+      text: String,
+      autoCompactRatio: Option[Double],
+      impactGrowthMultiple: Double,
+      fused: Boolean
   ): Unit = {
-    Retrieval.deleteFromBm25Index(
-      spark,
-      indexPath,
-      batch.select(col(id).cast("long").as("id"))
-    )
+    val ids = batch.select(col(id).cast("long").as("id"))
     val upserts = batch
       .filter(col("tg_op").isin("INSERT", "UPDATE") && col(text).isNotNull)
-    Retrieval.appendBm25Index(upserts, id, text, indexPath)
+    if (fused)
+      Retrieval.mutateBm25IndexFused(
+        spark, indexPath, ids.collect().map(_.getLong(0)).toSeq,
+        upserts.select(col(id), col(text)), id, text)
+    else {
+      Retrieval.deleteFromBm25Index(spark, indexPath, ids)
+      Retrieval.appendBm25Index(upserts, id, text, indexPath)
+    }
     autoCompactRatio.foreach { r =>
       // one rewrite per batch at most: the dead-ratio leg already re-caps
       // the impact sidecars globally (compactBm25Index refreshes them), so

@@ -38,6 +38,14 @@ object SyncPipeline {
     * Each consumer owns its protocol: [[seed]] builds its index from the
     * full source table, [[apply]] maintains it from one batch of
     * [[changeRows]].
+    *
+    * Batches come in two tiers, split by the threshold the doc sync's
+    * engine uses for literal id sets
+    * (`IncrementalEngine.Tuning.inSetThreshold`, 1 000 by default): a
+    * batch of at most that many ids is collected ONCE into a driver-local
+    * relation (`fused = true`), a larger one is cached for the batch. The
+    * BM25 and LSH consumers take their driver-fused tier on local batches
+    * ([[Bm25Stream]], [[AnnStream]]); the others read either form alike.
     */
   sealed trait Consumer {
     def name: String
@@ -52,8 +60,10 @@ object SyncPipeline {
     /** Apply one batch of `rows` in [[changeRows]] shape (`tg_op`, `pk`,
       * [[payloadColumn]]). `source` reads the CURRENT source table; the
       * BM25, dedup and cluster protocols take their session from it.
+      * `fused`: `rows` is a driver-local relation within the threshold.
       */
-    private[streaming] def apply(rows: DataFrame, pk: String, source: () => DataFrame): Unit
+    private[streaming] def apply(
+        rows: DataFrame, pk: String, source: () => DataFrame, fused: Boolean): Unit
   }
 
   /** Persisted BM25 maintenance ([[Bm25Stream.applyBatch]]: delete every
@@ -75,10 +85,12 @@ object SyncPipeline {
     private[streaming] def seed(src: DataFrame, pk: String): Unit =
       Retrieval.writeBm25Index(src, pk, textCol, indexPath, buckets)
 
-    private[streaming] def apply(rows: DataFrame, pk: String, source: () => DataFrame): Unit =
-      Bm25Stream.applyBatch(
-        source().sparkSession, rows, indexPath, pk, textCol, autoCompactRatio,
-        impactGrowthMultiple)
+    private[streaming] def apply(
+        rows: DataFrame, pk: String, source: () => DataFrame, fused: Boolean): Unit =
+      // a fused batch is a local relation: its session needs no source read
+      Bm25Stream.applyTier(
+        if (fused) rows.sparkSession else source().sparkSession, rows, indexPath, pk, textCol,
+        autoCompactRatio, impactGrowthMultiple, fused)
   }
 
   /** Persisted LSH ANN maintenance ([[AnnStream.applyCdcBatchResumed]]:
@@ -99,8 +111,9 @@ object SyncPipeline {
     private[streaming] def seed(src: DataFrame, pk: String): Unit =
       Ann.writeLshIndex(src, indexPath, pk, vecCol, planes, dim)
 
-    private[streaming] def apply(rows: DataFrame, pk: String, source: () => DataFrame): Unit =
-      AnnStream.applyCdcBatchResumed(rows, indexPath, pk, vecCol, autoCompactRatio)
+    private[streaming] def apply(
+        rows: DataFrame, pk: String, source: () => DataFrame, fused: Boolean): Unit =
+      AnnStream.applyLshTier(rows, indexPath, pk, vecCol, autoCompactRatio, fused)
   }
 
   /** Persisted IVF-PQ ANN maintenance ([[AnnStream.applyCdcPqBatch]]);
@@ -124,7 +137,8 @@ object SyncPipeline {
       Ann.writePqIndex(src, indexPath, pk, vecCol, cells, books)
     }
 
-    private[streaming] def apply(rows: DataFrame, pk: String, source: () => DataFrame): Unit =
+    private[streaming] def apply(
+        rows: DataFrame, pk: String, source: () => DataFrame, fused: Boolean): Unit =
       AnnStream.applyCdcPqBatch(rows, indexPath, pk, vecCol, autoCompactRatio)
   }
 
@@ -149,7 +163,8 @@ object SyncPipeline {
     private[streaming] def seed(src: DataFrame, pk: String): Unit =
       register(src.sparkSession, src, pk)
 
-    private[streaming] def apply(rows: DataFrame, pk: String, source: () => DataFrame): Unit =
+    private[streaming] def apply(
+        rows: DataFrame, pk: String, source: () => DataFrame, fused: Boolean): Unit =
       register(source().sparkSession, rows.filter(col("tg_op") =!= "DELETE"), pk)
 
     // one (pk, text) survivor shape for seed and batches
@@ -192,7 +207,8 @@ object SyncPipeline {
     private[streaming] def seed(src: DataFrame, pk: String): Unit =
       ClusterStream.seed(src, sigPath, indexPath, pk, textCol, model, mapBuckets)
 
-    private[streaming] def apply(rows: DataFrame, pk: String, source: () => DataFrame): Unit = {
+    private[streaming] def apply(
+        rows: DataFrame, pk: String, source: () => DataFrame, fused: Boolean): Unit = {
       val corpus = source()
       ClusterStream.applyBatch(
         corpus.sparkSession, rows, corpus, sigPath, indexPath, pk, textCol, autoCompactRatio)
@@ -236,7 +252,19 @@ object SyncPipeline {
       pk: String,
       payload: Seq[String],
       inSetThreshold: Int = 1000
-  ): DataFrame = {
+  ): DataFrame = changeRowsTiered(batch, load, table, pk, payload, inSetThreshold)._1
+
+  /** [[changeRows]] plus which tier it took: true when the collapsed op set
+    * fit `inSetThreshold` (so the rows do too — one per id).
+    */
+  private def changeRowsTiered(
+      batch: DataFrame,
+      load: String => DataFrame,
+      table: String,
+      pk: String,
+      payload: Seq[String],
+      inSetThreshold: Int
+  ): (DataFrame, Boolean) = {
     val evs = batch
       .filter(col("tbl") === table)
       .select(
@@ -260,8 +288,9 @@ object SyncPipeline {
       col(pk).cast("long").as(pk) +: (payload.map(col) :+ lit(true).as("__present")): _*
     )
     val collected = last.limit(inSetThreshold + 1).collect()
+    val bounded = collected.length <= inSetThreshold
     val (ops, srcAffected) =
-      if (collected.length <= inSetThreshold) {
+      if (bounded) {
         val local = batch.sparkSession.createDataFrame(
           java.util.Arrays.asList(collected: _*), last.schema)
         (local, src.filter(col(pk).isin(collected.map(_.getLong(0)).toSeq: _*)))
@@ -269,13 +298,14 @@ object SyncPipeline {
         (last, src.join(broadcast(last.select(col(pk))), Seq(pk)))
     val finalOp = when(col("tg_op") =!= "DELETE" && col("__present").isNull, lit("DELETE"))
       .otherwise(col("tg_op"))
-    ops
+    val rows = ops
       .join(srcAffected, Seq(pk), "left_outer")
       .select(
         finalOp.as("tg_op") +:
           col(pk) +:
           payload.map(p => when(finalOp === "DELETE", lit(null)).otherwise(col(p)).as(p)): _*
       )
+    (rows, bounded)
   }
 }
 
@@ -311,6 +341,27 @@ final class SyncPipeline(
   /** The CURRENT source table, read afresh at each use. */
   private val source: () => DataFrame = () => load(table)
 
+  /** The literal-tier bound of the doc sync's engine, shared by
+    * [[changeRows]] and the consumers' fused tier.
+    */
+  private val inSetThreshold = sync.tuning.inSetThreshold
+
+  /** One batch's [[changeRows]] in the form its consumers read, and the
+    * tier (the [[Consumer]] split): within the threshold the rows are
+    * collected ONCE into a driver-local relation, so no consumer action
+    * re-derives them; above it they are cached for the batch, since every
+    * action would otherwise redo the source scan and payload join. The
+    * caller unpersists the rows after the batch (a no-op on the local
+    * form).
+    */
+  private def batchRows(batch: DataFrame, payload: Seq[String]): (DataFrame, Boolean) = {
+    val (rows, bounded) = changeRowsTiered(batch, load, table, pk, payload, inSetThreshold)
+    if (!bounded) (rows.cache(), false)
+    else
+      (batch.sparkSession.createDataFrame(java.util.Arrays.asList(rows.collect(): _*), rows.schema),
+        true)
+  }
+
   /** Snapshot the doc index and build every secondary index from the
     * current source-table state — the composed `pull()`
     * (`sync.py:1895-1945`): after seed, every probe surface answers for the
@@ -343,13 +394,14 @@ final class SyncPipeline(
 
   /** Apply one raw change batch to EVERY consumer — the batch-mode form.
     * The per-id op collapse + payload join runs ONCE over the union of the
-    * consumers' payload columns and is cached across consumers (each
-    * streaming query in [[start]] necessarily derives its own — separate
-    * checkpoints mean separate plans — but batch mode shares the pass).
+    * consumers' payload columns and is shared across consumers, held
+    * driver-local or cached by tier ([[batchRows]]; each streaming query in
+    * [[start]] necessarily derives its own — separate checkpoints mean
+    * separate plans — but batch mode shares the pass).
     *
     * The doc sync and the per-consumer applies then run as OVERLAPPING
     * Spark jobs (the [[seed]] rationale): each mutates only its own index
-    * directory from the same immutable source state and the shared cached
+    * directory from the same immutable source state and the shared
     * `rows`, so per-surface content equals the sequential order, while a
     * consumer's driver-side sidecar reads/commits back-fill with the
     * others' executor work. A failed surface still fails the batch (first
@@ -376,12 +428,12 @@ final class SyncPipeline(
   def applyBatch(batch: DataFrame): Unit = {
     if (consumers.isEmpty) { sync.applyChanges(batch); return }
     val payloads = consumers.map(_.payloadColumn).distinct
-    val rows = changeRows(batch, load, table, pk, payloads).cache()
+    val (rows, fused) = batchRows(batch, payloads)
     try runOverlapped(
       ("apply: docs" -> (() => sync.applyChanges(batch))) +:
         consumers.map(c =>
           s"apply: ${c.name}" ->
-            (() => c.apply(rows.select(col("tg_op"), col(pk), col(c.payloadColumn)), pk, source))))
+            (() => c.apply(rows.select(col("tg_op"), col(pk), col(c.payloadColumn)), pk, source, fused))))
     finally { rows.unpersist(); () }
   }
 
@@ -427,7 +479,9 @@ final class SyncPipeline(
     val doc = sync.stream(feed(), s"$checkpointBase/docs")
     val rest = consumers.map { c =>
       c.name -> StreamSync.foreachBatch(feed(), s"$checkpointBase/${c.name}") { batch =>
-        c.apply(changeRows(batch, load, table, pk, Seq(c.payloadColumn)), pk, source)
+        val (rows, fused) = batchRows(batch, Seq(c.payloadColumn))
+        try c.apply(rows, pk, source, fused)
+        finally { rows.unpersist(); () }
       }
     }.toMap
     Handles(doc, rest)

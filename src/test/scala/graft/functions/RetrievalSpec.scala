@@ -367,6 +367,72 @@ class RetrievalSpec extends SparkSpec {
       .foreach(d => graft.util.TempDirs.delete(java.nio.file.Paths.get(d)))
   }
 
+  test("bm25 fused tier: a crash before stats in either leg replays to a rebuild") {
+    // the crash-replay scenario above with the crash AND the replay on the
+    // driver-fused tier, plus its delete-leg twin: a delete that dies after
+    // its tombstones but before its stats overwrite leaves ids that are no
+    // longer live while the counters still include them — the replay must
+    // decrement them all the same (tomb_seq), on both tiers
+    val base = Seq(
+      (1L, "spark spark filler"),
+      (2L, "window join window"),
+      (3L, "spark other words")
+    )
+    val batch = Seq((4L, "spark window replay"), (5L, "join filler filler join"))
+    val queries = Seq((100L, "spark filler"), (200L, "window join")).toDF("qid", "qtext")
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    def probe(p: String) = rows(Retrieval.bm25TopKIndexedBatch(p, queries, "qid", "qtext", 10))
+    def stats(p: String) = spark.read.parquet(s"$p/_graft_stats")
+      .select("n_docs", "dl_sum").collect().map(r => (r.getLong(0), r.getLong(1))).head
+    def fused(p: String, ids: Seq[Long], ups: Seq[(Long, String)]): Unit =
+      Retrieval.mutateBm25IndexFused(spark, p, ids, ups.toDF("doc_id", "text"), "doc_id", "text")
+    // the crash: the stats sidecar as it stood before the batch
+    def crashed(p: String)(mutate: => Unit): Unit = {
+      val pre = spark.read.parquet(s"$p/_graft_stats").collect()
+      mutate
+      spark.createDataFrame(java.util.Arrays.asList(pre: _*), pre.head.schema)
+        .coalesce(1).write.mode("overwrite").parquet(s"$p/_graft_stats")
+    }
+    def build(docs: Seq[(Long, String)]): String = {
+      val p = graft.util.TempDirs.scratch("bm25-fused-crash").toString
+      Retrieval.writeBm25Index(docs.toDF("doc_id", "text"), "doc_id", "text", p, buckets = 8)
+      p
+    }
+    def assertRebuilt(p: String, docs: Seq[(Long, String)], what: String): Unit = {
+      val rebuilt = build(docs)
+      assert(stats(p) == stats(rebuilt), s"$what: stats drifted from a rebuild")
+      assert(probe(p) == probe(rebuilt), s"$what: probe diverged from a rebuild")
+      graft.util.TempDirs.delete(java.nio.file.Paths.get(rebuilt))
+    }
+
+    // append leg: dies after termdf, before stats; replayed whole
+    val appended = build(base)
+    crashed(appended)(fused(appended, batch.map(_._1), batch))
+    fused(appended, batch.map(_._1), batch)
+    assertRebuilt(appended, base ++ batch, "fused append crash")
+
+    // delete leg: dies after tombstones, before stats; replayed whole
+    val deleted = build(base ++ batch)
+    crashed(deleted)(fused(deleted, Seq(2L, 4L), Nil))
+    fused(deleted, Seq(2L, 4L), Nil)
+    val survivors = (base ++ batch).filterNot(d => Set(2L, 4L)(d._1))
+    assertRebuilt(deleted, survivors, "fused delete crash")
+    // the replay decremented without a tombstone or seq of its own
+    assert(graft.sources.IndexState.readSeq(spark, deleted) == 1L)
+
+    // the same delete crash on the distributed tier, replayed there
+    val distributed = build(base ++ batch)
+    def delete(p: String) = Retrieval.deleteFromBm25Index(spark, p, Seq(2L, 4L).toDF("id"))
+    crashed(distributed)(delete(distributed))
+    delete(distributed)
+    assertRebuilt(distributed, survivors, "distributed delete crash")
+    // and a later batch on the other tier sees no pending tail left
+    fused(distributed, Seq(5L), Seq(5L -> "join filler filler join"))
+    assertRebuilt(distributed, survivors, "after a later fused re-append")
+    Seq(appended, deleted, distributed).foreach(d => graft.util.TempDirs.delete(java.nio.file.Paths.get(d)))
+  }
+
   test("bm25 auto-compaction: fires at the dead-ratio threshold, swaps atomically, probes unchanged") {
     val docs = Seq(
       (1L, "spark spark spark"),

@@ -18,7 +18,8 @@ final class PipelineHarness(
     table: String,
     pk: String,
     initial: DataFrame,
-    docColumns: Seq[String] = Nil
+    docColumns: Seq[String] = Nil,
+    tuning: graft.cdc.IncrementalEngine.Tuning = graft.cdc.IncrementalEngine.Tuning()
 ) {
   val dir: String = Files.createTempDirectory(s"graft-pipeline-$table").toString
   private val feed = s"$dir/feed"
@@ -37,7 +38,8 @@ final class PipelineHarness(
     GraftSync(
       spark,
       s"""{"database":"db","index":"$table","nodes":{"table":"$table","columns":[$cols]}}""",
-      Catalog(Map(table -> TableMeta(table, Seq(pk)))), load, s"$dir/docs-index")
+      Catalog(Map(table -> TableMeta(table, Seq(pk)))), load, s"$dir/docs-index",
+      tuning = tuning)
   }
 
   /** A pipeline over the source table, checkpointed under `dir/ckpt` — a
@@ -67,6 +69,18 @@ final class PipelineHarness(
     val name = s"batch$files.json"
     Files.write(Paths.get(s"$staging/$name"), lines.mkString("\n").getBytes)
     Files.move(Paths.get(s"$staging/$name"), Paths.get(s"$feed/$name"), StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  /** The change events of `events` as one batch-mode frame, each with the
+    * next txid (the [[land]] event shape, for [[SyncPipeline.applyBatch]]).
+    */
+  def batch(events: (String, Long)*): DataFrame = {
+    import spark.implicits._
+    events.map { case (op, id) =>
+      txid += 1
+      val key = s"""{"$pk": $id}"""
+      (op, table, if (op == Changes.Insert) null else key, if (op == Changes.Delete) null else key, txid)
+    }.toDF("tg_op", "tbl", "old", "new", "txid")
   }
 
   /** Start `p` on the feed. */

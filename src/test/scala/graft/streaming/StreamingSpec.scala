@@ -739,6 +739,180 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("random BM25/LSH CDC batches persist the same state on the fused and distributed tiers") {
+    // every two-tier path is tested on both tiers: one seeded BM25 and one
+    // LSH index, random INSERT/UPDATE/DELETE batches (re-adds, deletes of
+    // never-indexed ids, a re-delivered last batch) through
+    // SyncPipeline.applyBatch — on the distributed tier (threshold 0: no
+    // batch fits the literal tier) and on the default, driver-fused one,
+    // ending with a 300-insert batch whose shared term overflows the
+    // per-term impact cap (ties in imp_micro broken by id). Persisted state
+    // and probes must be identical.
+    import graft.ann.Ann
+    import graft.cdc.IncrementalEngine.Tuning
+    import graft.functions.Retrieval
+    import graft.sources.IndexState
+    import org.scalacheck.Gen
+    val vocab = Vector("spark", "window", "join", "filler", "stream", "batch", "index", "probe")
+    def text(c: Int): String =
+      if (c >= 10000) ("spark" +: Seq.fill(c % 7)("filler")).mkString(" ")
+      else {
+        val r = new scala.util.Random(c)
+        Seq.fill(1 + r.nextInt(8))(vocab(r.nextInt(vocab.size))).mkString(" ")
+      }
+    def vec(c: Int) = Array.tabulate(8)(j => math.cos(c * 0.7 + j * 1.3).toFloat)
+    def source(live: Map[Long, Int]) =
+      live.toSeq.sortBy(_._1).map { case (i, c) => (i, text(c), vec(c)) }.toDF("id", "text", "embedding")
+    // a batch: distinct ids, each an upsert (op 0/1) or a delete (op 2) with a content seed
+    val batchGen = Gen.listOf(Gen.zip(Gen.chooseNum(1L, 12L), Gen.chooseNum(0, 2), Gen.chooseNum(0, 999)))
+      .map(_.distinctBy(_._1))
+    val caseGen = Gen.zip(
+      Gen.listOfN(6, Gen.zip(Gen.chooseNum(1L, 12L), Gen.chooseNum(0, 999))).map(_.toMap),
+      Gen.listOfN(4, batchGen))
+    val params = Gen.Parameters.default.withSize(6)
+    val queries = Seq((100L, "spark filler"), (200L, "window join probe")).toDF("qid", "qtext")
+    val vecQueries = Seq((1L, vec(3)), (2L, vec(500))).toDF("qid", "embedding")
+
+    val overCap = (100L until 400L).map(i => (i, 0, 10000 + i.toInt)).toList
+    (0 until 2).flatMap(i => caseGen(params, org.scalacheck.rng.Seed(23L + i))).foreach {
+      case (seeded, random) =>
+        val batches = random :+ overCap
+        val states = batches.scanLeft(seeded) { (live, b) =>
+          b.foldLeft(live) { case (m, (i, op, c)) => if (op == 2) m - i else m + (i -> c) }
+        }
+        def events(before: Map[Long, Int], b: List[(Long, Int, Int)]) = b.map { case (i, op, _) =>
+          (if (op == 2) "DELETE" else if (before.contains(i)) "UPDATE" else "INSERT", i)
+        }
+        def run(tuning: Tuning): PipelineHarness = {
+          val h = new PipelineHarness(spark, "note", "id", source(seeded), tuning = tuning)
+          val p = h.pipeline(
+            SyncPipeline.Bm25Consumer(s"${h.dir}/bm25", "text", buckets = 4),
+            SyncPipeline.AnnLshConsumer(s"${h.dir}/lsh", "embedding", planes = 4, dim = 8))
+          p.seed()
+          val delivered = batches.indices.filter(batches(_).nonEmpty).map { k =>
+            h.rows = source(states(k + 1))
+            p.applyBatch(h.batch(events(states(k), batches(k)): _*))
+            k
+          }
+          // at-least-once: the last delivered batch again, at the final state
+          delivered.lastOption.foreach(k => p.applyBatch(h.batch(events(states(k), batches(k)): _*)))
+          h
+        }
+        val (dist, fused) = (run(Tuning(inSetThreshold = 0)), run(Tuning()))
+
+        def rowsOf(df: DataFrame): Set[Seq[Any]] =
+          df.collect().map(_.toSeq.map {
+            case a: scala.collection.Seq[_] => a.toList
+            case x => x
+          }).toSet
+        def visible(index: String, sidecar: String, idCol: String): Set[Seq[Any]] = {
+          val data = IndexState.dataPath(spark, index)
+          rowsOf(IndexState.visibleAt(spark.read.parquet(data + sidecar), data, idCol))
+        }
+        def tombstones(index: String): Set[Seq[Any]] = {
+          val data = IndexState.dataPath(spark, index)
+          if (!IndexState.hasTombstonesAt(spark, data)) Set.empty
+          else rowsOf(IndexState.tombstoneRowsAt(spark, data))
+        }
+        def state(h: PipelineHarness): Map[String, Any] = {
+          val (bm25, lsh) = (s"${h.dir}/bm25", s"${h.dir}/lsh")
+          Map(
+            "bm25 seq" -> IndexState.readSeq(spark, bm25),
+            "bm25 stats" -> rowsOf(spark.read.parquet(s"$bm25/_graft_stats")),
+            "bm25 tombstones" -> tombstones(bm25),
+            "postings" -> visible(bm25, "", "id"),
+            "doclens" -> visible(bm25, "/_graft_doclens", "id"),
+            "impacts" -> visible(bm25, s"/${Retrieval.ImpactsDir}", "id"),
+            "termdf" -> rowsOf(spark.read.parquet(s"${IndexState.dataPath(spark, bm25)}/${Retrieval.TermDfDir}")),
+            "bm25 probe" -> rowsOf(Retrieval.bm25TopKIndexedPrunedBatch(bm25, queries, "qid", "qtext", 10)),
+            "lsh seq" -> IndexState.readSeq(spark, lsh),
+            "lsh tombstones" -> tombstones(lsh),
+            "lsh rows" -> visible(lsh, "", "neighbor_id"),
+            "lsh probe" -> rowsOf(Ann.lshTopKIndexed(lsh, vecQueries, "qid", "embedding", 5, planes = 4, dim = 8)))
+        }
+        val (d, f) = (state(dist), state(fused))
+        d.keys.foreach(k => if (f(k) != d(k)) fail(s"$k differs between tiers (random batches=$random)"))
+        Seq(dist, fused).foreach(h => graft.util.TempDirs.delete(java.nio.file.Paths.get(h.dir)))
+    }
+  }
+
+  test("fused tier layout: one file per hit bucket per sidecar; never-indexed inserts leave no tombstone") {
+    import graft.ann.Ann
+    import graft.functions.{Retrieval, VectorFunctions}
+    import graft.sources.IndexState
+    import java.io.File
+    val dir = graft.util.TempDirs.scratch("fused-layout").toString
+    val (bm25, lsh) = (s"$dir/bm25", s"$dir/lsh")
+    def vec(i: Long) = Array.tabulate(8)(j => math.sin(i * 1.9 + j).toFloat)
+    val seed = (1L to 4L).map(i => (i, s"seed words number$i", vec(i))).toDF("id", "text", "embedding")
+    Retrieval.writeBm25Index(seed, "id", "text", bm25, buckets = 8)
+    Ann.writeLshIndex(seed, lsh, "id", "embedding", planes = 4, dim = 8)
+    // one local batch of never-indexed INSERTs (the SyncPipeline literal tier)
+    val batch = (10L to 15L).map(i => ("INSERT", i, s"fresh spark words tok$i", vec(i)))
+      .toDF("tg_op", "id", "text", "embedding")
+    def parts(root: String): Map[String, Set[String]] =
+      Option(new File(root).listFiles()).toSeq.flatten.filter(_.getName.contains("=")).map { d =>
+        d.getName -> d.listFiles().map(_.getName).filter(n => n.startsWith("part-") && n.endsWith(".parquet")).toSet
+      }.toMap
+    val roots = Map(
+      "postings" -> bm25, "doclens" -> s"$bm25/_graft_doclens", "impacts" -> s"$bm25/${Retrieval.ImpactsDir}",
+      "termdf" -> s"$bm25/${Retrieval.TermDfDir}", "lsh" -> lsh)
+    val before = roots.map { case (k, r) => k -> parts(r) }
+
+    // the driver-fused tier runs a bounded number of Spark jobs per batch
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).foreach(jobs.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      def group(name: String)(f: => Unit): Unit = {
+        sc.setJobGroup(name, name)
+        try f finally sc.clearJobGroup()
+      }
+      group("fused-bm25")(Bm25Stream.applyTier(spark, batch, bm25, "id", "text", None, 64.0, fused = true))
+      group("fused-lsh")(AnnStream.applyLshTier(batch, lsh, "id", "embedding", None, fused = true))
+      group("marker")(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 30000000000L
+      while (!jobs.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      val counts = jobs.toArray.toSeq.groupBy(identity).map { case (g, js) => g -> js.size }
+      // BM25: stats, seq and one doclens+tombstone read; seq, postings,
+      // doclens, impacts, termdf and stats writes
+      assert(counts.getOrElse("fused-bm25", 0) <= 9, counts)
+      // LSH: model and seq reads; seq, tombstone and bucket-row writes
+      assert(counts.getOrElse("fused-lsh", 0) <= 5, counts)
+    } finally sc.removeSparkListener(listener)
+
+    // the buckets the batch hits, by the same expressions the writers use
+    def hit(c: org.apache.spark.sql.Column, df: DataFrame): Set[String] =
+      df.select(c).distinct().collect().map(_.get(0).toString).toSet
+    val terms = batch.select(explode(split(col("text"), " ")).as("term"))
+    val termBuckets = hit(pmod(xxhash64(col("term")), lit(8L)), terms).map("bucket=" + _)
+    val want = Map(
+      "postings" -> termBuckets, "impacts" -> termBuckets, "termdf" -> termBuckets,
+      "doclens" -> hit(pmod(xxhash64(col("id")), lit(8L)), batch).map("dbucket=" + _),
+      "lsh" -> hit(VectorFunctions.hyperplaneBucket(col("embedding"), 4, 8), batch).map("bucket=" + _))
+    roots.foreach { case (k, r) =>
+      val added = parts(r).map { case (b, fs) => b -> (fs -- before(k).getOrElse(b, Set.empty)) }.filter(_._2.nonEmpty)
+      assert(added.keySet == want(k), s"$k: buckets written ${added.keySet}, hit ${want(k)}")
+      added.foreach { case (b, fs) =>
+        assert(fs.size == 1, s"$k/$b: ${fs.size} new files")
+        assert(spark.read.parquet(s"$r/$b/${fs.head}").count() > 0, s"$k/$b: empty file")
+      }
+    }
+    // never-indexed ids: the BM25 delete leg finds nothing live, so no
+    // tombstone and one seq number; the LSH delete leg tombstones every
+    // batch id (it cannot see liveness without scanning every bucket), and
+    // both of its seq numbers are reserved by one counter write
+    assert(!new File(s"$bm25/${IndexState.TombstoneDir}").exists())
+    assert(IndexState.readSeq(spark, bm25) == 1L)
+    assert(IndexState.readSeq(spark, lsh) == 2L)
+    assert(IndexState.tombstoneCount(spark, lsh) == 6L)
+    graft.util.TempDirs.delete(java.nio.file.Paths.get(dir))
+  }
+
   test("random PQ CDC op sequences probe like a same-model rebuild") {
     // IVF-PQ analogue of the random LSH property: cells and codebooks are
     // FROZEN at the seed build (appends encode under them), so the mutated

@@ -142,6 +142,43 @@ class SyncPipelineSpec extends SparkSpec {
     graft.util.TempDirs.delete(java.nio.file.Paths.get(dir))
   }
 
+  test("streamed batches over the literal-tier bound: cached once per batch, released, surfaces rebuilt") {
+    // threshold 1: a multi-id batch takes the distributed tier, whose rows
+    // every consumer action would re-derive without the per-batch cache;
+    // the cache must not outlive the batch
+    val seedState = (1L to 4L).map(note)
+    val finalState = Seq((2L, "note text REWRITTEN two", mkVec(42L))) ++ Seq(3L, 4L, 5L, 6L).map(note)
+    val h = new PipelineHarness(
+      spark, "note", "id", seedState.toDF("id", "text", "embedding"), Seq("id", "text"),
+      tuning = graft.cdc.IncrementalEngine.Tuning(inSetThreshold = 1))
+    val dir = h.dir
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val pipeline = h.pipeline(
+      SyncPipeline.Bm25Consumer(s"$dir/bm25", "text", buckets = 8),
+      SyncPipeline.AnnLshConsumer(s"$dir/ann-lsh", "embedding", planes = 6, dim = 16))
+    pipeline.seed()
+    h.rows = finalState.toDF("id", "text", "embedding")
+    h.land(("DELETE", 1L), ("UPDATE", 2L), ("INSERT", 5L), ("INSERT", 6L))
+    h.run(pipeline)
+    val leaked = spark.sparkContext.getPersistentRDDs -- cachedBefore
+    assert(leaked.isEmpty, s"persistent RDDs left after stopAll: ${leaked.values.mkString(", ")}")
+
+    val finalDf = finalState.toDF("id", "text", "embedding")
+    val queries = Seq((100L, "note shared"), (200L, "REWRITTEN number5")).toDF("qid", "qtext")
+    Retrieval.writeBm25Index(finalDf, "id", "text", s"$dir/bm25-rebuilt", buckets = 8)
+    def bm25Rows(p: String) =
+      Retrieval.bm25TopKIndexedBatch(p, queries, "qid", "qtext", 10)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    assert(bm25Rows(s"$dir/bm25") == bm25Rows(s"$dir/bm25-rebuilt"))
+    val vecQueries = finalDf.filter(col("id").isin(3L, 4L)).select(col("id"), col("embedding"))
+    Ann.writeLshIndex(finalDf, s"$dir/ann-lsh-rebuilt", "id", "embedding", planes = 6, dim = 16)
+    def lshRows(p: String) =
+      Ann.lshTopKIndexed(p, vecQueries, "id", "embedding", 5, planes = 6, dim = 16)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    assert(lshRows(s"$dir/ann-lsh") == lshRows(s"$dir/ann-lsh-rebuilt"))
+    graft.util.TempDirs.delete(java.nio.file.Paths.get(dir))
+  }
+
   test("randomized composed pipeline: random ops in random batches equal a final-state rebuild on every surface") {
     // The six-consumer analogue of the per-family randomized properties:
     // random INSERT/UPDATE/DELETE sequences, partitioned into random

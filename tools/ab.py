@@ -31,6 +31,8 @@ TRACED = ["probe.doc.jobs", "probe.doc.tasks", "probe.doc.wall_s", "index.commit
           "cdc.resolve.roots_per_change", "index.commit.rewrite_ratio", "cdc.resolve.wall_s",
           "cdc.reassemble.wall_s", "op.cdc_batch.wall_s", "stream.docs.tasks",
           "leak.persistent_rdds"]
+# streaming surfaces whose traced counts are also reported per micro-batch
+SURFACES = ["docs", "bm25", "ann"]
 
 
 def run_one(side, checkout, out, workload, seed, trace):
@@ -110,6 +112,28 @@ def summarize(out):
                 p, c = (traced[s]["metrics"].get(m, {}).get("value") for s in SIDES)
                 if p is not None and c is not None and (p or c):
                     print(f"| `{m}` | {p:.4g} | {c:.4g} |")
+            per_batch(traced)
+
+
+def per_batch(traced):
+    """Per-micro-batch jobs, tasks and wall time of each streaming surface."""
+    def value(report, m):
+        return report["metrics"].get(m, {}).get("value")
+    rows = []
+    for surface in SURFACES:
+        for m in ("jobs", "tasks", "wall_s"):
+            cells = []
+            for side in SIDES:
+                n = value(traced[side], f"stream.{surface}.batches")
+                x = value(traced[side], f"stream.{surface}.{m}")
+                cells.append(f"{x / n:.4g}" if n and x is not None else None)
+            if all(cells):
+                rows.append(f"| `stream.{surface}.{m}` per batch | {cells[0]} | {cells[1]} |")
+    if rows:
+        print("\nPer micro-batch:\n")
+        print("| metric | parent | change |")
+        print("|---|---|---|")
+        print("\n".join(rows))
 
 
 if __name__ == "__main__":
