@@ -4,9 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Shared construction of the composed-pipeline scenario's source table and
-  * change batch, used by the graded queries (SparkEntry `q_composed_*`) and
-  * the per-stage diagnostic ([[graft.tools.ComposedProfile]]) — one
-  * definition, so the graded plan and the profile cannot drift apart.
+  * change batch, used by the graded queries (SparkEntry `q_composed_*`).
   *
   * `media` is documents ⋈ embeddings (one row per document that has an
   * embedding); the post-change state deletes `doc_id % 10 == 7`, prefixes

@@ -22,10 +22,9 @@ object SparkEntry {
   private def loader(s: SparkSession, dir: String): String => DataFrame =
     Tables.load(s, dir)
 
-  /** Per-session prebuilt BM25 index, one per sf dir: q_bm25_indexed times
-    * STEADY-STATE probe cost against this, while q_bm25_index_build times
-    * the one-time build — conflating the two hid probe regressions behind
-    * build noise (and vice versa).
+  /** Per-session prebuilt BM25 index, one per sf dir: q_bm25_indexed
+    * probes this STEADY-STATE index, while q_bm25_index_build grades the
+    * one-time build — each row exercises one of the two cost shapes.
     */
   private val bm25IndexCache = scala.collection.concurrent.TrieMap.empty[String, String]
 
@@ -33,7 +32,7 @@ object SparkEntry {
     * the prebuilt state reads — documents AND embeddings (the composed
     * scenario derives from both): the session-cache key shared by every
     * prebuilt-state cache below, so an in-session regeneration of either
-    * table (e.g. a ScaleUp overwrite) invalidates the prebuilt state
+    * table invalidates the prebuilt state
     * instead of probing a stale copy.
     */
   private def sessionCacheKey(dir: String): String = {
@@ -52,8 +51,8 @@ object SparkEntry {
   }
 
   /** Drop cache entries for the same sf dir whose table fingerprint no
-    * longer matches the current one (an in-session regeneration, e.g. a
-    * ScaleUp overwrite created a new key): the stale prebuilt state would
+    * longer matches the current one (an in-session regeneration created a
+    * new key): the stale prebuilt state would
     * never be probed again, but its materialized blocks / scratch roots
     * would otherwise pin memory and disk for the session's lifetime. The
     * fingerprint segment is compared whole (`takeWhile('#')`), so sibling
@@ -86,34 +85,8 @@ object SparkEntry {
   private def assembled(s: SparkSession, dir: String, fixture: String): DataFrame =
     DocAssembler.assemble(SchemaDef.parseNodes(fixture), loader(s, dir), Catalog.testData)
 
-  /** Per-session full-corpus production (xxhash64) near-dup pair set, one
-    * per sf dir: q_dedup_cluster_incr_prod times the CLUSTER BOOKKEEPING
-    * (member appends, cross-batch merges, pointer resolution) against this,
-    * because the corpus pair DISCOVERY cost is already its own timed signal
-    * (q_dedup_minhash_prod) — re-deriving it per measurement conflated the
-    * two (round-10 verdict #6). Eagerly local-checkpointed: survives the
-    * bench's per-query clearCache(), and the cluster queries' results are
-    * read back from the on-disk map, so no returned plan references (and no
-    * per-query unpersist can drop) these blocks.
-    */
-  private val prodPairCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
-  private def prodPairsFor(s: SparkSession, dir: String): DataFrame =
-    prodPairCache.synchronized {
-      val key = sessionCacheKey(dir)
-      evictStale(prodPairCache, dir, key)(df =>
-        try org.apache.spark.sql.GraftColumnBridge.unpersistLocalCheckpoint(df)
-        catch { case scala.util.control.NonFatal(_) => () })
-      prodPairCache.getOrElseUpdate(key, {
-        graft.dedup.Dedup
-          .minhashLsh(loader(s, dir)("documents"), "doc_id", "text", threshold = 0.3)
-          .select(col("id_a"), col("id_b"))
-          .localCheckpoint(true)
-      })
-    }
-
-  /** Shared body of q_dedup_cluster_incr / _prod: documents arrive in 3
-    * batches (`doc_id % 3` = arrival index; a pair arrives with its LATER
+  /** Body of q_dedup_cluster_incr: documents arrive in 3 batches
+    * (`doc_id % 3` = arrival index; a pair arrives with its LATER
     * endpoint), each batch feeds [[graft.dedup.ClusterMap.applyBatch]], and
     * the final [[graft.dedup.ClusterMap.assignments]] must equal the batch
     * CC over the cumulative pair list (+ singletons). The pair SET is
@@ -121,19 +94,14 @@ object SparkEntry {
     * incremental pair operator accumulates over the same arrival order
     * (q_dedup_minhash_incr grades THAT); this query grades the cluster
     * bookkeeping: member appends, cross-batch merges, pointer resolution.
-    * The portable grading twin derives its pair set inline (it is the
-    * oracle ground truth and bench-excluded); the timed prod twin takes the
-    * session-cached pair set ([[prodPairsFor]]) so its bench row times
-    * bookkeeping only.
     */
-  private def clusterIncr(
-      s: SparkSession,
-      dir: String,
-      pairsIn: DataFrame
-  ): DataFrame = {
-    val pairs = pairsIn.cache()
+  private def clusterIncr(s: SparkSession, dir: String): DataFrame = {
+    val d = loader(s, dir)("documents")
+    val pairs = graft.dedup.Dedup
+      .minhashLshPortable(d, "doc_id", "text", threshold = 0.3)
+      .select(col("id_a"), col("id_b"))
+      .cache()
     try {
-      val d = loader(s, dir)("documents")
       val path = graft.util.TempDirs.scratch("cluster-map-q").toString
       graft.dedup.ClusterMap.init(s, path, buckets = 16)
       (0 until 3).foreach { i =>
@@ -199,10 +167,9 @@ object SparkEntry {
       activatePost: () => Unit)
 
   /** Build (and seed) one composed scenario. `full = false` wires the two
-    * consumers the established q_composed_cdc row has timed since round 10
-    * (BM25 + LSH — its bench number stays comparable across rounds);
-    * `full = true` wires ALL SIX consumer surfaces from one feed — the
-    * whole product fan-out (doc index via sync + these five). PQ trains at
+    * consumers q_composed_cdc grades (BM25 + LSH); `full = true` wires
+    * ALL SIX consumer surfaces from one feed — the whole product fan-out
+    * (doc index via sync + these five). PQ trains at
     * refine=0 (seeds = first 16 pre-corpus vectors) and the cluster
     * consumer uses the portable md5 family at the q_cluster_stream model,
     * so every surface stays DuckDB-replayable end to end.
@@ -240,9 +207,9 @@ object SparkEntry {
   }
 
   /** Per-session seeded composed scenario, one per sf dir (the
-    * [[bm25IndexCache]] convention): q_composed_cdc times the INCREMENTAL
+    * [[bm25IndexCache]] convention): q_composed_cdc grades the INCREMENTAL
     * path (change batch + three probe legs) against this, while
-    * q_composed_build times the one-time seed standalone — the same
+    * q_composed_build grades the one-time seed standalone — the same
     * build/steady-state split as q_bm25_index_build / q_bm25_indexed.
     * Repeat runs redeliver the same change batch to the cached scenario;
     * at-least-once replay convergence (the product contract, spec-covered)
@@ -251,11 +218,10 @@ object SparkEntry {
   private val composedCache =
     scala.collection.concurrent.TrieMap.empty[String, ComposedScenario]
 
-  /** `full = false`: the two-consumer scenario q_composed_cdc times;
+  /** `full = false`: the two-consumer scenario q_composed_cdc grades;
     * `full = true`: the six-consumer scenario q_composed_full grades. Two
-    * cache slots per sf dir — the lite one keeps the timed row's scope
-    * identical across rounds while the full one carries the correctness
-    * gate for the whole fan-out.
+    * cache slots per sf dir — the full one carries the correctness gate for
+    * the whole fan-out.
     */
   private def composedSeedFor(s: SparkSession, dir: String, full: Boolean): ComposedScenario =
     composedCache.synchronized {
@@ -497,7 +463,7 @@ object SparkEntry {
     // derivation, delete-first index maintenance, doc re-assembly) is
     // hash-checked end to end on one result frame.
     // STEADY STATE: the scenario (seed snapshot + every consumer's index
-    // build) comes from the per-session cache, so this times the
+    // build) comes from the per-session cache, so this grades the
     // INCREMENTAL path only — one mixed change batch through all consumers
     // plus the three probe legs. Repeat runs redeliver the same batch;
     // at-least-once replay convergence makes every rerun byte-identical.
@@ -539,8 +505,7 @@ object SparkEntry {
     // cluster assignments (union-find over seed pairs + the batch's
     // index-probed verified pairs; deleted docs keep their membership per
     // the no-split contract). The oracle rebuilds all six from the corpus
-    // from scratch. Bench-excluded: its applyBatch cost is q_composed_cdc's
-    // timed row already — this entry exists for the correctness gate.
+    // from scratch.
     "q_composed_full" -> ((s, dir) => {
       val sc = composedSeedFor(s, dir, full = true)
       sc.activatePost()
@@ -588,7 +553,7 @@ object SparkEntry {
         .unionByName(dedupLeg)
         .unionByName(clusterLeg)
     }),
-    // BUILD: the one-time composed seed timed standalone (the
+    // BUILD: the one-time composed seed graded standalone (the
     // q_bm25_index_build convention — uncached, a fresh scratch root every
     // run): snapshot + every consumer's index build from the PRE-change
     // corpus, graded on exact per-surface corpus facts the oracle
@@ -964,9 +929,8 @@ object SparkEntry {
     }),
     // ---- persisted BM25 index, split into its two cost shapes --------------
     // BUILD: tokenize the corpus once, write term-bucketed postings + the
-    // doclens/stats sidecars. Timed standalone so the one-time index cost is
-    // its own bench signal; graded on the stats sidecar (n_docs / dl_sum are
-    // exact corpus facts the oracle recomputes).
+    // doclens/stats sidecars. Graded on the stats sidecar (n_docs / dl_sum
+    // are exact corpus facts the oracle recomputes).
     "q_bm25_index_build" -> ((s, dir) => {
       val docs = loader(s, dir)("documents")
       val idx = graft.util.TempDirs.scratch("bm25-index-build").toString
@@ -1093,11 +1057,6 @@ object SparkEntry {
     "q_classifier" -> ((s, dir) =>
       graft.functions.Classifier
         .scorePortable(loader(s, dir)("documents"), col("doc_id"), col("text"))),
-    // production twin: xxhash64 buckets (timed; correctness carried by the
-    // oracle-checked portable twin + ClassifierSpec twin-equivalence tests)
-    "q_classifier_prod" -> ((s, dir) =>
-      graft.functions.Classifier
-        .score(loader(s, dir)("documents"), col("doc_id"), col("text"))),
     // ---- quality: the Gopher rule gate (integer-exact signals + verdict) ---
     "q_quality_gopher" -> ((s, dir) =>
       graft.functions.QualityRules
@@ -1129,15 +1088,6 @@ object SparkEntry {
       Dedup.minhashLshPortable(loader(s, dir)("documents"), "doc_id", "text", threshold = 0.3)),
     "q_dedup_simhash" -> ((s, dir) =>
       Dedup.simhashPortable(loader(s, dir)("documents"), "doc_id", "text", maxHamming = 3)),
-    // the PRODUCTION xxhash64 plans (long signatures, rotate-XOR family) —
-    // timed-only entries so the bench grades the shapes you'd run at 100 TB;
-    // no oracleSql on purpose (the portable twins above carry the hash gate,
-    // and these long-hash plans are not replayable by an external engine —
-    // their correctness lives in DedupSpec's property tests)
-    "q_dedup_minhash_prod" -> ((s, dir) =>
-      Dedup.minhashLsh(loader(s, dir)("documents"), "doc_id", "text", threshold = 0.3)),
-    "q_dedup_simhash_prod" -> ((s, dir) =>
-      Dedup.simhash(loader(s, dir)("documents"), "doc_id", "text", maxHamming = 3)),
     // ---- dedup: exact n-gram Jaccard via inverted index --------------------
     "q_dedup_ngram" -> ((s, dir) =>
       Dedup.ngramJaccard(loader(s, dir)("documents"), "doc_id", "text", threshold = 0.2)),
@@ -1557,37 +1507,13 @@ object SparkEntry {
         threshold = 0.3
       )
     }),
-    // production xxhash64 twin of q_dedup_minhash_incr — timed-only (no
-    // oracle, same rationale as q_dedup_minhash_prod): the bench grades the
-    // band-key family the ingest path would persist at 100 TB
-    "q_dedup_minhash_incr_prod" -> ((s, dir) => {
-      val d = loader(s, dir)("documents")
-      Dedup.minhashLshIncremental(
-        d.filter(pmod(col("doc_id"), lit(2)) === 0),
-        d.filter(pmod(col("doc_id"), lit(2)) === 1),
-        "doc_id",
-        "text",
-        threshold = 0.3
-      )
-    }),
     // ---- incremental cluster maintenance: documents arrive in 3 batches,
     // each batch's near-dup pairs feed the persisted union-find
     // (graft.dedup.ClusterMap: bucketed member rows + log-structured
     // downward merge pointers); the final assignment must equal the batch
     // CC over the cumulative pair list. Portable md5 pair family → the
     // oracle replays pairs + a recursive-CTE transitive closure ------------
-    "q_dedup_cluster_incr" -> ((s, dir) =>
-      clusterIncr(
-        s, dir,
-        graft.dedup.Dedup
-          .minhashLshPortable(loader(s, dir)("documents"), "doc_id", "text", threshold = 0.3)
-          .select(col("id_a"), col("id_b")))),
-    // production xxhash64 twin — timed-only, same convention as the other
-    // _prod twins: identical ClusterMap machinery (spec-covered); its pair
-    // set comes from the session cache so the timed row grades cluster
-    // bookkeeping, not the corpus pair discovery q_dedup_minhash_prod
-    // already times
-    "q_dedup_cluster_incr_prod" -> ((s, dir) => clusterIncr(s, dir, prodPairsFor(s, dir))),
+    "q_dedup_cluster_incr" -> ((s, dir) => clusterIncr(s, dir)),
     // ---- the same clusters maintained by the STREAMING path: persisted
     // signature index probes + restricted-scan Jaccard verify feeding the
     // union-find (ClusterStream) — oracle shared with q_dedup_cluster_incr,

@@ -295,20 +295,6 @@ object Ann {
     cells
   }
 
-  /** Lloyd iterations for coarse IVF centroids: assign each vector to its
-    * nearest centroid (map-side, literal centroids), replace centroids with
-    * per-cell mean vectors. `centroids` is (cell, centroid).
-    */
-  def refineCentroids(
-      v: DataFrame, // (cid, cv)
-      centroids: DataFrame, // (cell, centroid)
-      iterations: Int
-  ): DataFrame = {
-    val spark = v.sparkSession
-    import spark.implicits._
-    refineCentroidsLocal(v, collectCells(centroids), iterations).toDF("cell", "centroid")
-  }
-
   /** IVF (inverted-file) ANN: assign corpus vectors to `nlists` coarse
     * centroids (deterministically seeded from the corpus, refined with
     * `refine` Lloyd iterations), probe the `nprobe` nearest cells per query,
@@ -504,14 +490,6 @@ object Ann {
     // parameters the buckets were built under (AnnModels)
     AnnModels.writeLsh(corpus.sparkSession, path, planes, dim)
     IndexState.writeSeq(corpus.sparkSession, path, 0L)
-  }
-
-  /** [[appendLshIndex]] under the parameters persisted at
-    * [[writeLshIndex]] time — the restart path: no caller-held model state.
-    */
-  def appendLshIndexResumed(batch: DataFrame, path: String, id: String, vec: String): Unit = {
-    val (planes, dim) = AnnModels.readLsh(batch.sparkSession, path)
-    appendLshIndex(batch, path, id, vec, planes, dim)
   }
 
   /** Probe a [[writeLshIndex]] layout. The probe keys are collected on the

@@ -122,28 +122,46 @@ object Catalog {
     * SQLAlchemy reflection (`pgsync/base.py:306-345`) and `information_schema`
     * constraint queries (`pgsync/view.py:232-331`). Runs once at startup on
     * the driver; the result is a small broadcastable map.
+    *
+    * Databases fold unquoted identifiers (Derby and Oracle to upper case,
+    * PostgreSQL to lower case) and the metadata calls match names exactly,
+    * so each requested table is first resolved to its stored name (an exact
+    * match wins, else the case-insensitive one). The catalog is keyed by the
+    * caller's names, and an FK's parent table maps back to the caller's name
+    * when it was requested too. Column names are returned as stored. A table
+    * the database does not have raises [[UnknownTableError]].
     */
   def fromJdbc(url: String, tables: Seq[String]): Catalog = {
     val conn = java.sql.DriverManager.getConnection(url)
     try {
       val meta = conn.getMetaData
-      val tableMetas = tables.map { t =>
+      val storedTables = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+      val rsT = meta.getTables(null, null, "%", Array("TABLE"))
+      while (rsT.next()) storedTables += rsT.getString("TABLE_SCHEM") -> rsT.getString("TABLE_NAME")
+      val resolved = tables.map { t =>
+        t -> storedTables.find(_._2 == t)
+          .orElse(storedTables.find(_._2.equalsIgnoreCase(t)))
+          .getOrElse(throw UnknownTableError(t))
+      }
+      val callerName = resolved.map { case (t, (_, stored)) => stored -> t }.toMap
+      val tableMetas = resolved.map { case (t, (schema, stored)) =>
         val pks = scala.collection.mutable.ArrayBuffer.empty[(Short, String)]
-        val rsPk = meta.getPrimaryKeys(null, null, t)
+        val rsPk = meta.getPrimaryKeys(null, schema, stored)
         while (rsPk.next()) pks += rsPk.getShort("KEY_SEQ") -> rsPk.getString("COLUMN_NAME")
-        val fkCols = scala.collection.mutable.ArrayBuffer.empty[(String, Short, String, String)]
-        val rsFk = meta.getImportedKeys(null, null, t)
+        val fkCols = scala.collection.mutable.ArrayBuffer.empty[(String, Short, String, String, String)]
+        val rsFk = meta.getImportedKeys(null, schema, stored)
         while (rsFk.next())
           fkCols += ((rsFk.getString("FK_NAME"), rsFk.getShort("KEY_SEQ"),
-            rsFk.getString("FKCOLUMN_NAME"), rsFk.getString("PKTABLE_NAME") + ":" + rsFk.getString("PKCOLUMN_NAME")))
+            rsFk.getString("FKCOLUMN_NAME"), rsFk.getString("PKTABLE_NAME"),
+            rsFk.getString("PKCOLUMN_NAME")))
         val fks = fkCols.groupBy(_._1).values.map { cols =>
           val sorted = cols.sortBy(_._2)
-          val parentTable = sorted.head._4.split(":")(0)
+          val parentStored = sorted.head._4
           ForeignKey(
             childTable = t,
             childColumns = sorted.map(_._3).toSeq,
-            parentTable = parentTable,
-            parentColumns = sorted.map(_._4.split(":")(1)).toSeq
+            parentTable = callerName.getOrElse(parentStored, parentStored),
+            parentColumns = sorted.map(_._5).toSeq
           )
         }.toSeq
         t -> TableMeta(t, pks.sortBy(_._1).map(_._2).toSeq, fks)

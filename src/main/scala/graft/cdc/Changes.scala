@@ -20,7 +20,6 @@ object Changes {
   val Update = "UPDATE"
   val Delete = "DELETE"
   val Truncate = "TRUNCATE"
-  val ValidOps: Set[String] = Set(Insert, Update, Delete, Truncate)
 
   val schema: StructType = StructType(
     Seq(
@@ -32,9 +31,6 @@ object Changes {
     )
   )
 
-  final case class InvalidTgOpError(op: String)
-      extends RuntimeException(s"Invalid tg_op: '$op'") // sync.py:1376-1379
-
   /** Build a changes DataFrame from in-memory tuples (tests/fixtures). */
   def of(spark: SparkSession, rows: Seq[(String, String, String, String, Long)]): DataFrame = {
     val data = rows.map { case (op, t, o, n, tx) => Row(op, t, o, n, tx) }
@@ -43,12 +39,6 @@ object Changes {
       schema
     )
   }
-
-  /** Driver-side validation of op names (`sync.py:1376-1379`). Distributed
-    * data is assumed pre-validated by the source; this guards test feeds.
-    */
-  def validateOps(ops: Iterable[String]): Unit =
-    ops.find(!ValidOps.contains(_)).foreach(op => throw InvalidTgOpError(op))
 
   /** P8 schema filter: drop payloads for tables outside the tree
     * (`sync.py:622-623, 2040-2042`).

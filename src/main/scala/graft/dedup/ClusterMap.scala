@@ -252,11 +252,6 @@ object ClusterMap {
     * and the component splits silently. There is no incremental heal —
     * run [[rebuild]] (one-time, from the surviving pair set) before
     * relying on the guarantee for a pre-fix map.
-    *
-    * `stageTimer`, when set, receives (label, seconds) per sub-operator.
-    * Callers pass the same callback to stages that run on other threads
-    * ([[graft.streaming.ClusterStream.seed]] overlaps two legs), so it may
-    * be called concurrently and must record thread-safely.
     */
   def applyBatch(
       spark: SparkSession,
@@ -264,23 +259,8 @@ object ClusterMap {
       pairs: DataFrame,
       newIds: DataFrame,
       maxIter: Int = 10,
-      stageTimer: Option[(String, Double) => Unit] = None,
       ccInMemPairs: Int = Dedup.InMemCcPairs
   ): Unit = {
-    // Sub-operator attribution (labels: resolve / contract / cc / ptr-write
-    // / member-write) — the seed call feeds the WHOLE corpus pair set
-    // through here, and "which of the five is superlinear on a clone-heavy
-    // corpus" is a scaling question the operator-level timer can't answer.
-    // Profiling checkpoints `contracted` so the contract/cc boundary is
-    // real; unprofiled runs keep the lazy plan (one materialization fewer).
-    def staged[T](label: String)(f: => T): T = stageTimer match {
-      case None => f
-      case Some(report) =>
-        val t0 = System.nanoTime()
-        val r = f
-        report(label, (System.nanoTime() - t0) / 1e9)
-        r
-    }
     val dataDir = IndexState.dataPath(spark, path)
     val buckets = readBuckets(spark, path)
 
@@ -301,13 +281,13 @@ object ClusterMap {
     // `merges.isEmpty` job disappears). Oversized endpoint sets
     // (corpus-scale seeds past the bounded-collect ceiling) keep the
     // distributed shape below, unchanged.
-    val (endpointHead, closure) = staged("resolve-head")(graft.util.Par.both(
+    val (endpointHead, closure) = graft.util.Par.both(
       endpoints.limit(InMemClosureRows + 1).collect(),
-      mergeClosure(spark, dataDir)))
+      mergeClosure(spark, dataDir))
 
     if (endpointHead.length <= InMemClosureRows) {
       applyBatchFused(
-        spark, dataDir, path, buckets, pairs, newIds, maxIter, stageTimer, ccInMemPairs,
+        spark, dataDir, path, buckets, pairs, newIds, maxIter, ccInMemPairs,
         endpointHead, closure)
       return
     }
@@ -318,32 +298,24 @@ object ClusterMap {
     // contraction, the merge-pointer predicate AND the foreign-winner
     // predicate — one bucket-pruned member scan per batch instead of three
     // (the round-11 shape re-probed storage for losers and winners).
-    val cur = staged("resolve") {
-      endpoints
-        .join(lookupStored(spark, dataDir, buckets, endpoints)
-          .withColumnRenamed("root", "stored"), Seq("id"), "left_outer")
-        .join(closure.withColumnRenamed("from_root", "stored"), Seq("stored"), "left_outer")
-        .select(
-          col("id"),
-          col("stored"),
-          coalesce(col("to_root"), col("stored"), col("id")).as("cur_root"))
-        .localCheckpoint(true)
-    }
+    val cur = endpoints
+      .join(lookupStored(spark, dataDir, buckets, endpoints)
+        .withColumnRenamed("root", "stored"), Seq("id"), "left_outer")
+      .join(closure.withColumnRenamed("from_root", "stored"), Seq("stored"), "left_outer")
+      .select(
+        col("id"),
+        col("stored"),
+        coalesce(col("to_root"), col("stored"), col("id")).as("cur_root"))
+      .localCheckpoint(true)
     try {
-      val contractedLazy = pairs
+      val contracted = pairs
         .join(cur.select(col("id").as("id_a"), col("cur_root").as("ra")), Seq("id_a"))
         .join(cur.select(col("id").as("id_b"), col("cur_root").as("rb")), Seq("id_b"))
         .select(col("ra").as("id_a"), col("rb").as("id_b"))
         .filter(col("id_a") =!= col("id_b"))
         .distinct()
-      val contracted =
-        if (stageTimer.isEmpty) contractedLazy
-        else staged("contract")(contractedLazy.localCheckpoint(true))
 
-      val labels = staged("cc")(Dedup.connectedComponents(contracted, maxIter, ccInMemPairs))
-      if (stageTimer.isDefined)
-        try org.apache.spark.sql.GraftColumnBridge.unpersistLocalCheckpoint(contracted)
-        catch { case scala.util.control.NonFatal(_) => () }
+      val labels = Dedup.connectedComponents(contracted, maxIter, ccInMemPairs)
 
       // The contraction nodes that exist in storage, WITHOUT a second member
       // scan: a node is a cur_root, and a cur_root is storage-referenced iff
@@ -371,10 +343,8 @@ object ClusterMap {
       val merges = losing
         .join(storedNodes, Seq("id"))
         .select(col("id").as("from_root"), col("keep_id").as("to_root"), lit(seq).as("seq"))
-      staged("ptr-write") {
-        if (!merges.isEmpty)
-          merges.coalesce(1).write.mode("append").parquet(s"$dataDir/$MergesDir")
-      }
+      if (!merges.isEmpty)
+        merges.coalesce(1).write.mode("append").parquet(s"$dataDir/$MergesDir")
 
       // Foreign winners — pair endpoints never ingested that just became the
       // canonical root of a stored component — are materialized as member
@@ -390,9 +360,7 @@ object ClusterMap {
         .join(storedNodes, Seq("id"), "left_anti")
         .select(col("id"), col("id").as("root"), lit(1).as("syn"))
 
-      staged("member-write") {
-        writeMembers(newIds, labels, foreignWinners, buckets, dataDir)
-      }
+      writeMembers(newIds, labels, foreignWinners, buckets, dataDir)
     } finally {
       try org.apache.spark.sql.GraftColumnBridge.unpersistLocalCheckpoint(cur)
       catch { case scala.util.control.NonFatal(_) => () }
@@ -444,20 +412,11 @@ object ClusterMap {
       pairs: DataFrame,
       newIds: DataFrame,
       maxIter: Int,
-      stageTimer: Option[(String, Double) => Unit],
       ccInMemPairs: Int,
       endpointHead: Array[org.apache.spark.sql.Row],
       closure: DataFrame
   ): Unit = {
     import org.apache.spark.sql.Row
-    def staged[T](label: String)(f: => T): T = stageTimer match {
-      case None => f
-      case Some(report) =>
-        val t0 = System.nanoTime()
-        val r = f
-        report(label, (System.nanoTime() - t0) / 1e9)
-        r
-    }
     val curSchema = StructType(Seq(
       StructField("id", LongType),
       StructField("stored", LongType),
@@ -466,7 +425,7 @@ object ClusterMap {
     // bucket-pruned member scan joined against the driver-local endpoint
     // relation, collected batch-sized. Probe buckets derive from the
     // already-collected ids (pmod == floorMod for positive bucket counts).
-    val curRows: Array[Row] = staged("resolve") {
+    val curRows: Array[Row] = {
       val ids = endpointHead.map(_.getLong(0))
       if (ids.isEmpty || !hasMembers(spark, dataDir)) {
         // nothing stored (or no endpoints): every endpoint resolves to itself
@@ -508,7 +467,7 @@ object ClusterMap {
     // label rows are one per contraction NODE (≤ endpoint count — bounded
     // by this tier's ceiling), so the collect is safe even when the cc
     // itself ran distributed
-    val labelRows: Array[Row] = staged("cc") {
+    val labelRows: Array[Row] = {
       val labels = Dedup.connectedComponents(contracted, maxIter, ccInMemPairs)
       // the distributed loop returns a localCheckpoint-pinned frame: release
       // its blocks now instead of at driver GC (one leak per stream batch)
@@ -530,11 +489,9 @@ object ClusterMap {
       .filter(r => r.getLong(1) != r.getLong(0) && storedRoots.contains(r.getLong(0)))
       .map(r => Row(r.getLong(0), r.getLong(1), seq))
       .toArray
-    staged("ptr-write") {
-      if (mergeRows.nonEmpty)
-        spark.createDataFrame(java.util.Arrays.asList(mergeRows: _*), MergeSchema)
-          .coalesce(1).write.mode("append").parquet(s"$dataDir/$MergesDir")
-    }
+    if (mergeRows.nonEmpty)
+      spark.createDataFrame(java.util.Arrays.asList(mergeRows: _*), MergeSchema)
+        .coalesce(1).write.mode("append").parquet(s"$dataDir/$MergesDir")
 
     // foreign winners (see the distributed tier): winner ∧ ¬stored is a
     // driver-side test; ¬ingested stays an anti-join against `newIds`
@@ -550,9 +507,7 @@ object ClusterMap {
       .join(newIds.select(col("id")), Seq("id"), "left_anti")
       .select(col("id"), col("id").as("root"), lit(1).as("syn"))
 
-    staged("member-write") {
-      writeMembers(newIds, labelsLocal, foreignWinners, buckets, dataDir)
-    }
+    writeMembers(newIds, labelsLocal, foreignWinners, buckets, dataDir)
   }
 
   /** All member rows fully resolved and replay-collapsed — `(id, root,

@@ -124,15 +124,6 @@ object TextFunctions {
       lit(1000.0) * (length(text) - length(translate(text, " ", ""))) / length(text)
     ).cast("long")
 
-  /** Stopword ratio ×1000 (English profile by default). */
-  def stopwordRatioC(text: Column, stopwords: Seq[String] = defaultProfiles.head._2): Column = {
-    val toks = tokens(text)
-    round(
-      lit(1000.0) * size(filter(toks, t => t.isin(stopwords.map(_.asInstanceOf[Any]): _*))) /
-        size(toks)
-    ).cast("long")
-  }
-
   /** Duplicate-word fraction ×1000 (repetition quality signal, the
     * word-level analogue of the published duplicate-line filters):
     * 1 − distinct/total tokens.
@@ -181,10 +172,4 @@ object TextFunctions {
     val hashed = array_sort(transform(wordShingles(text, n), s => md5(s.cast("binary"))))
     md5(concat_ws("", slice(hashed, 1, 8)).cast("binary"))
   }
-
-  /** 64-bit fast fingerprint for the hot path (xxhash64 of the same min-8
-    * construction) — same semantics, no md5 cost.
-    */
-  def fingerprint64(text: Column, n: Int = 3): Column =
-    xxhash64(concat_ws("", slice(array_sort(transform(wordShingles(text, n), s => xxhash64(s).cast("string"))), 1, 8)))
 }

@@ -58,14 +58,6 @@ object ClusterStream {
     * keeps the seed's bucket-pair stage at text-DIVERSITY size, which
     * matters far more than one extra shingling pass on clone-heavy
     * corpora. Per-batch maintenance ([[applyBatch]]) shingles once.
-    *
-    * `stageTimer` attributes the seed below operator granularity the same
-    * way [[applyBatch]]'s does — (label, seconds) for sig-write / pairs /
-    * merge. Both pair operators already materialize eagerly (their results
-    * are `localCheckpoint(true)`), so timing adds no materialization the
-    * unprofiled seed doesn't do. The callback may be called CONCURRENTLY
-    * from two threads: a non-portable seed runs its sig-write and pairs
-    * legs in parallel, so whatever it records into must be thread-safe.
     */
   def seed(
       corpus: DataFrame,
@@ -74,17 +66,8 @@ object ClusterStream {
       id: String,
       text: String,
       m: SignatureIndex.Model,
-      mapBuckets: Int = 64,
-      stageTimer: Option[(String, Double) => Unit] = None
+      mapBuckets: Int = 64
   ): Unit = {
-    def staged[T](label: String)(f: => T): T = stageTimer match {
-      case None => f
-      case Some(report) =>
-        val t0 = System.nanoTime()
-        val r = f
-        report(label, (System.nanoTime() - t0) / 1e9)
-        r
-    }
     val spark = corpus.sparkSession
     val docs = corpus.select(col(id).cast("long").as("id"), col(text).as("t"))
       .filter(col("t").isNotNull)
@@ -93,38 +76,32 @@ object ClusterStream {
       if (m.portable) {
         // ordered by construction: the portable pair derivation READS the
         // just-written index back (the banding pass materialized once)
-        staged("sig-write")(SignatureIndex.write(docs, sigPath, "id", "t", m))
-        staged("pairs")(
-          Dedup.minhashLshPortableFromKeys(
-            docs, "id", "t",
-            SignatureIndex.storedKeys(spark, sigPath),
-            m.shingleN, m.threshold, m.maxBucket)
-            .select(col("id_a"), col("id_b")))
+        SignatureIndex.write(docs, sigPath, "id", "t", m)
+        Dedup.minhashLshPortableFromKeys(
+          docs, "id", "t",
+          SignatureIndex.storedKeys(spark, sigPath),
+          m.shingleN, m.threshold, m.maxBucket)
+          .select(col("id_a"), col("id_b"))
       } else {
         // the PROD pair operator is INDEPENDENT of the stored keys (it bands
         // exact-text-class representatives, deliberately not the per-doc
         // stored key set — see the scaladoc), so the seed's two corpus-scale
         // legs overlap as concurrent jobs (guide §2.6): the sig-write's
         // shuffle/commit tail back-fills with the pair derivation's
-        // shingle/verify scans. Under a stageTimer the two labels now time
-        // overlapping wall-clock windows — their sum exceeds the seed wall.
+        // shingle/verify scans
         val (_, p) = graft.util.Par.both(
-          staged("sig-write")(SignatureIndex.write(docs, sigPath, "id", "t", m)),
-          staged("pairs")(inBatchPairs(docs, "id", "t", m)))
+          SignatureIndex.write(docs, sigPath, "id", "t", m),
+          inBatchPairs(docs, "id", "t", m))
         p
       }
-    try staged("merge")(ClusterMap.applyBatch(
+    try ClusterMap.applyBatch(
       spark, clusterPath, pairs,
       corpus.select(col(id).cast("long").as("id")),
-      // sub-operator decomposition of the seed's one corpus-scale merge:
-      // resolve / contract / cc / ptr-write / member-write
-      stageTimer = stageTimer.map(report =>
-        (l: String, s: Double) => report(s"merge/$l", s)),
       // seed-scale contraction: the whole corpus pair set arrives at once
       // with shallow components — the distributed CC loop is round-latency-
       // bound there (merge/cc 0.04 -> 2.34 s at 10x corpus), so the driver
       // union-find ceiling is raised to the seed class (Dedup.SeedCcPairs)
-      ccInMemPairs = graft.dedup.Dedup.SeedCcPairs))
+      ccInMemPairs = graft.dedup.Dedup.SeedCcPairs)
     finally {
       // both pair operators return eagerly-checkpointed frames; the seed is
       // done with them after the merge — release instead of waiting for the
@@ -151,16 +128,6 @@ object ClusterStream {
     * (candidate text lookups only — restricted scans). Upserts become map
     * members (null-text docs as singletons); DELETEs are ignored per the
     * no-split contract.
-    *
-    * `stageTimer`, when set, receives (stage label, seconds) for each
-    * internal stage — shingle / probe / candidates / verify / merge /
-    * key-append — so profilers ([[graft.tools.ComposedProfile]],
-    * [[graft.tools.MutationScale]]) can attribute the per-batch cost below
-    * consumer granularity. Profiling forces materialization at the stage
-    * boundaries of frames that are cached/checkpointed anyway, so the
-    * attributed total matches the unprofiled run. The callback may be
-    * called concurrently (the [[seed]] contract); record into a thread-safe
-    * structure.
     */
   def applyBatch(
       spark: SparkSession,
@@ -171,17 +138,8 @@ object ClusterStream {
       pk: String,
       textCol: String,
       autoCompactRatio: Option[Double] = None,
-      inSetThreshold: Int = 1000,
-      stageTimer: Option[(String, Double) => Unit] = None
+      inSetThreshold: Int = 1000
   ): Unit = {
-    def staged[T](label: String)(f: => T): T = stageTimer match {
-      case None => f
-      case Some(report) =>
-        val t0 = System.nanoTime()
-        val r = f
-        report(label, (System.nanoTime() - t0) / 1e9)
-        r
-    }
     val m = SignatureIndex.readModel(spark, sigPath)
     val ups = rows.filter(col("tg_op") =!= "DELETE")
     val docs = ups
@@ -195,8 +153,7 @@ object ClusterStream {
       // in-batch candidate pairs, and the post-update append
       val batchKeys = SignatureIndex.bandKeys(docs, "id", "t", m).cache()
       try {
-        staged("shingle")(if (stageTimer.isDefined) { batchKeys.count(); () })
-        val cand = staged("probe")(SignatureIndex.candidates(spark, sigPath, m, batchKeys))
+        val cand = SignatureIndex.candidates(spark, sigPath, m, batchKeys)
         // in-batch candidates from the same keys (skipping the batch
         // operator's exact-dup collapse — sound for clustering: identical
         // texts pair at Jaccard 1 through shared keys, so the CC fixpoint
@@ -208,8 +165,7 @@ object ClusterStream {
           .unionByName(Dedup.bucketPairs(batchKeys, m.maxBucket))
           .cache()
         try {
-          staged("candidates")(if (stageTimer.isDefined) { candPairs.count(); () })
-          val pairs = staged("verify") {
+          val pairs = {
             val corpusTxt = restrictText(
               corpus.select(col(pk).cast("long").as("id"), col(textCol).as("t")),
               candPairs.select(col("id_b").as("id")).distinct(),
@@ -237,15 +193,12 @@ object ClusterStream {
               catch { case scala.util.control.NonFatal(_) => () }
             }
           }
-          try staged("merge")(ClusterMap.applyBatch(
-            spark, clusterPath, pairs, newIds,
-            stageTimer = stageTimer.map(report =>
-              (l: String, s: Double) => report(s"merge/$l", s))))
+          try ClusterMap.applyBatch(spark, clusterPath, pairs, newIds)
           finally {
             try org.apache.spark.sql.GraftColumnBridge.unpersistLocalCheckpoint(pairs)
             catch { case scala.util.control.NonFatal(_) => () }
           }
-          staged("append")(SignatureIndex.appendKeys(spark, sigPath, m, batchKeys))
+          SignatureIndex.appendKeys(spark, sigPath, m, batchKeys)
           autoCompactRatio.foreach { r =>
             if (ClusterMap.maybeCompact(spark, clusterPath, r)) {
               SignatureIndex.compact(spark, sigPath); ()

@@ -79,4 +79,33 @@ class JdbcSourceSpec extends SparkSpec {
     val diff = viaParquet.keys.filter(k => viaJdbc(k) != viaParquet(k))
     assert(diff.isEmpty, s"${diff.size} docs differ, e.g. ${diff.headOption}")
   }
+
+  test("Catalog.fromJdbc: composite PK order, multi-column FK pairing, folded identifiers") {
+    import graft.catalog.{Catalog, ForeignKey, UnknownTableError}
+    val conn = java.sql.DriverManager.getConnection(url)
+    try {
+      val st = conn.createStatement()
+      // unquoted identifiers: Derby stores them upper-case. The PK and FK
+      // column orders differ from the table's column order on purpose.
+      st.executeUpdate(
+        "CREATE TABLE cat_parent (p_a INT NOT NULL, p_b INT NOT NULL, v INT, " +
+          "PRIMARY KEY (p_b, p_a))")
+      st.executeUpdate(
+        "CREATE TABLE cat_child (c_id INT NOT NULL PRIMARY KEY, c_a INT, c_b INT, " +
+          "CONSTRAINT cat_child_fk FOREIGN KEY (c_b, c_a) REFERENCES cat_parent (p_b, p_a))")
+    } finally conn.close()
+
+    val cat = Catalog.fromJdbc(url, Seq("cat_parent", "cat_child"))
+    assert(cat.tables.keySet == Set("cat_parent", "cat_child"))
+    assert(cat.primaryKeys("cat_parent") == Seq("P_B", "P_A"))
+    assert(cat.primaryKeys("cat_child") == Seq("C_ID"))
+    assert(cat("cat_parent").foreignKeys.isEmpty)
+    assert(cat("cat_child").foreignKeys ==
+      Seq(ForeignKey("cat_child", Seq("C_B", "C_A"), "cat_parent", Seq("P_B", "P_A"))))
+    // the reflected catalog drives join resolution under the caller's names
+    val join = cat.resolveJoin("cat_parent", "cat_child")
+    assert(join.parentColumns == Seq("P_B", "P_A") && join.childColumns == Seq("C_B", "C_A"))
+    // a missing table is an error, not an empty primary key
+    intercept[UnknownTableError](Catalog.fromJdbc(url, Seq("no_such_table")))
+  }
 }
