@@ -67,6 +67,15 @@ object SparkEntry {
       .filter(k => k.startsWith(s"$dir@") && k.takeWhile(_ != '#') != sessionKey)
       .foreach(k => cache.remove(k).foreach(v => release(v)))
 
+  /** The corpus counters of a persisted BM25 index, from its log head, as
+    * one row (n_docs, dl_sum, buckets).
+    */
+  private def bm25Counters(s: SparkSession, path: String): DataFrame = {
+    import s.implicits._
+    val c = graft.sources.IndexState.open(s, path)._2.counters
+    Seq((c.nDocs, c.dlSum, c.buckets.toLong)).toDF("n_docs", "dl_sum", "buckets")
+  }
+
   /** Synchronized so concurrent first probes cannot double-build and
     * orphan a scratch index.
     */
@@ -557,7 +566,7 @@ object SparkEntry {
     // q_bm25_index_build convention — uncached, a fresh scratch root every
     // run): snapshot + every consumer's index build from the PRE-change
     // corpus, graded on exact per-surface corpus facts the oracle
-    // recomputes (doc count; BM25 stats sidecar; LSH row count + the
+    // recomputes (doc count; BM25 log counters; LSH row count + the
     // plan-literal hyperplane bucket sum; PQ row count + seed-centroid cell
     // sum; dedup registry digest count + keeper-id sum; signature-index key
     // count and cluster member count).
@@ -568,7 +577,7 @@ object SparkEntry {
         from.agg(v.cast("long").as("v"))
           .select(lit(surface).as("surface"), lit(k).as("k"), col("v"))
       val docLeg = fact("doc", "n_docs", count(lit(1)), sc.sync.state.docs)
-      val stats = s.read.parquet(s"${sc.root}/bm25/_graft_stats")
+      val stats = bm25Counters(s, s"${sc.root}/bm25")
       val bm25Leg = stats
         .select(lit("bm25").as("surface"), lit("n_docs").as("k"), col("n_docs").as("v"))
         .unionByName(
@@ -929,14 +938,13 @@ object SparkEntry {
     }),
     // ---- persisted BM25 index, split into its two cost shapes --------------
     // BUILD: tokenize the corpus once, write term-bucketed postings + the
-    // doclens/stats sidecars. Graded on the stats sidecar (n_docs / dl_sum
-    // are exact corpus facts the oracle recomputes).
+    // doclens/impact sidecars. Graded on the log's counters (n_docs /
+    // dl_sum are exact corpus facts the oracle recomputes).
     "q_bm25_index_build" -> ((s, dir) => {
       val docs = loader(s, dir)("documents")
       val idx = graft.util.TempDirs.scratch("bm25-index-build").toString
       graft.functions.Retrieval.writeBm25Index(docs, "doc_id", "text", idx)
-      s.read.parquet(s"$idx/_graft_stats")
-        .select(col("n_docs"), col("dl_sum"), col("buckets").cast("long").as("buckets"))
+      bm25Counters(s, idx)
     }),
     // PROBE: term-bucket partition-pruned workload probe of a PREBUILT
     // per-session index — steady-state probe latency, the regression signal
@@ -2601,7 +2609,7 @@ object SparkEntry {
          FROM members m LEFT JOIN root rt ON rt.u = m.doc_id"""
     },
     // the composed SEED from scratch: exact per-surface corpus facts over
-    // the PRE-change media join — doc index row count; BM25 stats sidecar
+    // the PRE-change media join — doc index row count; BM25 log counters
     // (corpus size + total token count under the engine's tokenizer); the
     // LSH index's row count + hyperplane-bucket sum (plan-time plane
     // literals); the PQ index's row count + seed-centroid cell-assignment

@@ -1,8 +1,12 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for `tools/compare.py`'s DuckDB compare. A query that
+  * throws does not stop the dump: the remaining queries still run and
+  * oracle_sql.json is still written, then the run lists every failed query
+  * with its exception class and exits 1.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     if (args.length < 2) {
@@ -23,18 +27,20 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
+    val failed = Seq.newBuilder[(String, String)]
     SparkEntry.queries.foreach { case (name, fn) =>
       if (only.nonEmpty && !only.contains(name)) ()
       else {
         // dedup plans carry eager localCheckpoint blocks that clearCache/GC
-        // won't release promptly; 50 queries in one session add up — release
-        // them even when the write fails
+        // won't release promptly; every registry row runs in one session, so
+        // they add up — release them even when the write fails
         var df: org.apache.spark.sql.DataFrame = null
         try {
           df = fn(spark, sfDir)
           df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
         } catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          System.err.println(s"[verify] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+          failed += name -> e.getClass.getName
         } finally {
           if (df != null)
             try org.apache.spark.sql.GraftColumnBridge.unpersistLocalCheckpoint(df)
@@ -58,5 +64,11 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    val failures = failed.result()
+    if (failures.nonEmpty) {
+      System.err.println(s"[verify] ${failures.size} queries failed:")
+      failures.foreach { case (name, cls) => System.err.println(s"[verify]   $name: $cls") }
+      sys.exit(1)
+    }
   }
 }

@@ -1,8 +1,8 @@
 package graft.ann
 
 import graft.functions.{Analytics, VectorFunctions => VF}
-import graft.sources.IndexState
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.sources.{IndexLog, IndexState}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -464,6 +464,8 @@ object Ann {
     * over every future query batch, and probing becomes partition pruning —
     * a probe reads only its buckets' file groups, never the corpus.
     * The bucket-keyed repartition bounds the fan-out to one file per bucket.
+    * The files are committed as seq 0 of the index log
+    * ([[graft.sources.IndexLog]]) after the model sidecar is written.
     */
   def writeLshIndex(
       corpus: DataFrame,
@@ -473,33 +475,28 @@ object Ann {
       planes: Int = 6,
       dim: Int = 64
   ): Unit = {
-    corpus
-      .filter(col(vec).isNotNull)
-      .select(
-        col(id).as("neighbor_id"),
-        col(vec).as("v"),
-        lit(0L).as("seq"),
-        VF.hyperplaneBucket(col(vec), planes, dim).as("bucket")
-      )
-      .repartition(col("bucket"))
-      .write
-      .mode("overwrite")
-      .partitionBy("bucket")
-      .parquet(path)
+    val spark = corpus.sparkSession
+    val rows = IndexLog.write(spark, path, 0L, Seq(vectorsWrite(
+      lshRows(corpus.filter(col(vec).isNotNull), id, vec, 0L, planes, dim).repartition(col("bucket")),
+      SaveMode.Overwrite)))
     // model sidecar: a restarted pipeline probes/appends with the exact
     // parameters the buckets were built under (AnnModels)
-    AnnModels.writeLsh(corpus.sparkSession, path, planes, dim)
-    IndexState.writeSeq(corpus.sparkSession, path, 0L)
+    AnnModels.writeLsh(spark, path, planes, dim)
+    IndexLog.commit(spark, path, IndexLog.Entry.fresh(0L, NoCounters, rows), predecessor = 0L)
   }
 
-  /** Probe a [[writeLshIndex]] layout. The probe keys are collected on the
-    * driver (bounded: |queries| × (planes+1) longs — queries are
-    * broadcast-small by the same contract as [[lshTopK]]) and pushed as a
-    * STATIC `bucket IN (…)` partition filter, so the scan plans only the
-    * probed file groups. Same output and semantics as [[lshTopK]] at equal
-    * parameters: each corpus vector lives in exactly one partition, so no
-    * duplicate (qid, neighbor) pair.
-    */
+  // the index log's kinds of file for the LSH and PQ layouts, which carry
+  // no corpus counters
+  private val Vectors = "vectors"
+  private val Codes = "codes"
+  private val NoCounters = IndexLog.Counters(0L, 0L, 0)
+
+  private def vectorsWrite(rows: DataFrame, mode: SaveMode = SaveMode.Append): IndexLog.Write =
+    IndexLog.Write(Vectors, "", Some("bucket"), rows, mode)
+
+  private def codesWrite(rows: DataFrame, mode: SaveMode = SaveMode.Append): IndexLog.Write =
+    IndexLog.Write(Codes, "", Some("cell"), rows, mode)
+
   /** Incremental index maintenance: append a batch of new vectors into an
     * existing [[writeLshIndex]] layout. Each appended vector lands in its
     * bucket's directory as a new file group — the corpus partitions already
@@ -508,7 +505,7 @@ object Ann {
     * `Dedup.exactIncremental`. Partition pruning in [[lshTopKIndexed]] is
     * unaffected (pruning is directory-level). Each append adds one file per
     * touched bucket; after many batches run [[compactLshIndex]] to restore
-    * the one-file-per-bucket bound.
+    * the one-file-per-bucket bound. The files commit with one log entry.
     */
   def appendLshIndex(
       batch: DataFrame,
@@ -519,16 +516,14 @@ object Ann {
       dim: Int = 64
   ): Unit = {
     val rows = batch.filter(col(vec).isNotNull)
-    // an empty batch is not a mutation: no seq bump (which would stale the
+    // an empty batch is not a mutation: no seq (which would stale the
     // compaction refusal memo for nothing) and no empty file group on disk
     if (rows.isEmpty) return
-    val seq = IndexState.bumpSeq(batch.sparkSession, path)
-    lshRows(rows, id, vec, seq, planes, dim)
-      .repartition(col("bucket"))
-      .write
-      .mode("append")
-      .partitionBy("bucket")
-      .parquet(IndexState.dataPath(batch.sparkSession, path))
+    val spark = batch.sparkSession
+    val (data, head) = IndexState.open(spark, path)
+    val seq = head.seq + 1L
+    IndexLog.mutate(spark, data, head, seq, head.counters,
+      Seq(vectorsWrite(lshRows(rows, id, vec, seq, planes, dim).repartition(col("bucket")))))
   }
 
   /** The persisted row shape of an LSH append stamped with `seq`. */
@@ -545,11 +540,12 @@ object Ann {
     * persisted rows — for batches the caller bounds (the
     * [[graft.streaming.SyncPipeline]] literal tier). `upserts` is a
     * driver-local relation, so the hyperplane buckets are the append's own
-    * Catalyst expression folded over it without a job. Three writes, each
-    * one single-stage job over a local relation: seq (both numbers
-    * reserved by one counter write) → tombstones → bucket rows (one file per
-    * hit bucket). An empty id set writes no tombstone and an empty upsert
-    * set no rows; neither bumps the seq.
+    * Catalyst expression folded over it without a job. The log head is
+    * read on the driver; the tombstones and the bucket rows (one file per
+    * hit bucket) are written concurrently, each by one single-stage job
+    * over a local relation, and committed by ONE log entry. An empty id set
+    * writes no tombstone and an empty upsert set no rows; neither takes a
+    * seq.
     */
   private[graft] def mutateLshIndexFused(
       spark: org.apache.spark.sql.SparkSession,
@@ -565,24 +561,19 @@ object Ann {
     val rows = upserts.filter(col(vec).isNotNull)
     val appends = !rows.isEmpty
     if (del.isEmpty && !appends) return
-    val s0 = IndexState.readSeq(spark, path, strictEmpty = true)
-    val delSeq = if (del.nonEmpty) s0 + 1L else s0
+    import spark.implicits._
+    val (data, head) = IndexState.open(spark, path)
+    val delSeq = if (del.nonEmpty) head.seq + 1L else head.seq
     val seq = if (appends) delSeq + 1L else delSeq
-    IndexState.writeSeq(spark, path, seq)
-    IndexState.appendTombstoneIds(spark, del, path, delSeq)
-    if (appends)
-      lshRows(rows, id, vec, seq, planes, dim)
-        .coalesce(1)
-        .write
-        .mode("append")
-        .partitionBy("bucket")
-        .parquet(IndexState.dataPath(spark, path))
+    IndexLog.mutate(spark, data, head, seq, head.counters,
+      Option.when(del.nonEmpty)(IndexState.tombstoneWrite(del.toDF("id"), delSeq)).toSeq ++
+        Option.when(appends)(vectorsWrite(lshRows(rows, id, vec, seq, planes, dim).coalesce(1))))
   }
 
   /** Remove vectors from a [[writeLshIndex]] layout — the DELETE leg of CDC
     * maintenance (reference parity: delete ops reach the search index,
     * `sync.py:1254-1306`). Log-structured ([[graft.sources.IndexState]]):
-    * the batch's ids land in the tombstone sidecar, probes subtract them
+    * the batch's ids land in a tombstone file, probes subtract them
     * after partition pruning, and a LATER append of the same id is visible
     * again (seq comparison — the CDC UPDATE flow is delete + append, and
     * the doc's pre-delete rows must not resurrect). The bucket files are
@@ -595,10 +586,61 @@ object Ann {
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       ids: DataFrame
+  ): Unit = deleteIds(spark, path, ids)
+
+  /** The shared LSH/PQ delete: tombstone every id of `ids` under the next
+    * seq, one file, one log entry. Nothing is written for an empty set.
+    */
+  private def deleteIds(spark: org.apache.spark.sql.SparkSession, path: String, ids: DataFrame): Unit = {
+    if (ids.isEmpty) return
+    val (data, head) = IndexState.open(spark, path)
+    val seq = head.seq + 1L
+    IndexLog.mutate(spark, data, head, seq, head.counters,
+      Seq(IndexState.tombstoneWrite(ids.select(col("id").cast("long").as("id")).distinct(), seq)))
+  }
+
+  /** The shared LSH/PQ compaction into `stagingPath`: the visible rows of
+    * `kind`, one file group per `part` value, committed as a fresh log at
+    * the current seq; no tombstone is carried.
+    */
+  private def compactRows(
+      spark: org.apache.spark.sql.SparkSession,
+      path: String,
+      stagingPath: String,
+      write: (DataFrame, SaveMode) => IndexLog.Write,
+      kind: String,
+      part: String
   ): Unit = {
-    if (ids.isEmpty) return // don't create a tombstone sidecar for nothing
-    val seq = IndexState.bumpSeq(spark, path)
-    IndexState.appendTombstones(ids, path, seq)
+    val (data, head) = IndexState.open(spark, path)
+    val visible = IndexState.visibleUnder(head.scan(spark, data, kind), data, head, "neighbor_id")
+    val rows = IndexLog.write(spark, stagingPath, head.seq,
+      Seq(write(visible.repartition(col(part)), SaveMode.Overwrite)))
+    IndexLog.commit(spark, stagingPath, IndexLog.Entry.fresh(head.seq, NoCounters, rows), head.seq)
+  }
+
+  /** The shared LSH/PQ dead-ratio policy (see [[maybeCompactLshIndex]]). */
+  private def maybeCompactRows(
+      spark: org.apache.spark.sql.SparkSession,
+      path: String,
+      maxDeadRatio: Double,
+      kind: String,
+      compact: String => Unit
+  ): Boolean = {
+    require(maxDeadRatio > 0 && maxDeadRatio <= 1, s"maxDeadRatio must be in (0,1], got $maxDeadRatio")
+    val dead = IndexState.tombstoneCount(spark, path)
+    if (dead == 0L) return false
+    // parquet footer metadata only, over the logged files of the current
+    // generation
+    val (data, head) = IndexState.open(spark, path)
+    val total = head.scan(spark, data, kind).count()
+    // dead >= total ⇒ the visible set is (almost certainly) empty — the
+    // BM25 live==0 guard's cheap analogue: skip the full rewrite that
+    // compactAndSwap would refuse anyway. The edge where stale tombstones
+    // of re-added ids make this conservative (visible non-empty but
+    // unreclaimed) self-corrects on the next append, which grows `total`.
+    if (total <= dead) return false
+    if (dead.toDouble / total < maxDeadRatio) return false
+    IndexState.compactAndSwap(spark, path, compact)
   }
 
   /** Rewrite an appended-to index back to one file group per bucket. The
@@ -613,22 +655,14 @@ object Ann {
       stagingPath: String
   ): Unit = {
     // drop tombstoned rows while rewriting: compaction is where deletes
-    // reclaim space; the tombstone sidecar is NOT carried to staging
-    val data = IndexState.dataPath(spark, path)
-    IndexState
-      .visibleAt(spark.read.parquet(data), data, "neighbor_id")
-      .repartition(col("bucket"))
-      .write
-      .mode("overwrite")
-      .partitionBy("bucket")
-      .parquet(stagingPath)
+    // reclaim space; no tombstone is carried to staging
+    compactRows(spark, path, stagingPath, vectorsWrite, Vectors, "bucket")
     // carry the model sidecar: the compacted copy must stay probe-able
     // after the directory swap (pre-sidecar indexes have nothing to carry)
     try {
       val (planes, dim) = AnnModels.readLsh(spark, path)
       AnnModels.writeLsh(spark, stagingPath, planes, dim)
     } catch { case _: IllegalStateException => () }
-    IndexState.writeSeq(spark, stagingPath, IndexState.readSeq(spark, path))
   }
 
   /** Compact [[writeLshIndex]] when the dead fraction justifies the
@@ -654,21 +688,7 @@ object Ann {
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       maxDeadRatio: Double = 0.2
-  ): Boolean = {
-    require(maxDeadRatio > 0 && maxDeadRatio <= 1, s"maxDeadRatio must be in (0,1], got $maxDeadRatio")
-    val dead = IndexState.tombstoneCount(spark, path)
-    if (dead == 0L) return false
-    // parquet footer metadata only, against the current generation
-    val total = spark.read.parquet(IndexState.dataPath(spark, path)).count()
-    // dead >= total ⇒ the visible set is (almost certainly) empty — the
-    // BM25 live==0 guard's cheap analogue: skip the full rewrite that
-    // compactAndSwap would refuse anyway. The edge where stale tombstones
-    // of re-added ids make this conservative (visible non-empty but
-    // unreclaimed) self-corrects on the next append, which grows `total`.
-    if (total <= dead) return false
-    if (dead.toDouble / total < maxDeadRatio) return false
-    IndexState.compactAndSwap(spark, path, compactLshIndex(spark, path, _))
-  }
+  ): Boolean = maybeCompactRows(spark, path, maxDeadRatio, Vectors, compactLshIndex(spark, path, _))
 
   /** [[lshTopKIndexed]] under the parameters persisted at
     * [[writeLshIndex]] time — the restart path: a new session probes an
@@ -686,6 +706,17 @@ object Ann {
     lshTopKIndexed(indexPath, queries, qid, qvec, k, planes, dim, probeHamming)
   }
 
+  /** Probe a [[writeLshIndex]] layout. The probe keys are collected on the
+    * driver (bounded: |queries| × (planes+1) longs — queries are
+    * broadcast-small by the same contract as [[lshTopK]]) and pushed as a
+    * STATIC `bucket IN (…)` partition filter over exactly the files the
+    * index log's head lists ([[graft.sources.IndexState.open]]: one
+    * listing and one file read on the driver, no partition discovery), so
+    * the scan plans only the probed file groups; the tombstones come from
+    * the same entry. Same output and semantics as [[lshTopK]] at equal
+    * parameters: each corpus vector lives in exactly one partition, so no
+    * duplicate (qid, neighbor) pair.
+    */
   def lshTopKIndexed(
       indexPath: String,
       queries: DataFrame,
@@ -697,8 +728,10 @@ object Ann {
       probeHamming: Int = 1
   ): DataFrame = {
     val spark = queries.sparkSession
-    // self-heal an interrupted compaction swap before planning the scan
-    IndexState.recoverSwap(spark, indexPath)
+    // one open for the whole probe (it also self-heals an interrupted
+    // swap): data and tombstones come from the same entry of the same
+    // generation even if a mutation or a compaction lands mid-plan
+    val (data, head) = IndexState.open(spark, indexPath)
     val qKeyed = queries.select(
       col(qid).as("qid"),
       col(qvec).as("qv"),
@@ -707,16 +740,13 @@ object Ann {
     val q =
       qKeyed.select(col("qid"), col("qv"), explode(lshProbeKeys(planes, probeHamming)).as("bucket"))
     val keys = q.select(col("bucket")).distinct().collect().map(_.getLong(0)).sorted
-    // ONE generation resolution for the whole probe: data and tombstones
-    // must come from the same generation even if a compaction flips mid-plan
-    val data = IndexState.dataPath(spark, indexPath)
-    val corpus = spark.read.parquet(data)
+    val corpus = head.scan(spark, data, Vectors)
     val pruned =
       if (keys.isEmpty) corpus.filter(lit(false))
       else corpus.filter(col("bucket").isInCollection(keys.toSeq))
     // subtract tombstoned ids (no-op for an index with no deletes); runs
     // after pruning so it touches candidate rows only
-    rankCandidates(IndexState.visibleAt(pruned, data, "neighbor_id"), q, k)
+    rankCandidates(IndexState.visibleUnder(pruned, data, head, "neighbor_id"), q, k)
   }
 
   // ---- product quantization (Jégou et al. 2011) ---------------------------
@@ -1181,22 +1211,24 @@ object Ann {
       cells: Seq[(Long, Seq[Double])],
       books: Seq[Seq[Seq[Double]]]
   ): Unit = {
-    corpus
-      .filter(col(vec).isNotNull)
-      .select(
-        col(id).as("neighbor_id"),
-        pqCodeColumn(col(vec), books).as("code"),
-        lit(0L).as("seq"),
-        nearestCell(col(vec), cells).as("cell")
-      )
-      .repartition(col("cell"))
-      .write
-      .mode("overwrite")
-      .partitionBy("cell")
-      .parquet(path)
-    AnnModels.writeIvfPq(corpus.sparkSession, path, cells, books)
-    IndexState.writeSeq(corpus.sparkSession, path, 0L)
+    val spark = corpus.sparkSession
+    val rows = IndexLog.write(spark, path, 0L, Seq(codesWrite(
+      pqRows(corpus.filter(col(vec).isNotNull), id, vec, 0L, cells, books).repartition(col("cell")),
+      SaveMode.Overwrite)))
+    AnnModels.writeIvfPq(spark, path, cells, books)
+    IndexLog.commit(spark, path, IndexLog.Entry.fresh(0L, NoCounters, rows), predecessor = 0L)
   }
+
+  /** The persisted row shape of a PQ write stamped with `seq`. */
+  private def pqRows(
+      rows: DataFrame, id: String, vec: String, seq: Long,
+      cells: Seq[(Long, Seq[Double])], books: Seq[Seq[Seq[Double]]]) =
+    rows.select(
+      col(id).as("neighbor_id"),
+      pqCodeColumn(col(vec), books).as("code"),
+      lit(seq).as("seq"),
+      nearestCell(col(vec), cells).as("cell")
+    )
 
   /** [[appendPqIndex]] under the models persisted at [[writePqIndex]] time —
     * the restart path for incremental maintenance: the frozen-model append
@@ -1240,19 +1272,11 @@ object Ann {
     val rows = batch.filter(col(vec).isNotNull)
     // empty batch: not a mutation (see appendLshIndex)
     if (rows.isEmpty) return
-    val seq = IndexState.bumpSeq(batch.sparkSession, path)
-    rows
-      .select(
-        col(id).as("neighbor_id"),
-        pqCodeColumn(col(vec), books).as("code"),
-        lit(seq).as("seq"),
-        nearestCell(col(vec), cells).as("cell")
-      )
-      .repartition(col("cell"))
-      .write
-      .mode("append")
-      .partitionBy("cell")
-      .parquet(IndexState.dataPath(batch.sparkSession, path))
+    val spark = batch.sparkSession
+    val (data, head) = IndexState.open(spark, path)
+    val seq = head.seq + 1L
+    IndexLog.mutate(spark, data, head, seq, head.counters,
+      Seq(codesWrite(pqRows(rows, id, vec, seq, cells, books).repartition(col("cell")))))
   }
 
   /** [[deleteFromLshIndex]] for a [[writePqIndex]] layout: same tombstone
@@ -1262,34 +1286,22 @@ object Ann {
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       ids: DataFrame
-  ): Unit = {
-    if (ids.isEmpty) return // don't create a tombstone sidecar for nothing
-    val seq = IndexState.bumpSeq(spark, path)
-    IndexState.appendTombstones(ids, path, seq)
-  }
+  ): Unit = deleteIds(spark, path, ids)
 
   /** [[compactLshIndex]] for a [[writePqIndex]] layout: rewrite the
     * surviving codes one file group per cell, carry the model sidecar and
-    * seq counter, drop the tombstones.
+    * the seq, drop the tombstones.
     */
   def compactPqIndex(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       stagingPath: String
   ): Unit = {
-    val data = IndexState.dataPath(spark, path)
-    IndexState
-      .visibleAt(spark.read.parquet(data), data, "neighbor_id")
-      .repartition(col("cell"))
-      .write
-      .mode("overwrite")
-      .partitionBy("cell")
-      .parquet(stagingPath)
+    compactRows(spark, path, stagingPath, codesWrite, Codes, "cell")
     try {
       val (cells, books) = AnnModels.readIvfPq(spark, path)
       AnnModels.writeIvfPq(spark, stagingPath, cells, books)
     } catch { case _: IllegalStateException => () }
-    IndexState.writeSeq(spark, stagingPath, IndexState.readSeq(spark, path))
   }
 
   /** [[maybeCompactLshIndex]] for a [[writePqIndex]] layout: same
@@ -1302,22 +1314,13 @@ object Ann {
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       maxDeadRatio: Double = 0.2
-  ): Boolean = {
-    require(maxDeadRatio > 0 && maxDeadRatio <= 1, s"maxDeadRatio must be in (0,1], got $maxDeadRatio")
-    val dead = IndexState.tombstoneCount(spark, path)
-    if (dead == 0L) return false
-    // parquet footer metadata only, against the current generation
-    val total = spark.read.parquet(IndexState.dataPath(spark, path)).count()
-    // cheap empty-visible-set guard — see maybeCompactLshIndex
-    if (total <= dead) return false
-    if (dead.toDouble / total < maxDeadRatio) return false
-    IndexState.compactAndSwap(spark, path, compactPqIndex(spark, path, _))
-  }
+  ): Boolean = maybeCompactRows(spark, path, maxDeadRatio, Codes, compactPqIndex(spark, path, _))
 
   /** Probe a [[writePqIndex]] layout: the queries' `nprobe` nearest cells
     * are collected on the driver (bounded: |queries| × nprobe longs) and
-    * pushed as a STATIC `cell IN (…)` partition filter, so the scan plans
-    * only the probed directories and reads only code columns; vectors are
+    * pushed as a STATIC `cell IN (…)` partition filter over the files the
+    * log head lists (see [[lshTopKIndexed]]), so the scan plans only the
+    * probed directories and reads only code columns; vectors are
     * reconstructed from literal codebooks at probe time. Same semantics and
     * output as [[ivfPqTopK]] at equal models.
     */
@@ -1332,21 +1335,19 @@ object Ann {
       nprobe: Int = 4
   ): DataFrame = {
     val spark = queries.sparkSession
-    // self-heal an interrupted compaction swap before planning the scan
-    IndexState.recoverSwap(spark, indexPath)
+    // one open for the whole probe (see lshTopKIndexed)
+    val (data, head) = IndexState.open(spark, indexPath)
     val q = queries.filter(col(qvec).isNotNull).select(col(qid).as("qid"), col(qvec).as("qv"))
     val probes = q
       .select(col("qid"), col("qv"), explode(topCells(col("qv"), cells, nprobe)).as("pc"))
       .select(col("qid"), col("qv"), col("pc").getField("cell").as("cell"))
     val keys = probes.select(col("cell")).distinct().collect().map(_.getLong(0)).sorted
-    // one generation resolution for data + tombstones (see lshTopKIndexed)
-    val data = IndexState.dataPath(spark, indexPath)
-    val corpus = spark.read.parquet(data)
+    val corpus = head.scan(spark, data, Codes)
     val pruned =
       if (keys.isEmpty) corpus.filter(lit(false))
       else corpus.filter(col("cell").isInCollection(keys.toSeq))
     perQueryTopK(
-      IndexState.visibleAt(pruned, data, "neighbor_id")
+      IndexState.visibleUnder(pruned, data, head, "neighbor_id")
         .join(broadcast(probes), Seq("cell"))
         .filter(col("neighbor_id") =!= col("qid"))
         .select(

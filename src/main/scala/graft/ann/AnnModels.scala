@@ -109,15 +109,28 @@ object AnnModels {
     (meta.planes, meta.dim)
   }
 
+  /** Meta rows already read, keyed by the meta directory's files (path and
+    * modification time): a model is written once per build, so a
+    * streaming batch that re-reads it pays one driver-side listing instead
+    * of a Spark job, and a rebuild's new files miss the memo.
+    */
+  private val metaRead = new java.util.concurrent.ConcurrentHashMap[Seq[(String, Long)], MetaRow]()
+
   private def requireKind(spark: SparkSession, indexPath: String, kind: String): MetaRow = {
     import spark.implicits._
     // every model read is an index open — self-heal an interrupted
     // compaction swap before touching the sidecar
     graft.sources.IndexState.recoverSwap(spark, indexPath)
-    val metas =
+    val dir = new org.apache.hadoop.fs.Path(s"${modelDir(indexPath)}/meta")
+    val files =
+      try dir.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(dir).toSeq
+        .filter(st => st.isFile && !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))
+        .map(st => st.getPath.toString -> st.getModificationTime).sorted
+      catch { case _: java.io.FileNotFoundException => Nil }
+    val metas = Option(metaRead.get(files)).map(Array(_)).getOrElse {
       // explicit schema: no footer-inference job per model read
       try spark.read.schema(org.apache.spark.sql.Encoders.product[MetaRow].schema)
-        .parquet(s"${modelDir(indexPath)}/meta").as[MetaRow].collect()
+        .parquet(dir.toString).as[MetaRow].collect()
       catch {
         case e: Exception =>
           throw new IllegalStateException(
@@ -126,8 +139,10 @@ object AnnModels {
             e
           )
       }
+    }
     require(metas.length == 1, s"corrupt model sidecar at $indexPath: ${metas.length} meta rows")
     val meta = metas.head
+    if (files.nonEmpty) metaRead.put(files, meta)
     require(
       meta.format == Format && meta.version == Version,
       s"unsupported model sidecar ${meta.format} v${meta.version} at $indexPath " +

@@ -1,7 +1,7 @@
 package graft.functions
 
-import graft.sources.IndexState
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.sources.{IndexLog, IndexState}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -198,13 +198,15 @@ object Retrieval {
 
   /** Persisted inverted index for BM25: term-bucket-partitioned postings —
     * `bucket = pmod(xxhash64(term), buckets)`, each row
-    * (term, id, tf, dl) — plus a one-row stats sidecar (n_docs, avgdl,
-    * buckets) under `_graft_stats` (underscore-prefixed: invisible to the
-    * partitioned read, the [[graft.ann.AnnModels]] sidecar discipline).
-    * `dl` is denormalized onto every posting so scoring needs no second
-    * corpus read. This is the production retrieval shape at 100 TB: the
-    * corpus is tokenized ONCE at index time; every subsequent workload
-    * probes only the partitions its terms hash into.
+    * (id, dl, term, tf, seq) — plus three sidecars (doclens, impacts,
+    * termdf; underscore-prefixed, so invisible to a plain parquet read of
+    * the root). Every file is committed through the index log
+    * ([[graft.sources.IndexLog]]), whose entry also carries the integer
+    * corpus counters (n_docs, dl_sum, buckets). `dl` is denormalized onto
+    * every posting so scoring needs no second corpus read. This is the
+    * production retrieval shape at 100 TB: the corpus is tokenized ONCE at
+    * index time; every subsequent workload probes only the partitions its
+    * terms hash into.
     */
   def writeBm25Index(
       docs: DataFrame,
@@ -216,7 +218,7 @@ object Retrieval {
   ): Unit = {
     val spark = docs.sparkSession
     // Tokenization is the expensive leg and three consumers need its output
-    // (postings write, doclens write, stats aggregate) — persist the
+    // (postings write, doclens write, counters aggregate) — persist the
     // tokenized frame so the corpus is scanned and tokenized ONCE per build.
     // DISK_ONLY, not MEMORY_AND_DISK: this frame is corpus-sized, and the
     // repo-wide discipline (see Dedup.prodBandKeys) is that corpus-sized
@@ -229,49 +231,36 @@ object Retrieval {
       .select(col("id"), col("toks"), size(col("toks")).cast("long").as("dl"))
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     try {
-      // The one-time build writes into a FRESH directory that no probe can
-      // open until the seq marker lands (readBm25Stats fails without the
-      // stats sidecar), so unlike the APPEND path there is no crash-ordering
-      // contract between the sub-writes — the stats aggregate OVERLAPS the
-      // postings/doclens writes (independent consumers of the persisted
-      // token frame), and the two impact sidecar writes below overlap each
-      // other (sibling directories). postings→doclens itself stays ordered
-      // everywhere: the doclens dir NESTS inside the postings dir, so the
-      // postings Overwrite would race a concurrent doclens staging dir away.
+      // No probe can open the index before its first log entry, so the
+      // build's writes overlap: the counters aggregate with the postings,
+      // then the three sidecars with each other. The postings go first
+      // because their Overwrite clears the whole directory (an earlier
+      // build, its log and its sidecars).
       //
-      // The sidecar stores the integer dl SUM, not the average: integer sums
+      // The counters store the integer dl SUM, not the average: integer sums
       // update exactly under append AND delete, and avgdl = dl_sum/n_docs
       // reproduces the in-memory avg bit-for-bit (token-length partial sums
       // stay below 2^53, so double accumulation of the longs is exact
       // regardless of order)
-      val (s, _) = inParallel(
+      val (s, postings) = graft.util.Par.both(
         withDl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("dl_sum")).collect()(0),
-        writeBm25Postings(
-          withDl, postingsOf(withDl), path, buckets, seq = 0L,
-          org.apache.spark.sql.SaveMode.Overwrite)
+        IndexLog.write(spark, path, 0L, Seq(postingsWrite(postingsOf(withDl), buckets, 0L, SaveMode.Overwrite)))
       )
-      writeBm25Stats(spark, path, Bm25Stats(s.getLong(0), s.getLong(1), buckets, 0L, 0L))
+      val counters = IndexLog.Counters(s.getLong(0), if (s.isNullAt(1)) 0L else s.getLong(1), buckets)
+      val built = IndexLog.Entry.fresh(0L, counters, postings)
       // impacts derive from the postings JUST WRITTEN (a pruned columnar
       // re-scan) rather than re-running the (id, dl, term) aggregation
       // over the token frame — one corpus shuffle saved per build
-      if (s.getLong(0) > 0L)
-        writeBm25Impacts(
-          spark.read.parquet(path).select(col("id"), col("dl"), col("term"), col("tf")),
-          path, buckets,
-          avgdl = s.getLong(1).toDouble / s.getLong(0), seq = 0L,
-          org.apache.spark.sql.SaveMode.Overwrite, cap = impactCap, overlap = true)
-      IndexState.writeSeq(spark, path, 0L)
+      val sidecars = IndexLog.write(spark, path, 0L,
+        doclensWrite(withDl, buckets, 0L, SaveMode.Overwrite) +: (
+          if (counters.nDocs == 0L) Nil
+          else impactWrites(
+            built.scan(spark, path, Postings).select(col("id"), col("dl"), col("term"), col("tf")),
+            buckets, avgdl = counters.dlSum.toDouble / counters.nDocs, seq = 0L,
+            SaveMode.Overwrite, cap = impactCap)))
+      IndexLog.commit(spark, path, built.next(0L, counters, sidecars), predecessor = 0L)
     } finally { withDl.unpersist(); () }
   }
-
-  /** Run two independent jobs as concurrent Spark jobs ([[graft.util.Par]]:
-    * dedicated pool, both branches settle before a failure rethrows — a
-    * failing stats aggregate can no longer abandon the postings write
-    * mid-flight for a retry to race). Only used where the two outputs have
-    * no crash-ordering contract between them (one-time builds into fresh
-    * directories, compaction rewrites into staging) and for reads.
-    */
-  private def inParallel[A, B](a: => A, b: => B): (A, B) = graft.util.Par.both(a, b)
 
   /** The (id, dl, term, tf) posting rows of a tokenized corpus/batch frame
     * (the shared derivation of the postings write and the impact sidecar).
@@ -282,60 +271,60 @@ object Retrieval {
       .groupBy(col("id"), col("dl"), col("term"))
       .agg(count(lit(1)).as("tf"))
 
-  /** Shared postings + doclens writer for build/append: postings rows are
-    * stamped with the mutation `seq` (the [[graft.sources.IndexState]]
-    * visibility discipline — constant per file, so parquet RLE makes the
-    * column ~free), and the per-doc lengths land in an id-bucketed
-    * `_graft_doclens` sidecar so a later delete can look up the removed
-    * docs' lengths with partition pruning instead of scanning the postings.
-    * `path` here is the resolved DATA directory (the current generation
-    * after a compaction — [[graft.sources.IndexState.dataPath]]); the
-    * doclens sidecar travels with the postings it describes. `posted` is
-    * the [[postingsOf]] frame of the same `withDl` — passed in so a caller
-    * that also writes the impact sidecars ([[appendBm25Index]]) can persist
-    * the (doc, term) aggregation once instead of paying it per consumer.
-    */
-  private def writeBm25Postings(
-      withDl: DataFrame,
-      posted: DataFrame,
-      path: String,
-      buckets: Int,
-      seq: Long,
-      mode: org.apache.spark.sql.SaveMode
-  ): Unit = {
-    // the two writes are ORDERED even where no crash contract binds them:
-    // the doclens sidecar nests INSIDE the postings directory, and the
-    // postings Overwrite deletes the whole tree — a concurrent doclens
-    // write would race its own staging dir away (measured: _temporary
-    // FileNotFound under overlap)
-    posted
-      .withColumn("seq", lit(seq))
-      .withColumn("bucket", pmod(xxhash64(col("term")), lit(buckets.toLong)))
-      // pin the partition count: with a bare repartition(col) AQE coalesces
-      // a small shuffle to ~1 task, which then writes all `buckets`
-      // partition dirs SERIALLY — fixed per-file overhead dominates small
-      // builds (and at any size, ≥buckets tasks keeps the dir writes
-      // parallel; one extra empty task per unhit bucket costs nothing)
-      .repartition(buckets, col("bucket"))
-      .write
-      .mode(mode)
-      .partitionBy("bucket")
-      .parquet(path)
-    withDl
-      .select(col("id").cast("long").as("id"), col("dl"), lit(seq).as("seq"))
-      .withColumn("dbucket", pmod(xxhash64(col("id")), lit(buckets.toLong)))
-      .repartition(buckets, col("dbucket"))
-      .write
-      .mode(mode)
-      .partitionBy("dbucket")
-      .parquet(s"$path/$DoclensDir")
-  }
+  // the index log's kinds of file
+  private val Postings = "postings"
+  private val Doclens = "doclens"
+  private val Impacts = "impacts"
+  private val TermDf = "termdf"
 
   private val DoclensDir = "_graft_doclens"
-  private val DoclensSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("id", LongType),
-    org.apache.spark.sql.types.StructField("dl", LongType),
-    org.apache.spark.sql.types.StructField("seq", LongType)))
+
+  private def termBucket(buckets: Int): Column = pmod(xxhash64(col("term")), lit(buckets.toLong))
+
+  /** How a mutation's rows spread over files: a driver-local batch writes
+    * one file per hit bucket from one task; a distributed one pins
+    * `buckets` write tasks — with a bare repartition(col) AQE coalesces a
+    * small shuffle to ~1 task, which then writes every bucket dir SERIALLY,
+    * and at any size ≥buckets tasks keeps the dir writes parallel (one
+    * extra empty task per unhit bucket costs nothing).
+    */
+  private def spread(rows: DataFrame, part: String, buckets: Int, local: Boolean): DataFrame =
+    if (local) rows.coalesce(1) else rows.repartition(buckets, col(part))
+
+  /** Postings rows (id, dl, term, tf) stamped with the mutation `seq` (the
+    * [[graft.sources.IndexState]] visibility discipline — constant per
+    * file, so parquet RLE makes the column ~free), term-bucketed.
+    */
+  private def postingsWrite(
+      posted: DataFrame, buckets: Int, seq: Long, mode: SaveMode, local: Boolean = false): IndexLog.Write =
+    IndexLog.Write(Postings, "", Some("bucket"),
+      spread(posted.withColumn("seq", lit(seq)).withColumn("bucket", termBucket(buckets)), "bucket", buckets, local),
+      mode)
+
+  /** Per-doc lengths (`idDl`: id, dl) in the id-bucketed `_graft_doclens`
+    * sidecar, so a later delete looks up the removed docs' lengths with
+    * partition pruning instead of scanning the postings.
+    */
+  private def doclensWrite(
+      idDl: DataFrame, buckets: Int, seq: Long, mode: SaveMode, local: Boolean = false): IndexLog.Write =
+    IndexLog.Write(Doclens, DoclensDir, Some("dbucket"),
+      spread(
+        idDl.select(col("id").cast("long").as("id"), col("dl"), lit(seq).as("seq"))
+          .withColumn("dbucket", pmod(xxhash64(col("id")), lit(buckets.toLong))),
+        "dbucket", buckets, local),
+      mode)
+
+  private def impactsWrite(
+      capped: DataFrame, buckets: Int, seq: Long, mode: SaveMode, local: Boolean = false): IndexLog.Write =
+    IndexLog.Write(Impacts, ImpactsDir, Some("bucket"),
+      spread(capped.withColumn("seq", lit(seq)).withColumn("bucket", termBucket(buckets)), "bucket", buckets, local),
+      mode)
+
+  private def termDfWrite(
+      termDf: DataFrame, buckets: Int, seq: Long, mode: SaveMode, local: Boolean = false): IndexLog.Write =
+    IndexLog.Write(TermDf, TermDfDir, Some("bucket"),
+      spread(termDf.withColumn("seq", lit(seq)).withColumn("bucket", termBucket(buckets)), "bucket", buckets, local),
+      mode)
 
   /** Impact-ordered capped postings — the sidecars that make the indexed
     * probe CANDIDATE-bounded instead of corpus-bounded (the round-10
@@ -349,7 +338,7 @@ object Retrieval {
     *     postings by PARTIAL IMPACT `imp_micro = round(1e6 · tfNorm)`
     *     (the document-dependent score factor; idf is a per-term constant
     *     and cannot reorder a term's own postings), ties by id ASC. Rows
-    *     (term, id, tf, dl, seq, imp_micro), term-hash-bucketed like the
+    *     (term, id, tf, dl, imp_micro, seq), term-hash-bucketed like the
     *     postings so probes prune partitions identically.
     *   - `_graft_termdf/bucket=*` — (term, df, seq): the TRUE document
     *     frequency the capped probe can no longer derive by counting.
@@ -395,9 +384,9 @@ object Retrieval {
         (tf + lit(k1) * (lit(1.0 - b) + lit(b) * dl / lit(avgdl)))
     ).cast("long")
 
-  /** Write the impact + termdf sidecars for one mutation's posting rows
-    * (`posted`: id, dl, term, tf). Build/compact pass the full corpus
-    * postings (global caps, mode Overwrite); append passes the batch
+  /** The impact + termdf writes for one mutation's posting rows (`posted`:
+    * id, dl, term, tf). Build/compact pass the full corpus postings
+    * (global caps, mode Overwrite); a distributed append passes the batch
     * (per-batch caps, mode Append).
     *
     * The per-term cap takes one of two shapes by mutation size:
@@ -409,23 +398,21 @@ object Retrieval {
     * batch-sized exchange with no second aggregation and no join (the
     * probe-side re-cap rationale at [[bm25TopKIndexedPrunedBatch]]).
     */
-  private def writeBm25Impacts(
+  private def impactWrites(
       posted: DataFrame,
-      dataDir: String,
       buckets: Int,
       avgdl: Double,
       seq: Long,
-      mode: org.apache.spark.sql.SaveMode,
+      mode: SaveMode,
       cap: Int = ImpactCap,
       k1: Double = 1.2,
-      b: Double = 0.75,
-      overlap: Boolean = false
-  ): Unit = {
+      b: Double = 0.75
+  ): Seq[IndexLog.Write] = {
     val scored = posted.select(
       col("term"), col("id").cast("long").as("id"), col("tf"), col("dl"),
       impMicro(col("tf"), col("dl"), avgdl, k1, b).as("imp_micro"))
     val capped =
-      if (mode == org.apache.spark.sql.SaveMode.Append) {
+      if (mode == SaveMode.Append) {
         val w = Window.partitionBy(col("term")).orderBy(col("imp_micro").desc, col("id"))
         scored.withColumn("_rn", row_number().over(w)).filter(col("_rn") <= cap).drop("_rn")
       } else {
@@ -436,146 +423,30 @@ object Retrieval {
           .select(col("term"), col("_e.id").as("id"))
         scored.join(topIds, Seq("term", "id"), "left_semi")
       }
-    def impacts(): Unit = capped
-      .withColumn("seq", lit(seq))
-      .withColumn("bucket", pmod(xxhash64(col("term")), lit(buckets.toLong)))
-      .repartition(buckets, col("bucket"))
-      .write.mode(mode).partitionBy("bucket").parquet(s"$dataDir/$ImpactsDir")
-    def termdf(): Unit = posted
-      .groupBy(col("term"))
-      .agg(count(lit(1)).as("df"))
-      .withColumn("seq", lit(seq))
-      .withColumn("bucket", pmod(xxhash64(col("term")), lit(buckets.toLong)))
-      .repartition(buckets, col("bucket"))
-      .write.mode(mode).partitionBy("bucket").parquet(s"$dataDir/$TermDfDir")
-    // same overlap contract as [[writeBm25Postings]]: build/compact only
-    if (overlap) { inParallel(impacts(), termdf()); () }
-    else { impacts(); termdf() }
-  }
-
-  /** The `_graft_stats` sidecar: integer corpus counters plus two coverage
-    * markers.
-    *
-    * `statsSeq` is the mutation seq these counters COVER: every postings/
-    * doclens row with `seq <= statsSeq` is counted in `n_docs`/`dl_sum`,
-    * rows with a higher seq are not (they can exist only as the orphan tail
-    * of an append that crashed between its postings write and this stats
-    * overwrite). Appends advance it to their own seq; deletes and
-    * compaction carry it — under the single-writer at-least-once contract
-    * only the LAST batch can be orphaned, and its replay runs before any
-    * later mutation, so "counted iff seq <= statsSeq" stays exact.
-    *
-    * `tombSeq` is the delete-side twin: every tombstone with
-    * `del_seq <= tombSeq` is reflected in the counters. A tombstone above it
-    * is the tail of a delete leg that crashed between its tombstone write
-    * and its stats overwrite; the next delete leg decrements those ids'
-    * rows too ([[deleteFromBm25Index]]), so the replay converges although
-    * the ids are no longer live. Deletes advance it; appends and compaction
-    * carry it.
-    */
-  private final case class Bm25Stats(
-      nDocs: Long,
-      dlSum: Long,
-      buckets: Int,
-      statsSeq: Long,
-      tombSeq: Long
-  )
-
-  private def writeBm25Stats(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      st: Bm25Stats
-  ): Unit = {
-    import spark.implicits._
-    Seq((st.nDocs, st.dlSum, st.buckets, st.statsSeq, st.tombSeq))
-      .toDF("n_docs", "dl_sum", "buckets", "stats_seq", "tomb_seq")
-      .coalesce(1)
-      .write
-      .mode("overwrite")
-      .parquet(s"$path/_graft_stats")
-  }
-
-  private val StatsSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("n_docs", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("dl_sum", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("buckets", org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("stats_seq", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("tomb_seq", org.apache.spark.sql.types.LongType)))
-
-  /** A stats file written before a marker existed reads it as null →
-    * Long.MaxValue, i.e. "every row / every tombstone covered" — exactly
-    * the assumption the delete leg made before that marker.
-    */
-  private def readBm25Stats(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String
-  ): Bm25Stats = {
-    // every probe and mutation opens the index through this read, so an
-    // interrupted compaction swap self-heals here (IndexState.recoverSwap)
-    IndexState.recoverSwap(spark, path)
-    val p = s"$path/_graft_stats"
-    // Stats are REWRITTEN per mutation (mode overwrite), so a probe racing
-    // a delete/append can observe the sidecar missing or empty for the
-    // milliseconds of the overwrite — the same transient window the seq
-    // sidecar tolerates with its reader default. Stats have no safe
-    // default, so the reader RETRIES the (explicit-schema, no-inference)
-    // read briefly and fails loudly only if the window never closes —
-    // i.e. a genuinely absent/corrupt sidecar. Mutators are single-writer
-    // and never race themselves.
-    var attempt = 0
-    while (true) {
-      try {
-        val rows = spark.read.schema(StatsSchema).parquet(p).collect()
-        if (rows.nonEmpty) {
-          val st = rows(0)
-          def marker(name: String): Long = {
-            val i = st.fieldIndex(name)
-            if (st.isNullAt(i)) Long.MaxValue else st.getLong(i)
-          }
-          return Bm25Stats(
-            st.getLong(st.fieldIndex("n_docs")),
-            st.getLong(st.fieldIndex("dl_sum")),
-            st.getInt(st.fieldIndex("buckets")),
-            marker("stats_seq"),
-            marker("tomb_seq")
-          )
-        }
-        // listable but no rows yet: the same window, fall through to retry
-      } catch {
-        // AnalysisException: dir missing mid-overwrite. SparkException
-        // (FAILED_READ_FILE): the scan listed the OLD part file and the
-        // overwrite deleted it before the read — the other face of the
-        // same window. Both retry; the final attempt rethrows.
-        case e @ (_: org.apache.spark.sql.AnalysisException |
-            _: org.apache.spark.SparkException) =>
-          if (attempt >= 19) throw e
-      }
-      attempt += 1
-      if (attempt >= 20)
-        throw new IllegalStateException(
-          s"$p is missing or empty after $attempt reads — not the transient " +
-            "mutation-overwrite window; the index has no stats sidecar " +
-            "(never built, or the sidecar was lost). Rebuild with writeBm25Index.")
-      Thread.sleep(25)
-    }
-    sys.error("unreachable")
+    Seq(
+      impactsWrite(capped, buckets, seq, mode),
+      termDfWrite(posted.groupBy(col("term")).agg(count(lit(1)).as("df")), buckets, seq, mode))
   }
 
   /** Append a document batch into a [[writeBm25Index]] layout: O(batch)
     * postings land in their term buckets (existing file groups are never
-    * read or rewritten) and the integer stats update exactly, so a probe
-    * after append equals a probe of a full rebuild bit-for-bit
-    * (spec-asserted). df needs no maintenance — it is derived from the
-    * postings at probe time. The incremental shape at 100 TB: the corpus
-    * is never re-tokenized when new documents arrive.
+    * read or rewritten) and the integer counters update exactly, so a
+    * probe after append equals a probe of a full rebuild bit-for-bit
+    * (spec-asserted). The incremental shape at 100 TB: the corpus is never
+    * re-tokenized when new documents arrive.
+    *
+    * The postings, doclens, impact and termdf writes run concurrently and
+    * commit with one log entry; a crash before it leaves the index as it
+    * was.
     */
   def appendBm25Index(docs: DataFrame, id: String, text: String, path: String): Unit = {
     val spark = docs.sparkSession
-    // an empty batch is not a mutation: no seq bump (which would stale the
+    // an empty batch is not a mutation: no seq (which would stale the
     // compaction refusal memo for nothing) and no empty file group on disk
     if (docs.isEmpty) return
-    val st = readBm25Stats(spark, path)
-    val seq = IndexState.bumpSeq(spark, path)
+    val (data, head) = IndexState.open(spark, path)
+    val seq = head.seq + 1L
+    val buckets = head.counters.buckets
     // Same single-tokenization discipline as [[writeBm25Index]], but
     // MEMORY_AND_DISK, not DISK_ONLY: the no-memory-pinning rule targets
     // CORPUS-sized frames, and an append batch is bounded by the feed's
@@ -592,110 +463,61 @@ object Retrieval {
     val posted = postingsOf(withDl)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val data = IndexState.dataPath(spark, path)
-      writeBm25Postings(withDl, posted, data, st.buckets, seq, org.apache.spark.sql.SaveMode.Append)
       val s = withDl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("dl_sum")).collect()(0)
-      val (bn, bs) = if (s.isNullAt(0) || s.isNullAt(1)) (0L, 0L) else (s.getLong(0), s.getLong(1))
+      val c = head.counters
+      val counters = c.copy(nDocs = c.nDocs + s.getLong(0), dlSum = c.dlSum + s.getLong(1))
       // per-batch impact caps (superset carriers of the global cap — the
       // probe re-caps the visible union) + this batch's df deltas, frozen
-      // with the post-append avgdl. Written BEFORE the stats overwrite so
-      // the exact and pruned probes never see asymmetric sidecars: a crash
-      // inside this window leaves the new postings AND impact rows behind
-      // with stale pre-append stats. That tail is not fully invisible (both
-      // probes match the orphan postings, scored with stale n_docs/avgdl),
-      // but it IS replay-safe: stats_seq still names the pre-append seq, so
-      // the replayed batch's delete leg tombstones the orphans WITHOUT
-      // decrementing stats for rows the stats never counted, and the
-      // replayed append then lands exactly once (spec: "a crash between
-      // postings and stats replays without stats drift").
-      if (bn > 0L)
-        writeBm25Impacts(
-          posted, data, st.buckets,
-          avgdl = (st.dlSum + bs).toDouble / (st.nDocs + bn), seq = seq,
-          org.apache.spark.sql.SaveMode.Append)
-      writeBm25Stats(spark, path, st.copy(nDocs = st.nDocs + bn, dlSum = st.dlSum + bs, statsSeq = seq))
+      // with the post-append avgdl
+      IndexLog.mutate(spark, data, head, seq, counters,
+        Seq(postingsWrite(posted, buckets, seq, SaveMode.Append), doclensWrite(withDl, buckets, seq, SaveMode.Append)) ++
+          impactWrites(posted, buckets, counters.dlSum.toDouble / counters.nDocs, seq, SaveMode.Append))
     } finally { withDl.unpersist(); posted.unpersist(); () }
   }
 
   /** Remove documents from a [[writeBm25Index]] layout — the DELETE leg of
     * CDC maintenance (reference parity: delete ops reach the search index,
     * `sync.py:1254-1306`). Log-structured: the postings on disk are never
-    * touched; the batch's ids land in the tombstone sidecar
+    * touched; the batch's live ids land in a tombstone file
     * ([[graft.sources.IndexState]]) and every probe subtracts them. The
-    * integer stats are decremented by the REMOVED docs' exact lengths,
+    * integer counters are decremented by the REMOVED docs' exact lengths,
     * looked up in the id-bucketed doclens sidecar with partition pruning —
     * O(delete batch + touched buckets), never an index scan — so scoring
     * after delete equals a rebuild without the deleted docs bit-for-bit
     * (spec-asserted). Ids not live in the index (never added, or already
-    * deleted) are ignored: double-delete is a no-op and stats never drift.
-    * `ids` must expose a BIGINT `id` column. Run [[compactBm25Index]] to
-    * reclaim the tombstoned rows' space.
-    *
-    * Crash recovery: tombstones above the stats' `tomb_seq` are the tail of
-    * a delete that crashed before its stats overwrite ([[Bm25Stats]]).
-    * Their ids' rows are decremented here as well — as they stood under the
-    * reflected tombstones only — and the stats then cover them, even when
-    * nothing of this batch is live.
+    * deleted) are ignored: double-delete is a no-op and the counters never
+    * drift. `ids` must expose a BIGINT `id` column. Run [[compactBm25Index]]
+    * to reclaim the tombstoned rows' space.
     */
   def deleteFromBm25Index(spark: org.apache.spark.sql.SparkSession, path: String, ids: DataFrame): Unit = {
-    import spark.implicits._
-    val st = readBm25Stats(spark, path)
-    val data = IndexState.dataPath(spark, path)
-    val pending: Array[(Long, Long)] =
-      if (st.tombSeq == Long.MaxValue || !IndexState.hasTombstonesAt(spark, data)) Array.empty
-      else IndexState.tombstoneRowsAt(spark, data).filter(col("del_seq") > st.tombSeq)
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val (data, head) = IndexState.open(spark, path)
     val del = ids.select(col("id").cast("long").as("id")).distinct()
-    val targets =
-      if (pending.isEmpty) del else del.union(pending.map(_._1).toSeq.toDF("id")).distinct()
-    val bucketKeys = targets
-      .select(pmod(xxhash64(col("id")), lit(st.buckets.toLong)).as("b"))
+    val bucketKeys = del
+      .select(pmod(xxhash64(col("id")), lit(head.counters.buckets.toLong)).as("b"))
       .distinct().collect().map(_.getLong(0)).sorted
-    if (bucketKeys.isEmpty) return
-    val dlens = spark.read
-      .parquet(s"$data/$DoclensDir")
-      .filter(col("dbucket").isInCollection(bucketKeys.toSeq))
-    // live rows only: a doc already tombstoned must not decrement stats
-    // again; a doc re-added after a delete counts its LATEST (max-seq) length
+    if (bucketKeys.isEmpty || !head.has(Doclens)) return
+    val dlens = head.scan(spark, data, Doclens).filter(col("dbucket").isInCollection(bucketKeys.toSeq))
+    // live docs only, each at its LATEST (max-seq) visible length: a doc
+    // already tombstoned must not decrement the counters again, and a doc
+    // re-added after a delete counts once
     val live = IndexState
-      .visibleAt(dlens, data, "id")
+      .visibleUnder(dlens, data, head, "id")
       .join(del, Seq("id"), "left_semi")
-    // the pending tail's ids count as they stood before their crashed delete
-    val reflected =
-      if (pending.isEmpty) live
-      else IndexState.visibleAt(dlens, data, "id", upTo = st.tombSeq).join(targets, Seq("id"), "left_semi")
-    // Decrement ONLY rows the stats cover (seq <= stats_seq). Rows above
-    // stats_seq are the orphan tail of an append that crashed before its
-    // stats overwrite — the counters never included them, so decrementing
-    // would leave stats permanently low after the crashed batch replays.
-    // They are still TOMBSTONED below (the delete means the doc, not a
-    // generation), which is also what keeps the replayed append exactly-once.
-    val counted = reflected
-      .filter(col("seq") <= st.statsSeq)
       .groupBy(col("id"))
       .agg(max_by(col("dl"), col("seq")).as("dl"))
-    val s = counted.agg(count(lit(1)).as("n"), sum(col("dl")).as("d")).collect()(0)
-    val (dn, dd) = if (s.isNullAt(1)) (0L, 0L) else (s.getLong(0), s.getLong(1))
-    val anyLive = (pending.isEmpty && dn > 0L) || !live.isEmpty
-    // nothing live at all (neither counted nor orphan) and no pending tail:
-    // double-delete no-op
-    if (!anyLive && pending.isEmpty) return
-    val tombSeq =
-      if (!anyLive) pending.map(_._2).max
-      else {
-        val seq = IndexState.bumpSeq(spark, path)
-        IndexState.appendTombstones(live.select(col("id")).distinct(), path, seq)
-        seq
-      }
-    // stats_seq does NOT advance on delete: the counters still describe
-    // coverage up to the last append, and advancing here would wrongly
-    // mark a concurrent orphan tail as covered
-    writeBm25Stats(spark, path, st.copy(nDocs = st.nDocs - dn, dlSum = st.dlSum - dd, tombSeq = tombSeq))
+    val s = live.agg(count(lit(1)).as("n"), sum(col("dl")).as("d")).collect()(0)
+    // nothing live: double-delete no-op
+    if (s.getLong(0) == 0L) return
+    val seq = head.seq + 1L
+    val c = head.counters
+    IndexLog.mutate(spark, data, head, seq,
+      c.copy(nDocs = c.nDocs - s.getLong(0), dlSum = c.dlSum - s.getLong(1)),
+      Seq(IndexState.tombstoneWrite(live.select(col("id")), seq)))
   }
 
   /** The driver-fused tier of one CDC batch: [[deleteFromBm25Index]] of
     * every id in `ids`, then [[appendBm25Index]] of `upserts`, with the same
-    * persisted rows — for batches the caller bounds (the
+    * persisted rows and seq numbers — for batches the caller bounds (the
     * [[graft.streaming.SyncPipeline]] literal tier). `upserts` is a
     * driver-local relation of (`id`, `text`) rows with non-null text.
     *
@@ -703,14 +525,12 @@ object Retrieval {
     * buckets and `imp_micro` are the distributed tier's own Catalyst
     * expressions evaluated over local relations, which the optimizer folds
     * without a job; `dl`, `tf`, the per-term cap, the df deltas and the
-    * stats deltas are integer counts. Persisted state is read by
-    * batch-bounded collects: stats and seq (overlapped), then one union of
-    * the batch ids' doclens (pruned to their buckets) and tombstones. Each
-    * sidecar is written by one single-stage job over a local relation, one
-    * file per hit bucket. Write order and no-op rules are the two legs': seq (both
-    * numbers reserved by one counter write; a burnt number is harmless) →
-    * tombstones → stats, then postings → doclens → impacts → termdf →
-    * stats.
+    * counter deltas are integer counts. Persisted state is the log head
+    * (read on the driver) and one collect of the batch ids' logged doclens
+    * (pruned to their buckets) and tombstones. The tombstone, postings,
+    * doclens, impact and termdf files are written concurrently, each by one
+    * single-stage job over a local relation (one file per hit bucket), and
+    * committed by ONE log entry: both legs land together or not at all.
     */
   private[graft] def mutateBm25IndexFused(
       spark: org.apache.spark.sql.SparkSession,
@@ -727,116 +547,82 @@ object Retrieval {
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
     def local(rows: Seq[Row], schema: StructType): DataFrame =
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-    def write(rows: DataFrame, dir: String, part: String): Unit =
-      rows.coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Append).partitionBy(part).parquet(dir)
+    val idSchema = StructType(Seq(StructField("id", LongType)))
     val del = ids.distinct
     val docs = upserts.select(col(id), TextFunctions.tokens(lower(col(text))))
       .collect().toSeq.map(r => (r.get(0), r.getSeq[String](1)))
     if (del.isEmpty && docs.isEmpty) return
-    // the two root sidecar reads are independent: overlap them
-    val (st, s0) = inParallel(readBm25Stats(spark, path), IndexState.readSeq(spark, path, strictEmpty = true))
-    val data = IndexState.dataPath(spark, path)
+    val (data, head) = IndexState.open(spark, path)
+    val buckets = head.counters.buckets
 
-    // ---- delete leg: which ids are live, what the stats counted --------
-    val hasTombs = IndexState.hasTombstonesAt(spark, data)
-    val fs = new org.apache.hadoop.fs.Path(data).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // doclens (id, dl, seq) and tombstones (id, del_seq) of `xs` — with
-    // `tail`, also every tombstone above tomb_seq — in one collect
-    def state(xs: Seq[Long], tail: Boolean): (Seq[(Long, Long, Long)], Seq[(Long, Long)]) = {
-      val keys = local(xs.map(Row(_)), StructType(Seq(StructField("id", LongType))))
-        .select(pmod(xxhash64(col("id")), lit(st.buckets.toLong)))
-        .collect().map(_.getLong(0)).distinct
-      val dirs = keys.toSeq.map(k => s"$data/$DoclensDir/dbucket=$k")
-        .filter(d => fs.exists(new org.apache.hadoop.fs.Path(d)))
-      val none = lit(null).cast(LongType)
-      val mine = col("id").isin(xs: _*)
-      val doclens = Option.when(dirs.nonEmpty)(
-        spark.read.schema(DoclensSchema).option("basePath", s"$data/$DoclensDir").parquet(dirs: _*)
-          .filter(mine)
-          .select(col("id"), col("dl"), col("seq"), none.as("del_seq")))
-      val tombs = Option.when(hasTombs)(
-        IndexState.tombstoneRowsAt(spark, data)
-          .filter(if (tail && st.tombSeq != Long.MaxValue) mine || col("del_seq") > st.tombSeq else mine)
-          .select(col("id"), none.as("dl"), none.as("seq"), col("del_seq")))
-      val rows = (doclens ++ tombs).reduceOption(_ unionByName _).map(_.collect().toSeq).getOrElse(Nil)
-      val (t, d) = rows.partition(!_.isNullAt(3))
-      (d.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))), t.map(r => (r.getLong(0), r.getLong(3))))
-    }
+    // ---- delete leg: the batch ids' doclens (id, dl, seq) and tombstones
+    // (id, del_seq) as the head lists them, in one collect
     val (dlRows, tombs) =
-      if (del.isEmpty) (Nil, Nil)
+      if (del.isEmpty || !head.has(Doclens)) (Nil, Nil)
       else {
-        val (d0, t0) = state(del, tail = true)
-        val extra = t0.collect { case (i, s) if s > st.tombSeq => i }.distinct.filterNot(del.toSet)
-        if (extra.isEmpty) (d0, t0)
-        else { val (d1, t1) = state(extra, tail = false); (d0 ++ d1, (t0 ++ t1).distinct) }
+        val keys = local(del.map(Row(_)), idSchema)
+          .select(pmod(xxhash64(col("id")), lit(buckets.toLong)))
+          .collect().map(_.getLong(0)).distinct
+        val none = lit(null).cast(LongType)
+        val mine = col("id").isin(del: _*)
+        val doclens = head.scan(spark, data, Doclens)
+          .filter(col("dbucket").isInCollection(keys.toSeq) && mine)
+          .select(col("id"), col("dl"), col("seq"), none.as("del_seq"))
+        val ts = Option.when(head.has(IndexState.Tombstones))(
+          head.scan(spark, data, IndexState.Tombstones).filter(mine)
+            .select(col("id"), none.as("dl"), none.as("seq"), col("del_seq")))
+        val (t, d) = (doclens +: ts.toSeq).reduce(_ unionByName _).collect().toSeq.partition(!_.isNullAt(3))
+        (d.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))), t.map(r => (r.getLong(0), r.getLong(3))))
       }
     val tombsOf = tombs.groupMap(_._1)(_._2)
-    val rowsOf = dlRows.groupMap(_._1)(r => (r._2, r._3))
-    def hidden(i: Long, seq: Long, upTo: Long) =
-      tombsOf.getOrElse(i, Nil).exists(d => d >= seq && d <= upTo)
-    val pending = tombs.filter(_._2 > st.tombSeq)
-    val live = del.filter(i => rowsOf.getOrElse(i, Nil).exists(r => !hidden(i, r._2, Long.MaxValue)))
-    // the deleteFromBm25Index decrement: covered rows (seq <= stats_seq)
-    // visible under the reflected tombstones, latest length per id
-    val counted = (del ++ pending.map(_._1)).distinct.flatMap { i =>
-      rowsOf.getOrElse(i, Nil)
-        .filter(r => r._2 <= st.statsSeq && !hidden(i, r._2, st.tombSeq))
-        .maxByOption(_._2).map(_._1)
+    // each live id's latest visible length: the deleteFromBm25Index decrement
+    val live: Seq[(Long, Long)] = dlRows.groupMap(_._1)(r => (r._2, r._3)).toSeq.flatMap { case (i, rows) =>
+      rows.filter { case (_, seq) => !tombsOf.getOrElse(i, Nil).exists(_ >= seq) }.maxByOption(_._2).map(r => i -> r._1)
     }
-    val deletes = live.nonEmpty
-    val delSeq = if (deletes) s0 + 1L else s0
+    val delSeq = if (live.nonEmpty) head.seq + 1L else head.seq
     val seq = if (docs.nonEmpty) delSeq + 1L else delSeq
-    if (seq > s0) IndexState.writeSeq(spark, path, seq)
-    if (deletes) IndexState.appendTombstoneIds(spark, live, path, delSeq)
-    val st1 =
-      if (!deletes && pending.isEmpty) st
-      else {
-        val s1 = st.copy(
-          nDocs = st.nDocs - counted.size, dlSum = st.dlSum - counted.sum,
-          tombSeq = if (deletes) delSeq else pending.map(_._2).max)
-        writeBm25Stats(spark, path, s1)
-        s1
-      }
+    // nothing live to delete and nothing to append: not a mutation
+    if (seq == head.seq) return
+    val c = head.counters
+    val counters = c.copy(
+      nDocs = c.nDocs - live.size + docs.size,
+      dlSum = c.dlSum - live.map(_._2).sum + docs.map(_._2.size.toLong).sum)
+    val tombstones = Option.when(live.nonEmpty)(
+      IndexState.tombstoneWrite(local(live.map(l => Row(l._1)), idSchema), delSeq))
 
     // ---- append leg ----------------------------------------------------
-    if (docs.isEmpty) return
-    val idType = upserts.schema(id).dataType
-    val postings = docs.flatMap { case (i, toks) =>
-      toks.groupMapReduce(identity)(_ => 1L)(_ + _).toSeq.map { case (t, tf) => Row(i, toks.size.toLong, t, tf) }
-    }
-    val idDl = Seq(StructField("id", idType), StructField("dl", LongType))
-    val posted = local(postings,
-      StructType(idDl ++ Seq(StructField("term", StringType), StructField("tf", LongType))))
-    val termBucket = pmod(xxhash64(col("term")), lit(st.buckets.toLong))
-    write(posted.withColumn("seq", lit(seq)).withColumn("bucket", termBucket), data, "bucket")
-    write(
-      local(docs.map { case (i, toks) => Row(i, toks.size.toLong) }, StructType(idDl))
-        .select(col("id").cast("long").as("id"), col("dl"), lit(seq).as("seq"))
-        .withColumn("dbucket", pmod(xxhash64(col("id")), lit(st.buckets.toLong))),
-      s"$data/$DoclensDir", "dbucket")
-    val (bn, bs) = (docs.size.toLong, docs.map(_._2.size.toLong).sum)
-    val avgdl = (st1.dlSum + bs).toDouble / (st1.nDocs + bn)
-    val scored = posted.select(
-      col("term"), col("id").cast("long").as("id"), col("tf"), col("dl"),
-      impMicro(col("tf"), col("dl"), avgdl, k1, b).as("imp_micro"))
-    val byImpact = Ordering.Tuple2(Ordering.Long.reverse, Ordering.Long)
-    val capped = scored.collect().toSeq.groupBy(_.getString(0)).values.toSeq
-      .flatMap(_.sortBy(r => (r.getLong(4), r.getLong(1)))(byImpact).take(cap))
-    write(
-      local(capped, scored.schema).withColumn("seq", lit(seq)).withColumn("bucket", termBucket),
-      s"$data/$ImpactsDir", "bucket")
-    val termDf = postings.groupMapReduce(_.getString(2))(_ => 1L)(_ + _).toSeq.map { case (t, n) => Row(t, n) }
-    write(
-      local(termDf, StructType(Seq(StructField("term", StringType), StructField("df", LongType))))
-        .withColumn("seq", lit(seq)).withColumn("bucket", termBucket),
-      s"$data/$TermDfDir", "bucket")
-    writeBm25Stats(spark, path, st1.copy(nDocs = st1.nDocs + bn, dlSum = st1.dlSum + bs, statsSeq = seq))
+    val appends =
+      if (docs.isEmpty) Nil
+      else {
+        val postings = docs.flatMap { case (i, toks) =>
+          toks.groupMapReduce(identity)(_ => 1L)(_ + _).toSeq.map { case (t, tf) => Row(i, toks.size.toLong, t, tf) }
+        }
+        val idDl = Seq(StructField("id", upserts.schema(id).dataType), StructField("dl", LongType))
+        val posted = local(postings,
+          StructType(idDl ++ Seq(StructField("term", StringType), StructField("tf", LongType))))
+        val scored = posted.select(
+          col("term"), col("id").cast("long").as("id"), col("tf"), col("dl"),
+          impMicro(col("tf"), col("dl"), counters.dlSum.toDouble / counters.nDocs, k1, b).as("imp_micro"))
+        val byImpact = Ordering.Tuple2(Ordering.Long.reverse, Ordering.Long)
+        val capped = scored.collect().toSeq.groupBy(_.getString(0)).values.toSeq
+          .flatMap(_.sortBy(r => (r.getLong(4), r.getLong(1)))(byImpact).take(cap))
+        val termDf = postings.groupMapReduce(_.getString(2))(_ => 1L)(_ + _).toSeq.map { case (t, n) => Row(t, n) }
+        Seq(
+          postingsWrite(posted, buckets, seq, SaveMode.Append, local = true),
+          doclensWrite(local(docs.map { case (i, toks) => Row(i, toks.size.toLong) }, StructType(idDl)),
+            buckets, seq, SaveMode.Append, local = true),
+          impactsWrite(local(capped, scored.schema), buckets, seq, SaveMode.Append, local = true),
+          termDfWrite(local(termDf, StructType(Seq(StructField("term", StringType), StructField("df", LongType)))),
+            buckets, seq, SaveMode.Append, local = true))
+      }
+    IndexLog.mutate(spark, data, head, seq, counters, tombstones.toSeq ++ appends)
   }
 
-  /** Rewrite a mutated index without its tombstoned rows: surviving
-    * postings/doclens keep their seq stamps, stats and the seq counter are
-    * carried, the tombstone sidecar is NOT — probe cost returns to the
-    * append-only shape. Same staging-directory contract as
+  /** Rewrite a mutated index without its tombstoned rows into
+    * `stagingPath`, a fresh generation whose log starts at the current seq:
+    * surviving postings/doclens keep their seq stamps, the counters are
+    * carried, no tombstone is — probe cost returns to the append-only
+    * shape. Same staging-directory contract as
     * [[graft.ann.Ann.compactLshIndex]]: the caller swaps directories when
     * the write completes.
     */
@@ -845,46 +631,37 @@ object Retrieval {
       path: String,
       stagingPath: String
   ): Unit = {
-    val data = IndexState.dataPath(spark, path)
-    // ordered, not overlapped: the doclens target nests inside the postings
-    // target, and the postings Overwrite deletes the whole staging tree
-    IndexState
-      .visibleAt(spark.read.parquet(data), data, "id")
-      .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(stagingPath)
-    IndexState
-      .visibleAt(spark.read.parquet(s"$data/$DoclensDir"), data, "id")
-      .repartition(col("dbucket"))
-      .write.mode("overwrite").partitionBy("dbucket").parquet(s"$stagingPath/$DoclensDir")
-    val st = readBm25Stats(spark, path)
-    // carry both markers: surviving rows keep their seq stamps, so the
-    // covered/orphan boundary is unchanged by the rewrite
-    def carried(m: Long) = if (m == Long.MaxValue) IndexState.readSeq(spark, path) else m
-    writeBm25Stats(spark, stagingPath,
-      st.copy(statsSeq = carried(st.statsSeq), tombSeq = carried(st.tombSeq)))
+    val (data, head) = IndexState.open(spark, path)
+    val c = head.counters
+    def visible(kind: String) = IndexState.visibleUnder(head.scan(spark, data, kind), data, head, "id")
+    // the postings Overwrite clears the staging directory, so it goes
+    // first; the sidecars then overlap
+    val postings = IndexLog.write(spark, stagingPath, head.seq, Seq(IndexLog.Write(
+      Postings, "", Some("bucket"), visible(Postings).repartition(col("bucket")), SaveMode.Overwrite)))
+    val staged = IndexLog.Entry.fresh(head.seq, c, postings)
     // refresh the impact sidecars globally: exact df again (delete drift
     // gone), caps re-derived per term over the surviving postings with the
     // current avgdl — reading the COMPACTED copy just written, so the
     // tombstone subtraction is not paid twice
-    if (st.nDocs > 0L)
-      writeBm25Impacts(
-        spark.read.parquet(stagingPath).select(col("id"), col("dl"), col("term"), col("tf")),
-        stagingPath, st.buckets, avgdl = st.dlSum.toDouble / st.nDocs,
-        seq = IndexState.readSeq(spark, path),
-        org.apache.spark.sql.SaveMode.Overwrite, overlap = true)
-    IndexState.writeSeq(spark, stagingPath, IndexState.readSeq(spark, path))
+    val sidecars = IndexLog.write(spark, stagingPath, head.seq,
+      IndexLog.Write(Doclens, DoclensDir, Some("dbucket"), visible(Doclens).repartition(col("dbucket")),
+        SaveMode.Overwrite) +: (
+        if (c.nDocs == 0L) Nil
+        else impactWrites(
+          staged.scan(spark, stagingPath, Postings).select(col("id"), col("dl"), col("term"), col("tf")),
+          c.buckets, avgdl = c.dlSum.toDouble / c.nDocs, seq = head.seq, SaveMode.Overwrite)))
+    IndexLog.commit(spark, stagingPath, staged.next(head.seq, c, sidecars), head.seq)
   }
 
   /** Compact [[writeBm25Index]] when the dead fraction justifies the
     * rewrite — the policy leg CDC maintenance needs so tombstones cannot
     * accumulate unboundedly under a delete-heavy feed. The signal is
-    * exact and CHEAP: live doc count comes from the maintained stats
-    * sidecar, deleted-id count from the (delete-batch-sized) tombstone
-    * sidecar — the postings are never scanned to decide. At or above
-    * `maxDeadRatio` of dead docs, the index is rewritten to a staging
-    * sibling and atomically swapped into place
-    * ([[graft.sources.IndexState.swapCompacted]]); below it, nothing
-    * happens. Returns whether a compaction ran.
+    * exact and CHEAP: live doc count comes from the log's counters,
+    * deleted-id count from the (delete-batch-sized) tombstone files — the
+    * postings are never scanned to decide. At or above `maxDeadRatio` of
+    * dead docs, the index is rewritten to a staging sibling and promoted
+    * to the next generation ([[graft.sources.IndexState.compactAndSwap]]);
+    * below it, nothing happens. Returns whether a compaction ran.
     */
   def maybeCompactBm25Index(
       spark: org.apache.spark.sql.SparkSession,
@@ -894,13 +671,13 @@ object Retrieval {
     require(maxDeadRatio > 0 && maxDeadRatio <= 1, s"maxDeadRatio must be in (0,1], got $maxDeadRatio")
     val dead = IndexState.tombstoneCount(spark, path)
     if (dead == 0L) return false
-    val live = readBm25Stats(spark, path).nDocs
+    val live = IndexState.open(spark, path)._2.counters.nDocs
     // A fully-deleted index (live == 0) is NOT compacted: rewriting an
     // empty visible set would swap in a directory with no parquet part
     // files, which later reads cannot infer a schema from. Probes on the
     // un-compacted index already return the correct empty result via the
-    // tombstone subtraction; the sidecar stays delete-batch-sized, and the
-    // first re-append makes the index compactable again.
+    // tombstone subtraction; the tombstones stay delete-batch-sized, and
+    // the first re-append makes the index compactable again.
     if (live == 0L) return false
     // `dead` counts distinct tombstoned ids, which OVERSTATES the truly
     // dead fraction under churn: a CDC UPDATE tombstones then re-appends,
@@ -911,7 +688,7 @@ object Retrieval {
     // visible set, i.e. an index scan, which this policy exists to avoid.
     if (dead.toDouble / (live + dead) < maxDeadRatio) return false
     // the shared tail also refuses an empty rewrite — defense in depth on
-    // top of the live==0 guard, in case the stats sidecar ever drifts
+    // top of the live==0 guard, in case the counters ever drift
     IndexState.compactAndSwap(spark, path, compactBm25Index(spark, path, _))
   }
 
@@ -937,10 +714,9 @@ object Retrieval {
       maxMultiple: Double = 64.0
   ): Boolean = {
     require(maxMultiple >= 1, s"maxMultiple must be >= 1, got $maxMultiple")
-    IndexState.recoverSwap(spark, path)
-    val p = s"${IndexState.dataPath(spark, path)}/$TermDfDir"
-    if (!IndexState.stagingHasData(spark, p)) return false
-    val worst = spark.read.parquet(p)
+    val (data, head) = IndexState.open(spark, path)
+    if (!head.has(TermDf)) return false
+    val worst = head.scan(spark, data, TermDf)
       .groupBy(col("term")).agg(count(lit(1)).as("n"))
       .agg(max(col("n")).as("m"))
       .collect()(0)
@@ -953,8 +729,11 @@ object Retrieval {
     * (bounded by min(distinct workload terms, buckets)) and pushed as a
     * static partition filter, so only matching file groups are read — never
     * the full postings. Scoring is identical to [[bm25TopKBatch]] (n_docs /
-    * avgdl come from the sidecar as exact round-tripped doubles), so
+    * avgdl come from the log's counters as exact round-tripped doubles), so
     * results equal the in-memory batch operator exactly (spec-asserted).
+    * The postings, tombstones and counters all come from ONE log entry
+    * (see [[graft.sources.IndexState.open]]), and the scan opens exactly
+    * the files it lists — no directory listing.
     *
     * This is the VERIFICATION twin, not the production default: it reads
     * every posting of every matched term, so per-term cost tracks corpus
@@ -976,7 +755,8 @@ object Retrieval {
       b: Double = 0.75
   ): DataFrame = {
     val spark = queries.sparkSession
-    val Bm25Stats(nDocs, dlSum, buckets, _, _) = readBm25Stats(spark, path)
+    val (data, head) = IndexState.open(spark, path)
+    val IndexLog.Counters(nDocs, dlSum, buckets) = head.counters
     val avgdl = dlSum.toDouble / nDocs
     val qterms = queries
       .select(
@@ -986,16 +766,13 @@ object Retrieval {
     val bucketKeys = qterms
       .select(pmod(xxhash64(col("term")), lit(buckets.toLong)).as("b"))
       .distinct().collect().map(_.getLong(0)).sorted
-    // one generation resolution for data + tombstones (a compaction racing
-    // this probe must not mix generations)
-    val data = IndexState.dataPath(spark, path)
-    val post = spark.read.parquet(data)
+    val post = head.scan(spark, data, Postings)
     val pruned =
       if (bucketKeys.isEmpty) post.filter(lit(false))
       else post.filter(col("bucket").isInCollection(bucketKeys.toSeq))
     // subtract tombstoned docs BEFORE df/tf aggregation so document
     // frequencies equal a rebuild's (no-op when the index has no deletes)
-    val alive = IndexState.visibleAt(pruned, data, "id")
+    val alive = IndexState.visibleUnder(pruned, data, head, "id")
     val tf = alive.join(broadcast(qterms.select(col("term")).distinct()), Seq("term"), "left_semi")
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val idf =
@@ -1017,7 +794,9 @@ object Retrieval {
     * query term it reads at most cap × mutation-batches-since-compaction
     * rows no matter how large the corpus grows, where the exact probe reads
     * every posting of every matched term (measured 5.4× probe growth at 10×
-    * corpus in round 10 — the one corpus-proportional probe path).
+    * corpus in round 10 — the one corpus-proportional probe path). Like
+    * the exact probe, it reads impacts, termdf, tombstones and counters
+    * from one log entry and opens exactly the files it lists.
     *
     * Determinism + equivalence contract (spec-asserted, oracle-replayed):
     * scoring is the exact formula over the KEPT postings (tf/dl rescored
@@ -1043,40 +822,36 @@ object Retrieval {
       cap: Int = ImpactCap
   ): DataFrame = {
     val spark = queries.sparkSession
-    val Bm25Stats(nDocs, dlSum, buckets, _, _) = readBm25Stats(spark, path)
+    val (data, head) = IndexState.open(spark, path)
+    val IndexLog.Counters(nDocs, dlSum, buckets) = head.counters
     val qterms = queries
       .select(
         col(qid).as("qid"),
         explode(array_distinct(TextFunctions.tokens(lower(col(qtext))))).as("term")
       )
-    val data = IndexState.dataPath(spark, path)
-    if (!IndexState.stagingHasData(spark, s"$data/$ImpactsDir")) {
-      require(
-        nDocs == 0L,
-        s"$path has postings but no $ImpactsDir sidecar — built by a pre-impact " +
-          "layout; rebuild or compact the index to materialize the capped sidecars")
+    // an index built over an empty corpus has no impact files
+    if (!head.has(Impacts))
       return topKByQuery(
         qterms.select(col("qid"), lit(0L).as("id"), lit(0L).as("score_micro")).limit(0),
         "score_micro", k)
-    }
     val avgdl = dlSum.toDouble / nDocs
     val bucketKeys = qterms
       .select(pmod(xxhash64(col("term")), lit(buckets.toLong)).as("b"))
       .distinct().collect().map(_.getLong(0)).sorted
     val termSet = qterms.select(col("term")).distinct()
-    def pruned(dir: String): DataFrame = {
-      val all = spark.read.parquet(s"$data/$dir")
+    def pruned(kind: String): DataFrame = {
+      val all = head.scan(spark, data, kind)
       (if (bucketKeys.isEmpty) all.filter(lit(false))
        else all.filter(col("bucket").isInCollection(bucketKeys.toSeq)))
         .join(broadcast(termSet), Seq("term"), "left_semi")
     }
-    val alive = IndexState.visibleAt(pruned(ImpactsDir), data, "id")
+    val alive = IndexState.visibleUnder(pruned(Impacts), data, head, "id")
     // re-cap the visible union (appends carry per-batch caps): the frame
     // here is matched-term sidecar rows only — probe-sized, so a window is
     // the right tool (the corpus-scale heap lives on the WRITE side)
     val w = Window.partitionBy(col("term")).orderBy(col("imp_micro").desc, col("id"))
     val capped = alive.withColumn("_rn", row_number().over(w)).filter(col("_rn") <= cap)
-    val dfreq = pruned(TermDfDir)
+    val dfreq = pruned(TermDf)
       .groupBy(col("term"))
       .agg(least(sum(col("df")), lit(nDocs)).as("df"))
     val idf =

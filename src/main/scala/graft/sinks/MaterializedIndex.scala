@@ -2,11 +2,8 @@ package graft.sinks
 
 import graft.assemble.DocAssembler
 import graft.cdc.Lineage
+import graft.sources.ManifestFileIndex
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -31,8 +28,8 @@ import java.nio.charset.StandardCharsets
   *
   * The manifest is also the index's FILE index (the Delta Lake log's role):
   * each write records every bucket's parquet file and length, and every
-  * read scans exactly those files through a manifest-backed
-  * [[org.apache.spark.sql.execution.datasources.FileIndex]] — no directory
+  * read scans exactly those files through a
+  * [[graft.sources.ManifestFileIndex]] — no directory
   * listing, so no Spark listing job per read however many buckets it
   * spans. Each bucket holds exactly one file per version.
   */
@@ -169,17 +166,14 @@ final class MaterializedIndex(spark: SparkSession, dir: String, nBuckets: Int = 
     files.result()
   }
 
-  /** Scan exactly `files` (see [[MaterializedIndex.ManifestFileIndex]]). */
-  private def scan(schema: StructType, files: Seq[BucketFile]): DataFrame =
-    spark.baseRelationToDataFrame(
-      HadoopFsRelation(
-        MaterializedIndex.ManifestFileIndex(files.map(f => new FileStatus(f.length, false, 0, 0L, 0L, f.path))),
-        partitionSchema = new StructType(),
-        dataSchema = schema,
-        bucketSpec = None,
-        fileFormat = new ParquetFileFormat,
-        options = Map.empty
-      )(spark))
+  /** Scan exactly `files` (see [[graft.sources.ManifestFileIndex]]). */
+  private def scan(schema: StructType, files: Seq[BucketFile]): DataFrame = {
+    val statuses = files.map(f => new FileStatus(f.length, false, 0, 0L, 0L, f.path))
+    ManifestFileIndex.scan(
+      spark,
+      ManifestFileIndex(statuses.map(_.getPath.getParent).distinct, None, statuses.map(0L -> _)),
+      schema)
+  }
 
   private def read(kind: String, schema: StructType, version: Long = -1L): DataFrame =
     scan(schema, readManifest(if (version >= 0) version else currentVersion).filter(_.kind == kind))
@@ -458,19 +452,4 @@ object MaterializedIndex {
     * batch size + feed disorder — see [[MaterializedIndex.checkpointState]]).
     */
   final case class TxCheckpoint(watermark: Long, applied: Set[Long])
-
-  /** A [[FileIndex]] over a fixed file list taken from the manifest:
-    * listing is a constant, so constructing a read launches no Spark job,
-    * and a case class so two reads of the same files compare equal (plan
-    * reuse, cache lookup).
-    */
-  private final case class ManifestFileIndex(files: Seq[FileStatus]) extends FileIndex {
-    override def rootPaths: Seq[Path] = files.map(_.getPath.getParent).distinct
-    override def listFiles(partitionFilters: Seq[Expression], dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
-      Seq(PartitionDirectory(InternalRow.empty, files.toArray))
-    override def inputFiles: Array[String] = files.map(_.getPath.toString).toArray
-    override def refresh(): Unit = ()
-    override def sizeInBytes: Long = files.map(_.getLen).sum
-    override def partitionSchema: StructType = new StructType()
-  }
 }

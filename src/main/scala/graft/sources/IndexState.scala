@@ -6,10 +6,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Shared mutation state for the persisted retrieval/ANN indexes (BM25
-  * postings, LSH buckets, IVF-PQ cells): a sequence counter plus a
-  * tombstone sidecar, both living INSIDE the index directory under
-  * underscore-prefixed names (invisible to the parquet scan of the index
-  * root — the [[graft.ann.AnnModels]] sidecar discipline).
+  * postings, LSH buckets, IVF-PQ cells): a commit log ([[IndexLog]]) that
+  * lists every live data file and a tombstone kind of file, both living
+  * INSIDE the index's data directory under underscore-prefixed names
+  * (invisible to a plain parquet read of the index root — the
+  * [[graft.ann.AnnModels]] sidecar discipline).
   *
   * Why this exists: the engine is a CDC sync product — DELETE events must
   * remove documents from every probe surface, the way the reference removes
@@ -22,13 +23,13 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * index engine uses: deletes append TOMBSTONES, probes subtract them,
   * compaction reclaims them.
   *
-  * Layout under `<indexPath>/`:
-  *   - `_graft_seq/`        — one row (seq BIGINT): the last mutation
-  *     sequence number. Every mutation (append or delete batch) gets the
-  *     next number; data rows are stamped with the seq of the mutation
-  *     that wrote them (the base build writes seq 0).
-  *   - `_graft_tombstones/` — rows (id BIGINT, del_seq BIGINT), appended
-  *     one file group per delete batch.
+  * Layout under the data directory ([[dataPath]]):
+  *   - `_graft_log/<seq>` — the commit log. Every mutation (append or
+  *     delete batch) commits the next seq; data rows are stamped with the
+  *     seq of the mutation that wrote them (the base build writes seq 0).
+  *     Probes and mutations open it through [[open]].
+  *   - `_graft_tombstones/` — rows (id BIGINT, del_seq BIGINT), one file
+  *     per delete batch, live once the batch's entry lists it.
   *
   * Visibility rule — the reason seq exists at all: a data row `(id, seq)`
   * is visible iff no tombstone `(id, del_seq ≥ seq)` exists. A plain id
@@ -39,10 +40,15 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *
   * Scale shape: tombstones are delete-batch-sized, not corpus-sized; the
   * visibility join runs AFTER partition pruning, so it touches candidate
-  * rows only, and an index with no tombstone sidecar skips the join
+  * rows only, and an index whose log lists no tombstone skips the join
   * entirely (zero plan change for append-only indexes). Single-writer
   * discipline (one sync engine per index) is assumed, as everywhere else
   * in the persisted-index family.
+  *
+  * The merge-pointer indexes ([[graft.dedup.ClusterMap]],
+  * [[graft.dedup.SignatureIndex]]) share the generation machinery below
+  * but order their merges with a separate counter, `_graft_seq`
+  * ([[readSeq]], [[bumpSeq]]).
   */
 object IndexState {
 
@@ -103,7 +109,7 @@ object IndexState {
     * previous generation (caught by GenerationSpec's concurrent probe).
     */
   private val GenerationalSidecars =
-    Set("_graft_doclens", "_graft_impacts", "_graft_termdf", TombstoneDir, "_graft_merges")
+    Set("_graft_doclens", "_graft_impacts", "_graft_termdf", TombstoneDir, IndexLog.Dir, "_graft_merges")
 
   private def fs(spark: SparkSession, path: String) =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -136,8 +142,8 @@ object IndexState {
   /** Resolve the directory holding the index's DATA partitions: the highest
     * ready generation after a [[compactAndSwap]], the index root before the
     * first one. Every probe and mutation resolves through here (one LIST of
-    * the index root); root-level sidecars (`_graft_seq`, tombstones, stats,
-    * model) are shared across generations and never move.
+    * the index root); root-level sidecars (`_graft_seq`, the model) are
+    * shared across generations and never move.
     */
   def dataPath(spark: SparkSession, path: String): String =
     currentGen(spark, path).map(n => s"$path/$GenPrefix$n").getOrElse(path)
@@ -203,8 +209,8 @@ object IndexState {
     }
   }
 
-  /** Last mutation sequence number; 0 for an index built before any
-    * mutation (or by a pre-seq layout).
+  /** Last merge sequence number of a merge-pointer index; 0 before any
+    * merge.
     *
     * The empty-sidecar fallback is READER-only: a concurrent reader can
     * observe the dir mid-overwrite (exists, no data files yet), and seq 0
@@ -256,96 +262,61 @@ object IndexState {
     next
   }
 
-  /** The tombstone sidecar lives INSIDE the current data directory
-    * ([[dataPath]]) so a generation and its delete-set travel together —
-    * see [[GenerationalSidecars]]. Mutations resolve per call
-    * (single-writer: no promotion can race them); reader paths that also
-    * scan the data must resolve ONCE and use [[visibleAt]] so data and
-    * tombstones come from the same generation.
+  /** The log kind of the tombstone files (rows `(id, del_seq)`, flat under
+    * [[TombstoneDir]]). They live INSIDE the data directory, so a
+    * generation and its delete-set travel together — see
+    * [[GenerationalSidecars]].
     */
-  def hasTombstones(spark: SparkSession, indexPath: String): Boolean = {
-    recoverSwap(spark, indexPath)
-    exists(spark, s"${dataPath(spark, indexPath)}/$TombstoneDir")
+  private[graft] val Tombstones = "tombstones"
+
+  /** Open a log-backed index for one probe or mutation: self-heal an
+    * interrupted swap, resolve the current generation ONCE and read its log
+    * head — data files, tombstones and counters then all come from one
+    * entry of one generation, so a probe racing a mutation sees the index
+    * before it or after it, never a mix.
+    */
+  def open(spark: SparkSession, path: String): (String, IndexLog.Entry) = {
+    recoverSwap(spark, path)
+    val data = dataPath(spark, path)
+    (data, IndexLog.head(spark, data))
   }
 
-  /** The tombstone sidecar's fixed schema. Reads always pass it explicitly:
-    * schema inference on the sidecar would fail on a directory that EXISTS
-    * but holds no data files yet — exactly the window a concurrent reader
-    * can observe while the first delete batch's `_temporary` output is
-    * mid-write (caught by GenerationSpec's concurrent probe). With the
-    * schema pinned, that window reads as zero tombstones, and every read
-    * skips footer inference.
+  /** The log write of one delete batch: `ids` (one BIGINT column `id`, each
+    * id once) stamped with `seq`, as one file.
     */
-  private val TombstoneSchema: StructType =
-    StructType(Seq(StructField("id", LongType), StructField("del_seq", LongType)))
+  private[graft] def tombstoneWrite(ids: DataFrame, seq: Long): IndexLog.Write =
+    IndexLog.Write(
+      Tombstones, TombstoneDir, None,
+      ids.select(col("id").cast("long").as("id"), lit(seq).as("del_seq")).coalesce(1))
 
-  /** Raw tombstone rows `(id, del_seq)` of the resolved data dir `dataDir`:
-    * one row per id per delete batch.
+  def hasTombstones(spark: SparkSession, indexPath: String): Boolean =
+    open(spark, indexPath)._2.has(Tombstones)
+
+  /** Aggregated tombstones `(ts_id, del_seq)` of `head` — one row per
+    * deleted id, carrying the LATEST delete seq (earlier deletes of the
+    * same id are subsumed: any row hidden by an old delete is also hidden
+    * by a newer one).
     */
-  private[graft] def tombstoneRowsAt(spark: SparkSession, dataDir: String): DataFrame =
-    spark.read.schema(TombstoneSchema).parquet(s"$dataDir/$TombstoneDir")
-
-  private[graft] def hasTombstonesAt(spark: SparkSession, dataDir: String): Boolean =
-    exists(spark, s"$dataDir/$TombstoneDir")
-
-  /** Aggregated tombstones `(ts_id, del_seq)` of the resolved data dir
-    * `dataDir` — one row per deleted id, carrying the LATEST delete seq
-    * (earlier deletes of the same id are subsumed: any row hidden by an old
-    * delete is also hidden by a newer one).
-    */
-  def readTombstonesAt(spark: SparkSession, dataDir: String): DataFrame =
-    readTombstonesAt(spark, dataDir, Long.MaxValue)
-
-  /** [[readTombstonesAt]] counting only deletes with `del_seq <= upTo`. */
-  private[graft] def readTombstonesAt(spark: SparkSession, dataDir: String, upTo: Long): DataFrame = {
-    val rows = tombstoneRowsAt(spark, dataDir)
-    (if (upTo == Long.MaxValue) rows else rows.filter(col("del_seq") <= upTo))
+  private def tombstonesOf(spark: SparkSession, dataDir: String, head: IndexLog.Entry): DataFrame =
+    head.scan(spark, dataDir, Tombstones)
       .groupBy(col("id").as("ts_id"))
       .agg(max(col("del_seq")).as("del_seq"))
-      .select(col("ts_id"), col("del_seq"))
-  }
-
-  /** Append a delete batch: `ids` must expose a single BIGINT column named
-    * `id`. One new file group per batch; O(batch) write. Lands in the
-    * CURRENT generation's sidecar.
-    */
-  def appendTombstones(ids: DataFrame, indexPath: String, seq: Long): Unit =
-    ids
-      .select(col("id").cast("long").as("id"), lit(seq).as("del_seq"))
-      .distinct()
-      .coalesce(1)
-      .write
-      .mode("append")
-      .parquet(s"${dataPath(ids.sparkSession, indexPath)}/$TombstoneDir")
-
-  /** [[appendTombstones]] for a driver-held id set: one single-stage write
-    * of a local relation, no distinct exchange. Nothing is written for an
-    * empty set.
-    */
-  private[graft] def appendTombstoneIds(spark: SparkSession, ids: Seq[Long], indexPath: String, seq: Long): Unit =
-    if (ids.nonEmpty) {
-      import spark.implicits._
-      ids.distinct.map(_ -> seq).toDF("id", "del_seq")
-        .coalesce(1)
-        .write
-        .mode("append")
-        .parquet(s"${dataPath(spark, indexPath)}/$TombstoneDir")
-    }
 
   /** Number of distinct tombstoned ids — the compaction-policy signal.
-    * Cost is a scan of the (delete-batch-sized) sidecar only, never the
-    * index. 0 when no delete has ever happened.
+    * Cost is a scan of the (delete-batch-sized) tombstone files only, never
+    * the index. 0 when no delete has ever happened.
     */
-  def tombstoneCount(spark: SparkSession, indexPath: String): Long =
-    if (!hasTombstones(spark, indexPath)) 0L
-    else readTombstonesAt(spark, dataPath(spark, indexPath)).count()
+  def tombstoneCount(spark: SparkSession, indexPath: String): Long = {
+    val (data, head) = open(spark, indexPath)
+    if (!head.has(Tombstones)) 0L else tombstonesOf(spark, data, head).count()
+  }
 
   /** Swap a compacted staging directory into place: the live index moves
     * to `<path>.graft_trash`, staging is renamed over `path`, and the
     * trash is deleted last. On a filesystem with atomic directory rename
     * (POSIX, HDFS) every intermediate state holds a COMPLETE index in at
     * least one of the three locations, and [[recoverSwap]] — run by every
-    * subsequent open through [[readSeq]]/[[hasTombstones]] — restores it
+    * subsequent open through [[open]]/[[readSeq]] — restores it
     * to `path`, preferring the newer staging copy. So a crash anywhere in
     * the swap self-heals on the next probe or mutation. On object stores
     * where "rename" is copy+delete this window is NOT atomic — run
@@ -383,8 +354,8 @@ object IndexState {
     * trash sibling, rename it back into place (staging wins — it is only
     * ever renamed-from AFTER being fully written, and it is the newer
     * generation). Returns whether an index was restored. Called from
-    * [[readSeq]] and [[hasTombstones]], so every mutation and every
-    * tombstone-aware probe self-heals on open; a healthy index pays
+    * [[open]] and [[readSeq]], so every mutation and every probe
+    * self-heals on open; a healthy index pays
     * exactly ONE file-status probe.
     *
     * Stale siblings next to a live index are left alone: a leftover trash
@@ -435,7 +406,7 @@ object IndexState {
     * root cannot infer a schema from. The `maybeCompact*` policies use
     * this to refuse to swap an empty index into place — a delete-everything
     * feed must not brick the index (probes on the un-compacted index
-    * already return the correct empty result via [[visible]]).
+    * already return the correct empty result via [[visibleAt]]).
     */
   def stagingHasData(spark: SparkSession, stagingPath: String): Boolean = {
     val f = fs(spark, stagingPath)
@@ -491,17 +462,20 @@ object IndexState {
     * directory; see [[GenPrefix]]). Keeping this in one place makes the
     * empty-rewrite guard impossible to omit from any one index family.
     *
-    * A refusal is memoized at the index's current mutation seq: until a
-    * mutation bumps the seq, re-running the policy skips the (index-scan +
+    * A refusal is memoized at the index's current mutation seq (its log
+    * head, or `_graft_seq` for a merge-pointer index): until a mutation
+    * bumps the seq, re-running the policy skips the (index-scan +
     * rewrite) attempt entirely — a fully-deleted index under a steady CDC
     * feed pays the refused rewrite once, not per batch. The promoted
     * generation is born tombstone-free (the rewrite dropped those rows, and
-    * the sidecar is generation-scoped), so no post-flip cleanup touches
+    * the tombstones are generation-scoped), so no post-flip cleanup touches
     * files a racing reader may hold. Returns whether the promotion
     * happened.
     */
   def compactAndSwap(spark: SparkSession, path: String, compact: String => Unit): Boolean = {
-    val seqNow = readSeq(spark, path)
+    val data = dataPath(spark, path)
+    val seqNow =
+      if (exists(spark, s"$data/${IndexLog.Dir}")) IndexLog.head(spark, data).seq else readSeq(spark, path)
     if (refusedSeq(spark, path).contains(seqNow)) return false
     val staging = path + StagingSuffix
     deleteDir(spark, staging) // abandoned residue from a crashed attempt
@@ -518,25 +492,25 @@ object IndexState {
   }
 
   /** Filter `rows` (which must carry `idCol` and a BIGINT `seq` column) to
-    * the visible set under the tombstones of the RESOLVED data directory
-    * `dataDir` — the same directory `rows` was read from, so data and
-    * delete-set come from one generation even if a compaction promotes a
-    * new one mid-plan. No tombstone sidecar ⇒ `rows` unchanged —
+    * the visible set under the tombstones the log head of the RESOLVED data
+    * directory `dataDir` lists — the directory `rows` was read from, so
+    * data and delete-set come from one generation even if a compaction
+    * promotes a new one mid-plan. No tombstone ⇒ `rows` unchanged —
     * append-only (and freshly compacted) generations pay nothing.
     */
   def visibleAt(rows: DataFrame, dataDir: String, idCol: String): DataFrame =
-    visibleAt(rows, dataDir, idCol, Long.MaxValue)
+    visibleUnder(rows, dataDir, IndexLog.head(rows.sparkSession, dataDir), idCol)
 
-  /** [[visibleAt]] under only the deletes with `del_seq <= upTo`. */
-  private[graft] def visibleAt(rows: DataFrame, dataDir: String, idCol: String, upTo: Long): DataFrame = {
-    val spark = rows.sparkSession
-    if (!hasTombstonesAt(spark, dataDir)) rows
+  /** [[visibleAt]] under the tombstones of an entry already read — the
+    * entry `rows` was scanned from.
+    */
+  private[graft] def visibleUnder(rows: DataFrame, dataDir: String, head: IndexLog.Entry, idCol: String): DataFrame =
+    if (!head.has(Tombstones)) rows
     else {
-      val ts = readTombstonesAt(spark, dataDir, upTo)
+      val ts = tombstonesOf(rows.sparkSession, dataDir, head)
       rows
         .join(ts, rows(idCol) === ts("ts_id"), "left_outer")
         .filter(col("del_seq").isNull || col("seq") > col("del_seq"))
         .drop("ts_id", "del_seq")
     }
-  }
 }

@@ -21,10 +21,11 @@ import org.apache.spark.sql.functions.col
   * threshold (the doc engine's `IncrementalEngine.Tuning.inSetThreshold`,
   * 1 000 ids by default). A batch within it arrives as a driver-local
   * relation and takes the driver-fused tier ([[Ann.mutateLshIndexFused]]:
-  * hyperplane buckets folded on the driver, one seq read, one single-stage
-  * write each for seq, tombstones and bucket rows); a larger one runs
+  * hyperplane buckets folded on the driver, the log head read on the
+  * driver, the tombstones and bucket rows written concurrently and
+  * committed by one log entry); a larger one runs
   * [[Ann.deleteFromLshIndex]] then [[Ann.appendLshIndex]]. Both persist
-  * the same rows. The PQ batch has one tier.
+  * the same rows under the same seq numbers. The PQ batch has one tier.
   */
 object AnnStream {
 

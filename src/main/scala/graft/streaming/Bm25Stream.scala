@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   *
   * Protocol per micro-batch (`applyBatch`):
   *
-  *   1. DELETE every batch id from the index — tombstones + exact stats
+  *   1. DELETE every batch id from the index — tombstones + exact counter
   *      decrement ([[Retrieval.deleteFromBm25Index]]); a no-op for ids not
   *      live.
   *   2. APPEND the new document state of every INSERT/UPDATE row.
@@ -21,9 +21,12 @@ import org.apache.spark.sql.functions._
   * at-least-once delivery converge: a REPLAYED batch first tombstones the
   * generation its previous attempt appended (un-doing its stats
   * contribution exactly), then re-appends — the visible index state and
-  * the integer stats end identical to a single delivery. This is the
+  * the integer counters end identical to a single delivery. This is the
   * payoff of the seq-tombstone discipline ([[graft.sources.IndexState]]):
-  * blind re-append would double postings and double-count stats.
+  * blind re-append would double postings and double-count the counters.
+  * A batch that crashes mid-mutation commits nothing (every mutation
+  * commits with one [[graft.sources.IndexLog]] entry), so its replay starts
+  * from the index as it was.
   *
   * The feed must be collapsed to ONE final op per id per batch (the
   * engine's change batches are — [[graft.cdc.IncrementalEngine]] recomputes
@@ -35,11 +38,11 @@ import org.apache.spark.sql.functions._
   * 1 000 by default). A batch within it arrives as a driver-local relation
   * and takes the driver-fused tier
   * ([[graft.functions.Retrieval.mutateBm25IndexFused]]): one collect of
-  * the batch, batch-bounded sidecar reads, one single-stage write per
-  * sidecar. A larger batch takes the distributed tier
-  * ([[Retrieval.deleteFromBm25Index]] then [[Retrieval.appendBm25Index]]).
-  * Both persist the same rows with the same write order, so a batch
-  * replayed through either tier converges.
+  * the batch, one batch-bounded state read, concurrent single-stage writes
+  * and one log entry. A larger batch takes the distributed tier
+  * ([[Retrieval.deleteFromBm25Index]] then [[Retrieval.appendBm25Index]],
+  * one entry each). Both persist the same rows under the same seq
+  * numbers, so a batch replayed through either tier converges.
   */
 object Bm25Stream {
 
@@ -47,8 +50,8 @@ object Bm25Stream {
     * [[SyncPipeline.Bm25Consumer]], or directly for batch-mode backfills.
     * `batch` carries columns `tg_op` (INSERT/UPDATE/DELETE), `id`, and
     * `text` (null allowed on DELETE). With `autoCompactRatio` set, the
-    * batch ends with BOTH compaction policy checks (cheap — sidecar counts
-    * only, the postings are never scanned to decide):
+    * batch ends with BOTH compaction policy checks (cheap — log counters
+    * and sidecar counts only, the postings are never scanned to decide):
     * [[Retrieval.maybeCompactBm25Index]] bounds tombstone growth under a
     * delete-heavy feed, and — when the dead-ratio leg did not fire —
     * [[Retrieval.maybeCompactBm25ByImpactGrowth]] at `impactGrowthMultiple`

@@ -142,16 +142,24 @@ object ClusterStream {
   ): Unit = {
     val m = SignatureIndex.readModel(spark, sigPath)
     val ups = rows.filter(col("tg_op") =!= "DELETE")
+    val newIds = ups.select(col(pk).cast("long").as("id"))
+    if (newIds.isEmpty) return // DELETE-only or idle batch: no state change
+    def release(df: DataFrame): Unit =
+      try org.apache.spark.sql.GraftColumnBridge.unpersistLocalCheckpoint(df)
+      catch { case scala.util.control.NonFatal(_) => () }
+    // The batch frames are EAGER local checkpoints, not lazy caches: a lazy
+    // cache is built by whichever job reads it first, and a job that starts
+    // after the batch released it registers it again — a persistent RDD
+    // that outlives its batch (seen once in SyncPipelineSpec's leak check).
+    // A released checkpoint is never registered again.
     val docs = ups
       .filter(col(textCol).isNotNull)
       .select(col(pk).cast("long").as("id"), col(textCol).as("t"))
-      .cache()
+      .localCheckpoint(true)
     try {
-      val newIds = ups.select(col(pk).cast("long").as("id"))
-      if (newIds.isEmpty) return // DELETE-only or idle batch: no state change
       // the batch is shingled ONCE: these keys drive the index probe, the
       // in-batch candidate pairs, and the post-update append
-      val batchKeys = SignatureIndex.bandKeys(docs, "id", "t", m).cache()
+      val batchKeys = SignatureIndex.bandKeys(docs, "id", "t", m).localCheckpoint(true)
       try {
         val cand = SignatureIndex.candidates(spark, sigPath, m, batchKeys)
         // in-batch candidates from the same keys (skipping the batch
@@ -163,7 +171,7 @@ object ClusterStream {
         val candPairs = cand
           .select(col("batch_id").as("id_a"), col("corpus_id").as("id_b"))
           .unionByName(Dedup.bucketPairs(batchKeys, m.maxBucket))
-          .cache()
+          .localCheckpoint(true)
         try {
           val pairs = {
             val corpusTxt = restrictText(
@@ -188,16 +196,10 @@ object ClusterStream {
               .verifyJaccardShingled(candPairs, shingled, m.threshold)
               .select(col("id_a"), col("id_b"))
               .localCheckpoint(true)
-            finally {
-              try org.apache.spark.sql.GraftColumnBridge.unpersistLocalCheckpoint(shingled)
-              catch { case scala.util.control.NonFatal(_) => () }
-            }
+            finally release(shingled)
           }
           try ClusterMap.applyBatch(spark, clusterPath, pairs, newIds)
-          finally {
-            try org.apache.spark.sql.GraftColumnBridge.unpersistLocalCheckpoint(pairs)
-            catch { case scala.util.control.NonFatal(_) => () }
-          }
+          finally release(pairs)
           SignatureIndex.appendKeys(spark, sigPath, m, batchKeys)
           autoCompactRatio.foreach { r =>
             if (ClusterMap.maybeCompact(spark, clusterPath, r)) {
@@ -205,13 +207,12 @@ object ClusterStream {
             }
           }
         } finally {
-          candPairs.unpersist()
+          release(candPairs)
           // the probe's matched index rows are a local checkpoint (see
           // SignatureIndex.candidates); nothing reads them past this point
-          try org.apache.spark.sql.GraftColumnBridge.unpersistLocalCheckpoint(cand)
-          catch { case scala.util.control.NonFatal(_) => () }
+          release(cand)
         }
-      } finally { batchKeys.unpersist(); () }
-    } finally { docs.unpersist(); () }
+      } finally release(batchKeys)
+    } finally release(docs)
   }
 }

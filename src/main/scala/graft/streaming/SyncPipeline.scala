@@ -437,7 +437,7 @@ final class SyncPipeline(
     finally { rows.unpersist(); () }
   }
 
-  /** Run labeled independent jobs concurrently from a bounded driver pool;
+  /** Run labeled independent jobs concurrently ([[graft.util.Par.all]]);
     * job descriptions are thread-local, so each job group stays readable in
     * the UI. Every job settles before the first failure (if any) is
     * rethrown — siblings are never abandoned mid-write, so a batch failure
@@ -448,23 +448,12 @@ final class SyncPipeline(
   private def runOverlapped(labeled: Seq[(String, () => Unit)]): Unit = {
     if (labeled.sizeIs <= 1) { labeled.foreach(_._2()); return }
     val sc = source().sparkSession.sparkContext
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(labeled.size)
-    try {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      val settled = labeled
-        .map { case (label, f) =>
-          Future {
-            sc.setJobDescription(s"pipeline $label")
-            try f()
-            finally sc.setJobDescription(null)
-          }
-        }
-        .map(f => scala.util.Try(Await.result(f, Duration.Inf)))
-      settled.collectFirst { case scala.util.Failure(e) => throw e }
-      ()
-    } finally pool.shutdown()
+    graft.util.Par.all(labeled.map { case (label, f) => () =>
+      sc.setJobDescription(s"pipeline $label")
+      try f()
+      finally sc.setJobDescription(null)
+    })
+    ()
   }
 
   /** Start continuous maintenance: the doc sync plus one streaming query

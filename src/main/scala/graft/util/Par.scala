@@ -7,28 +7,33 @@ package graft.util
   * SyncPipeline-seed × BM25-build shape) — and settle EVERY branch before
   * rethrowing the first failure, so a failing branch never abandons a
   * sibling's in-flight write (a retry into the same staging directory would
-  * race the orphan's `_temporary` output).
+  * race the orphan's `_temporary` output). Pool threads are created by the
+  * calling thread, so they inherit its Spark local properties (job group,
+  * streaming query id).
   */
 object Par {
 
-  /** Run `a` and `b` concurrently; both settle before the first failure (if
-    * any) is rethrown.
+  /** Run `tasks` concurrently, one thread each (a single task runs on the
+    * calling thread); every task settles before the first failure (if any)
+    * is rethrown. Results keep the order of `tasks`.
     */
+  def all[A](tasks: Seq[() => A]): Seq[A] =
+    if (tasks.sizeIs <= 1) tasks.map(_())
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(tasks.size)
+      try {
+        import scala.concurrent.{Await, ExecutionContext, Future}
+        import scala.concurrent.duration.Duration
+        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+        val settled = tasks.map(t => Future(t())).map(f => scala.util.Try(Await.result(f, Duration.Inf)))
+        settled.collectFirst { case scala.util.Failure(e) => throw e }
+        settled.map(_.get)
+      } finally pool.shutdown()
+    }
+
+  /** [[all]] of two differently-typed tasks. */
   def both[A, B](a: => A, b: => B): (A, B) = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    try {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      val fa = Future(a)
-      val fb = Future(b)
-      val ra = scala.util.Try(Await.result(fa, Duration.Inf))
-      val rb = scala.util.Try(Await.result(fb, Duration.Inf))
-      (ra, rb) match {
-        case (scala.util.Success(x), scala.util.Success(y)) => (x, y)
-        case _ =>
-          throw Seq(ra, rb).collectFirst { case scala.util.Failure(e) => e }.get
-      }
-    } finally pool.shutdown()
+    val Seq(x, y) = all[Any](Seq(() => a, () => b))
+    (x.asInstanceOf[A], y.asInstanceOf[B])
   }
 }

@@ -7,6 +7,13 @@ import org.apache.spark.sql.functions._
 /** BM25 retrieval, chunking, duplicated-span dedup, exact percentiles. */
 class RetrievalSpec extends SparkSpec {
   import spark.implicits._
+  import graft.sources.Crashes.crashAt
+
+  /** A BM25 index's corpus counters (n_docs, dl_sum), from its log head. */
+  private def stats(p: String): (Long, Long) = {
+    val c = graft.sources.IndexState.open(spark, p)._2.counters
+    (c.nDocs, c.dlSum)
+  }
 
   // ---- BM25 ---------------------------------------------------------------
 
@@ -269,8 +276,6 @@ class RetrievalSpec extends SparkSpec {
     def rows(d: org.apache.spark.sql.DataFrame) =
       d.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     def probe(p: String) = Retrieval.bm25TopKIndexedBatch(p, queries, "qid", "qtext", 10)
-    def stats(p: String) = spark.read.parquet(s"$p/_graft_stats")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).head
     Retrieval.writeBm25Index(docs, "doc_id", "text", dir, buckets = 8)
     assert(rows(probe(dir)).exists(r => r._2 == 2L || r._2 == 4L))
     // delete two docs: tombstones + exact stats decrement (doclens lookup)
@@ -313,11 +318,10 @@ class RetrievalSpec extends SparkSpec {
   }
 
   test("bm25 append crash between postings and stats replays without stats drift") {
-    // the advisor-named corner: an append that crashed AFTER its postings/
-    // doclens/impact writes but BEFORE the stats overwrite leaves an orphan
-    // tail; the replayed batch's delete leg (the CDC upsert shape) must
-    // tombstone the orphans WITHOUT decrementing stats the crash never
-    // incremented, or the counters end permanently low by one batch
+    // an append that dies after its postings (and any sibling sidecar)
+    // landed but before its log entry leaves files no entry lists: the
+    // probes and the counters still show the index as it was, and the
+    // replayed batch (the CDC upsert shape) lands exactly once
     val base = Seq(
       (1L, "spark spark filler"),
       (2L, "window join window"),
@@ -332,17 +336,10 @@ class RetrievalSpec extends SparkSpec {
     def rows(d: org.apache.spark.sql.DataFrame) =
       d.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     def probe(p: String) = Retrieval.bm25TopKIndexedBatch(p, queries, "qid", "qtext", 10)
-    def stats(p: String) = spark.read.parquet(s"$p/_graft_stats")
-      .select("n_docs", "dl_sum").collect().map(r => (r.getLong(0), r.getLong(1))).head
     Retrieval.writeBm25Index(base, "doc_id", "text", dir, buckets = 8)
-    val preStats = spark.read.parquet(s"$dir/_graft_stats").collect().head
-    // append lands whole, then the crash is simulated by restoring the
-    // PRE-append stats file (counters + stats_seq of the base build) —
-    // byte-equivalent to dying between writeBm25Postings and writeBm25Stats
-    Retrieval.appendBm25Index(batch, "doc_id", "text", dir)
-    Seq((preStats.getLong(0), preStats.getLong(1), preStats.getInt(2), preStats.getLong(3)))
-      .toDF("n_docs", "dl_sum", "buckets", "stats_seq")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/_graft_stats")
+    val before = (stats(dir), rows(probe(dir)))
+    crashAt("write:postings")(Retrieval.appendBm25Index(batch, "doc_id", "text", dir))
+    assert((stats(dir), rows(probe(dir))) == before, "a crashed append must change nothing visible")
     // at-least-once recovery replays the batch through the upsert shape
     Retrieval.deleteFromBm25Index(spark, dir, batch.select(col("doc_id").as("id")))
     Retrieval.appendBm25Index(batch, "doc_id", "text", dir)
@@ -352,27 +349,14 @@ class RetrievalSpec extends SparkSpec {
       "replay after a mid-append crash must leave stats equal to a fresh rebuild")
     assert(rows(probe(dir)) == rows(probe(rebuiltDir)),
       "replay after a mid-append crash must probe equal to a fresh rebuild")
-    // pre-marker stats files (no stats_seq column) read as everything-
-    // covered: a normal delete still decrements exactly as before the marker
-    val (pn, pd) = stats(dir)
-    Seq((pn, pd, 8)).toDF("n_docs", "dl_sum", "buckets")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/_graft_stats")
-    Retrieval.deleteFromBm25Index(spark, dir, Seq(5L).toDF("id"))
-    val survivorsDir = graft.util.TempDirs.scratch("bm25-crash-survivors").toString
-    Retrieval.writeBm25Index(base.union(batch).filter(col("doc_id") =!= 5L),
-      "doc_id", "text", survivorsDir, buckets = 8)
-    assert(stats(dir) == stats(survivorsDir), "pre-marker stats file must keep exact deletes")
-    assert(rows(probe(dir)) == rows(probe(survivorsDir)))
-    Seq(dir, rebuiltDir, survivorsDir)
-      .foreach(d => graft.util.TempDirs.delete(java.nio.file.Paths.get(d)))
+    Seq(dir, rebuiltDir).foreach(d => graft.util.TempDirs.delete(java.nio.file.Paths.get(d)))
   }
 
   test("bm25 fused tier: a crash before stats in either leg replays to a rebuild") {
     // the crash-replay scenario above with the crash AND the replay on the
     // driver-fused tier, plus its delete-leg twin: a delete that dies after
-    // its tombstones but before its stats overwrite leaves ids that are no
-    // longer live while the counters still include them — the replay must
-    // decrement them all the same (tomb_seq), on both tiers
+    // its tombstones but before its log entry leaves nothing visible, so
+    // the replay decrements the counters exactly once, on both tiers
     val base = Seq(
       (1L, "spark spark filler"),
       (2L, "window join window"),
@@ -383,17 +367,10 @@ class RetrievalSpec extends SparkSpec {
     def rows(d: org.apache.spark.sql.DataFrame) =
       d.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     def probe(p: String) = rows(Retrieval.bm25TopKIndexedBatch(p, queries, "qid", "qtext", 10))
-    def stats(p: String) = spark.read.parquet(s"$p/_graft_stats")
-      .select("n_docs", "dl_sum").collect().map(r => (r.getLong(0), r.getLong(1))).head
     def fused(p: String, ids: Seq[Long], ups: Seq[(Long, String)]): Unit =
       Retrieval.mutateBm25IndexFused(spark, p, ids, ups.toDF("doc_id", "text"), "doc_id", "text")
-    // the crash: the stats sidecar as it stood before the batch
-    def crashed(p: String)(mutate: => Unit): Unit = {
-      val pre = spark.read.parquet(s"$p/_graft_stats").collect()
-      mutate
-      spark.createDataFrame(java.util.Arrays.asList(pre: _*), pre.head.schema)
-        .coalesce(1).write.mode("overwrite").parquet(s"$p/_graft_stats")
-    }
+    // the crash: every data file written, the log entry not created
+    def crashed(p: String)(mutate: => Unit): Unit = crashAt("commit")(mutate)
     def build(docs: Seq[(Long, String)]): String = {
       val p = graft.util.TempDirs.scratch("bm25-fused-crash").toString
       Retrieval.writeBm25Index(docs.toDF("doc_id", "text"), "doc_id", "text", p, buckets = 8)
@@ -406,20 +383,21 @@ class RetrievalSpec extends SparkSpec {
       graft.util.TempDirs.delete(java.nio.file.Paths.get(rebuilt))
     }
 
-    // append leg: dies after termdf, before stats; replayed whole
+    // append leg: dies before its entry; replayed whole
     val appended = build(base)
     crashed(appended)(fused(appended, batch.map(_._1), batch))
+    assertRebuilt(appended, base, "fused append crash, before the replay")
     fused(appended, batch.map(_._1), batch)
     assertRebuilt(appended, base ++ batch, "fused append crash")
 
-    // delete leg: dies after tombstones, before stats; replayed whole
+    // delete leg: dies before its entry; replayed whole
     val deleted = build(base ++ batch)
     crashed(deleted)(fused(deleted, Seq(2L, 4L), Nil))
     fused(deleted, Seq(2L, 4L), Nil)
     val survivors = (base ++ batch).filterNot(d => Set(2L, 4L)(d._1))
     assertRebuilt(deleted, survivors, "fused delete crash")
-    // the replay decremented without a tombstone or seq of its own
-    assert(graft.sources.IndexState.readSeq(spark, deleted) == 1L)
+    // the replay took the first seq: the crashed attempt left no trace
+    assert(graft.sources.IndexState.open(spark, deleted)._2.seq == 1L)
 
     // the same delete crash on the distributed tier, replayed there
     val distributed = build(base ++ batch)
@@ -427,7 +405,7 @@ class RetrievalSpec extends SparkSpec {
     crashed(distributed)(delete(distributed))
     delete(distributed)
     assertRebuilt(distributed, survivors, "distributed delete crash")
-    // and a later batch on the other tier sees no pending tail left
+    // and a later batch on the other tier converges as well
     fused(distributed, Seq(5L), Seq(5L -> "join filler filler join"))
     assertRebuilt(distributed, survivors, "after a later fused re-append")
     Seq(appended, deleted, distributed).foreach(d => graft.util.TempDirs.delete(java.nio.file.Paths.get(d)))

@@ -185,7 +185,7 @@ class GenerationSpec extends SparkSpec {
     // empty, the promotion is refused and memoized
     Ann.appendLshIndex(one, dir, "vec_id", "embedding", planes = 6, dim = 16)
     Ann.deleteFromLshIndex(spark, dir, Seq(1L).toDF("id"))
-    val seqAfter = IndexState.readSeq(spark, dir)
+    val seqAfter = IndexState.open(spark, dir)._2.seq
     assert(!Ann.maybeCompactLshIndex(spark, dir, maxDeadRatio = 0.2))
     assert(IndexState.refusedSeq(spark, dir).contains(seqAfter), "refusal memoized at current seq")
     // same seq → the policy skips the rewrite attempt entirely
@@ -206,16 +206,16 @@ class GenerationSpec extends SparkSpec {
     val dir = graft.util.TempDirs.scratch("gen-empty-append").toString
     val docs = Seq((1L, "spark text here")).toDF("doc_id", "text")
     Retrieval.writeBm25Index(docs, "doc_id", "text", dir, buckets = 4)
-    val seq0 = IndexState.readSeq(spark, dir)
+    val seq0 = IndexState.open(spark, dir)._2.seq
     Retrieval.appendBm25Index(docs.filter(col("doc_id") < 0), "doc_id", "text", dir)
-    assert(IndexState.readSeq(spark, dir) == seq0, "empty BM25 append must not bump seq")
+    assert(IndexState.open(spark, dir)._2.seq == seq0, "empty BM25 append must not bump seq")
     val vdir = graft.util.TempDirs.scratch("gen-empty-append-lsh").toString
     Ann.writeLshIndex(Seq((1L, mkVec(1L))).toDF("vec_id", "embedding"),
       vdir, "vec_id", "embedding", planes = 6, dim = 16)
     Ann.appendLshIndex(
       Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding"),
       vdir, "vec_id", "embedding", planes = 6, dim = 16)
-    assert(IndexState.readSeq(spark, vdir) == 0L, "empty LSH append must not bump seq")
+    assert(IndexState.open(spark, vdir)._2.seq == 0L, "empty LSH append must not bump seq")
     graft.util.TempDirs.delete(java.nio.file.Paths.get(dir))
     graft.util.TempDirs.delete(java.nio.file.Paths.get(vdir))
   }

@@ -399,8 +399,10 @@ class StreamingSpec extends SparkSpec {
       Retrieval.bm25TopKIndexedBatch(p, queries, "qid", "qtext", 10)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     assert(rows(s"$dir/index") == rows(rebuiltDir))
-    def stats(p: String) = spark.read.parquet(s"$p/_graft_stats")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).head
+    def stats(p: String) = {
+      val c = graft.sources.IndexState.open(spark, p)._2.counters
+      (c.nDocs, c.dlSum)
+    }
     assert(stats(s"$dir/index") == stats(rebuiltDir))
     // at-least-once convergence: re-applying a batch changes nothing (the
     // delete-first protocol tombstones the earlier attempt's generation)
@@ -625,8 +627,10 @@ class StreamingSpec extends SparkSpec {
       .toDF("qid", "qtext")
     def rows(d: org.apache.spark.sql.DataFrame) =
       d.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    def stats(p: String) = spark.read.parquet(s"$p/_graft_stats")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).head
+    def stats(p: String) = {
+      val c = graft.sources.IndexState.open(spark, p)._2.counters
+      (c.nDocs, c.dlSum)
+    }
 
     for (trial <- 0 until 2) {
       val dir = Files.createTempDirectory(s"graft-bm25-rand-$trial").toString
@@ -805,29 +809,30 @@ class StreamingSpec extends SparkSpec {
             case a: scala.collection.Seq[_] => a.toList
             case x => x
           }).toSet
-        def visible(index: String, sidecar: String, idCol: String): Set[Seq[Any]] = {
-          val data = IndexState.dataPath(spark, index)
-          rowsOf(IndexState.visibleAt(spark.read.parquet(data + sidecar), data, idCol))
-        }
-        def tombstones(index: String): Set[Seq[Any]] = {
-          val data = IndexState.dataPath(spark, index)
-          if (!IndexState.hasTombstonesAt(spark, data)) Set.empty
-          else rowsOf(IndexState.tombstoneRowsAt(spark, data))
+        // every kind of file through the log head, tombstoned rows
+        // subtracted from the kinds that carry ids
+        def logged(index: String, kind: String, idCol: Option[String]): Set[Seq[Any]] = {
+          val (data, head) = IndexState.open(spark, index)
+          if (!head.has(kind)) Set.empty
+          else {
+            val rows = head.scan(spark, data, kind)
+            rowsOf(idCol.fold(rows)(IndexState.visibleUnder(rows, data, head, _)))
+          }
         }
         def state(h: PipelineHarness): Map[String, Any] = {
           val (bm25, lsh) = (s"${h.dir}/bm25", s"${h.dir}/lsh")
           Map(
-            "bm25 seq" -> IndexState.readSeq(spark, bm25),
-            "bm25 stats" -> rowsOf(spark.read.parquet(s"$bm25/_graft_stats")),
-            "bm25 tombstones" -> tombstones(bm25),
-            "postings" -> visible(bm25, "", "id"),
-            "doclens" -> visible(bm25, "/_graft_doclens", "id"),
-            "impacts" -> visible(bm25, s"/${Retrieval.ImpactsDir}", "id"),
-            "termdf" -> rowsOf(spark.read.parquet(s"${IndexState.dataPath(spark, bm25)}/${Retrieval.TermDfDir}")),
+            "bm25 seq" -> IndexState.open(spark, bm25)._2.seq,
+            "bm25 counters" -> IndexState.open(spark, bm25)._2.counters,
+            "bm25 tombstones" -> logged(bm25, "tombstones", None),
+            "postings" -> logged(bm25, "postings", Some("id")),
+            "doclens" -> logged(bm25, "doclens", Some("id")),
+            "impacts" -> logged(bm25, "impacts", Some("id")),
+            "termdf" -> logged(bm25, "termdf", None),
             "bm25 probe" -> rowsOf(Retrieval.bm25TopKIndexedPrunedBatch(bm25, queries, "qid", "qtext", 10)),
-            "lsh seq" -> IndexState.readSeq(spark, lsh),
-            "lsh tombstones" -> tombstones(lsh),
-            "lsh rows" -> visible(lsh, "", "neighbor_id"),
+            "lsh seq" -> IndexState.open(spark, lsh)._2.seq,
+            "lsh tombstones" -> logged(lsh, "tombstones", None),
+            "lsh rows" -> logged(lsh, "vectors", Some("neighbor_id")),
             "lsh probe" -> rowsOf(Ann.lshTopKIndexed(lsh, vecQueries, "qid", "embedding", 5, planes = 4, dim = 8)))
         }
         val (d, f) = (state(dist), state(fused))
@@ -878,11 +883,13 @@ class StreamingSpec extends SparkSpec {
       val deadline = System.nanoTime() + 30000000000L
       while (!jobs.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
       val counts = jobs.toArray.toSeq.groupBy(identity).map { case (g, js) => g -> js.size }
-      // BM25: stats, seq and one doclens+tombstone read; seq, postings,
-      // doclens, impacts, termdf and stats writes
-      assert(counts.getOrElse("fused-bm25", 0) <= 9, counts)
-      // LSH: model and seq reads; seq, tombstone and bucket-row writes
-      assert(counts.getOrElse("fused-lsh", 0) <= 5, counts)
+      // BM25: one doclens read (the log head is read on the driver), then
+      // the postings, doclens, impacts and termdf writes — no tombstone,
+      // nothing of the batch is live
+      assert(counts.getOrElse("fused-bm25", 0) <= 5, counts)
+      // LSH: the model read (the first since the build), then the
+      // tombstone and bucket-row writes
+      assert(counts.getOrElse("fused-lsh", 0) <= 3, counts)
     } finally sc.removeSparkListener(listener)
 
     // the buckets the batch hits, by the same expressions the writers use
@@ -905,10 +912,11 @@ class StreamingSpec extends SparkSpec {
     // never-indexed ids: the BM25 delete leg finds nothing live, so no
     // tombstone and one seq number; the LSH delete leg tombstones every
     // batch id (it cannot see liveness without scanning every bucket), and
-    // both of its seq numbers are reserved by one counter write
+    // both of its seq numbers land in one log entry
     assert(!new File(s"$bm25/${IndexState.TombstoneDir}").exists())
-    assert(IndexState.readSeq(spark, bm25) == 1L)
-    assert(IndexState.readSeq(spark, lsh) == 2L)
+    def log(p: String) = new File(s"$p/${graft.sources.IndexLog.Dir}").list().filterNot(_.startsWith(".")).toSet
+    assert(IndexState.open(spark, bm25)._2.seq == 1L && log(bm25) == Set("0", "1"))
+    assert(IndexState.open(spark, lsh)._2.seq == 2L && log(lsh) == Set("0", "2"))
     assert(IndexState.tombstoneCount(spark, lsh) == 6L)
     graft.util.TempDirs.delete(java.nio.file.Paths.get(dir))
   }
