@@ -4,7 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Shared construction of the composed-pipeline scenario's source table and
-  * change batch, used by the graded queries (SparkEntry `q_composed_*`).
+  * change batch, used by the composed registry queries
+  * ([[graft.registry.SyncQueries]]).
   *
   * `media` is documents ⋈ embeddings (one row per document that has an
   * embedding); the post-change state deletes `doc_id % 10 == 7`, prefixes
@@ -39,8 +40,8 @@ private[graft] object ComposedFixture {
   }
 
   /** The mixed DELETE/UPDATE/INSERT batch carrying the pre→post mutation,
-    * derived from the PRE frame — so a cached scenario re-derives the same
-    * batch no matter what state its source-table flag is in.
+    * derived from the PRE frame — so it is the same batch whatever state
+    * the scenario's source-table flag is in.
     */
   def changeBatch(pre: DataFrame): DataFrame = {
     val m = pmod(col("doc_id"), lit(10))

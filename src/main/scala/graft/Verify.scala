@@ -1,8 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Correctness dump: each SparkEntry.queries result → parquet, plus
-  * oracle_sql.json, for `tools/compare.py`'s DuckDB compare. A query that
+/** Correctness dump: each [[SparkEntry.registry]] query's result →
+  * parquet, plus oracle_sql.json, for `tools/compare.py`'s DuckDB compare. A query that
   * throws does not stop the dump: the remaining queries still run and
   * oracle_sql.json is still written, then the run lists every failed query
   * with its exception class and exits 1.
@@ -28,7 +28,7 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val failed = Seq.newBuilder[(String, String)]
-    SparkEntry.queries.foreach { case (name, fn) =>
+    SparkEntry.registry.foreach { case Query(name, run, _) =>
       if (only.nonEmpty && !only.contains(name)) ()
       else {
         // dedup plans carry eager localCheckpoint blocks that clearCache/GC
@@ -36,7 +36,7 @@ object Verify {
         // they add up — release them even when the write fails
         var df: org.apache.spark.sql.DataFrame = null
         try {
-          df = fn(spark, sfDir)
+          df = run(spark, sfDir)
           df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
         } catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getClass.getName}: ${e.getMessage}")
@@ -48,21 +48,9 @@ object Verify {
         }
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(
+      Paths.get(s"$outDir/oracle_sql.json"),
+      oracleJson(SparkEntry.registry.map(q => q.name -> q.oracle)))
     spark.stop()
     val failures = failed.result()
     if (failures.nonEmpty) {
@@ -71,4 +59,22 @@ object Verify {
       sys.exit(1)
     }
   }
+
+  /** `name → oracle SQL` as one JSON object. */
+  private[graft] def oracleJson(oracles: Seq[(String, String)]): String =
+    oracles.map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
+
+  /** JSON string literal: escapes backslash, quote, and ALL control chars
+    * (< 0x20) — a tab or CR in an oracle would otherwise make the
+    * compare's `json.load` fail.
+    */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

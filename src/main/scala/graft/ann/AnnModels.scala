@@ -118,9 +118,6 @@ object AnnModels {
 
   private def requireKind(spark: SparkSession, indexPath: String, kind: String): MetaRow = {
     import spark.implicits._
-    // every model read is an index open — self-heal an interrupted
-    // compaction swap before touching the sidecar
-    graft.sources.IndexState.recoverSwap(spark, indexPath)
     val dir = new org.apache.hadoop.fs.Path(s"${modelDir(indexPath)}/meta")
     val files =
       try dir.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(dir).toSeq

@@ -77,11 +77,11 @@ final class IncrementalEngine(
     root: Node,
     catalog: Catalog,
     load: String => DataFrame,
-    inSetThreshold: Int = 1000,
+    inSetThreshold: Int = IncrementalEngine.Tuning().inSetThreshold,
     rangeBracket: Boolean = false,
     partitionPrune: Map[String, IncrementalEngine.PartitionPrune] = Map.empty,
     layoutRoot: Option[String] = None,
-    partitionIdCollectCap: Int = 65536
+    partitionIdCollectCap: Int = IncrementalEngine.Tuning().partitionIdCollectCap
 ) {
 
   private val rootPks = DocAssembler.primaryKeys(root, catalog)
@@ -349,7 +349,7 @@ final class IncrementalEngine(
     * the join does row exactness. This is one shape with two instances:
     * the many-to-many far side behind a through table (part↔supplier
     * through lineitem — at 100 TB the through table is often the biggest
-    * table in the tree, so this is the J4/q_through answer to the same scan
+    * table in the tree, so this is the J4 answer to the same scan
     * floor the root-keyed path closes) AND the nested one_to_one dim of a
     * root-keyed child (orders→lineitem→part; PlanSpec pins both). Value:
     * (mid table, far-side FK column ON the mid table, key column on the far

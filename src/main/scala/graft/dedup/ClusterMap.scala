@@ -63,12 +63,6 @@ object ClusterMap {
   val MergesDir = "_graft_merges"
   private val ModelDir = "_graft_model"
 
-  private val MemberSchema = StructType(Seq(
-    StructField("id", LongType),
-    StructField("root", LongType),
-    StructField("bucket", IntegerType)
-  ))
-
   /** Member read schema including the synthetic-label marker: `syn = 1`
     * rows materialize a pair endpoint that WON a contraction without ever
     * being ingested (the no-split machinery needs the row so a later
@@ -128,7 +122,7 @@ object ClusterMap {
     * is FAR below this; 65 536 (from_root, to_root) pairs is ~1 MB on the
     * driver — the engine's established bounded-collect ceiling class.
     */
-  private val InMemClosureRows = 65536
+  private[dedup] val InMemClosureRows = 65536
 
   /** The merge log of a resolved data directory, collapsed to one pointer
     * per source root, followed to a FIXPOINT — `(from_root, to_root)` with

@@ -218,7 +218,7 @@ final class MaterializedIndex(spark: SparkSession, dir: String, nBuckets: Int = 
     * write, lineage extraction) used to share a corpus-sized
     * MEMORY_AND_DISK persist of the wide nested-struct frame — whose
     * columnar-cache materialization was the single biggest cost of the
-    * snapshot (4.5 s of a 9 s q_lifecycle at sf0.1), and
+    * snapshot (4.5 s of a 9 s lifecycle query at sf0.1), and
     * at 100 TB a corpus-sized executor-memory/scratch-disk pin. Now the doc
     * write streams straight from the assembly plan (one pipelined pass:
     * joins → `_meta` squash → to_json → bucket shuffle → parquet), and the

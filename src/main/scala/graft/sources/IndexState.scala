@@ -55,22 +55,19 @@ object IndexState {
   val SeqDir = "_graft_seq"
   val TombstoneDir = "_graft_tombstones"
 
-  /** Sibling-directory suffixes used by the compaction swap: the rewritten
-    * index is staged at `<path>.graft_compact` and the old one parks at
-    * `<path>.graft_trash` for the duration of the swap.
+  /** Sibling-directory suffix of a compaction's staging rewrite:
+    * [[compactAndSwap]] writes `<path>.graft_compact`, then promotes it to
+    * the next generation.
     */
   val StagingSuffix = ".graft_compact"
-  val TrashSuffix = ".graft_trash"
 
   /** Generation-pointer layout ([[compactAndSwap]]'s swap mechanism): a
     * compacted rewrite is promoted to `<path>/_graft_gen-<n>/` and becomes
     * current the instant its `_graft_ready` marker file exists — a single
     * file CREATE, atomic on POSIX/HDFS and a single PUT on object stores,
-    * unlike the two directory renames of [[swapCompacted]] (whose window a
-    * racing reader could observe, and which object stores implement as
-    * non-atomic copy+delete). Readers resolve [[dataPath]] once per
-    * probe/mutation: highest ready generation, or the index root for a
-    * never-compacted (legacy) layout. GC is AGE-BASED: a generation (or the
+    * so the index root itself never moves. Readers resolve [[dataPath]]
+    * once per probe/mutation: highest ready generation, or the index root
+    * for a never-compacted (legacy) layout. GC is AGE-BASED: a generation (or the
     * legacy root data) stops being current the instant a successor's ready
     * marker is created, and may be deleted only once that successor marker
     * is at least [[gcGraceMs]] old — so a reader that resolved ANY
@@ -222,7 +219,6 @@ object IndexState {
     * passes `strictEmpty = true` and fails loudly instead.
     */
   def readSeq(spark: SparkSession, indexPath: String, strictEmpty: Boolean = false): Long = {
-    recoverSwap(spark, indexPath)
     val p = s"$indexPath/$SeqDir"
     if (!exists(spark, p)) 0L
     else {
@@ -269,14 +265,13 @@ object IndexState {
     */
   private[graft] val Tombstones = "tombstones"
 
-  /** Open a log-backed index for one probe or mutation: self-heal an
-    * interrupted swap, resolve the current generation ONCE and read its log
-    * head — data files, tombstones and counters then all come from one
-    * entry of one generation, so a probe racing a mutation sees the index
-    * before it or after it, never a mix.
+  /** Open a log-backed index for one probe or mutation: resolve the
+    * current generation ONCE and read its log head — data files,
+    * tombstones and counters then all come from one entry of one
+    * generation, so a probe racing a mutation sees the index before it or
+    * after it, never a mix.
     */
   def open(spark: SparkSession, path: String): (String, IndexLog.Entry) = {
-    recoverSwap(spark, path)
     val data = dataPath(spark, path)
     (data, IndexLog.head(spark, data))
   }
@@ -309,94 +304,6 @@ object IndexState {
   def tombstoneCount(spark: SparkSession, indexPath: String): Long = {
     val (data, head) = open(spark, indexPath)
     if (!head.has(Tombstones)) 0L else tombstonesOf(spark, data, head).count()
-  }
-
-  /** Swap a compacted staging directory into place: the live index moves
-    * to `<path>.graft_trash`, staging is renamed over `path`, and the
-    * trash is deleted last. On a filesystem with atomic directory rename
-    * (POSIX, HDFS) every intermediate state holds a COMPLETE index in at
-    * least one of the three locations, and [[recoverSwap]] — run by every
-    * subsequent open through [[open]]/[[readSeq]] — restores it
-    * to `path`, preferring the newer staging copy. So a crash anywhere in
-    * the swap self-heals on the next probe or mutation. On object stores
-    * where "rename" is copy+delete this window is NOT atomic — run
-    * compaction there against a metastore location pointer instead of
-    * directory renames. Single-writer discipline assumed (one maintainer
-    * per index), and no CONCURRENT reader during the swap itself: a probe
-    * racing the two renames can observe the missing-live window. Probes
-    * before and after the swap (the sequential per-batch case the
-    * streaming maintainers implement) are unaffected.
-    */
-  def swapCompacted(spark: SparkSession, path: String, stagingPath: String): Unit = {
-    val f = fs(spark, path)
-    val live = new Path(path)
-    val staging = new Path(stagingPath)
-    val trash = new Path(path + TrashSuffix)
-    require(f.exists(staging), s"swapCompacted: staging $stagingPath does not exist")
-    if (f.exists(trash)) { f.delete(trash, true); () }
-    require(f.rename(live, trash), s"swapCompacted: could not move $path aside")
-    if (!f.rename(staging, live)) {
-      // roll the live index back before failing: never leave a hole
-      if (!f.rename(trash, live))
-        throw new IllegalStateException(
-          s"swapCompacted: could not move $stagingPath into place AND the rollback of " +
-            s"$path from $trash failed — the old index is intact at $trash; " +
-            s"recoverSwap (any subsequent open) will restore it"
-        )
-      throw new IllegalStateException(s"swapCompacted: could not move $stagingPath into place")
-    }
-    f.delete(trash, true)
-    ()
-  }
-
-  /** Recovery sweep for an interrupted [[swapCompacted]]: if the index is
-    * missing from `path` but a complete copy survives in the staging or
-    * trash sibling, rename it back into place (staging wins — it is only
-    * ever renamed-from AFTER being fully written, and it is the newer
-    * generation). Returns whether an index was restored. Called from
-    * [[open]] and [[readSeq]], so every mutation and every probe
-    * self-heals on open; a healthy index pays
-    * exactly ONE file-status probe.
-    *
-    * Stale siblings next to a live index are left alone: a leftover trash
-    * is deleted by the next swap (paying its cleanup on every open would
-    * tax the hot path), and deleting a staging sibling here would race an
-    * in-flight compaction (the compaction flow writes staging while the
-    * live index exists).
-    */
-  def recoverSwap(spark: SparkSession, path: String): Boolean = {
-    val f = fs(spark, path)
-    val live = new Path(path)
-    val staging = new Path(path + StagingSuffix)
-    val trash = new Path(path + TrashSuffix)
-    if (f.exists(live)) {
-      // healthy index: ONE existence probe and out. A stale trash sibling
-      // from a crash after the second rename is harmless (swapCompacted
-      // deletes it before the next swap), so the hot path does not pay a
-      // second probe for its cleanup.
-      false
-    } else if (f.exists(staging)) {
-      if (f.rename(staging, live)) {
-        if (f.exists(trash)) { f.delete(trash, true); () }
-        true
-      } else if (f.exists(trash) && f.rename(trash, live)) {
-        // staging is un-renameable (permissions, cross-device residue):
-        // fall back to the intact older copy rather than wedging every
-        // open; the staging sibling is left in place for inspection and
-        // surfaced here
-        System.err.println(
-          s"recoverSwap: staging $staging could not be renamed into place; " +
-            s"restored the OLDER trash copy instead — investigate $staging"
-        )
-        true
-      } else
-        throw new IllegalStateException(
-          s"recoverSwap: could not restore $path from $staging and no usable trash copy exists"
-        )
-    } else if (f.exists(trash)) {
-      require(f.rename(trash, live), s"recoverSwap: could not restore $path from $trash")
-      true
-    } else false
   }
 
   /** Whether a compacted staging directory holds any DATA partition.

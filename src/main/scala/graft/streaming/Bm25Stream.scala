@@ -57,13 +57,12 @@ object Bm25Stream {
     * [[Retrieval.maybeCompactBm25ByImpactGrowth]] at `impactGrowthMultiple`
     * bounds the pruned probe's cap×batches volume under an APPEND-ONLY
     * feed, where no tombstone ever accumulates and the first policy alone
-    * would let per-batch impact caps pile up forever. Probes issued BETWEEN
-    * batches (the single-process sequential case this maintainer
-    * implements) always see a complete index, and a crash mid-swap
-    * self-heals on the next open ([[graft.sources.IndexState.recoverSwap]]);
-    * a probe from a SEPARATE process racing the swap's rename window is not
-    * protected — route concurrent readers through a version indirection if
-    * that matters.
+    * would let per-batch impact caps pile up forever. A compaction commits
+    * by promoting a new generation with one marker-file create
+    * ([[graft.sources.IndexState.compactAndSwap]]), and each mutation
+    * commits with one `_graft_log` entry create, so a probe — in this
+    * process or another — sees the index before or after a batch, never a
+    * partial one.
     */
   def applyBatch(
       spark: SparkSession,

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.cdc.IncrementalEngine
 import graft.dedup.{ClusterMap, Dedup, SignatureIndex}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -138,7 +139,7 @@ object ClusterStream {
       pk: String,
       textCol: String,
       autoCompactRatio: Option[Double] = None,
-      inSetThreshold: Int = 1000
+      inSetThreshold: Int = IncrementalEngine.Tuning().inSetThreshold
   ): Unit = {
     val m = SignatureIndex.readModel(spark, sigPath)
     val ups = rows.filter(col("tg_op") =!= "DELETE")

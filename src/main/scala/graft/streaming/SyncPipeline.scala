@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.GraftSync
 import graft.ann.Ann
+import graft.cdc.IncrementalEngine
 import graft.functions.Retrieval
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -251,7 +252,7 @@ object SyncPipeline {
       table: String,
       pk: String,
       payload: Seq[String],
-      inSetThreshold: Int = 1000
+      inSetThreshold: Int = IncrementalEngine.Tuning().inSetThreshold
   ): DataFrame = changeRowsTiered(batch, load, table, pk, payload, inSetThreshold)._1
 
   /** [[changeRows]] plus which tier it took: true when the collapsed op set

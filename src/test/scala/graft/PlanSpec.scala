@@ -22,13 +22,6 @@ class PlanSpec extends SparkSpec {
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
 
-  test("every registry query has an oracle and every oracle a query") {
-    val noOracle = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    val noQuery = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(noOracle.isEmpty, s"queries without an oracle: ${noOracle.toSeq.sorted}")
-    assert(noQuery.isEmpty, s"oracles without a query: ${noQuery.toSeq.sorted}")
-  }
-
   test("column pruning reaches the parquet scan in document assembly") {
     val df = DocAssembler.assemble(
       SchemaDef.parseNodes(Fixtures.flagship),

@@ -75,6 +75,30 @@ class ClusterMapSpec extends SparkSpec {
     }
   }
 
+  test("batches past the driver ceiling take the distributed tier and still match the batch CC") {
+    val path = graft.util.TempDirs.scratch("cmap-distributed").toString
+    ClusterMap.init(spark, path, buckets = 8)
+    val n = 16400L // components; each batch touches 4n endpoints
+    // batch 1: pairs (2k, 2k+1) — 2n two-member clusters
+    val pairs1 = spark.range(2 * n).select((col("id") * 2).as("id_a"), (col("id") * 2 + 1).as("id_b"))
+    // batch 2 merges across batch 1: (4j+1, 4j+2) joins {4j, 4j+1} with
+    // {4j+2, 4j+3}, and a new doc 200000+j chains onto 4j+3
+    val j = spark.range(n).select(col("id").as("j"))
+    val pairs2 = j.select((col("j") * 4 + 1).as("id_a"), (col("j") * 4 + 2).as("id_b"))
+      .unionAll(j.select((col("j") * 4 + 3).as("id_a"), (col("j") + 200000).as("id_b")))
+    for (ps <- Seq(pairs1, pairs2)) {
+      val endpoints = ps.select(col("id_a").as("id")).unionAll(ps.select(col("id_b"))).distinct().count()
+      assert(endpoints > ClusterMap.InMemClosureRows, s"$endpoints endpoints stay on the driver tier")
+    }
+    ClusterMap.applyBatch(spark, path, pairs1, spark.range(4 * n).toDF())
+    ClusterMap.applyBatch(spark, path, pairs2, spark.range(200000L, 200000L + n).toDF())
+    val got = asMap(ClusterMap.assignments(spark, path))
+    val cc = asMap(Dedup.connectedComponents(pairs1.unionAll(pairs2)).select(col("id"), col("keep_id")))
+    assert(got.size == 5 * n)
+    assert(got == cc)
+    assert(got(3L) == 0L && got(200000L) == 0L && got(4 * n - 1) == 4 * (n - 1))
+  }
+
   test("a later document merges two existing clusters via a downward pointer") {
     val path = graft.util.TempDirs.scratch("cmap-merge").toString
     ClusterMap.init(spark, path, buckets = 4)

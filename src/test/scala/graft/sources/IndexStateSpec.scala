@@ -5,88 +5,15 @@ import graft.ann.Ann
 import graft.functions.Retrieval
 import org.apache.spark.sql.functions._
 
-/** Crash-recovery and degenerate-feed behavior of the persisted-index
-  * mutation state: an interrupted compaction swap must self-heal on the
-  * next open, and a feed that deletes EVERY live document must not brick
-  * the index (an empty visible set cannot be written as a readable
-  * partitioned parquet directory, so the policy refuses the swap).
+/** Degenerate-feed behavior of the persisted-index mutation state: a feed
+  * that deletes EVERY live document must not brick the index (an empty
+  * visible set cannot be written as a readable partitioned parquet
+  * directory, so the policy refuses the swap).
   */
 class IndexStateSpec extends SparkSpec {
   import spark.implicits._
 
-  private def mv(from: String, to: String): Unit =
-    assert(new java.io.File(from).renameTo(new java.io.File(to)), s"rename $from -> $to failed")
-
   private def gone(p: String) = !new java.io.File(p).exists()
-
-  test("recoverSwap: probes self-heal every crash state of an interrupted swap") {
-    val docs = Seq(
-      (1L, "spark spark spark"),
-      (2L, "spark filler filler"),
-      (3L, "window join window"),
-      (4L, "spark spark other words")
-    ).toDF("doc_id", "text")
-    val queries = Seq((100L, "spark window")).toDF("qid", "qtext")
-    val dir = graft.util.TempDirs.scratch("idxstate-recover").toString
-    val index = s"$dir/index"
-    def rows(p: String) = Retrieval.bm25TopKIndexedBatch(p, queries, "qid", "qtext", 10)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    Retrieval.writeBm25Index(docs, "doc_id", "text", index, buckets = 8)
-    Retrieval.deleteFromBm25Index(spark, index, Seq(3L).toDF("id"))
-    val expected = rows(index)
-
-    // crash state A: between the swap's two renames — the old index is
-    // parked in trash, the fully-written compacted copy sits in staging
-    Retrieval.compactBm25Index(spark, index, index + IndexState.StagingSuffix)
-    mv(index, index + IndexState.TrashSuffix)
-    assert(rows(index) == expected, "probe must restore the staging copy and answer")
-    assert(gone(index + IndexState.StagingSuffix) && gone(index + IndexState.TrashSuffix))
-    assert(gone(s"$index/${IndexState.TombstoneDir}"), "restored copy is the COMPACTED one")
-
-    // crash state B: after the second rename, before the trash delete —
-    // live index complete, stale trash left behind. Opens leave the stale
-    // trash alone (the hot path pays ONE existence probe); the next swap
-    // deletes it before parking the live index
-    val staleTrash = index + IndexState.TrashSuffix
-    assert(new java.io.File(staleTrash).mkdir())
-    assert(rows(index) == expected)
-    Retrieval.compactBm25Index(spark, index, index + IndexState.StagingSuffix)
-    IndexState.swapCompacted(spark, index, index + IndexState.StagingSuffix)
-    assert(gone(staleTrash), "the next swap must clean the stale trash sibling")
-    assert(rows(index) == expected)
-
-    // crash state C: rollback-failure residue — live missing, only trash
-    mv(index, index + IndexState.TrashSuffix)
-    assert(rows(index) == expected, "probe must restore the trash copy and answer")
-    assert(gone(index + IndexState.TrashSuffix))
-
-    // the healed index keeps accepting mutations
-    Retrieval.appendBm25Index(Seq((9L, "spark window again")).toDF("doc_id", "text"),
-      "doc_id", "text", index)
-    assert(rows(index) != expected)
-    graft.util.TempDirs.delete(java.nio.file.Paths.get(dir))
-  }
-
-  test("recoverSwap: the LSH probe and model-sidecar paths self-heal too") {
-    def mkVec(i: Long) =
-      Array.tabulate(16)(j => (math.cos((i % 4) * 3 + j) + 0.05 * math.sin(i * 17 + j)).toFloat)
-    val vecs = (0L until 24L).map(i => (i, mkVec(i))).toDF("vec_id", "embedding")
-    val dir = graft.util.TempDirs.scratch("idxstate-recover-lsh").toString
-    val index = s"$dir/index"
-    def rows() = Ann
-      .lshTopKIndexedResumed(index, vecs.filter(col("vec_id") < 3), "vec_id", "embedding", 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    Ann.writeLshIndex(vecs, index, "vec_id", "embedding", planes = 6, dim = 16)
-    Ann.deleteFromLshIndex(spark, index, Seq(5L).toDF("id"))
-    val expected = rows()
-    // interrupted swap: live parked in trash, staging complete — the
-    // resumed probe (model sidecar read first) must restore and answer
-    Ann.compactLshIndex(spark, index, index + IndexState.StagingSuffix)
-    mv(index, index + IndexState.TrashSuffix)
-    assert(rows() == expected)
-    assert(gone(index + IndexState.StagingSuffix) && gone(index + IndexState.TrashSuffix))
-    graft.util.TempDirs.delete(java.nio.file.Paths.get(dir))
-  }
 
   test("BM25 delete-everything feed: compaction refused, index stays probe-able, revives on append") {
     val docs = Seq(
