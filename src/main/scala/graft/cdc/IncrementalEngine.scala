@@ -32,57 +32,17 @@ import org.apache.spark.sql.types.StringType
   *     upserts by `_id` are idempotent (the reference's own delivery
   *     guarantee, `sync.py:1947-1983`).
   *
-  * @param inSetThreshold affected-id count above which scan restriction
-  *   switches from literal IN filters to broadcast semi-joins
-  * @param rangeBracket when true, oversized affected sets ALSO bracket each
-  *   restricted scan with a pushed min/max range on the key (computed once
-  *   per key type per batch). A large win when change batches cluster in a
-  *   key range over a huge sorted/partitioned table (row groups prune), a
-  *   cost when they span the full key space (the bench's synthetic batches
-  *   do, hence default off — enable for key-clustered production feeds).
-  * @param partitionPrune per-table partition layout specs
-  *   ([[Layout.keyPartitionedWrite]] key ranges or
-  *   [[Layout.hashBucketedWrite]] hash buckets — the latter covers uuid/text
-  *   and composite keys): when a payload table is directory-partitioned by a
-  *   key expression, reassembly derives the partition values the
-  *   affected-key set touches and pushes them as a STATIC partition filter,
-  *   so the payload re-read lists and scans ONLY the touched directories.
-  *   This is the layout answer to the scan-bounded incremental floor:
-  *   without it an oversized affected set re-reads the root/child/dim tables
-  *   whole (scan-only but corpus-sized); with it the re-read is bounded by
-  *   the batch's key spread, independent of corpus size. Supported table
-  *   positions — the root, root-keyed children (partitioned by the FK, same
-  *   key domain), single-hop one_to_one dims (partitioned by their PK;
-  *   touched values derived from the pruned root rows' FK column), and
-  *   many-to-many far sides behind a root-keyed through table (partitioned
-  *   by the join key; touched values derived from the pruned THROUGH scan's
-  *   far-FK column) — are validated at construction, along with a sampled
-  *   layout-consistency check that the directory values really are the
-  *   layout expression of the assumed key column(s).
-  * @param layoutRoot directory whose per-table `_graft_layout` sidecars are
-  *   auto-discovered into prune specs (table = child directory name, the
-  *   convention every call site uses). Discovered specs are accepted only
-  *   when the sidecar's key columns ARE the table's tree-position key and
-  *   every construction-time constraint holds — a layout partitioned on a
-  *   non-key column is silently left unpruned rather than failing the
-  *   engine, because discovery is opportunistic; explicit `partitionPrune`
-  *   entries stay strict AND win over discovered ones.
-  * @param partitionIdCollectCap affected-id count up to which touched
-  *   partitions are derived from one bounded driver collect of the cached
-  *   affected set; larger sets fall back to one distinct job per distinct
-  *   prune spec (tunable like `inSetThreshold`, chiefly so tests can reach
-  *   the fallback at small batch sizes)
+  * @param tuning scan-restriction thresholds and partition-prune specs
+  *   ([[IncrementalEngine.Tuning]])
   */
 final class IncrementalEngine(
     root: Node,
     catalog: Catalog,
     load: String => DataFrame,
-    inSetThreshold: Int = IncrementalEngine.Tuning().inSetThreshold,
-    rangeBracket: Boolean = false,
-    partitionPrune: Map[String, IncrementalEngine.PartitionPrune] = Map.empty,
-    layoutRoot: Option[String] = None,
-    partitionIdCollectCap: Int = IncrementalEngine.Tuning().partitionIdCollectCap
+    tuning: IncrementalEngine.Tuning = IncrementalEngine.Tuning()
 ) {
+
+  import tuning.{inSetThreshold, layoutRoot, partitionIdCollectCap, partitionPrune, rangeBracket}
 
   private val rootPks = DocAssembler.primaryKeys(root, catalog)
 
@@ -615,22 +575,6 @@ final class IncrementalEngine(
     */
   private val PartitionLiteralCap = 4096
 
-  /** Affected-id count up to which touched partitions are derived from ONE
-    * driver collect of the cached affected set (≈0.5 MB — the engine's
-    * bounded-collect ceiling class) instead of one distinct job per pruned
-    * table. Constructor-tunable (like `inSetThreshold`) so the distinct-job
-    * fallback is reachable at test batch sizes.
-    */
-  private val PartitionIdCollectCap = partitionIdCollectCap
-
-  /** Above `inSetThreshold` affected ids, fall back from literal IN-set scan
-    * filters to broadcast semi-joins. Small sets profit from row-group
-    * pruning at the scan; large literal lists cost more in plan
-    * construction/optimization than the pruning returns (measured: a 7.5k-
-    * value In tripled the batch latency vs the broadcast join).
-    */
-  private val InSetThreshold = inSetThreshold
-
   /** Re-assemble the documents for the given affected root ids: the same
     * single [[DocAssembler]] plan with the ROOT scan — and every root-keyed
     * child scan — restricted to the id set.
@@ -643,8 +587,8 @@ final class IncrementalEngine(
     */
   def reassemble(affected: DataFrame): DataFrame = {
     val ids: Option[Array[String]] = {
-      val collected = affected.select(col("_id")).limit(InSetThreshold + 1).collect()
-      if (collected.length > InSetThreshold) None
+      val collected = affected.select(col("_id")).limit(inSetThreshold + 1).collect()
+      if (collected.length > inSetThreshold) None
       else Some(collected.map(_.getString(0)))
     }
 
@@ -679,8 +623,8 @@ final class IncrementalEngine(
     // partition filter; `None` → unpruned scan (cap exceeded — the batch
     // spans most of the corpus anyway).
     lazy val idsForPartVals: Option[Array[String]] = ids.orElse {
-      val c = affected.select(col("_id")).limit(PartitionIdCollectCap + 1).collect()
-      if (c.length > PartitionIdCollectCap) None else Some(c.map(_.getString(0)))
+      val c = affected.select(col("_id")).limit(partitionIdCollectCap + 1).collect()
+      if (c.length > partitionIdCollectCap) None else Some(c.map(_.getString(0)))
     }
     // the affected `_id` cast back to the typed root-key domain, for the
     // distributed fallback (composite ids split on the delimiter first)
@@ -933,17 +877,59 @@ final class IncrementalEngine(
 
 object IncrementalEngine {
 
-  /** Engine tuning bundle for the user-facing sync surfaces
-    * ([[graft.GraftSync]] / [[graft.streaming.StreamSync]]): the same knobs
-    * the engine constructor takes, so a deployment at a key-partitioned
-    * layout gets affected-set partition pruning through the facade instead
-    * of only through a hand-built engine.
+  /** The engine's tuning: the one bundle the constructor and the
+    * user-facing sync surfaces ([[graft.GraftSync]] /
+    * [[graft.streaming.StreamSync]]) take, so a deployment at a
+    * key-partitioned layout gets affected-set partition pruning through the
+    * facade as well as through a hand-built engine.
     *
+    * @param inSetThreshold affected-id count above which scan restriction
+    *   switches from literal IN filters to broadcast semi-joins. Small sets
+    *   profit from row-group pruning at the scan; large literal lists cost
+    *   more in plan construction/optimization than the pruning returns
+    *   (measured: a 7.5k-value In tripled the batch latency vs the
+    *   broadcast join).
+    * @param rangeBracket when true, oversized affected sets ALSO bracket each
+    *   restricted scan with a pushed min/max range on the key (computed once
+    *   per key type per batch). A large win when change batches cluster in a
+    *   key range over a huge sorted/partitioned table (row groups prune), a
+    *   cost when they span the full key space (the bench's synthetic batches
+    *   do, hence default off — enable for key-clustered production feeds).
+    * @param partitionPrune per-table partition layout specs
+    *   ([[graft.sources.Layout.keyPartitionedWrite]] key ranges or
+    *   [[graft.sources.Layout.hashBucketedWrite]] hash buckets — the latter
+    *   covers uuid/text and composite keys): when a payload table is
+    *   directory-partitioned by a key expression, reassembly derives the
+    *   partition values the affected-key set touches and pushes them as a
+    *   STATIC partition filter, so the payload re-read lists and scans ONLY
+    *   the touched directories. This is the layout answer to the
+    *   scan-bounded incremental floor: without it an oversized affected set
+    *   re-reads the root/child/dim tables whole (scan-only but
+    *   corpus-sized); with it the re-read is bounded by the batch's key
+    *   spread, independent of corpus size. Supported table positions — the
+    *   root, root-keyed children (partitioned by the FK, same key domain),
+    *   single-hop one_to_one dims (partitioned by their PK; touched values
+    *   derived from the pruned root rows' FK column), and many-to-many far
+    *   sides behind a root-keyed through table (partitioned by the join
+    *   key; touched values derived from the pruned THROUGH scan's far-FK
+    *   column) — are validated at engine construction, along with a sampled
+    *   layout-consistency check that the directory values really are the
+    *   layout expression of the assumed key column(s).
     * @param layoutRoot directory whose per-table `_graft_layout` sidecars
     *   ([[graft.sources.Layout]] writes) are auto-discovered into prune
-    *   specs — the zero-wiring configuration: a deployment cannot prune a
-    *   SUBSET of its tables by forgetting a hand-built spec. Explicit
-    *   `partitionPrune` entries win over discovered ones.
+    *   specs (table = child directory name) — the zero-wiring
+    *   configuration: a deployment cannot prune a SUBSET of its tables by
+    *   forgetting a hand-built spec. Discovered specs are accepted only when
+    *   the sidecar's key columns ARE the table's tree-position key and every
+    *   construction-time constraint holds — a layout partitioned on a
+    *   non-key column is silently left unpruned rather than failing the
+    *   engine, because discovery is opportunistic; explicit
+    *   `partitionPrune` entries stay strict AND win over discovered ones.
+    * @param partitionIdCollectCap affected-id count up to which touched
+    *   partitions are derived from ONE driver collect of the cached affected
+    *   set (≈0.5 MB — the engine's bounded-collect ceiling class); larger
+    *   sets fall back to one distinct job per distinct prune spec (tunable
+    *   chiefly so tests can reach the fallback at small batch sizes)
     */
   final case class Tuning(
       inSetThreshold: Int = 1000,

@@ -1,7 +1,7 @@
 package graft.dedup
 
-import graft.sources.IndexState
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.{IndexLog, IndexState}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
@@ -15,10 +15,10 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   * merge existing clusters when a new document connects them.
   *
   * The design is the engine's established log-structured index idiom
-  * (seq-tombstoned secondary indexes, `graft.sources.IndexState`) applied
-  * to union-find state:
+  * (the persisted search indexes' commit log, `graft.sources.IndexLog`)
+  * applied to union-find state:
   *
-  *   - `members` — `(id, root)` rows, hash-bucketed by id
+  *   - `members` — `(id, root, syn)` rows, hash-bucketed by id
   *     (`bucket = id % nBuckets` partition dirs), append-only: each doc is
   *     written ONCE, at arrival, with the cluster root known at that time.
   *     Lookups push a static `bucket IN (…)` partition filter computed
@@ -30,12 +30,17 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   *     (merges always point DOWNWARD to a smaller id — no cycles, and
   *     chains strictly descend). Resolution follows pointer chains to a
   *     fixpoint; the log is batch-sized per batch, never corpus-sized.
+  *   - `_graft_log/<seq>` — the commit log: each batch writes its member
+  *     and pointer files concurrently and commits them with one entry,
+  *     whose counters carry the bucket count. Every read scans exactly the
+  *     head's files.
   *   - Compaction ([[maybeCompact]]) is the union-find "path compression"
-  *     made durable: rewrite `members` with every chain resolved, promote
-  *     through [[IndexState.compactAndSwap]] (generation pointer, age-based
-  *     GC, concurrent readers safe), and the new generation is born with an
-  *     empty merge log. A policy threshold (merge rows vs member rows, both
-  *     from parquet footer counts) bounds chain length under steady churn.
+  *     made durable: rewrite `members` with every chain resolved into a
+  *     fresh generation with a fresh log, promote it through
+  *     [[IndexState.compactAndSwap]] (generation pointer, age-based GC,
+  *     concurrent readers safe), and the new generation is born with an
+  *     empty merge log. A policy threshold (merge rows vs member rows)
+  *     bounds chain length under steady churn.
   *
   * Algorithm lineage is public: min-label propagation connected components
   * (Rastogi et al., "Finding Connected Components in Map-Reduce in
@@ -43,12 +48,13 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   * per-batch contraction, and the classic union-find with deferred path
   * compression for the persisted state.
   *
-  * Replay convergence (the engine's at-least-once convention): re-applying
-  * a batch re-derives the same contracted merges against an already-merged
-  * map — every node already resolves to its final root, so the contraction
-  * emits no new pointers — and re-appends the same `(id, root)` member
-  * rows, which [[assignments]] collapses by min. A crash between the merge
-  * append and the member append heals the same way on replay.
+  * Replay convergence (the engine's at-least-once convention): a batch
+  * that crashes before its log entry left only unlogged files, which no
+  * read sees, so its replay is a first delivery. Re-applying a committed
+  * batch re-derives the same contracted merges against an already-merged
+  * map — every node already resolves to its final root, so the
+  * contraction emits no new pointers — and re-appends the same member
+  * rows, which [[assignments]] collapses by min.
   *
   * Deletes are intentionally out of scope: removing a document never
   * SPLITS a component (union-find cannot un-merge; neither can the batch
@@ -61,60 +67,67 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
 object ClusterMap {
 
   val MergesDir = "_graft_merges"
-  private val ModelDir = "_graft_model"
 
-  /** Member read schema including the synthetic-label marker: `syn = 1`
-    * rows materialize a pair endpoint that WON a contraction without ever
-    * being ingested (the no-split machinery needs the row so a later
-    * demotion can be pointered — see the foreignWinners write in
-    * [[applyBatch]]); `syn = 0` (or NULL, for files written before the
-    * marker existed — pre-marker maps surface exactly as they always did)
-    * is a real ingested document. Passed EXPLICITLY to the reader so a
-    * directory mixing pre/post-marker files resolves deterministically
-    * instead of by file sampling.
+  // the index log's kinds of file
+  private val Members = "members"
+  private val Merges = "merges"
+
+  /** Both kinds' scan shapes. Every entry records them, so a kind with no
+    * file yet (a fresh map, a compacted generation's merge log) scans as
+    * empty.
+    *
+    * Members carry a synthetic-label marker: `syn = 1` rows materialize a
+    * pair endpoint that WON a contraction without ever being ingested (the
+    * no-split machinery needs the row so a later demotion can be pointered
+    * — see the foreignWinners write in [[applyBatch]]); `syn = 0` is a real
+    * ingested document.
     */
-  private val MemberReadSchema = StructType(Seq(
-    StructField("id", LongType),
-    StructField("root", LongType),
-    StructField("syn", IntegerType),
-    StructField("bucket", IntegerType)
-  ))
+  private val Shapes = Map(
+    Members -> IndexLog.Shape("", Some("bucket"), StructType(Seq(
+      StructField("id", LongType),
+      StructField("root", LongType),
+      StructField("syn", IntegerType)))),
+    Merges -> IndexLog.Shape(MergesDir, None, StructType(Seq(
+      StructField("from_root", LongType),
+      StructField("to_root", LongType),
+      StructField("seq", LongType)))))
 
-  private val MergeSchema = StructType(Seq(
-    StructField("from_root", LongType),
-    StructField("to_root", LongType),
-    StructField("seq", LongType)
-  ))
+  /** The entry of an empty map at `seq`, its bucket count in the counters. */
+  private def emptyEntry(seq: Long, buckets: Int): IndexLog.Entry =
+    IndexLog.Entry(seq, IndexLog.Counters(0L, 0L, buckets), Shapes, Nil)
 
-  /** Create an empty cluster map at `path`: layout parameters + seq 0. No
-    * member partitions are written (an empty partitioned directory is
-    * unreadable — the same refusal rationale as
-    * [[IndexState.stagingHasData]]); reads tolerate the absent layout.
+  /** Create an empty cluster map at `path`, replacing whatever was there
+    * (members, merge pointers, generations): one log entry at seq 0 with
+    * no file, which records the bucket count.
     */
   def init(spark: SparkSession, path: String, buckets: Int = 64): Unit = {
     require(buckets > 0, s"buckets must be positive, got $buckets")
-    import spark.implicits._
-    Seq(buckets).toDF("buckets").coalesce(1).write.mode("overwrite")
-      .parquet(s"$path/$ModelDir")
-    IndexState.writeSeq(spark, path, 0L)
+    IndexState.deleteDir(spark, path)
+    IndexLog.commit(spark, path, emptyEntry(0L, buckets), predecessor = 0L)
   }
 
-  private def readBuckets(spark: SparkSession, path: String): Int =
-    spark.read.parquet(s"$path/$ModelDir").collect()(0).getInt(0)
-
-  private def hasMembers(spark: SparkSession, dataDir: String): Boolean =
-    IndexState.stagingHasData(spark, dataDir)
-
-  /** Raw member rows of a resolved data directory (un-merged roots), with
-    * the synthetic marker normalized to 0/1.
+  /** The member write of `rows` (`id, root, syn`), id-bucketed, ids as
+    * BIGINT whatever the caller's id type (the recorded shape). Pinned
+    * partition count (the writeBm25Postings rationale): a bare
+    * repartition(col) lets AQE coalesce a batch-sized shuffle to ~1 task,
+    * which then writes every touched bucket dir SERIALLY.
     */
-  private def readMembersAt(spark: SparkSession, dataDir: String): DataFrame =
-    if (!hasMembers(spark, dataDir))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], MemberReadSchema)
-    else
-      spark.read.schema(MemberReadSchema).parquet(dataDir)
-        .select(col("id"), col("root"), coalesce(col("syn"), lit(0)).as("syn"), col("bucket"))
+  private def membersWrite(rows: DataFrame, buckets: Int, mode: SaveMode): IndexLog.Write =
+    IndexLog.Write(Members, "", Some("bucket"),
+      rows
+        .select(col("id").cast("long").as("id"), col("root").cast("long").as("root"), col("syn"))
+        .withColumn("bucket", pmod(col("id"), lit(buckets.toLong)))
+        .repartition(buckets, col("bucket")),
+      mode)
+
+  /** The member rows `(id, root, syn)` of the given buckets only, roots NOT
+    * yet merge-resolved: a static partition filter, so the scan plans only
+    * those buckets.
+    */
+  private def membersIn(spark: SparkSession, dataDir: String, head: IndexLog.Entry, buckets: Seq[Long]): DataFrame =
+    head.scan(spark, dataDir, Members)
+      .filter(col("bucket").isin(buckets: _*))
+      .select(col("id"), col("root"), col("syn"))
 
   /** Pointer-log rows a merge log may hold before [[mergeClosure]] falls
     * back from the driver-side resolution to the distributed fixpoint. The
@@ -124,11 +137,11 @@ object ClusterMap {
     */
   private[dedup] val InMemClosureRows = 65536
 
-  /** The merge log of a resolved data directory, collapsed to one pointer
-    * per source root, followed to a FIXPOINT — `(from_root, to_root)` with
-    * `to_root` the final resolved target. Pointer chains strictly descend
-    * (merges always target a smaller id), so resolution terminates in
-    * chain-depth steps with no cycles.
+  /** The merge log of `head`, collapsed to one pointer per source root,
+    * followed to a FIXPOINT — `(from_root, to_root)` with `to_root` the
+    * final resolved target. Pointer chains strictly descend (merges always
+    * target a smaller id), so resolution terminates in chain-depth steps
+    * with no cycles.
     *
     * The log is batch-sized by construction (appends per batch, compaction
     * empties it), so the closure almost always fits the driver: up to
@@ -137,7 +150,8 @@ object ClusterMap {
     * distributed fixpoint's 2-jobs-per-chain-depth, which was the dominant
     * driver-latency cost of every applyBatch/assignments/resolve call at
     * micro-batch sizes (round-10 verdict: the 11.5 s
-    * q_dedup_cluster_incr_prod row was mostly this loop's job scheduling).
+    * q_dedup_cluster_incr_prod row was mostly this loop's job scheduling);
+    * an entry that lists no pointer file needs no job at all.
     * The local result returns as a driver-local relation — downstream joins
     * broadcast it, same as the distributed form's batch-sized frame.
     * An oversized log (possible only when compaction has been withheld for
@@ -145,20 +159,15 @@ object ClusterMap {
     * lineage truncation, the [[Dedup.connectedComponentsWithStatus]]
     * discipline.
     */
-  private[dedup] def mergeClosure(spark: SparkSession, dataDir: String): DataFrame = {
-    val p = s"$dataDir/$MergesDir"
-    if (!IndexState.stagingHasData(spark, p))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("from_root", LongType), StructField("to_root", LongType))))
-    val collapsed = spark.read.schema(MergeSchema).parquet(p)
+  private[dedup] def mergeClosure(spark: SparkSession, dataDir: String, head: IndexLog.Entry): DataFrame = {
+    val collapsed = head.scan(spark, dataDir, Merges)
       .groupBy(col("from_root"))
       .agg(min(col("to_root")).as("to_root"))
-    val head = collapsed.limit(InMemClosureRows + 1).collect()
-    if (head.length <= InMemClosureRows) {
-      val parent = new java.util.HashMap[Long, Long](head.length * 2)
-      head.foreach(r => parent.put(r.getLong(0), r.getLong(1)))
-      val memo = new java.util.HashMap[Long, Long](head.length * 2)
+    val pointers = if (head.has(Merges)) collapsed.limit(InMemClosureRows + 1).collect() else Array.empty[Row]
+    if (pointers.length <= InMemClosureRows) {
+      val parent = new java.util.HashMap[Long, Long](pointers.length * 2)
+      pointers.foreach(r => parent.put(r.getLong(0), r.getLong(1)))
+      val memo = new java.util.HashMap[Long, Long](pointers.length * 2)
       def resolve(x0: Long): Long = {
         var x = x0
         val path = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -170,12 +179,7 @@ object ClusterMap {
         path.foreach(memo.put(_, r))
         r
       }
-      val rows: java.util.List[org.apache.spark.sql.Row] =
-        java.util.Arrays.asList(head.map(r =>
-          org.apache.spark.sql.Row(r.getLong(0), resolve(r.getLong(0)))): _*)
-      return spark.createDataFrame(
-        rows,
-        StructType(Seq(StructField("from_root", LongType), StructField("to_root", LongType))))
+      return local(spark, pointers.map(r => Row(r.getLong(0), resolve(r.getLong(0)))), "from_root", "to_root")
     }
     var cl = collapsed.localCheckpoint(true)
     var done = false
@@ -201,33 +205,24 @@ object ClusterMap {
     cl
   }
 
+  /** Driver-side BIGINT rows as a driver-local relation with `cols`. */
+  private def local(spark: SparkSession, rows: Array[Row], cols: String*): DataFrame =
+    spark.createDataFrame(
+      java.util.Arrays.asList(rows: _*),
+      StructType(cols.map(StructField(_, LongType))))
+
   /** Member rows for the probe `ids` only — `(id, root, syn)`, root NOT yet
-    * merge-resolved, `syn` normalized to 0/1 (explicit [[MemberReadSchema]]
-    * read, so pre-marker files surface as real rows the way every other read
-    * path resolves them). The probe's distinct bucket values (≤ nBuckets
-    * longs, driver-collected — the engine's bounded-collect convention)
-    * become a static partition filter, so the scan plans only the probed
-    * buckets.
+    * merge-resolved. The probe's distinct bucket values (≤ nBuckets longs,
+    * driver-collected — the engine's bounded-collect convention) become a
+    * static partition filter, so the scan plans only the probed buckets.
     */
-  private def lookupStored(
-      spark: SparkSession,
-      dataDir: String,
-      buckets: Int,
-      ids: DataFrame
-  ): DataFrame = {
-    if (!hasMembers(spark, dataDir))
-      return ids.limit(0).select(col("id"), col("id").as("root"), lit(0).as("syn"))
+  private def lookupStored(spark: SparkSession, dataDir: String, head: IndexLog.Entry, ids: DataFrame): DataFrame = {
     val probeBuckets = ids
-      .select(pmod(col("id"), lit(buckets.toLong)).cast("int").as("b"))
+      .select(pmod(col("id"), lit(head.counters.buckets.toLong)).as("b"))
       .distinct()
       .collect()
-      .map(_.getInt(0))
-    spark.read
-      .schema(MemberReadSchema)
-      .parquet(dataDir)
-      .filter(col("bucket").isin(probeBuckets.map(Integer.valueOf): _*))
-      .join(ids.select(col("id")), Seq("id"))
-      .select(col("id"), col("root"), coalesce(col("syn"), lit(0)).as("syn"))
+      .map(_.getLong(0))
+    membersIn(spark, dataDir, head, probeBuckets.toSeq).join(ids.select(col("id")), Seq("id"))
   }
 
   /** Apply one arriving batch: `newIds` are the batch's document ids (one
@@ -236,16 +231,8 @@ object ClusterMap {
     * from [[Dedup.minhashLshIncrementalPortable]] + the in-batch operator,
     * or any other dedup family). Every step is batch-sized: endpoint
     * lookups prune member buckets, the contraction graph has one node per
-    * TOUCHED cluster, and writes append one file group per batch.
-    *
-    * PRE-FIX MAPS: the no-split guarantee holds by induction from "every
-    * referenced root has a member row", which the foreignWinners write
-    * below establishes going FORWARD. A map persisted before that write
-    * existed can still hold foreign roots referenced only via other rows'
-    * `root` values; a later batch demoting such a root writes no pointer
-    * and the component splits silently. There is no incremental heal —
-    * run [[rebuild]] (one-time, from the surviving pair set) before
-    * relying on the guarantee for a pre-fix map.
+    * TOUCHED cluster, and the batch commits one file group per touched
+    * bucket plus its merge pointers as ONE log entry ([[commitBatch]]).
     */
   def applyBatch(
       spark: SparkSession,
@@ -255,8 +242,7 @@ object ClusterMap {
       maxIter: Int = 10,
       ccInMemPairs: Int = Dedup.InMemCcPairs
   ): Unit = {
-    val dataDir = IndexState.dataPath(spark, path)
-    val buckets = readBuckets(spark, path)
+    val (dataDir, head) = IndexState.open(spark, path)
 
     val endpoints = pairs.select(col("id_a").as("id"))
       .unionAll(pairs.select(col("id_b").as("id")))
@@ -277,12 +263,10 @@ object ClusterMap {
     // distributed shape below, unchanged.
     val (endpointHead, closure) = graft.util.Par.both(
       endpoints.limit(InMemClosureRows + 1).collect(),
-      mergeClosure(spark, dataDir))
+      mergeClosure(spark, dataDir, head))
 
     if (endpointHead.length <= InMemClosureRows) {
-      applyBatchFused(
-        spark, dataDir, path, buckets, pairs, newIds, maxIter, ccInMemPairs,
-        endpointHead, closure)
+      applyBatchFused(spark, dataDir, head, pairs, newIds, maxIter, ccInMemPairs, endpointHead, closure)
       return
     }
 
@@ -293,7 +277,7 @@ object ClusterMap {
     // predicate — one bucket-pruned member scan per batch instead of three
     // (the round-11 shape re-probed storage for losers and winners).
     val cur = endpoints
-      .join(lookupStored(spark, dataDir, buckets, endpoints)
+      .join(lookupStored(spark, dataDir, head, endpoints)
         .withColumnRenamed("root", "stored"), Seq("id"), "left_outer")
       .join(closure.withColumnRenamed("from_root", "stored"), Seq("stored"), "left_outer")
       .select(
@@ -324,21 +308,18 @@ object ClusterMap {
         .select(col("cur_root").as("id"))
         .distinct()
 
-      val seq = IndexState.bumpSeq(spark, path)
-      // merge pointers FIRST (replay heals a crash between the two writes):
-      // every contracted node that lost its label AND exists in storage is a
-      // cluster root that stored member rows may still resolve to, so it
+      // every contracted node that lost its label AND exists in storage is
+      // a cluster root that stored member rows may still resolve to, so it
       // acquires a downward pointer. Membership in `newIds` does NOT make a
       // loser unreferenced: a re-upserted doc that is currently the root of
       // a stored cluster (an UPDATE arriving through the CDC consumers) must
       // still point its old component at the new root, or the component
       // silently splits.
-      val losing = labels.filter(col("keep_id") =!= col("id"))
-      val merges = losing
+      val seq = head.seq + 1
+      val merges = labels
+        .filter(col("keep_id") =!= col("id"))
         .join(storedNodes, Seq("id"))
         .select(col("id").as("from_root"), col("keep_id").as("to_root"), lit(seq).as("seq"))
-      if (!merges.isEmpty)
-        merges.coalesce(1).write.mode("append").parquet(s"$dataDir/$MergesDir")
 
       // Foreign winners — pair endpoints never ingested that just became the
       // canonical root of a stored component — are materialized as member
@@ -354,99 +335,86 @@ object ClusterMap {
         .join(storedNodes, Seq("id"), "left_anti")
         .select(col("id"), col("id").as("root"), lit(1).as("syn"))
 
-      writeMembers(newIds, labels, foreignWinners, buckets, dataDir)
+      commitBatch(spark, dataDir, head, seq, Some(merges).filterNot(_.isEmpty), newIds, labels, foreignWinners)
     } finally {
       try org.apache.spark.sql.GraftColumnBridge.unpersistLocalCheckpoint(cur)
       catch { case scala.util.control.NonFatal(_) => () }
     }
   }
 
-  /** The member-row append shared by both [[applyBatch]] tiers: one row per
-    * new id labeled with its component root (or itself), plus the synthetic
-    * foreign-winner rows.
+  /** The commit shared by both [[applyBatch]] tiers: the batch's merge
+    * pointers (if any) and its member rows — one per new id labeled with
+    * its component root (or itself), plus the synthetic foreign-winner rows
+    * — written concurrently and committed as ONE log entry at `seq`. A
+    * crash before the entry leaves the map as it was, and the replay
+    * re-derives the same batch; a replay after the entry re-contracts
+    * against already-merged roots (no new pointers) and re-appends member
+    * rows that [[assignments]] collapses by min.
     */
-  private def writeMembers(
+  private def commitBatch(
+      spark: SparkSession,
+      dataDir: String,
+      head: IndexLog.Entry,
+      seq: Long,
+      merges: Option[DataFrame],
       newIds: DataFrame,
       labels: DataFrame,
-      foreignWinners: DataFrame,
-      buckets: Int,
-      dataDir: String
-  ): Unit =
-    newIds
+      foreignWinners: DataFrame
+  ): Unit = {
+    val members = newIds
       .select(col("id"))
       .join(labels, Seq("id"), "left_outer")
       .select(col("id"), coalesce(col("keep_id"), col("id")).as("root"), lit(0).as("syn"))
       .unionByName(foreignWinners)
-      .select(
-        col("id"),
-        col("root"),
-        col("syn"),
-        pmod(col("id"), lit(buckets.toLong)).cast("int").as("bucket"))
-      // pinned partition count (the writeBm25Postings rationale): a bare
-      // repartition(col) lets AQE coalesce the batch-sized shuffle to ~1
-      // task, which then writes every touched bucket dir SERIALLY
-      .repartition(buckets, col("bucket"))
-      .write
-      .mode("append")
-      .partitionBy("bucket")
-      .parquet(dataDir)
+    IndexLog.mutate(spark, dataDir, head, seq, head.counters,
+      membersWrite(members, head.counters.buckets, SaveMode.Append) +:
+        merges.map(m => IndexLog.Write(Merges, MergesDir, None, m.coalesce(1))).toSeq)
+  }
 
   /** The bounded-endpoint tier of [[applyBatch]]: semantics identical to the
-    * distributed tier (same resolve → contract → cc → ptr-write →
-    * member-write stages over the same values), with the batch-sized
-    * intermediates held as driver-local relations instead of checkpointed
-    * frames. `endpointHead` is the collected endpoint id set (≤
-    * [[InMemClosureRows]]); `closure` the merge-log closure frame.
+    * distributed tier (same resolve → contract → cc → commit stages over
+    * the same values), with the batch-sized intermediates held as
+    * driver-local relations instead of checkpointed frames. `endpointHead`
+    * is the collected endpoint id set (≤ [[InMemClosureRows]]); `closure`
+    * the merge-log closure frame.
     */
   private def applyBatchFused(
       spark: SparkSession,
       dataDir: String,
-      path: String,
-      buckets: Int,
+      head: IndexLog.Entry,
       pairs: DataFrame,
       newIds: DataFrame,
       maxIter: Int,
       ccInMemPairs: Int,
-      endpointHead: Array[org.apache.spark.sql.Row],
+      endpointHead: Array[Row],
       closure: DataFrame
   ): Unit = {
-    import org.apache.spark.sql.Row
-    val curSchema = StructType(Seq(
-      StructField("id", LongType),
-      StructField("stored", LongType),
-      StructField("cur_root", LongType)))
     // current root per endpoint (the distributed tier's `cur`), via ONE
     // bucket-pruned member scan joined against the driver-local endpoint
     // relation, collected batch-sized. Probe buckets derive from the
     // already-collected ids (pmod == floorMod for positive bucket counts).
     val curRows: Array[Row] = {
       val ids = endpointHead.map(_.getLong(0))
-      if (ids.isEmpty || !hasMembers(spark, dataDir)) {
+      if (ids.isEmpty || !head.has(Members)) {
         // nothing stored (or no endpoints): every endpoint resolves to itself
         ids.map(i => Row(i, null, i))
       } else {
-        val probeBuckets = ids.map(i => java.lang.Math.floorMod(i, buckets.toLong).toInt).distinct
-        val idsLocal = spark.createDataFrame(
-          java.util.Arrays.asList(ids.map(i => Row(i)): _*),
-          StructType(Seq(StructField("id", LongType))))
-        val stored = spark.read
-          .schema(MemberReadSchema)
-          .parquet(dataDir)
-          .filter(col("bucket").isin(probeBuckets.map(Integer.valueOf): _*))
-          .join(idsLocal, Seq("id"))
-          .select(col("id"), col("root").as("stored"))
-        val resolved = idsLocal
-          .join(stored, Seq("id"), "left_outer")
+        val probeBuckets = ids.map(i => java.lang.Math.floorMod(i, head.counters.buckets.toLong)).distinct
+        val idsLocal = local(spark, ids.map(i => Row(i)), "id")
+        idsLocal
+          .join(
+            membersIn(spark, dataDir, head, probeBuckets.toSeq).join(idsLocal, Seq("id"))
+              .select(col("id"), col("root").as("stored")),
+            Seq("id"), "left_outer")
           .join(closure.withColumnRenamed("from_root", "stored"), Seq("stored"), "left_outer")
           .select(
             col("id"),
             col("stored"),
             coalesce(col("to_root"), col("stored"), col("id")).as("cur_root"))
           .collect()
-        resolved
       }
     }
-    val curLocal = spark.createDataFrame(java.util.Arrays.asList(curRows: _*), curSchema)
+    val curLocal = local(spark, curRows, "id", "stored", "cur_root")
     // stored-referenced contraction nodes (the distributed tier's
     // storedNodes), as a driver set — the soundness argument is unchanged
     val storedRoots: Set[Long] =
@@ -471,21 +439,14 @@ object ClusterMap {
         catch { case scala.util.control.NonFatal(_) => () }
       }
     }
-    val labelsLocal = spark.createDataFrame(
-      java.util.Arrays.asList(labelRows: _*),
-      StructType(Seq(StructField("id", LongType), StructField("keep_id", LongType))))
 
-    val seq = IndexState.bumpSeq(spark, path)
-    // merge pointers FIRST (the distributed tier's crash-heal ordering);
-    // losing-and-stored is now a driver-side set test, and an empty pointer
-    // set skips the write without an isEmpty job
+    // losing-and-stored is a driver-side set test, and an empty pointer
+    // set writes no file
+    val seq = head.seq + 1
     val mergeRows = labelRows.iterator
       .filter(r => r.getLong(1) != r.getLong(0) && storedRoots.contains(r.getLong(0)))
       .map(r => Row(r.getLong(0), r.getLong(1), seq))
       .toArray
-    if (mergeRows.nonEmpty)
-      spark.createDataFrame(java.util.Arrays.asList(mergeRows: _*), MergeSchema)
-        .coalesce(1).write.mode("append").parquet(s"$dataDir/$MergesDir")
 
     // foreign winners (see the distributed tier): winner ∧ ¬stored is a
     // driver-side test; ¬ingested stays an anti-join against `newIds`
@@ -494,14 +455,14 @@ object ClusterMap {
       .filter(r => r.getLong(1) == r.getLong(0) && !storedRoots.contains(r.getLong(0)))
       .map(r => Row(r.getLong(0)))
       .toArray
-    val foreignWinners = spark
-      .createDataFrame(
-        java.util.Arrays.asList(winnersNotStored: _*),
-        StructType(Seq(StructField("id", LongType))))
+    val foreignWinners = local(spark, winnersNotStored, "id")
       .join(newIds.select(col("id")), Seq("id"), "left_anti")
       .select(col("id"), col("id").as("root"), lit(1).as("syn"))
 
-    writeMembers(newIds, labelsLocal, foreignWinners, buckets, dataDir)
+    commitBatch(
+      spark, dataDir, head, seq,
+      Option.when(mergeRows.nonEmpty)(local(spark, mergeRows, "from_root", "to_root", "seq")),
+      newIds, local(spark, labelRows, "id", "keep_id"), foreignWinners)
   }
 
   /** All member rows fully resolved and replay-collapsed — `(id, root,
@@ -512,36 +473,39 @@ object ClusterMap {
     * from: dropping a still-canonical synthetic root from storage would
     * resurrect the silent-split class the marker exists to prevent.
     */
-  private def resolvedMembers(spark: SparkSession, dataDir: String): DataFrame = {
-    val closure = mergeClosure(spark, dataDir)
-    readMembersAt(spark, dataDir)
+  private def resolvedMembers(spark: SparkSession, dataDir: String, head: IndexLog.Entry): DataFrame =
+    collapse(head.scan(spark, dataDir, Members).select(col("id"), col("root"), col("syn")),
+      mergeClosure(spark, dataDir, head))
+
+  /** Member rows `(id, root, syn)` with each root followed through the
+    * pointer `closure`, collapsed to one row per id by min: the resolved
+    * root is monotonically non-increasing, so min is the freshest, and
+    * duplicate rows from at-least-once replays fold away.
+    */
+  private def collapse(members: DataFrame, closure: DataFrame): DataFrame =
+    members
       .join(closure.withColumnRenamed("from_root", "root"), Seq("root"), "left_outer")
       .select(col("id"), coalesce(col("to_root"), col("root")).as("root"), col("syn"))
       .groupBy(col("id"))
       .agg(min(col("root")).as("root"), min(col("syn")).as("syn"))
-  }
 
   /** Every ingested document's fully-resolved cluster root `(id, root)` —
     * the arriving-data equivalent of [[Dedup.connectedComponents]] over the
-    * cumulative pair list (plus `(id, id)` singletons). Duplicate member
-    * rows from at-least-once replays collapse by min — the resolved root
-    * is monotonically non-increasing, so min is the freshest.
+    * cumulative pair list (plus `(id, id)` singletons).
     *
     * Synthetic winner labels (pair endpoints that were never ingested but
     * won a contraction — [[applyBatch]] materializes them for the no-split
     * contract) are FILTERED here: an aggregate over this surface counts
     * only real documents. They can still appear as `root` VALUES (a cluster
-    * label need not be a live doc); maps written before the `syn` marker
-    * existed surface as they always did (pre-marker synthetic rows are
-    * indistinguishable from singletons — [[rebuild]] from the surviving
-    * pair set is the one-time cure, see the pre-fix note on [[applyBatch]]).
-    * Use [[assignmentsLive]] to additionally restrict to a live corpus
-    * (dropping DELETEd docs).
+    * label need not be a live doc). Use [[assignmentsLive]] to additionally
+    * restrict to a live corpus (dropping DELETEd docs).
     */
-  def assignments(spark: SparkSession, path: String): DataFrame =
-    resolvedMembers(spark, IndexState.dataPath(spark, path))
+  def assignments(spark: SparkSession, path: String): DataFrame = {
+    val (dataDir, head) = IndexState.open(spark, path)
+    resolvedMembers(spark, dataDir, head)
       .filter(col("syn") === 0)
       .select(col("id"), col("root"))
+  }
 
   /** [[assignments]] restricted to a LIVE corpus (single BIGINT `id`
     * column) — the read-side half of the no-split contract: DELETE events
@@ -561,24 +525,29 @@ object ClusterMap {
     * agree on which ids exist.
     */
   def resolve(spark: SparkSession, path: String, ids: DataFrame): DataFrame = {
-    val dataDir = IndexState.dataPath(spark, path)
-    val closure = mergeClosure(spark, dataDir)
-    lookupStored(spark, dataDir, readBuckets(spark, path), ids)
-      .join(closure.withColumnRenamed("from_root", "root"), Seq("root"), "left_outer")
-      .select(col("id"), coalesce(col("to_root"), col("root")).as("root"), col("syn"))
-      .groupBy(col("id"))
-      .agg(min(col("root")).as("root"), min(col("syn")).as("syn"))
+    val (dataDir, head) = IndexState.open(spark, path)
+    collapse(lookupStored(spark, dataDir, head, ids), mergeClosure(spark, dataDir, head))
       .filter(col("syn") === 0)
       .select(col("id"), col("root"))
   }
 
+  /** Write `members` (`id, root, syn`) as a fresh generation at `dir` with
+    * no merge pointer, and start its log at `seq` — the compaction and
+    * rebuild staging write.
+    */
+  private def writeFresh(spark: SparkSession, dir: String, seq: Long, buckets: Int, members: DataFrame): Unit = {
+    val empty = emptyEntry(seq, buckets)
+    val added = IndexLog.write(spark, dir, seq, Seq(membersWrite(members, buckets, SaveMode.Overwrite)))
+    IndexLog.commit(spark, dir, empty.next(seq, empty.counters, added), predecessor = seq)
+  }
+
   /** Durable path compression: when the merge log reaches `maxMergeRatio`
-    * of the member count (both from parquet footer metadata — the map is
-    * never scanned to decide), rewrite members fully resolved into a
-    * staging sibling and promote it ([[IndexState.compactAndSwap]]: next
-    * generation, empty-rewrite refusal, age-based GC). The promoted
-    * generation has an empty merge log — resolution cost returns to a
-    * single bucket-pruned lookup. Returns whether a compaction ran.
+    * of the member count, rewrite members fully resolved into a staging
+    * sibling with a fresh log and promote it
+    * ([[IndexState.compactAndSwap]]: next generation, empty-rewrite
+    * refusal, age-based GC). The promoted generation has an empty merge
+    * log — resolution cost returns to a single bucket-pruned lookup.
+    * Returns whether a compaction ran.
     */
   def maybeCompact(
       spark: SparkSession,
@@ -588,29 +557,16 @@ object ClusterMap {
     require(
       maxMergeRatio > 0 && maxMergeRatio <= 1,
       s"maxMergeRatio must be in (0,1], got $maxMergeRatio")
-    val dataDir = IndexState.dataPath(spark, path)
-    val mergesPath = s"$dataDir/$MergesDir"
-    if (!IndexState.stagingHasData(spark, mergesPath)) return false
-    val nMerges = spark.read.schema(MergeSchema).parquet(mergesPath).count()
-    if (nMerges == 0L) return false
-    val nMembers = readMembersAt(spark, dataDir).count()
+    val (dataDir, head) = IndexState.open(spark, path)
+    if (!head.has(Merges)) return false
+    val nMerges = head.scan(spark, dataDir, Merges).count()
+    val nMembers = head.scan(spark, dataDir, Members).count()
     if (nMembers == 0L || nMerges.toDouble / nMembers < maxMergeRatio) return false
-    val buckets = readBuckets(spark, path)
     // resolvedMembers, NOT assignments: synthetic winner rows must survive
     // compaction — a still-canonical synthetic root dropped from storage
     // would be un-pointerable at its later demotion (the silent-split class)
     IndexState.compactAndSwap(spark, path, staging =>
-      resolvedMembers(spark, dataDir)
-        .select(
-          col("id"),
-          col("root"),
-          col("syn"),
-          pmod(col("id"), lit(buckets.toLong)).cast("int").as("bucket"))
-        .repartition(col("bucket"))
-        .write
-        .mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(staging))
+      writeFresh(spark, staging, head.seq, head.counters.buckets, resolvedMembers(spark, dataDir, head)))
   }
 
   /** The escape hatch of the no-split contract: union-find cannot un-merge,
@@ -623,13 +579,12 @@ object ClusterMap {
     * concurrent [[assignments]]/[[resolve]] readers never observe a broken
     * index: they keep the superseded generation until the age-based GC
     * grace expires, and the flip is one ready-marker create. The new
-    * generation is born with an empty merge log; layout parameters are
+    * generation is born with an empty merge log; the bucket count is
     * kept. Returns whether the swap happened (an empty rebuild — no ids —
     * is refused, the [[IndexState.compactAndSwap]] empty-rewrite guard).
     *
-    * Bumps the mutation seq: the refusal memo of a prior empty compaction
-    * must not suppress this rewrite, and replayed callers converge the same
-    * way compaction replays do.
+    * Commits a file-less entry at the next seq first: the refusal memo of a
+    * prior empty rewrite must not suppress this one.
     */
   def rebuild(
       spark: SparkSession,
@@ -638,8 +593,9 @@ object ClusterMap {
       ids: DataFrame,
       maxIter: Int = 10
   ): Boolean = {
-    val buckets = readBuckets(spark, path)
-    IndexState.bumpSeq(spark, path)
+    val (dataDir, head) = IndexState.open(spark, path)
+    val seq = head.seq + 1
+    IndexLog.mutate(spark, dataDir, head, seq, head.counters, Nil)
     // rebuild is seed-shaped: the whole surviving pair set contracts at
     // once, so it takes the seed-scale driver union-find ceiling
     val labels = Dedup.connectedComponents(
@@ -656,22 +612,10 @@ object ClusterMap {
       .join(distinctIds, Seq("id"), "left_anti")
       .select(col("id"), col("id").as("root"), lit(1).as("syn"))
     IndexState.compactAndSwap(spark, path, staging =>
-      distinctIds
-        .join(labels, Seq("id"), "left_outer")
-        .select(
-          col("id"),
-          coalesce(col("keep_id"), col("id")).as("root"),
-          lit(0).as("syn"))
-        .unionByName(foreignWinners)
-        .select(
-          col("id"),
-          col("root"),
-          col("syn"),
-          pmod(col("id"), lit(buckets.toLong)).cast("int").as("bucket"))
-        .repartition(col("bucket"))
-        .write
-        .mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(staging))
+      writeFresh(spark, staging, seq, head.counters.buckets,
+        distinctIds
+          .join(labels, Seq("id"), "left_outer")
+          .select(col("id"), coalesce(col("keep_id"), col("id")).as("root"), lit(0).as("syn"))
+          .unionByName(foreignWinners)))
   }
 }

@@ -1,9 +1,9 @@
 package graft.dedup
 
-import graft.sources.IndexState
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.{IndexLog, IndexState}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{BooleanType, DoubleType, IntegerType, StructField, StructType}
 
 /** Persisted MinHash band-key signature index — the steady-state form the
   * incremental near-dup operators describe but recompute per call
@@ -18,11 +18,15 @@ import org.apache.spark.sql.types.{BooleanType, DoubleType, IntegerType, LongTyp
   * Layout parameters (hash family, shingle width, banding, bucket count)
   * are frozen in a model sidecar at [[write]] time: a restarted consumer
   * resumes with the exact parameters the stored keys were derived under
-  * (the [[graft.ann.AnnModels]] contract). Appends are O(batch) — stored
-  * partitions are never read or rewritten; [[compact]] restores the
+  * (the [[graft.ann.AnnModels]] contract). Every key file is committed
+  * through the index log ([[graft.sources.IndexLog]]), and every read scans
+  * exactly the head's files, so the keys of an append that crashed before
+  * its entry stay invisible. Appends are O(batch) — stored partitions are
+  * never read or rewritten; [[compact]] restores the
   * one-file-group-per-bucket bound and collapses the duplicate `(id, key)`
-  * rows an at-least-once replay appends, through the generation-pointer
-  * swap ([[IndexState.compactAndSwap]] — concurrent readers safe).
+  * rows an at-least-once replay appends, into a fresh generation with a
+  * fresh log promoted through the generation-pointer swap
+  * ([[IndexState.compactAndSwap]] — concurrent readers safe).
   *
   * Two honest divergences from the batch operators, both bounded by the
   * degenerate-bucket cap: keys are stored PER DOCUMENT (the batch
@@ -73,11 +77,8 @@ object SignatureIndex {
     StructField("buckets", IntegerType)
   ))
 
-  private val KeySchema = StructType(Seq(
-    StructField("id", LongType),
-    StructField("key", StringType),
-    StructField("kb", IntegerType)
-  ))
+  // the index log's kind of file: (id, key) rows under `kb=<k>/`
+  private val Keys = "keys"
 
   /** The model's band keys of `docs` as `(id, key)` — the exact derivation
     * the batch operators use, so stored keys and probe keys always agree.
@@ -89,20 +90,25 @@ object SignatureIndex {
   private def withKb(keys: DataFrame, buckets: Int): DataFrame =
     keys.withColumn("kb", pmod(xxhash64(col("key")), lit(buckets.toLong)).cast("int"))
 
-  /** Build the index from a corpus (empty corpus allowed: sidecars only —
-    * an empty partitioned directory is unreadable, the
-    * [[IndexState.stagingHasData]] refusal rationale; reads tolerate the
-    * absent layout).
+  /** The log write of key rows (`id, key`) into their `kb=<k>/`
+    * directories.
+    */
+  private def keysWrite(keys: DataFrame, buckets: Int, mode: SaveMode): IndexLog.Write =
+    IndexLog.Write(Keys, "", Some("kb"),
+      withKb(keys.select(col("id").cast("long").as("id"), col("key")), buckets).repartition(col("kb")),
+      mode)
+
+  /** Build the index from a corpus, replacing whatever was at `path`: the
+    * key write's Overwrite clears the directory (an earlier index, its log,
+    * its model, its generations) first. An empty corpus commits an entry
+    * with no file, which scans as an empty index. The entry's counters
+    * carry the bucket count.
     */
   def write(corpus: DataFrame, path: String, id: String, text: String, m: Model): Unit = {
     val spark = corpus.sparkSession
-    val keys = withKb(bandKeys(corpus, id, text, m), m.buckets)
-    if (!keys.isEmpty)
-      keys
-        .repartition(col("kb"))
-        .write.mode("overwrite").partitionBy("kb").parquet(path)
+    val added = IndexLog.write(spark, path, 0L, Seq(keysWrite(bandKeys(corpus, id, text, m), m.buckets, SaveMode.Overwrite)))
     writeModel(spark, path, m)
-    IndexState.writeSeq(spark, path, 0L)
+    IndexLog.commit(spark, path, IndexLog.Entry.fresh(0L, IndexLog.Counters(0L, 0L, m.buckets), added), predecessor = 0L)
   }
 
   private def writeModel(spark: SparkSession, path: String, m: Model): Unit = {
@@ -118,16 +124,13 @@ object SignatureIndex {
   }
 
   /** Append a batch's keys under the frozen model — O(batch): one new file
-    * group per touched bucket, stored partitions untouched. Pass the keys
-    * already derived for the probe ([[bandKeys]]) to avoid re-shingling.
+    * group per touched bucket, stored partitions untouched, committed as
+    * one log entry. Pass the keys already derived for the probe
+    * ([[bandKeys]]) to avoid re-shingling.
     */
   def appendKeys(spark: SparkSession, path: String, m: Model, keys: DataFrame): Unit = {
-    val dataDir = IndexState.dataPath(spark, path)
-    val keyed = withKb(keys, m.buckets)
-    if (!keyed.isEmpty)
-      keyed
-        .repartition(col("kb"))
-        .write.mode("append").partitionBy("kb").parquet(dataDir)
+    val (dataDir, head) = IndexState.open(spark, path)
+    IndexLog.mutate(spark, dataDir, head, head.seq + 1, head.counters, Seq(keysWrite(keys, m.buckets, SaveMode.Append)))
   }
 
   /** [[appendKeys]] from raw documents (the restart path: model from the
@@ -139,10 +142,21 @@ object SignatureIndex {
     appendKeys(spark, path, m, bandKeys(batch, id, text, m))
   }
 
-  private def emptyCandidates(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("batch_id", LongType), StructField("corpus_id", LongType))))
+  /** The stored rows MATCHING a probe key set, before materialization: the
+    * probe's distinct `kb` values become a static partition filter and a
+    * broadcast semi-join restricts the pruned buckets to the probed keys —
+    * the plan PlanSpec asserts bucket pruning on (the plan is invisible in
+    * [[candidates]]' output, which materializes this frame eagerly).
+    */
+  private[graft] def storedMatched(
+      spark: SparkSession,
+      dataDir: String,
+      keyed: DataFrame,
+      kbs: Array[Int]
+  ): DataFrame =
+    IndexLog.head(spark, dataDir).scan(spark, dataDir, Keys)
+      .filter(col("kb").isin(kbs.map(_.toLong): _*))
+      .join(broadcast(keyed.select(col("key")).distinct()), Seq("key"))
 
   /** Distinct `(batch_id, corpus_id)` candidate pairs of a probe key set
     * against the stored corpus keys. The probe's distinct `kb` values
@@ -160,28 +174,9 @@ object SignatureIndex {
     * to a broadcast) — the standing assumption of the whole maintenance
     * family, not a new one.
     */
-  /** The stored rows MATCHING a probe key set, before materialization: the
-    * probe's distinct `kb` values become a static partition filter and a
-    * broadcast semi-join restricts the pruned buckets to the probed keys —
-    * the plan PlanSpec asserts bucket pruning on (the plan is invisible in
-    * [[candidates]]' output, which materializes this frame eagerly).
-    */
-  private[graft] def storedMatched(
-      spark: SparkSession,
-      dataDir: String,
-      keyed: DataFrame,
-      kbs: Array[Int]
-  ): DataFrame =
-    spark.read.schema(KeySchema).parquet(dataDir)
-      .filter(col("kb").isin(kbs.map(Integer.valueOf): _*))
-      .join(broadcast(keyed.select(col("key")).distinct()), Seq("key"))
-
   def candidates(spark: SparkSession, path: String, m: Model, probeKeys: DataFrame): DataFrame = {
-    val dataDir = IndexState.dataPath(spark, path)
-    if (!IndexState.stagingHasData(spark, dataDir)) return emptyCandidates(spark)
     val keyed = withKb(probeKeys, m.buckets)
     val kbs = keyed.select(col("kb")).distinct().collect().map(_.getInt(0))
-    if (kbs.isEmpty) return emptyCandidates(spark)
     // eager local checkpoint: the matched-row frame feeds BOTH the
     // degenerate-key guard aggregate and the candidate join — without it
     // the bucket scan runs twice per micro-batch. Probe-matched rows are
@@ -190,7 +185,7 @@ object SignatureIndex {
     // GraftColumnBridge.unpersistLocalCheckpoint on the returned frame (a
     // long-running stream would otherwise hold one checkpoint per batch
     // until the context cleaner collects it).
-    val stored = storedMatched(spark, dataDir, keyed, kbs).localCheckpoint(true)
+    val stored = storedMatched(spark, IndexState.dataPath(spark, path), keyed, kbs).localCheckpoint(true)
     val ok = stored
       .groupBy(col("key"))
       .agg(count(lit(1)).as("__n"))
@@ -208,31 +203,26 @@ object SignatureIndex {
   /** All stored `(id, key)` rows of the current generation — the portable
     * seed's pair derivation reads the just-written index back instead of
     * re-banding the corpus (one shingle+minhash pass saved; the written
-    * index IS the materialization). Empty index (empty-corpus seed writes
-    * sidecars only) yields an empty frame.
+    * index IS the materialization).
     */
   private[graft] def storedKeys(spark: SparkSession, path: String): DataFrame = {
-    val dataDir = IndexState.dataPath(spark, path)
-    if (!IndexState.stagingHasData(spark, dataDir))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("id", LongType), StructField("key", StringType))))
-    else
-      spark.read.schema(KeySchema).parquet(dataDir).select(col("id"), col("key"))
+    val (dataDir, head) = IndexState.open(spark, path)
+    head.scan(spark, dataDir, Keys).select(col("id"), col("key"))
   }
 
   /** Rewrite the index deduplicated (`(id, key)` rows replayed by
     * at-least-once delivery collapse) and back to one file group per
-    * bucket, promoted through the generation-pointer swap. Returns whether
-    * a compaction ran (empty index: nothing to do).
+    * bucket, into a fresh generation whose log starts at the current seq,
+    * promoted through the generation-pointer swap. Returns whether a
+    * compaction ran (an empty index rewrites to nothing and is refused).
     */
   def compact(spark: SparkSession, path: String): Boolean = {
-    if (!IndexState.stagingHasData(spark, IndexState.dataPath(spark, path))) return false
-    IndexState.compactAndSwap(spark, path, staging =>
-      spark.read.schema(KeySchema).parquet(IndexState.dataPath(spark, path))
-        .select(col("id"), col("key"), col("kb"))
-        .distinct()
-        .repartition(col("kb"))
-        .write.mode("overwrite").partitionBy("kb").parquet(staging))
+    val (dataDir, head) = IndexState.open(spark, path)
+    IndexState.compactAndSwap(spark, path, staging => {
+      val added = IndexLog.write(spark, staging, head.seq,
+        Seq(keysWrite(head.scan(spark, dataDir, Keys).select(col("id"), col("key")).distinct(),
+          head.counters.buckets, SaveMode.Overwrite)))
+      IndexLog.commit(spark, staging, IndexLog.Entry.fresh(head.seq, head.counters, added), predecessor = head.seq)
+    })
   }
 }

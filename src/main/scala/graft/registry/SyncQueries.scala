@@ -1157,10 +1157,10 @@ private[graft] object SyncQueries {
       new IncrementalEngine(
         SchemaDef.parseNodes(Fixtures.flagship), Catalog.testData, load,
         // specs from the layouts' sidecars — the no-mismatch construction
-        partitionPrune = Seq("orders", "lineitem", "customer").map { t =>
+        IncrementalEngine.Tuning(partitionPrune = Seq("orders", "lineitem", "customer").map { t =>
           val (_, w, pc) = graft.sources.Layout.keyPartitionSpec(s, s"$scratch/$t")
           t -> IncrementalEngine.PartitionPrune(pc, w)
-        }.toMap
+        }.toMap)
       ).process(changes, Lineage.empty(s))
     },
       // same ops at the key-partitioned layout — layout must never change
@@ -1199,10 +1199,10 @@ private[graft] object SyncQueries {
         )
       val ops = new IncrementalEngine(
         SchemaDef.parseNodes(Fixtures.through), Catalog.testData, load,
-        partitionPrune = Seq("part", "lineitem", "supplier").map { t =>
+        IncrementalEngine.Tuning(partitionPrune = Seq("part", "lineitem", "supplier").map { t =>
           val (_, w, pc) = graft.sources.Layout.keyPartitionSpec(s, s"$scratch/$t")
           t -> IncrementalEngine.PartitionPrune(pc, w)
-        }.toMap
+        }.toMap)
       ).process(changes, Lineage.empty(s))
       val sup = from_json(
         get_json_object(col("doc"), "$.suppliers"),
@@ -1293,7 +1293,7 @@ private[graft] object SyncQueries {
         )
       new IncrementalEngine(
         SchemaDef.parseNodes(Fixtures.flagship), cat, load,
-        layoutRoot = Some(scratch)
+        IncrementalEngine.Tuning(layoutRoot = Some(scratch))
       ).process(changes, Lineage.empty(s))
     },
       cdcHashOracle),

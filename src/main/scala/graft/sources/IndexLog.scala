@@ -6,8 +6,10 @@ import org.apache.spark.sql.types.{DataType, StructType}
 
 import java.nio.charset.StandardCharsets
 
-/** The commit log of a persisted search index (BM25 postings, LSH buckets,
-  * IVF-PQ cells): `<dataDir>/_graft_log/<seq>`, one entry per mutation.
+/** The commit log of a persisted index (BM25 postings, LSH buckets, IVF-PQ
+  * cells, [[graft.dedup.ClusterMap]] members and merge pointers,
+  * [[graft.dedup.SignatureIndex]] band keys): `<dataDir>/_graft_log/<seq>`,
+  * one entry per mutation.
   *
   * This is the exactly-once file sink of *Structured Streaming* (SIGMOD
   * 2018; Spark's `FileStreamSinkLog` + `ManifestFileCommitProtocol`)
@@ -30,11 +32,13 @@ import java.nio.charset.StandardCharsets
   * }}}
   *
   *   - `#counters` carries the BM25 corpus counters (zero for the vector
-  *     indexes), which a mutation updates exactly and a probe scores with.
+  *     indexes), which a mutation updates exactly and a probe scores with;
+  *     the dedup indexes keep only their bucket count there.
   *   - `#kind` gives the scan shape of each kind of file: its directory
   *     under the data dir, the column its `<column>=<value>/` partition
   *     directories encode (empty for a flat directory), and its schema —
-  *     so a read needs no listing and no footer inference.
+  *     so a read needs no listing and no footer inference. A kind whose
+  *     shape is recorded but which lists no file scans as empty.
   *   - File lines have the shape of the [[graft.sinks.MaterializedIndex]]
   *     manifest; `file` is relative to the kind's directory, `bucket` is
   *     the partition value (-1 when flat) and `seq` the entry that added
@@ -138,7 +142,8 @@ object IndexLog {
       if (seqs.isEmpty)
         throw new IllegalStateException(
           s"$dataDir has no index log ($Dir): it was written by an older index layout " +
-            "or never built; rebuild the index (writeBm25Index / writeLshIndex / writePqIndex)")
+            "or never built; rebuild the index (writeBm25Index / writeLshIndex / writePqIndex / " +
+            "ClusterMap.init / SignatureIndex.write)")
       val n = seqs.max
       try Some(parse(n, readText(f, new Path(dir, n.toString))))
       catch { case _: java.io.FileNotFoundException => None }

@@ -3,10 +3,10 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-/** Shared mutation state for the persisted retrieval/ANN indexes (BM25
-  * postings, LSH buckets, IVF-PQ cells): a commit log ([[IndexLog]]) that
+/** Shared mutation state for the persisted indexes (BM25 postings, LSH
+  * buckets, IVF-PQ cells, and the dedup indexes [[graft.dedup.ClusterMap]]
+  * and [[graft.dedup.SignatureIndex]]): a commit log ([[IndexLog]]) that
   * lists every live data file and a tombstone kind of file, both living
   * INSIDE the index's data directory under underscore-prefixed names
   * (invisible to a plain parquet read of the index root — the
@@ -45,14 +45,12 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * discipline (one sync engine per index) is assumed, as everywhere else
   * in the persisted-index family.
   *
-  * The merge-pointer indexes ([[graft.dedup.ClusterMap]],
-  * [[graft.dedup.SignatureIndex]]) share the generation machinery below
-  * but order their merges with a separate counter, `_graft_seq`
-  * ([[readSeq]], [[bumpSeq]]).
+  * The dedup indexes never delete (no tombstone kind); their log seq stamps
+  * [[graft.dedup.ClusterMap]]'s merge pointers, and both share the
+  * generation machinery below.
   */
 object IndexState {
 
-  val SeqDir = "_graft_seq"
   val TombstoneDir = "_graft_tombstones"
 
   /** Sibling-directory suffix of a compaction's staging rewrite:
@@ -139,8 +137,8 @@ object IndexState {
   /** Resolve the directory holding the index's DATA partitions: the highest
     * ready generation after a [[compactAndSwap]], the index root before the
     * first one. Every probe and mutation resolves through here (one LIST of
-    * the index root); root-level sidecars (`_graft_seq`, the model) are
-    * shared across generations and never move.
+    * the index root); root-level sidecars (a model) are shared across
+    * generations and never move.
     */
   def dataPath(spark: SparkSession, path: String): String =
     currentGen(spark, path).map(n => s"$path/$GenPrefix$n").getOrElse(path)
@@ -204,58 +202,6 @@ object IndexState {
       val legacyData = (!n.startsWith("_") && !n.startsWith(".")) || GenerationalSidecars(n)
       if (legacyData && !n.startsWith(GenPrefix)) { f.delete(st.getPath, true); () }
     }
-  }
-
-  /** Last merge sequence number of a merge-pointer index; 0 before any
-    * merge.
-    *
-    * The empty-sidecar fallback is READER-only: a concurrent reader can
-    * observe the dir mid-overwrite (exists, no data files yet), and seq 0
-    * is a fine transient answer for a probe. Mutators must NOT take it —
-    * an existing-but-empty seq dir on the single-writer path means a
-    * crashed [[writeSeq]] overwrite, and silently restarting the counter
-    * at 0 would stamp new upserts with seqs BELOW stored tombstone
-    * `del_seq` values, permanently masking re-inserted rows. [[bumpSeq]]
-    * passes `strictEmpty = true` and fails loudly instead.
-    */
-  def readSeq(spark: SparkSession, indexPath: String, strictEmpty: Boolean = false): Long = {
-    val p = s"$indexPath/$SeqDir"
-    if (!exists(spark, p)) 0L
-    else {
-      // explicit schema + headOption: no schema inference, and the
-      // mid-overwrite window reads as an empty collect rather than a
-      // schema-inference failure
-      val head = spark.read
-        .schema(StructType(Seq(StructField("seq", LongType))))
-        .parquet(p)
-        .collect()
-        .headOption
-      head.map(_.getLong(0)).getOrElse {
-        if (strictEmpty)
-          throw new IllegalStateException(
-            s"$p exists but holds no seq row — a crashed writeSeq overwrite. " +
-              "Refusing to restart the counter at 0 (new seqs would fall below " +
-              "stored tombstone del_seq values and mask re-inserted rows). " +
-              "Repair with IndexState.writeSeq(path, n) where n is at least the " +
-              "max seq across the index's data rows, tombstones, and merge log.")
-        0L
-      }
-    }
-  }
-
-  def writeSeq(spark: SparkSession, indexPath: String, seq: Long): Unit = {
-    import spark.implicits._
-    Seq(seq).toDF("seq").coalesce(1).write.mode("overwrite").parquet(s"$indexPath/$SeqDir")
-  }
-
-  /** Reserve the next mutation sequence number (persists it immediately:
-    * a crash between the bump and the data write burns a number, which is
-    * harmless — gaps carry no meaning).
-    */
-  def bumpSeq(spark: SparkSession, indexPath: String): Long = {
-    val next = readSeq(spark, indexPath, strictEmpty = true) + 1L
-    writeSeq(spark, indexPath, next)
-    next
   }
 
   /** The log kind of the tombstone files (rows `(id, del_seq)`, flat under
@@ -370,7 +316,7 @@ object IndexState {
     * empty-rewrite guard impossible to omit from any one index family.
     *
     * A refusal is memoized at the index's current mutation seq (its log
-    * head, or `_graft_seq` for a merge-pointer index): until a mutation
+    * head's): until a mutation
     * bumps the seq, re-running the policy skips the (index-scan +
     * rewrite) attempt entirely — a fully-deleted index under a steady CDC
     * feed pays the refused rewrite once, not per batch. The promoted
@@ -380,9 +326,7 @@ object IndexState {
     * happened.
     */
   def compactAndSwap(spark: SparkSession, path: String, compact: String => Unit): Boolean = {
-    val data = dataPath(spark, path)
-    val seqNow =
-      if (exists(spark, s"$data/${IndexLog.Dir}")) IndexLog.head(spark, data).seq else readSeq(spark, path)
+    val seqNow = IndexLog.head(spark, dataPath(spark, path)).seq
     if (refusedSeq(spark, path).contains(seqNow)) return false
     val staging = path + StagingSuffix
     deleteDir(spark, staging) // abandoned residue from a crashed attempt

@@ -39,10 +39,7 @@ final class StreamSync(
     tuning: IncrementalEngine.Tuning = IncrementalEngine.Tuning()
 ) {
 
-  val engine = new IncrementalEngine(
-    root, catalog, load,
-    tuning.inSetThreshold, tuning.rangeBracket, tuning.partitionPrune,
-    tuning.layoutRoot, tuning.partitionIdCollectCap)
+  val engine = new IncrementalEngine(root, catalog, load, tuning)
 
   /** Plugins run on every indexed document — snapshot AND incremental — as
     * in the reference (`sync.py:1571-1574`); a dropped doc contributes

@@ -88,7 +88,7 @@ class PlanSpec extends SparkSpec {
     // threshold 0 forces the broadcast-semi path even for a tiny batch
     val engine = new IncrementalEngine(
       SchemaDef.parseNodes(Fixtures.flagship), Catalog.testData, load,
-      inSetThreshold = 0, rangeBracket = true)
+      IncrementalEngine.Tuning(inSetThreshold = 0, rangeBracket = true))
     val changes = graft.cdc.Changes.of(
       spark,
       Seq(
@@ -122,7 +122,7 @@ class PlanSpec extends SparkSpec {
     // re-reads all three payload tables whole
     val engine = new IncrementalEngine(
       SchemaDef.parseNodes(Fixtures.flagship), Catalog.testData, pload,
-      inSetThreshold = 0, partitionPrune = prune)
+      IncrementalEngine.Tuning(inSetThreshold = 0, partitionPrune = prune))
     val changes = graft.cdc.Changes.of(
       spark,
       Seq(
@@ -171,12 +171,13 @@ class PlanSpec extends SparkSpec {
     }
     val engine = new IncrementalEngine(
       SchemaDef.parseNodes(Fixtures.through), Catalog.testData, pload,
-      inSetThreshold = 0,
-      partitionPrune = Map(
-        "part"     -> PartitionPrune("_kp", 64),
-        "lineitem" -> PartitionPrune("_kp", 64),
-        "supplier" -> PartitionPrune("_kp", 4)
-      ))
+      IncrementalEngine.Tuning(
+        inSetThreshold = 0,
+        partitionPrune = Map(
+          "part"     -> PartitionPrune("_kp", 64),
+          "lineitem" -> PartitionPrune("_kp", 64),
+          "supplier" -> PartitionPrune("_kp", 4)
+        )))
     val changes = graft.cdc.Changes.of(
       spark,
       Seq(
@@ -225,12 +226,13 @@ class PlanSpec extends SparkSpec {
     }
     val engine = new IncrementalEngine(
       SchemaDef.parseNodes(Fixtures.nested), Catalog.testData, pload,
-      inSetThreshold = 0,
-      partitionPrune = Map(
-        "orders"   -> PartitionPrune("_kp", 128),
-        "lineitem" -> PartitionPrune("_kp", 128),
-        "part"     -> PartitionPrune("_kp", 16)
-      ))
+      IncrementalEngine.Tuning(
+        inSetThreshold = 0,
+        partitionPrune = Map(
+          "orders"   -> PartitionPrune("_kp", 128),
+          "lineitem" -> PartitionPrune("_kp", 128),
+          "part"     -> PartitionPrune("_kp", 16)
+        )))
     val changes = graft.cdc.Changes.of(
       spark,
       Seq(
@@ -278,7 +280,7 @@ class PlanSpec extends SparkSpec {
     val ex = intercept[IllegalArgumentException] {
       new IncrementalEngine(
         SchemaDef.parseNodes(Fixtures.flagship), Catalog.testData, pload,
-        partitionPrune = Map("lineitem" -> PartitionPrune("_kp", 128)))
+        IncrementalEngine.Tuning(partitionPrune = Map("lineitem" -> PartitionPrune("_kp", 128))))
     }
     assert(ex.getMessage.contains("not partitioned by"), ex.getMessage)
     graft.util.TempDirs.delete(java.nio.file.Paths.get(dir))
@@ -308,8 +310,9 @@ class PlanSpec extends SparkSpec {
     assert(prune("part") == HashBucketPrune("_hb", 32))
     val engine = new IncrementalEngine(
       SchemaDef.parseNodes(Fixtures.through), Catalog.testData, pload,
-      inSetThreshold = 0,
-      partitionPrune = prune)
+      IncrementalEngine.Tuning(
+        inSetThreshold = 0,
+        partitionPrune = prune))
     val changes = graft.cdc.Changes.of(
       spark,
       Seq(
@@ -386,12 +389,13 @@ class PlanSpec extends SparkSpec {
       ploadCache.getOrElseUpdate(t, spark.read.parquet(s"$dir/$t"))
     val engine = new IncrementalEngine(
       tree, cat, pload,
-      inSetThreshold = 0,
-      partitionPrune = Map(
-        "orders"   -> HashBucketPrune("_hb", 32),
-        "lineitem" -> HashBucketPrune("_hb", 32),
-        "customer" -> HashBucketPrune("_hb", 8)
-      ))
+      IncrementalEngine.Tuning(
+        inSetThreshold = 0,
+        partitionPrune = Map(
+          "orders"   -> HashBucketPrune("_hb", 32),
+          "lineitem" -> HashBucketPrune("_hb", 32),
+          "customer" -> HashBucketPrune("_hb", 8)
+        )))
     val changes = graft.cdc.Changes.of(
       spark,
       Seq(
@@ -438,8 +442,9 @@ class PlanSpec extends SparkSpec {
     }
     val engine = new IncrementalEngine(
       SchemaDef.parseNodes(Fixtures.compositePk), Catalog.testData, pload,
-      inSetThreshold = 0,
-      partitionPrune = Map("lineitem" -> HashBucketPrune("_hb", 16)))
+      IncrementalEngine.Tuning(
+        inSetThreshold = 0,
+        partitionPrune = Map("lineitem" -> HashBucketPrune("_hb", 16))))
     val changes = graft.cdc.Changes.of(
       spark,
       Seq(
@@ -483,7 +488,7 @@ class PlanSpec extends SparkSpec {
     val ex = intercept[IllegalArgumentException] {
       new IncrementalEngine(
         SchemaDef.parseNodes(Fixtures.flagship), Catalog.testData, pload,
-        partitionPrune = Map("lineitem" -> HashBucketPrune("_hb", 32)))
+        IncrementalEngine.Tuning(partitionPrune = Map("lineitem" -> HashBucketPrune("_hb", 32))))
     }
     assert(ex.getMessage.contains("not hash-bucketed by"), ex.getMessage)
     graft.util.TempDirs.delete(java.nio.file.Paths.get(dir))
@@ -540,7 +545,7 @@ class PlanSpec extends SparkSpec {
       })
     val engine = new IncrementalEngine(
       SchemaDef.parseNodes(Fixtures.flagship), Catalog.testData, pload,
-      inSetThreshold = 0, layoutRoot = Some(dir))
+      IncrementalEngine.Tuning(inSetThreshold = 0, layoutRoot = Some(dir)))
     val changes = graft.cdc.Changes.of(
       spark,
       Seq(
@@ -618,7 +623,7 @@ class PlanSpec extends SparkSpec {
     // values; the unparseable id must poison the derivation, not be dropped
     val driverEng = new IncrementalEngine(
       tree, cat, pload,
-      partitionPrune = Map("orders" -> HashBucketPrune("_hb", 8)))
+      IncrementalEngine.Tuning(partitionPrune = Map("orders" -> HashBucketPrune("_hb", 8))))
     val gotDriver = driverEng.process(ambiguous, Lineage.empty(spark))
       .orderBy("op", "_id").collect().toSeq
     assert(gotDriver == want, s"driver derivation dropped the delimiter-bearing key:\n$gotDriver\nvs\n$want")
@@ -626,8 +631,9 @@ class PlanSpec extends SparkSpec {
     // mis-arity sentinel must poison it the same way
     val distEng = new IncrementalEngine(
       tree, cat, pload,
-      inSetThreshold = 0, partitionIdCollectCap = 0,
-      partitionPrune = Map("orders" -> HashBucketPrune("_hb", 8)))
+      IncrementalEngine.Tuning(
+        inSetThreshold = 0, partitionIdCollectCap = 0,
+        partitionPrune = Map("orders" -> HashBucketPrune("_hb", 8))))
     val gotDist = distEng.process(ambiguous, Lineage.empty(spark))
       .orderBy("op", "_id").collect().toSeq
     assert(gotDist == want, s"distributed derivation dropped the delimiter-bearing key:\n$gotDist\nvs\n$want")
@@ -670,7 +676,7 @@ class PlanSpec extends SparkSpec {
     }
     val engine = new IncrementalEngine(
       SchemaDef.parseNodes(Fixtures.flagship), Catalog.testData, pload,
-      layoutRoot = Some(dir))
+      IncrementalEngine.Tuning(layoutRoot = Some(dir)))
     val changes = graft.cdc.Changes.of(
       spark, Seq(("UPDATE", "orders", null, """{"o_orderkey": 5}""", 1L)))
     val doc = engine.reassemble(engine.affectedRoots(changes, Lineage.empty(spark)))

@@ -43,25 +43,6 @@ class IndexStateSpec extends SparkSpec {
     graft.util.TempDirs.delete(java.nio.file.Paths.get(dir))
   }
 
-  test("bumpSeq refuses an existing-but-empty seq sidecar; readers still see 0") {
-    val dir = graft.util.TempDirs.scratch("idxstate-emptyseq").toString
-    IndexState.writeSeq(spark, dir, 7L)
-    assert(IndexState.bumpSeq(spark, dir) == 8L)
-    // simulate a crashed writeSeq overwrite: the sidecar dir survives with
-    // no data files — a durable state, not the transient reader window
-    val seqDir = new java.io.File(s"$dir/${IndexState.SeqDir}")
-    seqDir.listFiles().foreach(f => assert(f.delete(), s"could not empty $f"))
-    assert(IndexState.readSeq(spark, dir) == 0L, "pure readers keep the transient-window default")
-    // the mutator must NOT silently restart at 0: new upsert seqs would fall
-    // below stored tombstone del_seq values and mask re-inserted rows
-    val e = intercept[IllegalStateException] { IndexState.bumpSeq(spark, dir) }
-    assert(e.getMessage.contains("crashed writeSeq"), e.getMessage)
-    // operator repair path: rewrite the counter, mutations resume
-    IndexState.writeSeq(spark, dir, 8L)
-    assert(IndexState.bumpSeq(spark, dir) == 9L)
-    graft.util.TempDirs.delete(java.nio.file.Paths.get(dir))
-  }
-
   test("LSH delete-everything feed: empty-staging swap refused, index stays probe-able") {
     def mkVec(i: Long) =
       Array.tabulate(16)(j => (math.cos((i % 4) * 3 + j) + 0.05 * math.sin(i * 17 + j)).toFloat)

@@ -233,4 +233,30 @@ class ClusterStreamSpec extends SparkSpec {
       graft.util.TempDirs.delete(java.nio.file.Paths.get(dir))
     }
   }
+
+  test("seeding over an existing index starts from empty: equal to a fresh build") {
+    val dir = Files.createTempDirectory("graft-cstream-reseed").toString
+    val (sig, map) = (s"$dir/sig", s"$dir/map")
+    val m = SignatureIndex.Model(
+      portable = false, shingleN = 3, bands = 16, rowsPerBand = 4,
+      threshold = 0.5, maxBucket = 1000, buckets = 8)
+    def keys(p: String): Set[(Long, String)] =
+      SignatureIndex.storedKeys(spark, p).collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    val first = corpusDf.filter(col("id") < 12L)
+    ClusterStream.seed(first, sig, map, "id", "text", m, mapBuckets = 8)
+    // promote a generation under both paths: a re-seed must clear those too
+    assert(SignatureIndex.compact(spark, sig))
+    assert(ClusterMap.rebuild(spark, map, Seq.empty[(Long, Long)].toDF("id_a", "id_b"), first.select(col("id"))))
+    // a disjoint corpus seeded at the same paths equals a fresh build
+    val second = corpusDf.filter(col("id") >= 12L)
+    ClusterStream.seed(second, sig, map, "id", "text", m, mapBuckets = 8)
+    ClusterStream.seed(second, s"$dir/sig2", s"$dir/map2", "id", "text", m, mapBuckets = 8)
+    assert(assignments(map) == assignments(s"$dir/map2"))
+    assert(keys(sig) == keys(s"$dir/sig2"))
+    assert(assignments(map).map(_._1).min == 12L)
+    // and an empty corpus re-seeds to empty structures
+    ClusterStream.seed(corpusDf.limit(0), sig, map, "id", "text", m, mapBuckets = 8)
+    assert(assignments(map).isEmpty && keys(sig).isEmpty)
+    graft.util.TempDirs.delete(java.nio.file.Paths.get(dir))
+  }
 }

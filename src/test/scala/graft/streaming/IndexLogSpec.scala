@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.ann.Ann
+import graft.dedup.{ClusterMap, Dedup, SignatureIndex}
 import graft.functions.Retrieval
 import graft.sources.{IndexLog, IndexState}
 import graft.sources.Crashes.{crashAt, pointsOf}
@@ -9,10 +10,10 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The index log's commit protocol ([[graft.sources.IndexLog]]) under the
-  * streaming maintainers' batches: a mutation that crashes
-  * anywhere before its entry changes nothing visible and its replay equals
-  * a rebuild; a probe racing mutations reads one entry; an index written
-  * before the log asks for a rebuild.
+  * streaming maintainers' batches and the dedup indexes' mutations: a
+  * mutation that crashes anywhere before its entry changes nothing visible
+  * and its replay equals a rebuild; a probe racing mutations reads one
+  * entry; an index written before the log asks for a rebuild.
   */
 class IndexLogSpec extends SparkSpec {
   import spark.implicits._
@@ -49,6 +50,23 @@ class IndexLogSpec extends SparkSpec {
   private def visible(index: String, kind: String, idCol: String, cols: String*): Set[Seq[Any]] = {
     val (data, head) = IndexState.open(spark, index)
     rowsOf(IndexState.visibleUnder(head.scan(spark, data, kind), data, head, idCol).select(cols.map(col): _*))
+  }
+
+  /** Rows of `df` with their multiplicity: a file adopted twice shows. */
+  private def bagOf(df: DataFrame): Map[Seq[Any], Int] =
+    df.collect().toSeq.map(_.toSeq).groupBy(identity).view.mapValues(_.size).toMap
+
+  /** The earlier layout of a logged index: its data files plus
+    * `_graft_seq`, and no `_graft_log`.
+    */
+  private def dropLog(p: String): Unit = {
+    graft.util.TempDirs.delete(java.nio.file.Paths.get(s"$p/${IndexLog.Dir}"))
+    Seq(0L).toDF("seq").coalesce(1).write.parquet(s"$p/_graft_seq")
+  }
+
+  private def rebuildAsked(what: String, builder: String = "rebuild")(f: => Any): Unit = {
+    val e = intercept[IllegalStateException](f)
+    assert(e.getMessage.contains("rebuild") && e.getMessage.contains(builder), s"$what: ${e.getMessage}")
   }
 
   private final case class Surface(
@@ -179,16 +197,7 @@ class IndexLogSpec extends SparkSpec {
   }
 
   test("an index written before the log asks for a rebuild on probe and mutation") {
-    // the earlier layout: the same data files plus `_graft_seq` and, for
-    // BM25, `_graft_stats` — and no `_graft_log`
-    def dropLog(p: String): Unit = {
-      graft.util.TempDirs.delete(java.nio.file.Paths.get(s"$p/${IndexLog.Dir}"))
-      IndexState.writeSeq(spark, p, 0L)
-    }
-    def rebuildAsked(what: String)(f: => Any): Unit = {
-      val e = intercept[IllegalStateException](f)
-      assert(e.getMessage.contains("rebuild"), s"$what: ${e.getMessage}")
-    }
+    // the earlier layout (see dropLog) plus, for BM25, `_graft_stats`
     val text = graft.util.TempDirs.scratch("log-legacy-bm25").toString
     Retrieval.writeBm25Index(corpus(base), "id", "text", text, buckets = 4)
     dropLog(text)
@@ -205,5 +214,127 @@ class IndexLogSpec extends SparkSpec {
     rebuildAsked("lsh probe")(Ann.lshTopKIndexed(vecs, vecQueries, "qid", "embedding", 5, planes = 4, dim = 8))
     rebuildAsked("lsh fused mutation")(AnnStream.applyLshTier(batch, vecs, "id", "embedding", None, fused = true))
     rebuildAsked("lsh delete")(Ann.deleteFromLshIndex(spark, vecs, Seq(1L).toDF("id")))
+  }
+
+  // ---- the dedup indexes ------------------------------------------------
+
+  private def clusterMapState(p: String): Map[String, Any] = {
+    val (data, head) = IndexState.open(spark, p)
+    Map(
+      "generation" -> (data != p),
+      "assignments" -> ClusterMap.assignments(spark, p).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap,
+      "members" -> bagOf(head.scan(spark, data, "members").select("id", "root", "syn", "bucket")),
+      "merges" -> bagOf(head.scan(spark, data, "merges").select("from_root", "to_root", "seq")))
+  }
+
+  /** [[Dedup.connectedComponents]] over `pairs`, with `ids` as singletons. */
+  private def ccOf(pairs: Seq[(Long, Long)], ids: Seq[Long]): Map[Long, Long] = {
+    val cc = Dedup.connectedComponents(pairs.toDF("id_a", "id_b")).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    ids.map(i => i -> cc.getOrElse(i, i)).toMap
+  }
+
+  /** Crash `mutate` on a fresh `build()` at each point it reaches: the crash
+    * changes nothing `state` shows, and the replay's state equals the
+    * uncrashed run's, which is returned. `state` counts rows, so a replay
+    * that also adopted the crashed run's files differs.
+    */
+  private def dedupCrashMatrix(
+      build: () => String,
+      mutate: String => Unit,
+      state: String => Map[String, Any],
+      points: Set[String]
+  ): Map[String, Any] = {
+    val clean = { val p = build(); mutate(p); state(p) }
+    val reached = { val p = build(); pointsOf(mutate(p)) }
+    assert(reached.map(_._1).toSet == points, reached)
+    assert(reached.count(_._1 == "commit") == 1, reached)
+    val before = state(build())
+    reached.foreach { case (point, nth) =>
+      val p = build()
+      crashAt(point, nth)(mutate(p))
+      assert(state(p) == before, s"$point #$nth: a crash before the commit changed the index")
+      mutate(p)
+      state(p).foreach { case (k, v) =>
+        assert(v == clean(k), s"$point #$nth: $k after the replay differs from one delivery")
+      }
+    }
+    clean
+  }
+
+  private def applyPairs(p: String, ids: Seq[Long], pairs: Seq[(Long, Long)]): Unit =
+    ClusterMap.applyBatch(spark, p, pairs.toDF("id_a", "id_b"), ids.toDF("id"))
+
+  test("crash matrix (cluster map, fused tier): a batch that merges stored clusters and adds members") {
+    val stored = Seq(Seq(10L, 11L) -> Seq((10L, 11L)), Seq(20L, 21L) -> Seq((20L, 21L)))
+    // doc 5 bridges both stored clusters and doc 30 joins through it
+    val (ids, pairs) = (Seq(5L, 30L), Seq((5L, 11L), (5L, 21L), (30L, 5L)))
+    def build(): String = {
+      val p = graft.util.TempDirs.scratch("log-crash-cmap").toString
+      ClusterMap.init(spark, p, buckets = 4)
+      stored.foreach { case (i, ps) => applyPairs(p, i, ps) }
+      p
+    }
+    val clean = dedupCrashMatrix(build, applyPairs(_, ids, pairs), clusterMapState,
+      Set("write:members", "write:merges", "commit"))
+    assert(clean("assignments") == ccOf(stored.flatMap(_._2) ++ pairs, stored.flatMap(_._1) ++ ids))
+    // the batch commits at seq 3 (init 0, two stored batches): both
+    // dethroned roots point down to 5
+    assert(clean("merges") == Map(Seq(10L, 5L, 3L) -> 1, Seq(20L, 5L, 3L) -> 1))
+  }
+
+  test("crash matrix (cluster map compaction): a crashed compaction leaves the generation, the replay promotes") {
+    // a chain 30 -> 20 -> 10: two pointers over four members
+    val batches = Seq(Seq(30L, 31L) -> Seq((30L, 31L)), Seq(20L) -> Seq((20L, 31L)), Seq(10L) -> Seq((10L, 20L)))
+    def build(): String = {
+      val p = graft.util.TempDirs.scratch("log-crash-cmap-compact").toString
+      ClusterMap.init(spark, p, buckets = 4)
+      batches.foreach { case (i, ps) => applyPairs(p, i, ps) }
+      p
+    }
+    val clean = dedupCrashMatrix(build, p => { assert(ClusterMap.maybeCompact(spark, p, maxMergeRatio = 0.2)); () },
+      clusterMapState, Set("write:members", "commit"))
+    assert(clean("generation") == true && clean("merges") == Map.empty)
+    assert(clean("assignments") == ccOf(batches.flatMap(_._2), batches.flatMap(_._1)))
+  }
+
+  test("crash matrix (signature index append): the replay stores exactly the corpus's band keys") {
+    val m = SignatureIndex.Model(portable = false, shingleN = 3, bands = 8, rowsPerBand = 2,
+      threshold = 0.5, maxBucket = 1000, buckets = 4)
+    val stored = corpus(base).select("id", "text")
+    val arriving = Seq((5L, "filler join fresh"), (6L, "window spark rewritten")).toDF("id", "text")
+    def build(): String = {
+      val p = graft.util.TempDirs.scratch("log-crash-sig").toString
+      SignatureIndex.write(stored, p, "id", "text", m)
+      p
+    }
+    val clean = dedupCrashMatrix(build,
+      p => SignatureIndex.appendKeys(spark, p, m, SignatureIndex.bandKeys(arriving, "id", "text", m)),
+      p => Map("keys" -> bagOf(SignatureIndex.storedKeys(spark, p))),
+      Set("write:keys", "commit"))
+    assert(clean("keys").asInstanceOf[Map[Seq[Any], Int]].keySet ==
+      rowsOf(SignatureIndex.bandKeys(stored.unionByName(arriving), "id", "text", m).select("id", "key")))
+  }
+
+  test("a cluster map or signature index written before the log asks for a rebuild on apply and on read") {
+    val map = graft.util.TempDirs.scratch("log-legacy-cmap").toString
+    ClusterMap.init(spark, map, buckets = 4)
+    applyPairs(map, Seq(10L, 11L), Seq((10L, 11L)))
+    dropLog(map)
+    Seq(4).toDF("buckets").coalesce(1).write.parquet(s"$map/_graft_model")
+    rebuildAsked("cluster map apply", "ClusterMap.init")(applyPairs(map, Seq(5L), Seq((5L, 11L))))
+    rebuildAsked("cluster map assignments", "ClusterMap.init")(ClusterMap.assignments(spark, map))
+    rebuildAsked("cluster map resolve", "ClusterMap.init")(ClusterMap.resolve(spark, map, Seq(10L).toDF("id")))
+    rebuildAsked("cluster map compaction", "ClusterMap.init")(ClusterMap.maybeCompact(spark, map))
+
+    val m = SignatureIndex.Model(portable = true, shingleN = 3, bands = 8, rowsPerBand = 2,
+      threshold = 0.5, maxBucket = 1000, buckets = 4)
+    val sig = graft.util.TempDirs.scratch("log-legacy-sig").toString
+    SignatureIndex.write(corpus(base).select("id", "text"), sig, "id", "text", m)
+    dropLog(sig)
+    val keys = SignatureIndex.bandKeys(corpus(after).select("id", "text"), "id", "text", m)
+    rebuildAsked("signature append", "SignatureIndex.write")(SignatureIndex.appendKeys(spark, sig, m, keys))
+    rebuildAsked("signature probe", "SignatureIndex.write")(SignatureIndex.candidates(spark, sig, m, keys))
+    rebuildAsked("signature keys", "SignatureIndex.write")(SignatureIndex.storedKeys(spark, sig))
+    rebuildAsked("signature compaction", "SignatureIndex.write")(SignatureIndex.compact(spark, sig))
   }
 }
