@@ -30,7 +30,7 @@ final class GraftSync(
     indexDir: String,
     val plugins: Seq[DocTransform] = Nil,
     guardUnchangedUpdates: Boolean = false,
-    private[graft] val tuning: IncrementalEngine.Tuning = IncrementalEngine.Tuning()
+    private[graft] val tuning: Tuning = Tuning()
 ) {
 
   /** Base-table → view-node remap (C9, `pgsync/sync.py:1843-1852`): a node
@@ -382,7 +382,7 @@ object GraftSync {
       indexDir: String,
       plugins: Seq[DocTransform] = Nil,
       guardUnchangedUpdates: Boolean = false,
-      tuning: IncrementalEngine.Tuning = IncrementalEngine.Tuning()
+      tuning: Tuning = Tuning()
   ): GraftSync =
     new GraftSync(spark, SchemaDef.parse(schemaJson), catalog, load, indexDir, plugins,
       guardUnchangedUpdates, tuning)

@@ -1,8 +1,10 @@
 package graft.cdc
 
+import graft.Tuning
 import graft.assemble.DocAssembler
 import graft.catalog.{Catalog, JoinSpec}
 import graft.schema.Node
+import graft.util.Tier
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
@@ -32,17 +34,16 @@ import org.apache.spark.sql.types.StringType
   *     upserts by `_id` are idempotent (the reference's own delivery
   *     guarantee, `sync.py:1947-1983`).
   *
-  * @param tuning scan-restriction thresholds and partition-prune specs
-  *   ([[IncrementalEngine.Tuning]])
+  * @param tuning tier ceilings and partition-prune specs ([[graft.Tuning]])
   */
 final class IncrementalEngine(
     root: Node,
     catalog: Catalog,
     load: String => DataFrame,
-    tuning: IncrementalEngine.Tuning = IncrementalEngine.Tuning()
+    tuning: Tuning = Tuning()
 ) {
 
-  import tuning.{inSetThreshold, layoutRoot, partitionIdCollectCap, partitionPrune, rangeBracket}
+  import tuning.{collectCeiling, inSetThreshold, layoutRoot, partitionPrune}
 
   private val rootPks = DocAssembler.primaryKeys(root, catalog)
 
@@ -568,13 +569,6 @@ final class IncrementalEngine(
       .foreach(msg => require(false, s"partitionPrune($t): $msg"))
   }
 
-  /** Ceiling on literal partition values pushed as a static filter. A batch
-    * touching more partitions than this spans most of the corpus anyway, so
-    * the filter would prune little while bloating the plan — fall back to
-    * the unpruned scan.
-    */
-  private val PartitionLiteralCap = 4096
-
   /** Re-assemble the documents for the given affected root ids: the same
     * single [[DocAssembler]] plan with the ROOT scan — and every root-keyed
     * child scan — restricted to the id set.
@@ -586,25 +580,9 @@ final class IncrementalEngine(
     * a broadcast semi-join. Composite PKs use the `_id` concat expression.
     */
   def reassemble(affected: DataFrame): DataFrame = {
-    val ids: Option[Array[String]] = {
-      val collected = affected.select(col("_id")).limit(inSetThreshold + 1).collect()
-      if (collected.length > inSetThreshold) None
-      else Some(collected.map(_.getString(0)))
-    }
-
-    // min/max of the affected ids, memoized per key type — restrict() runs
-    // for the root scan AND each root-keyed child scan, and each agg is an
-    // eager job over the affected-id plan
-    val rangeMemo = scala.collection.mutable.Map.empty[
-      org.apache.spark.sql.types.DataType, Option[(Any, Any)]]
-    def keyRange(dt: org.apache.spark.sql.types.DataType): Option[(Any, Any)] =
-      rangeMemo.getOrElseUpdate(dt, {
-        val r = affected
-          .select(col("_id").cast(dt).as("__k"))
-          .agg(min(col("__k")), max(col("__k")))
-          .collect().head
-        if (r.isNullAt(0)) None else Some((r.get(0), r.get(1)))
-      })
+    def affectedIds(ceiling: Int): Option[Array[String]] =
+      Tier.within(affected.select(col("_id")), ceiling).map(_.map(_.getString(0)))
+    val ids = affectedIds(inSetThreshold)
 
     // Touched partition values per pruned table, memoized per batch,
     // derived DRIVER-SIDE from one bounded id collect. The driver expression
@@ -615,17 +593,13 @@ final class IncrementalEngine(
     // interpreted XxHash64Function over the id parsed back to the root PK
     // dtypes — so driver- and write-side partition values agree for every
     // supported key: the affected set is batch-sized by construction, so up
-    // to the established bounded-collect ceiling (65 536 ids ≈ 0.5 MB) ONE
-    // collect of the already-cached set serves every pruned table —
-    // per-table distributed distinct jobs measured as most of the
-    // partitioned path's per-batch overhead at sf0.1. Larger sets fall back
-    // to one tiny distinct job per distinct spec. `Some(vals)` → static
-    // partition filter; `None` → unpruned scan (cap exceeded — the batch
-    // spans most of the corpus anyway).
-    lazy val idsForPartVals: Option[Array[String]] = ids.orElse {
-      val c = affected.select(col("_id")).limit(partitionIdCollectCap + 1).collect()
-      if (c.length > partitionIdCollectCap) None else Some(c.map(_.getString(0)))
-    }
+    // to the collect ceiling ONE collect of the already-cached set serves
+    // every pruned table — per-table distributed distinct jobs measured as
+    // most of the partitioned path's per-batch overhead at sf0.1. Larger
+    // sets fall back to one tiny distinct job per distinct spec.
+    // `Some(vals)` → static partition filter; `None` → unpruned scan (cap
+    // exceeded — the batch spans most of the corpus anyway).
+    lazy val idsForPartVals: Option[Array[String]] = ids.orElse(affectedIds(collectCeiling))
     // the affected `_id` cast back to the typed root-key domain, for the
     // distributed fallback (composite ids split on the delimiter first)
     def idKeyExprs: Seq[Column] =
@@ -635,6 +609,10 @@ final class IncrementalEngine(
           split(col("_id"), java.util.regex.Pattern.quote(DocAssembler.IdDelimiter))
         rootKeyDts.zipWithIndex.map { case (dt, i) => parts.getItem(i).cast(dt) }
       }
+    // the distinct non-null `__p` values of `df`, up to the literal cap
+    def partValsOf(df: DataFrame): Option[Seq[Long]] =
+      Tier.within(df.filter(col("__p").isNotNull).distinct(), Tuning.PartitionLiteralCap)
+        .map(_.map(_.getLong(0)).toSeq)
     val partValsMemo = scala.collection.mutable.Map.empty[String, Option[Seq[Long]]]
     def affectedPartVals(table: String, pp: IncrementalEngine.PartitionPrune): Option[Seq[Long]] =
       partValsMemo.getOrElseUpdate(
@@ -674,17 +652,9 @@ final class IncrementalEngine(
                   when(size(parts) === lit(rootPks.size), base).otherwise(lit(-1L))
                 }
               }
-              val collected = affected
-                .select(pv.as("__p"))
-                .filter(col("__p").isNotNull)
-                .distinct()
-                .limit(PartitionLiteralCap + 1)
-                .collect()
-                .map(_.getLong(0))
-                .toSeq
-              if (collected.contains(-1L)) None else Some(collected)
+              partValsOf(affected.select(pv.as("__p"))).filterNot(_.contains(-1L))
           }
-          vals.filter(_.size <= PartitionLiteralCap)
+          vals.filter(_.size <= Tuning.PartitionLiteralCap)
         }
       )
     def partFilter(
@@ -720,15 +690,9 @@ final class IncrementalEngine(
           }
           prunedBase.filter(col(keyCol).isin(lits: _*))
         case None =>
-          // oversized sets: broadcast semi-join; optionally bracketed by a
-          // pushable min/max range on the key (see `rangeBracket`).
+          // oversized sets: broadcast semi-join
           val typed = affected.select(col("_id").cast(dt).as(keyCol))
-          val ranged =
-            if (!rangeBracket) prunedBase
-            else keyRange(dt).fold(prunedBase) { case (lo, hi) =>
-              prunedBase.filter(col(keyCol).between(lit(lo), lit(hi)))
-            }
-          ranged.join(broadcast(typed), Seq(keyCol), "left_semi")
+          prunedBase.join(broadcast(typed), Seq(keyCol), "left_semi")
       }
     }
 
@@ -757,19 +721,7 @@ final class IncrementalEngine(
     // dimPartVals
     lazy val dimKeySource: DataFrame = rootRestrict(load(root.table))
     def dimPartVals(t: String, pp: IncrementalEngine.PartitionPrune, rootFk: String): Option[Seq[Long]] =
-      partValsMemo.getOrElseUpdate(
-        t, {
-          val vals = dimKeySource
-            .select(pp.partValue(Seq(col(rootFk))).as("__p"))
-            .filter(col("__p").isNotNull)
-            .distinct()
-            .limit(PartitionLiteralCap + 1)
-            .collect()
-            .map(_.getLong(0))
-            .toSeq
-          if (vals.size > PartitionLiteralCap) None else Some(vals)
-        }
-      )
+      partValsMemo.getOrElseUpdate(t, partValsOf(dimKeySource.select(pp.partValue(Seq(col(rootFk))).as("__p"))))
 
     // Pruned many-to-many far sides derive their touched partitions from the
     // RESTRICTED through scan's far-FK values — the dim pattern one hop
@@ -800,18 +752,7 @@ final class IncrementalEngine(
         throughFarFk: String
     ): Option[Seq[Long]] =
       partValsMemo.getOrElseUpdate(
-        t, {
-          val vals = throughKeySource(through)
-            .select(pp.partValue(Seq(col(throughFarFk))).as("__p"))
-            .filter(col("__p").isNotNull)
-            .distinct()
-            .limit(PartitionLiteralCap + 1)
-            .collect()
-            .map(_.getLong(0))
-            .toSeq
-          if (vals.size > PartitionLiteralCap) None else Some(vals)
-        }
-      )
+        t, partValsOf(throughKeySource(through).select(pp.partValue(Seq(col(throughFarFk))).as("__p"))))
 
     val filteredLoad: String => DataFrame = t =>
       prune.get(t).flatMap(pp => rootDimCols.get(t).map((pp, _))) match {
@@ -876,68 +817,6 @@ final class IncrementalEngine(
 }
 
 object IncrementalEngine {
-
-  /** The engine's tuning: the one bundle the constructor and the
-    * user-facing sync surfaces ([[graft.GraftSync]] /
-    * [[graft.streaming.StreamSync]]) take, so a deployment at a
-    * key-partitioned layout gets affected-set partition pruning through the
-    * facade as well as through a hand-built engine.
-    *
-    * @param inSetThreshold affected-id count above which scan restriction
-    *   switches from literal IN filters to broadcast semi-joins. Small sets
-    *   profit from row-group pruning at the scan; large literal lists cost
-    *   more in plan construction/optimization than the pruning returns
-    *   (measured: a 7.5k-value In tripled the batch latency vs the
-    *   broadcast join).
-    * @param rangeBracket when true, oversized affected sets ALSO bracket each
-    *   restricted scan with a pushed min/max range on the key (computed once
-    *   per key type per batch). A large win when change batches cluster in a
-    *   key range over a huge sorted/partitioned table (row groups prune), a
-    *   cost when they span the full key space (the bench's synthetic batches
-    *   do, hence default off — enable for key-clustered production feeds).
-    * @param partitionPrune per-table partition layout specs
-    *   ([[graft.sources.Layout.keyPartitionedWrite]] key ranges or
-    *   [[graft.sources.Layout.hashBucketedWrite]] hash buckets — the latter
-    *   covers uuid/text and composite keys): when a payload table is
-    *   directory-partitioned by a key expression, reassembly derives the
-    *   partition values the affected-key set touches and pushes them as a
-    *   STATIC partition filter, so the payload re-read lists and scans ONLY
-    *   the touched directories. This is the layout answer to the
-    *   scan-bounded incremental floor: without it an oversized affected set
-    *   re-reads the root/child/dim tables whole (scan-only but
-    *   corpus-sized); with it the re-read is bounded by the batch's key
-    *   spread, independent of corpus size. Supported table positions — the
-    *   root, root-keyed children (partitioned by the FK, same key domain),
-    *   single-hop one_to_one dims (partitioned by their PK; touched values
-    *   derived from the pruned root rows' FK column), and many-to-many far
-    *   sides behind a root-keyed through table (partitioned by the join
-    *   key; touched values derived from the pruned THROUGH scan's far-FK
-    *   column) — are validated at engine construction, along with a sampled
-    *   layout-consistency check that the directory values really are the
-    *   layout expression of the assumed key column(s).
-    * @param layoutRoot directory whose per-table `_graft_layout` sidecars
-    *   ([[graft.sources.Layout]] writes) are auto-discovered into prune
-    *   specs (table = child directory name) — the zero-wiring
-    *   configuration: a deployment cannot prune a SUBSET of its tables by
-    *   forgetting a hand-built spec. Discovered specs are accepted only when
-    *   the sidecar's key columns ARE the table's tree-position key and every
-    *   construction-time constraint holds — a layout partitioned on a
-    *   non-key column is silently left unpruned rather than failing the
-    *   engine, because discovery is opportunistic; explicit
-    *   `partitionPrune` entries stay strict AND win over discovered ones.
-    * @param partitionIdCollectCap affected-id count up to which touched
-    *   partitions are derived from ONE driver collect of the cached affected
-    *   set (≈0.5 MB — the engine's bounded-collect ceiling class); larger
-    *   sets fall back to one distinct job per distinct prune spec (tunable
-    *   chiefly so tests can reach the fallback at small batch sizes)
-    */
-  final case class Tuning(
-      inSetThreshold: Int = 1000,
-      rangeBracket: Boolean = false,
-      partitionPrune: Map[String, PartitionPrune] = Map.empty,
-      layoutRoot: Option[String] = None,
-      partitionIdCollectCap: Int = 65536
-  )
 
   /** Partition layout of one payload table, for affected-set partition
     * pruning. Two concrete layouts — fixed-width key ranges

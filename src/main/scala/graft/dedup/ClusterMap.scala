@@ -1,6 +1,8 @@
 package graft.dedup
 
+import graft.Tuning
 import graft.sources.{IndexLog, IndexState}
+import graft.util.Tier
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
@@ -129,57 +131,36 @@ object ClusterMap {
       .filter(col("bucket").isin(buckets: _*))
       .select(col("id"), col("root"), col("syn"))
 
-  /** Pointer-log rows a merge log may hold before [[mergeClosure]] falls
-    * back from the driver-side resolution to the distributed fixpoint. The
-    * log is batch-appended and compaction empties it, so in steady state it
-    * is FAR below this; 65 536 (from_root, to_root) pairs is ~1 MB on the
-    * driver — the engine's established bounded-collect ceiling class.
-    */
-  private[dedup] val InMemClosureRows = 65536
-
-  /** The merge log of `head`, collapsed to one pointer per source root,
-    * followed to a FIXPOINT — `(from_root, to_root)` with `to_root` the
-    * final resolved target. Pointer chains strictly descend (merges always
-    * target a smaller id), so resolution terminates in chain-depth steps
-    * with no cycles.
+  /** The merge log of `head`, collapsed to one pointer per source root
+    * (the smallest target), followed to a FIXPOINT — `(from_root,
+    * to_root)` with `to_root` the final resolved target. Merges always
+    * target a smaller id, so the collapsed pointers form a forest whose
+    * every chain ends at its component's minimum.
     *
     * The log is batch-sized by construction (appends per batch, compaction
     * empties it), so the closure almost always fits the driver: up to
-    * [[InMemClosureRows]] collapsed pointers are collected and resolved in
-    * memory with memoized path compression — one job instead of the
-    * distributed fixpoint's 2-jobs-per-chain-depth, which was the dominant
-    * driver-latency cost of every applyBatch/assignments/resolve call at
-    * micro-batch sizes (round-10 verdict: the 11.5 s
-    * q_dedup_cluster_incr_prod row was mostly this loop's job scheduling);
-    * an entry that lists no pointer file needs no job at all.
-    * The local result returns as a driver-local relation — downstream joins
-    * broadcast it, same as the distributed form's batch-sized frame.
-    * An oversized log (possible only when compaction has been withheld for
-    * many batches) falls back to the distributed loop with per-iteration
-    * lineage truncation, the [[Dedup.connectedComponentsWithStatus]]
-    * discipline.
+    * `collectCeiling` collapsed pointers are collected and resolved by the
+    * driver union-find ([[Dedup.componentMins]], exact by the forest
+    * argument) — one job instead of the distributed fixpoint's
+    * 2-jobs-per-chain-depth, which was the dominant driver-latency cost of
+    * every applyBatch/assignments/resolve call at micro-batch sizes; an
+    * entry that lists no pointer file needs no job at all. The local result
+    * returns as a driver-local relation — downstream joins broadcast it,
+    * same as the distributed form's batch-sized frame. An oversized log
+    * (possible only when compaction has been withheld for many batches)
+    * falls back to pointer doubling — log-of-depth rounds, where min-label
+    * propagation would need one per chain link — with per-iteration lineage
+    * truncation, the [[Dedup.connectedComponentsWithStatus]] discipline.
     */
-  private[dedup] def mergeClosure(spark: SparkSession, dataDir: String, head: IndexLog.Entry): DataFrame = {
+  private[dedup] def mergeClosure(
+      spark: SparkSession, dataDir: String, head: IndexLog.Entry, tuning: Tuning): DataFrame = {
     val collapsed = head.scan(spark, dataDir, Merges)
       .groupBy(col("from_root"))
       .agg(min(col("to_root")).as("to_root"))
-    val pointers = if (head.has(Merges)) collapsed.limit(InMemClosureRows + 1).collect() else Array.empty[Row]
-    if (pointers.length <= InMemClosureRows) {
-      val parent = new java.util.HashMap[Long, Long](pointers.length * 2)
-      pointers.foreach(r => parent.put(r.getLong(0), r.getLong(1)))
-      val memo = new java.util.HashMap[Long, Long](pointers.length * 2)
-      def resolve(x0: Long): Long = {
-        var x = x0
-        val path = scala.collection.mutable.ArrayBuffer.empty[Long]
-        while (parent.containsKey(x) && !memo.containsKey(x)) {
-          path += x
-          x = parent.get(x)
-        }
-        val r = if (memo.containsKey(x)) memo.get(x) else x
-        path.foreach(memo.put(_, r))
-        r
-      }
-      return local(spark, pointers.map(r => Row(r.getLong(0), resolve(r.getLong(0)))), "from_root", "to_root")
+    val pointers = if (head.has(Merges)) Tier.within(collapsed, tuning.collectCeiling) else Some(Array.empty[Row])
+    if (pointers.isDefined) {
+      val mins = Dedup.componentMins(pointers.get.iterator.map(r => (r.getLong(0), r.getLong(1))))
+      return local(spark, pointers.get.map(r => Row(r.getLong(0), mins.get(r.getLong(0)))), "from_root", "to_root")
     }
     var cl = collapsed.localCheckpoint(true)
     var done = false
@@ -233,6 +214,12 @@ object ClusterMap {
     * lookups prune member buckets, the contraction graph has one node per
     * TOUCHED cluster, and the batch commits one file group per touched
     * bucket plus its merge pointers as ONE log entry ([[commitBatch]]).
+    *
+    * `tuning.collectCeiling` splits the tiers: a batch of at most that
+    * many endpoints resolves on the driver. The tier probe scans `pairs`,
+    * so pass a materialized frame (a checkpoint or a driver-local
+    * relation), or the probe re-derives it; [[graft.streaming.ClusterStream]]
+    * passes a checkpointed one.
     */
   def applyBatch(
       spark: SparkSession,
@@ -240,8 +227,19 @@ object ClusterMap {
       pairs: DataFrame,
       newIds: DataFrame,
       maxIter: Int = 10,
-      ccInMemPairs: Int = Dedup.InMemCcPairs
-  ): Unit = {
+      tuning: Tuning = Tuning()
+  ): Unit = applyBatchAt(spark, path, pairs, newIds, maxIter, tuning, tuning)
+
+  /** [[applyBatch]] of a seed: the whole corpus pair set at once, so the
+    * union-find takes the seed ceiling ([[Tuning.seedScale]]).
+    */
+  private[graft] def applySeed(
+      spark: SparkSession, path: String, pairs: DataFrame, newIds: DataFrame, tuning: Tuning): Unit =
+    applyBatchAt(spark, path, pairs, newIds, 10, tuning, tuning.seedScale)
+
+  /** [[applyBatch]] with the union-find of the contraction at `ccTuning`. */
+  private def applyBatchAt(spark: SparkSession, path: String, pairs: DataFrame, newIds: DataFrame, maxIter: Int,
+      tuning: Tuning, ccTuning: Tuning): Unit = {
     val (dataDir, head) = IndexState.open(spark, path)
 
     val endpoints = pairs.select(col("id_a").as("id"))
@@ -262,11 +260,11 @@ object ClusterMap {
     // (corpus-scale seeds past the bounded-collect ceiling) keep the
     // distributed shape below, unchanged.
     val (endpointHead, closure) = graft.util.Par.both(
-      endpoints.limit(InMemClosureRows + 1).collect(),
-      mergeClosure(spark, dataDir, head))
+      Tier.within(endpoints, tuning.collectCeiling),
+      mergeClosure(spark, dataDir, head, tuning))
 
-    if (endpointHead.length <= InMemClosureRows) {
-      applyBatchFused(spark, dataDir, head, pairs, newIds, maxIter, ccInMemPairs, endpointHead, closure)
+    if (endpointHead.isDefined) {
+      applyBatchFused(spark, dataDir, head, pairs, newIds, maxIter, ccTuning, endpointHead.get, closure)
       return
     }
 
@@ -293,7 +291,7 @@ object ClusterMap {
         .filter(col("id_a") =!= col("id_b"))
         .distinct()
 
-      val labels = Dedup.connectedComponents(contracted, maxIter, ccInMemPairs)
+      val labels = Dedup.connectedComponents(contracted, maxIter, ccTuning)
 
       // The contraction nodes that exist in storage, WITHOUT a second member
       // scan: a node is a cur_root, and a cur_root is storage-referenced iff
@@ -375,7 +373,7 @@ object ClusterMap {
     * distributed tier (same resolve → contract → cc → commit stages over
     * the same values), with the batch-sized intermediates held as
     * driver-local relations instead of checkpointed frames. `endpointHead`
-    * is the collected endpoint id set (≤ [[InMemClosureRows]]); `closure`
+    * is the collected endpoint id set (≤ the collect ceiling); `closure`
     * the merge-log closure frame.
     */
   private def applyBatchFused(
@@ -385,7 +383,7 @@ object ClusterMap {
       pairs: DataFrame,
       newIds: DataFrame,
       maxIter: Int,
-      ccInMemPairs: Int,
+      ccTuning: Tuning,
       endpointHead: Array[Row],
       closure: DataFrame
   ): Unit = {
@@ -430,7 +428,7 @@ object ClusterMap {
     // by this tier's ceiling), so the collect is safe even when the cc
     // itself ran distributed
     val labelRows: Array[Row] = {
-      val labels = Dedup.connectedComponents(contracted, maxIter, ccInMemPairs)
+      val labels = Dedup.connectedComponents(contracted, maxIter, ccTuning)
       // the distributed loop returns a localCheckpoint-pinned frame: release
       // its blocks now instead of at driver GC (one leak per stream batch)
       try labels.collect()
@@ -475,7 +473,7 @@ object ClusterMap {
     */
   private def resolvedMembers(spark: SparkSession, dataDir: String, head: IndexLog.Entry): DataFrame =
     collapse(head.scan(spark, dataDir, Members).select(col("id"), col("root"), col("syn")),
-      mergeClosure(spark, dataDir, head))
+      mergeClosure(spark, dataDir, head, Tuning()))
 
   /** Member rows `(id, root, syn)` with each root followed through the
     * pointer `closure`, collapsed to one row per id by min: the resolved
@@ -526,7 +524,7 @@ object ClusterMap {
     */
   def resolve(spark: SparkSession, path: String, ids: DataFrame): DataFrame = {
     val (dataDir, head) = IndexState.open(spark, path)
-    collapse(lookupStored(spark, dataDir, head, ids), mergeClosure(spark, dataDir, head))
+    collapse(lookupStored(spark, dataDir, head, ids), mergeClosure(spark, dataDir, head, Tuning()))
       .filter(col("syn") === 0)
       .select(col("id"), col("root"))
   }
@@ -600,7 +598,7 @@ object ClusterMap {
     // once, so it takes the seed-scale driver union-find ceiling
     val labels = Dedup.connectedComponents(
       pairs.select(col("id_a"), col("id_b")).filter(col("id_a") =!= col("id_b")),
-      maxIter, Dedup.SeedCcPairs)
+      maxIter, Tuning().seedScale)
     // pair endpoints outside `ids` that won their component are materialized
     // as synthetic rows, same as [[applyBatch]]'s foreignWinners: the rebuilt
     // map must uphold the invariant that every referenced root has a member

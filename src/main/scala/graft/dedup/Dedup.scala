@@ -1,6 +1,8 @@
 package graft.dedup
 
+import graft.Tuning
 import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
+import graft.util.Tier
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -1270,9 +1272,9 @@ object Dedup {
   def connectedComponents(
       pairs: DataFrame,
       maxIter: Int = 10,
-      inMemThreshold: Int = InMemCcPairs
+      tuning: Tuning = Tuning()
   ): DataFrame =
-    connectedComponentsWithStatus(pairs, maxIter, inMemThreshold) match {
+    connectedComponentsWithStatus(pairs, maxIter, tuning) match {
       case (labels, converged) =>
         if (!converged)
           log.warn(
@@ -1282,32 +1284,30 @@ object Dedup {
         labels
     }
 
-  /** Pair rows below which [[connectedComponentsWithStatus]] resolves the
-    * components on the DRIVER (union-find with path compression — exact
-    * fixpoint, one collect job) instead of the distributed min-label loop
-    * (2 jobs per propagation round). Batch-sized pair sets — every
-    * [[graft.dedup.ClusterMap.applyBatch]] contraction, every micro-batch's
-    * verified pairs — were paying round-count job-scheduling latency for
-    * graphs of a few hundred edges. 65 536 (id_a, id_b) longs is ~1 MB on
-    * the driver, the engine's bounded-collect ceiling class; corpus-scale
-    * pair sets take the distributed loop unchanged.
+  /** The driver union-find over BIGINT edges `(a, b)`: every endpoint
+    * mapped to the smallest id of its component (path compression, the
+    * smaller root wins each union — an exact fixpoint with no iteration
+    * budget). The driver tier of [[connectedComponentsWithStatus]] and of
+    * [[ClusterMap]]'s merge-pointer closure.
     */
-  private[graft] val InMemCcPairs = 65536
-
-  /** The SEED-scale driver ceiling: a from-scratch seed/rebuild contraction
-    * over a whole (test-scale) corpus is round-latency-bound in the
-    * distributed loop — each propagation round costs two fixed-latency
-    * shuffles regardless of data, and a 10× corpus grows the pair set past
-    * [[InMemCcPairs]] while its components stay shallow (measured: seed
-    * merge/cc 0.04 s → 2.34 s at 10×, the one superlinear seed stage). A
-    * million (id_a, id_b) rows collect at ~50 MB — a deliberate, one-per-
-    * seed exception to the 65 536 bounded-collect ceiling class, taken
-    * only by [[graft.dedup.ClusterMap]]'s seed-shaped entry points. At
-    * true corpus scale the pair set blows past this too and the
-    * distributed loop is then genuinely data-bound, which is the right
-    * tool there.
-    */
-  private[graft] val SeedCcPairs = 1 << 20
+  private[graft] def componentMins(edges: Iterator[(Long, Long)]): java.util.HashMap[Long, Long] = {
+    val parent = new java.util.HashMap[Long, Long]()
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.get(r) != r) r = parent.get(r)
+      var c = x
+      while (c != r) { val n = parent.get(c); parent.put(c, r); c = n }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      parent.putIfAbsent(a, a); parent.putIfAbsent(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent.put(rb, ra) else if (rb < ra) parent.put(ra, rb)
+    }
+    val it = parent.keySet().iterator()
+    while (it.hasNext) find(it.next())
+    parent
+  }
 
   /** As [[connectedComponents]], but also returns whether label propagation
     * converged within `maxIter` — callers that must not split clusters can
@@ -1315,49 +1315,35 @@ object Dedup {
     * released before returning (the small final label set is checkpointed
     * locally to cut its lineage off the freed caches).
     *
-    * Pair sets up to `inMemThreshold` rows with BIGINT ids short-circuit to
-    * an exact driver-side union-find (always "converged" — union-find has
-    * no iteration budget); see [[InMemCcPairs]]. Pass 0 to force the
-    * distributed loop (specs asserting loop behavior do).
+    * Pair sets up to `tuning.collectCeiling` rows with BIGINT ids
+    * short-circuit to the exact driver union-find ([[componentMins]];
+    * always "converged" — union-find has no iteration budget): batch-sized
+    * pair sets — every [[ClusterMap.applyBatch]] contraction, every
+    * micro-batch's verified pairs — were paying round-count
+    * job-scheduling latency for graphs of a few hundred edges. Ceiling 0
+    * forces the distributed loop (specs asserting loop behavior do).
     */
   def connectedComponentsWithStatus(
       pairs: DataFrame,
       maxIter: Int = 10,
-      inMemThreshold: Int = InMemCcPairs
+      tuning: Tuning = Tuning()
   ): (DataFrame, Boolean) = {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val longIds = pairs.schema("id_a").dataType == LongType &&
       pairs.schema("id_b").dataType == LongType
-    if (longIds && inMemThreshold > 0) {
-      val head = pairs
-        .select(col("id_a"), col("id_b"))
-        .filter(col("id_a").isNotNull && col("id_b").isNotNull)
-        .limit(inMemThreshold + 1)
-        .collect()
-      if (head.length <= inMemThreshold) {
-        val parent = new java.util.HashMap[Long, Long](head.length * 4)
-        def add(x: Long): Unit = if (!parent.containsKey(x)) parent.put(x, x)
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.get(r) != r) r = parent.get(r)
-          var c = x
-          while (c != r) { val n = parent.get(c); parent.put(c, r); c = n }
-          r
-        }
-        head.foreach { row =>
-          val (a, b) = (row.getLong(0), row.getLong(1))
-          add(a); add(b)
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) { if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb) }
-        }
-        val it = parent.keySet().iterator()
-        val out = new java.util.ArrayList[org.apache.spark.sql.Row](parent.size())
-        while (it.hasNext) { val id = it.next(); out.add(org.apache.spark.sql.Row(id, find(id))) }
-        val labels = pairs.sparkSession.createDataFrame(
-          out,
-          StructType(Seq(StructField("id", LongType), StructField("keep_id", LongType))))
-        return (labels, true)
-      }
+    val local =
+      if (!longIds) None
+      else Tier.within(
+        pairs.select(col("id_a"), col("id_b")).filter(col("id_a").isNotNull && col("id_b").isNotNull),
+        tuning.collectCeiling)
+    if (local.isDefined) {
+      val mins = componentMins(local.get.iterator.map(r => (r.getLong(0), r.getLong(1))))
+      val out = new java.util.ArrayList[org.apache.spark.sql.Row](mins.size())
+      mins.forEach((id, keep) => { out.add(org.apache.spark.sql.Row(id, keep)); () })
+      val labels = pairs.sparkSession.createDataFrame(
+        out,
+        StructType(Seq(StructField("id", LongType), StructField("keep_id", LongType))))
+      return (labels, true)
     }
     val edges = pairs
       .select(col("id_a").as("u"), col("id_b").as("v"))

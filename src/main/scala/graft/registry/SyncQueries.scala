@@ -1157,7 +1157,7 @@ private[graft] object SyncQueries {
       new IncrementalEngine(
         SchemaDef.parseNodes(Fixtures.flagship), Catalog.testData, load,
         // specs from the layouts' sidecars — the no-mismatch construction
-        IncrementalEngine.Tuning(partitionPrune = Seq("orders", "lineitem", "customer").map { t =>
+        Tuning(partitionPrune = Seq("orders", "lineitem", "customer").map { t =>
           val (_, w, pc) = graft.sources.Layout.keyPartitionSpec(s, s"$scratch/$t")
           t -> IncrementalEngine.PartitionPrune(pc, w)
         }.toMap)
@@ -1199,7 +1199,7 @@ private[graft] object SyncQueries {
         )
       val ops = new IncrementalEngine(
         SchemaDef.parseNodes(Fixtures.through), Catalog.testData, load,
-        IncrementalEngine.Tuning(partitionPrune = Seq("part", "lineitem", "supplier").map { t =>
+        Tuning(partitionPrune = Seq("part", "lineitem", "supplier").map { t =>
           val (_, w, pc) = graft.sources.Layout.keyPartitionSpec(s, s"$scratch/$t")
           t -> IncrementalEngine.PartitionPrune(pc, w)
         }.toMap)
@@ -1293,7 +1293,7 @@ private[graft] object SyncQueries {
         )
       new IncrementalEngine(
         SchemaDef.parseNodes(Fixtures.flagship), cat, load,
-        IncrementalEngine.Tuning(layoutRoot = Some(scratch))
+        Tuning(layoutRoot = Some(scratch))
       ).process(changes, Lineage.empty(s))
     },
       cdcHashOracle),

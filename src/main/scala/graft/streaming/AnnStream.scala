@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions.col
   * these per micro-batch; both also serve batch-mode backfills.
   *
   * The LSH batch has two tiers, split by the [[SyncPipeline.Consumer]]
-  * threshold (the doc engine's `IncrementalEngine.Tuning.inSetThreshold`,
+  * threshold (the doc engine's `graft.Tuning.inSetThreshold`,
   * 1 000 ids by default). A batch within it arrives as a driver-local
   * relation and takes the driver-fused tier ([[Ann.mutateLshIndexFused]]:
   * hyperplane buckets folded on the driver, the log head read on the

@@ -34,7 +34,7 @@ import org.apache.spark.sql.functions._
   *
   * Two tiers run the protocol, chosen per micro-batch by
   * [[SyncPipeline.Bm25Consumer]] with the threshold the doc sync's engine
-  * uses for its literal id sets (`IncrementalEngine.Tuning.inSetThreshold`,
+  * uses for its literal id sets (`graft.Tuning.inSetThreshold`,
   * 1 000 by default). A batch within it arrives as a driver-local relation
   * and takes the driver-fused tier
   * ([[graft.functions.Retrieval.mutateBm25IndexFused]]): one collect of

@@ -1,7 +1,8 @@
 package graft.streaming
 
-import graft.cdc.IncrementalEngine
+import graft.Tuning
 import graft.dedup.{ClusterMap, Dedup, SignatureIndex}
+import graft.util.Tier
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -59,6 +60,9 @@ object ClusterStream {
     * keeps the seed's bucket-pair stage at text-DIVERSITY size, which
     * matters far more than one extra shingling pass on clone-heavy
     * corpora. Per-batch maintenance ([[applyBatch]]) shingles once.
+    *
+    * The corpus pair set contracts at once with shallow components, so its
+    * union-find takes the seed ceiling ([[graft.Tuning.seedScale]]).
     */
   def seed(
       corpus: DataFrame,
@@ -67,7 +71,8 @@ object ClusterStream {
       id: String,
       text: String,
       m: SignatureIndex.Model,
-      mapBuckets: Int = 64
+      mapBuckets: Int = 64,
+      tuning: Tuning = Tuning()
   ): Unit = {
     val spark = corpus.sparkSession
     val docs = corpus.select(col(id).cast("long").as("id"), col(text).as("t"))
@@ -95,14 +100,7 @@ object ClusterStream {
           inBatchPairs(docs, "id", "t", m))
         p
       }
-    try ClusterMap.applyBatch(
-      spark, clusterPath, pairs,
-      corpus.select(col(id).cast("long").as("id")),
-      // seed-scale contraction: the whole corpus pair set arrives at once
-      // with shallow components — the distributed CC loop is round-latency-
-      // bound there (merge/cc 0.04 -> 2.34 s at 10x corpus), so the driver
-      // union-find ceiling is raised to the seed class (Dedup.SeedCcPairs)
-      ccInMemPairs = graft.dedup.Dedup.SeedCcPairs)
+    try ClusterMap.applySeed(spark, clusterPath, pairs, corpus.select(col(id).cast("long").as("id")), tuning)
     finally {
       // both pair operators return eagerly-checkpointed frames; the seed is
       // done with them after the merge — release instead of waiting for the
@@ -117,18 +115,16 @@ object ClusterStream {
     * broadcast semi-join — either way the corpus is scanned, never
     * shuffled.
     */
-  private def restrictText(src: DataFrame, ids: DataFrame, inSetThreshold: Int): DataFrame = {
-    val collected = ids.limit(inSetThreshold + 1).collect()
-    if (collected.length <= inSetThreshold)
-      src.filter(col("id").isin(collected.map(_.getLong(0)).toSeq: _*))
-    else src.join(broadcast(ids), Seq("id"))
-  }
+  private def restrictText(src: DataFrame, ids: DataFrame, inSetThreshold: Int): DataFrame =
+    Tier.within(ids, inSetThreshold).fold(src.join(broadcast(ids), Seq("id")))(local =>
+      src.filter(col("id").isin(local.map(_.getLong(0)).toSeq: _*)))
 
   /** Apply one change batch: `rows` in [[SyncPipeline.changeRows]] shape
     * (`tg_op`, `<pk>`, `<textCol>`), `corpus` the CURRENT source table
     * (candidate text lookups only — restricted scans). Upserts become map
     * members (null-text docs as singletons); DELETEs are ignored per the
-    * no-split contract.
+    * no-split contract. `tuning` sets the candidate-text restriction's
+    * literal tier and the map update's ceilings.
     */
   def applyBatch(
       spark: SparkSession,
@@ -139,7 +135,7 @@ object ClusterStream {
       pk: String,
       textCol: String,
       autoCompactRatio: Option[Double] = None,
-      inSetThreshold: Int = IncrementalEngine.Tuning().inSetThreshold
+      tuning: Tuning = Tuning()
   ): Unit = {
     val m = SignatureIndex.readModel(spark, sigPath)
     val ups = rows.filter(col("tg_op") =!= "DELETE")
@@ -178,7 +174,7 @@ object ClusterStream {
             val corpusTxt = restrictText(
               corpus.select(col(pk).cast("long").as("id"), col(textCol).as("t")),
               candPairs.select(col("id_b").as("id")).distinct(),
-              inSetThreshold)
+              tuning.inSetThreshold)
             // one (id, t) frame for both verify sides; a replayed batch
             // appears on both with identical text (changeRows reads the
             // current table)
@@ -199,7 +195,7 @@ object ClusterStream {
               .localCheckpoint(true)
             finally release(shingled)
           }
-          try ClusterMap.applyBatch(spark, clusterPath, pairs, newIds)
+          try ClusterMap.applyBatch(spark, clusterPath, pairs, newIds, tuning = tuning)
           finally release(pairs)
           SignatureIndex.appendKeys(spark, sigPath, m, batchKeys)
           autoCompactRatio.foreach { r =>

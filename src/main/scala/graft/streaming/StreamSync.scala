@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tuning
 import graft.assemble.DocAssembler
 import graft.catalog.Catalog
 import graft.cdc.{Changes, IncrementalEngine, Lineage}
@@ -36,7 +37,7 @@ final class StreamSync(
     load: String => DataFrame,
     state: MaterializedIndex,
     plugins: Seq[graft.transform.DocTransform] = Nil,
-    tuning: IncrementalEngine.Tuning = IncrementalEngine.Tuning()
+    tuning: Tuning = Tuning()
 ) {
 
   val engine = new IncrementalEngine(root, catalog, load, tuning)

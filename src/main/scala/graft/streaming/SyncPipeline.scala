@@ -1,9 +1,9 @@
 package graft.streaming
 
-import graft.GraftSync
+import graft.{GraftSync, Tuning}
 import graft.ann.Ann
-import graft.cdc.IncrementalEngine
 import graft.functions.Retrieval
+import graft.util.Tier
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -41,12 +41,12 @@ object SyncPipeline {
     * [[changeRows]].
     *
     * Batches come in two tiers, split by the threshold the doc sync's
-    * engine uses for literal id sets
-    * (`IncrementalEngine.Tuning.inSetThreshold`, 1 000 by default): a
-    * batch of at most that many ids is collected ONCE into a driver-local
-    * relation (`fused = true`), a larger one is cached for the batch. The
-    * BM25 and LSH consumers take their driver-fused tier on local batches
-    * ([[Bm25Stream]], [[AnnStream]]); the others read either form alike.
+    * engine uses for literal id sets ([[graft.Tuning.inSetThreshold]],
+    * 1 000 by default): a batch of at most that many ids is collected ONCE
+    * into a driver-local relation (`fused = true`), a larger one is cached
+    * for the batch. The BM25 and LSH consumers take their driver-fused
+    * tier on local batches ([[Bm25Stream]], [[AnnStream]]); the others read
+    * either form alike.
     */
   sealed trait Consumer {
     def name: String
@@ -55,16 +55,19 @@ object SyncPipeline {
     /** The source-table column this consumer needs per upsert. */
     def payloadColumn: String
 
-    /** Build this consumer's index from the full source table `src`. */
-    private[streaming] def seed(src: DataFrame, pk: String): Unit
+    /** Build this consumer's index from the full source table `src`, at
+      * the pipeline's `tuning`.
+      */
+    private[streaming] def seed(src: DataFrame, pk: String, tuning: Tuning): Unit
 
     /** Apply one batch of `rows` in [[changeRows]] shape (`tg_op`, `pk`,
       * [[payloadColumn]]). `source` reads the CURRENT source table; the
       * BM25, dedup and cluster protocols take their session from it.
       * `fused`: `rows` is a driver-local relation within the threshold.
+      * `tuning` is the pipeline's (its doc sync's).
       */
     private[streaming] def apply(
-        rows: DataFrame, pk: String, source: () => DataFrame, fused: Boolean): Unit
+        rows: DataFrame, pk: String, source: () => DataFrame, fused: Boolean, tuning: Tuning): Unit
   }
 
   /** Persisted BM25 maintenance ([[Bm25Stream.applyBatch]]: delete every
@@ -83,11 +86,11 @@ object SyncPipeline {
   ) extends Consumer {
     def payloadColumn: String = textCol
 
-    private[streaming] def seed(src: DataFrame, pk: String): Unit =
+    private[streaming] def seed(src: DataFrame, pk: String, tuning: Tuning): Unit =
       Retrieval.writeBm25Index(src, pk, textCol, indexPath, buckets)
 
     private[streaming] def apply(
-        rows: DataFrame, pk: String, source: () => DataFrame, fused: Boolean): Unit =
+        rows: DataFrame, pk: String, source: () => DataFrame, fused: Boolean, tuning: Tuning): Unit =
       // a fused batch is a local relation: its session needs no source read
       Bm25Stream.applyTier(
         if (fused) rows.sparkSession else source().sparkSession, rows, indexPath, pk, textCol,
@@ -109,11 +112,11 @@ object SyncPipeline {
   ) extends Consumer {
     def payloadColumn: String = vecCol
 
-    private[streaming] def seed(src: DataFrame, pk: String): Unit =
+    private[streaming] def seed(src: DataFrame, pk: String, tuning: Tuning): Unit =
       Ann.writeLshIndex(src, indexPath, pk, vecCol, planes, dim)
 
     private[streaming] def apply(
-        rows: DataFrame, pk: String, source: () => DataFrame, fused: Boolean): Unit =
+        rows: DataFrame, pk: String, source: () => DataFrame, fused: Boolean, tuning: Tuning): Unit =
       AnnStream.applyLshTier(rows, indexPath, pk, vecCol, autoCompactRatio, fused)
   }
 
@@ -132,14 +135,14 @@ object SyncPipeline {
   ) extends Consumer {
     def payloadColumn: String = vecCol
 
-    private[streaming] def seed(src: DataFrame, pk: String): Unit = {
+    private[streaming] def seed(src: DataFrame, pk: String, tuning: Tuning): Unit = {
       // one corpus prefix collect trains both models (seed sets nest)
       val (cells, books) = Ann.trainIvfPqModels(src, pk, vecCol, nlists, m, codeK)
       Ann.writePqIndex(src, indexPath, pk, vecCol, cells, books)
     }
 
     private[streaming] def apply(
-        rows: DataFrame, pk: String, source: () => DataFrame, fused: Boolean): Unit =
+        rows: DataFrame, pk: String, source: () => DataFrame, fused: Boolean, tuning: Tuning): Unit =
       AnnStream.applyCdcPqBatch(rows, indexPath, pk, vecCol, autoCompactRatio)
   }
 
@@ -161,11 +164,11 @@ object SyncPipeline {
 
     // the seed corpus is just the first (big) batch: registers every
     // digest, first writer wins, survivors reported like any batch
-    private[streaming] def seed(src: DataFrame, pk: String): Unit =
+    private[streaming] def seed(src: DataFrame, pk: String, tuning: Tuning): Unit =
       register(src.sparkSession, src, pk)
 
     private[streaming] def apply(
-        rows: DataFrame, pk: String, source: () => DataFrame, fused: Boolean): Unit =
+        rows: DataFrame, pk: String, source: () => DataFrame, fused: Boolean, tuning: Tuning): Unit =
       register(source().sparkSession, rows.filter(col("tg_op") =!= "DELETE"), pk)
 
     // one (pk, text) survivor shape for seed and batches
@@ -205,14 +208,14 @@ object SyncPipeline {
       graft.dedup.SignatureIndex.Model(
         portable, shingleN, bands, rowsPerBand, threshold, maxBucket, sigBuckets)
 
-    private[streaming] def seed(src: DataFrame, pk: String): Unit =
-      ClusterStream.seed(src, sigPath, indexPath, pk, textCol, model, mapBuckets)
+    private[streaming] def seed(src: DataFrame, pk: String, tuning: Tuning): Unit =
+      ClusterStream.seed(src, sigPath, indexPath, pk, textCol, model, mapBuckets, tuning)
 
     private[streaming] def apply(
-        rows: DataFrame, pk: String, source: () => DataFrame, fused: Boolean): Unit = {
+        rows: DataFrame, pk: String, source: () => DataFrame, fused: Boolean, tuning: Tuning): Unit = {
       val corpus = source()
       ClusterStream.applyBatch(
-        corpus.sparkSession, rows, corpus, sigPath, indexPath, pk, textCol, autoCompactRatio)
+        corpus.sparkSession, rows, corpus, sigPath, indexPath, pk, textCol, autoCompactRatio, tuning)
     }
   }
 
@@ -240,7 +243,7 @@ object SyncPipeline {
     * corpus side of a left-outer cannot be the broadcast build side). The
     * source scan is instead RESTRICTED to the affected ids first, with the
     * same two-tier strategy as [[graft.cdc.IncrementalEngine.reassemble]]:
-    * up to `inSetThreshold` ids become a literal `isin` pushed into the
+    * up to `tuning.inSetThreshold` ids become a literal `isin` pushed into the
     * parquet scan (row groups whose min/max exclude the batch are never
     * read; the collapsed op set rides along as a driver-local relation, no
     * recompute), and oversized sets fall back to a broadcast semi-join
@@ -252,8 +255,8 @@ object SyncPipeline {
       table: String,
       pk: String,
       payload: Seq[String],
-      inSetThreshold: Int = IncrementalEngine.Tuning().inSetThreshold
-  ): DataFrame = changeRowsTiered(batch, load, table, pk, payload, inSetThreshold)._1
+      tuning: Tuning = Tuning()
+  ): DataFrame = changeRowsTiered(batch, load, table, pk, payload, tuning)._1
 
   /** [[changeRows]] plus which tier it took: true when the collapsed op set
     * fit `inSetThreshold` (so the rows do too — one per id).
@@ -264,7 +267,7 @@ object SyncPipeline {
       table: String,
       pk: String,
       payload: Seq[String],
-      inSetThreshold: Int
+      tuning: Tuning
   ): (DataFrame, Boolean) = {
     val evs = batch
       .filter(col("tbl") === table)
@@ -288,15 +291,14 @@ object SyncPipeline {
     val src = load(table).select(
       col(pk).cast("long").as(pk) +: (payload.map(col) :+ lit(true).as("__present")): _*
     )
-    val collected = last.limit(inSetThreshold + 1).collect()
-    val bounded = collected.length <= inSetThreshold
-    val (ops, srcAffected) =
-      if (bounded) {
-        val local = batch.sparkSession.createDataFrame(
-          java.util.Arrays.asList(collected: _*), last.schema)
-        (local, src.filter(col(pk).isin(collected.map(_.getLong(0)).toSeq: _*)))
-      } else
+    val collected = Tier.within(last, tuning.inSetThreshold)
+    val (ops, srcAffected) = collected match {
+      case Some(local) =>
+        (batch.sparkSession.createDataFrame(java.util.Arrays.asList(local: _*), last.schema),
+          src.filter(col(pk).isin(local.map(_.getLong(0)).toSeq: _*)))
+      case None =>
         (last, src.join(broadcast(last.select(col(pk))), Seq(pk)))
+    }
     val finalOp = when(col("tg_op") =!= "DELETE" && col("__present").isNull, lit("DELETE"))
       .otherwise(col("tg_op"))
     val rows = ops
@@ -306,7 +308,7 @@ object SyncPipeline {
           col(pk) +:
           payload.map(p => when(finalOp === "DELETE", lit(null)).otherwise(col(p)).as(p)): _*
       )
-    (rows, bounded)
+    (rows, collected.isDefined)
   }
 }
 
@@ -342,10 +344,8 @@ final class SyncPipeline(
   /** The CURRENT source table, read afresh at each use. */
   private val source: () => DataFrame = () => load(table)
 
-  /** The literal-tier bound of the doc sync's engine, shared by
-    * [[changeRows]] and the consumers' fused tier.
-    */
-  private val inSetThreshold = sync.tuning.inSetThreshold
+  /** The doc sync's tuning, shared by [[changeRows]] and the consumers. */
+  private val tuning = sync.tuning
 
   /** One batch's [[changeRows]] in the form its consumers read, and the
     * tier (the [[Consumer]] split): within the threshold the rows are
@@ -356,7 +356,7 @@ final class SyncPipeline(
     * form).
     */
   private def batchRows(batch: DataFrame, payload: Seq[String]): (DataFrame, Boolean) = {
-    val (rows, bounded) = changeRowsTiered(batch, load, table, pk, payload, inSetThreshold)
+    val (rows, bounded) = changeRowsTiered(batch, load, table, pk, payload, tuning)
     if (!bounded) (rows.cache(), false)
     else
       (batch.sparkSession.createDataFrame(java.util.Arrays.asList(rows.collect(): _*), rows.schema),
@@ -390,7 +390,7 @@ final class SyncPipeline(
     val src = source()
     runOverlapped(
       ("seed: docs" -> (() => sync.snapshot())) +:
-        consumers.map(c => s"seed: ${c.name}" -> (() => c.seed(src, pk))))
+        consumers.map(c => s"seed: ${c.name}" -> (() => c.seed(src, pk, tuning))))
   }
 
   /** Apply one raw change batch to EVERY consumer — the batch-mode form.
@@ -434,7 +434,7 @@ final class SyncPipeline(
       ("apply: docs" -> (() => sync.applyChanges(batch))) +:
         consumers.map(c =>
           s"apply: ${c.name}" ->
-            (() => c.apply(rows.select(col("tg_op"), col(pk), col(c.payloadColumn)), pk, source, fused))))
+            (() => c.apply(rows.select(col("tg_op"), col(pk), col(c.payloadColumn)), pk, source, fused, tuning))))
     finally { rows.unpersist(); () }
   }
 
@@ -470,7 +470,7 @@ final class SyncPipeline(
     val rest = consumers.map { c =>
       c.name -> StreamSync.foreachBatch(feed(), s"$checkpointBase/${c.name}") { batch =>
         val (rows, fused) = batchRows(batch, Seq(c.payloadColumn))
-        try c.apply(rows, pk, source, fused)
+        try c.apply(rows, pk, source, fused, tuning)
         finally { rows.unpersist(); () }
       }
     }.toMap

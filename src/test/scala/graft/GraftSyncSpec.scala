@@ -500,7 +500,7 @@ class GraftSyncSpec extends SparkSpec {
               "columns": ["l_linenumber"],
               "relationship": {"type": "one_to_many", "variant": "object"}}]}}"""
     // prune specs from the layout sidecars, through the facade
-    val tuning = IncrementalEngine.Tuning(
+    val tuning = Tuning(
       partitionPrune = Seq("orders", "lineitem").map { t =>
         val (_, w, pc) = Layout.keyPartitionSpec(spark, s"$dir/$t")
         t -> IncrementalEngine.PartitionPrune(pc, w)
@@ -548,7 +548,7 @@ class GraftSyncSpec extends SparkSpec {
     val pruned = GraftSync(
       spark, flagship, Catalog.testData, pload,
       Files.createTempDirectory("graft-sync-disc").toString,
-      tuning = IncrementalEngine.Tuning(layoutRoot = Some(dir)))
+      tuning = Tuning(layoutRoot = Some(dir)))
     val flat = GraftSync(
       spark, flagship, Catalog.testData, base,
       Files.createTempDirectory("graft-sync-disc-flat").toString)

@@ -83,23 +83,6 @@ class PlanSpec extends SparkSpec {
     assert(s.contains("EqualTo(l_orderkey,1)") || s.contains("In(l_orderkey"))
   }
 
-  test("oversized affected sets bracket the scans with a pushed min/max range") {
-    val load = Tables.load(spark, sf) _
-    // threshold 0 forces the broadcast-semi path even for a tiny batch
-    val engine = new IncrementalEngine(
-      SchemaDef.parseNodes(Fixtures.flagship), Catalog.testData, load,
-      IncrementalEngine.Tuning(inSetThreshold = 0, rangeBracket = true))
-    val changes = graft.cdc.Changes.of(
-      spark,
-      Seq(
-        ("INSERT", "orders", null, """{"o_orderkey": 5}""", 1L),
-        ("INSERT", "orders", null, """{"o_orderkey": 9}""", 1L)
-      )
-    )
-    val s = fmt(engine.process(changes, Lineage.empty(spark)))
-    assert(s.contains("GreaterThanOrEqual(o_orderkey,5)") && s.contains("LessThanOrEqual(o_orderkey,9)"))
-  }
-
   test("partition-pruned reassembly plants static partition filters on root, child, AND dim scans") {
     import graft.cdc.IncrementalEngine.PartitionPrune
     import graft.sources.Layout
@@ -122,7 +105,7 @@ class PlanSpec extends SparkSpec {
     // re-reads all three payload tables whole
     val engine = new IncrementalEngine(
       SchemaDef.parseNodes(Fixtures.flagship), Catalog.testData, pload,
-      IncrementalEngine.Tuning(inSetThreshold = 0, partitionPrune = prune))
+      Tuning(inSetThreshold = 0, partitionPrune = prune))
     val changes = graft.cdc.Changes.of(
       spark,
       Seq(
@@ -171,7 +154,7 @@ class PlanSpec extends SparkSpec {
     }
     val engine = new IncrementalEngine(
       SchemaDef.parseNodes(Fixtures.through), Catalog.testData, pload,
-      IncrementalEngine.Tuning(
+      Tuning(
         inSetThreshold = 0,
         partitionPrune = Map(
           "part"     -> PartitionPrune("_kp", 64),
@@ -226,7 +209,7 @@ class PlanSpec extends SparkSpec {
     }
     val engine = new IncrementalEngine(
       SchemaDef.parseNodes(Fixtures.nested), Catalog.testData, pload,
-      IncrementalEngine.Tuning(
+      Tuning(
         inSetThreshold = 0,
         partitionPrune = Map(
           "orders"   -> PartitionPrune("_kp", 128),
@@ -280,7 +263,7 @@ class PlanSpec extends SparkSpec {
     val ex = intercept[IllegalArgumentException] {
       new IncrementalEngine(
         SchemaDef.parseNodes(Fixtures.flagship), Catalog.testData, pload,
-        IncrementalEngine.Tuning(partitionPrune = Map("lineitem" -> PartitionPrune("_kp", 128))))
+        Tuning(partitionPrune = Map("lineitem" -> PartitionPrune("_kp", 128))))
     }
     assert(ex.getMessage.contains("not partitioned by"), ex.getMessage)
     graft.util.TempDirs.delete(java.nio.file.Paths.get(dir))
@@ -310,7 +293,7 @@ class PlanSpec extends SparkSpec {
     assert(prune("part") == HashBucketPrune("_hb", 32))
     val engine = new IncrementalEngine(
       SchemaDef.parseNodes(Fixtures.through), Catalog.testData, pload,
-      IncrementalEngine.Tuning(
+      Tuning(
         inSetThreshold = 0,
         partitionPrune = prune))
     val changes = graft.cdc.Changes.of(
@@ -340,6 +323,46 @@ class PlanSpec extends SparkSpec {
     val want = base.process(changes, Lineage.empty(spark))
       .orderBy("op", "_id").collect().toSeq
     assert(got == want && got.nonEmpty)
+    graft.util.TempDirs.delete(java.nio.file.Paths.get(dir))
+  }
+
+  test("reassembly emits the same ops on both tiers: literal ids and driver-derived hash buckets vs semi-join and distinct jobs") {
+    import graft.cdc.IncrementalEngine.HashBucketPrune
+    import graft.sources.Layout
+    val load = Tables.load(spark, sf) _
+    val dir = graft.util.TempDirs.scratch("plan-cdctiers").toString
+    Layout.hashBucketedWrite(load("orders"), Seq("o_orderkey"), 16, s"$dir/orders")
+    Layout.hashBucketedWrite(load("lineitem"), Seq("l_orderkey"), 16, s"$dir/lineitem")
+    Layout.hashBucketedWrite(load("customer"), Seq("c_custkey"), 8, s"$dir/customer")
+    val pload: String => DataFrame = {
+      case t @ ("orders" | "lineitem" | "customer") => spark.read.parquet(s"$dir/$t")
+      case t                                        => load(t)
+    }
+    val prune = Map(
+      "orders" -> HashBucketPrune("_hb", 16),
+      "lineitem" -> HashBucketPrune("_hb", 16),
+      "customer" -> HashBucketPrune("_hb", 8))
+    // root updates, a child and a dim walk-up, and a root key no row holds
+    val changes = graft.cdc.Changes.of(
+      spark,
+      Seq(
+        ("UPDATE", "orders", null, """{"o_orderkey": 5}""", 1L),
+        ("UPDATE", "orders", null, """{"o_orderkey": 900}""", 2L),
+        ("UPDATE", "lineitem", null, """{"l_orderkey": 32, "l_linenumber": 1}""", 3L),
+        ("UPDATE", "customer", null, """{"c_custkey": 7}""", 4L),
+        ("DELETE", "orders", """{"o_orderkey": 999999}""", null, 5L)
+      )
+    )
+    def ops(engine: IncrementalEngine): Set[Seq[Any]] =
+      engine.process(changes, Lineage.empty(spark)).collect().map(_.toSeq).toSet
+    val state = TwoTier.assertSame(tuning =>
+      Map("ops" -> ops(new IncrementalEngine(
+        SchemaDef.parseNodes(Fixtures.flagship), Catalog.testData, pload,
+        tuning.copy(partitionPrune = prune)))))
+    // and the layout never changes answers
+    val flat = ops(new IncrementalEngine(SchemaDef.parseNodes(Fixtures.flagship), Catalog.testData, load))
+    assert(state("ops") == flat)
+    assert(flat.exists(_.head == "delete") && flat.count(_.head == "index") > 3, flat)
     graft.util.TempDirs.delete(java.nio.file.Paths.get(dir))
   }
 
@@ -389,7 +412,7 @@ class PlanSpec extends SparkSpec {
       ploadCache.getOrElseUpdate(t, spark.read.parquet(s"$dir/$t"))
     val engine = new IncrementalEngine(
       tree, cat, pload,
-      IncrementalEngine.Tuning(
+      Tuning(
         inSetThreshold = 0,
         partitionPrune = Map(
           "orders"   -> HashBucketPrune("_hb", 32),
@@ -442,7 +465,7 @@ class PlanSpec extends SparkSpec {
     }
     val engine = new IncrementalEngine(
       SchemaDef.parseNodes(Fixtures.compositePk), Catalog.testData, pload,
-      IncrementalEngine.Tuning(
+      Tuning(
         inSetThreshold = 0,
         partitionPrune = Map("lineitem" -> HashBucketPrune("_hb", 16))))
     val changes = graft.cdc.Changes.of(
@@ -488,7 +511,7 @@ class PlanSpec extends SparkSpec {
     val ex = intercept[IllegalArgumentException] {
       new IncrementalEngine(
         SchemaDef.parseNodes(Fixtures.flagship), Catalog.testData, pload,
-        IncrementalEngine.Tuning(partitionPrune = Map("lineitem" -> HashBucketPrune("_hb", 32))))
+        Tuning(partitionPrune = Map("lineitem" -> HashBucketPrune("_hb", 32))))
     }
     assert(ex.getMessage.contains("not hash-bucketed by"), ex.getMessage)
     graft.util.TempDirs.delete(java.nio.file.Paths.get(dir))
@@ -545,7 +568,7 @@ class PlanSpec extends SparkSpec {
       })
     val engine = new IncrementalEngine(
       SchemaDef.parseNodes(Fixtures.flagship), Catalog.testData, pload,
-      IncrementalEngine.Tuning(inSetThreshold = 0, layoutRoot = Some(dir)))
+      Tuning(inSetThreshold = 0, layoutRoot = Some(dir)))
     val changes = graft.cdc.Changes.of(
       spark,
       Seq(
@@ -623,7 +646,7 @@ class PlanSpec extends SparkSpec {
     // values; the unparseable id must poison the derivation, not be dropped
     val driverEng = new IncrementalEngine(
       tree, cat, pload,
-      IncrementalEngine.Tuning(partitionPrune = Map("orders" -> HashBucketPrune("_hb", 8))))
+      Tuning(partitionPrune = Map("orders" -> HashBucketPrune("_hb", 8))))
     val gotDriver = driverEng.process(ambiguous, Lineage.empty(spark))
       .orderBy("op", "_id").collect().toSeq
     assert(gotDriver == want, s"driver derivation dropped the delimiter-bearing key:\n$gotDriver\nvs\n$want")
@@ -631,8 +654,8 @@ class PlanSpec extends SparkSpec {
     // mis-arity sentinel must poison it the same way
     val distEng = new IncrementalEngine(
       tree, cat, pload,
-      IncrementalEngine.Tuning(
-        inSetThreshold = 0, partitionIdCollectCap = 0,
+      Tuning(
+        inSetThreshold = 0, collectCeiling = 0,
         partitionPrune = Map("orders" -> HashBucketPrune("_hb", 8))))
     val gotDist = distEng.process(ambiguous, Lineage.empty(spark))
       .orderBy("op", "_id").collect().toSeq
@@ -676,7 +699,7 @@ class PlanSpec extends SparkSpec {
     }
     val engine = new IncrementalEngine(
       SchemaDef.parseNodes(Fixtures.flagship), Catalog.testData, pload,
-      IncrementalEngine.Tuning(layoutRoot = Some(dir)))
+      Tuning(layoutRoot = Some(dir)))
     val changes = graft.cdc.Changes.of(
       spark, Seq(("UPDATE", "orders", null, """{"o_orderkey": 5}""", 1L)))
     val doc = engine.reassemble(engine.affectedRoots(changes, Lineage.empty(spark)))
@@ -719,7 +742,7 @@ class PlanSpec extends SparkSpec {
     // batch-sized id set against the corpus scan — the corpus is never the
     // shuffled side of the payload join
     val big = graft.streaming.SyncPipeline.changeRows(
-      batch, load, "documents", "doc_id", Seq("text"), inSetThreshold = 0)
+      batch, load, "documents", "doc_id", Seq("text"), Tuning(inSetThreshold = 0))
     assert(fmt(big).contains("BroadcastHashJoin"), fmt(big))
   }
 

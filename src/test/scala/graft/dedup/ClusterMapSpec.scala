@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.SparkSpec
+import graft.{SparkSpec, TwoTier}
 import graft.sources.IndexState
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -88,7 +88,7 @@ class ClusterMapSpec extends SparkSpec {
       .unionAll(j.select((col("j") * 4 + 3).as("id_a"), (col("j") + 200000).as("id_b")))
     for (ps <- Seq(pairs1, pairs2)) {
       val endpoints = ps.select(col("id_a").as("id")).unionAll(ps.select(col("id_b"))).distinct().count()
-      assert(endpoints > ClusterMap.InMemClosureRows, s"$endpoints endpoints stay on the driver tier")
+      assert(endpoints > graft.Tuning().collectCeiling, s"$endpoints endpoints stay on the driver tier")
     }
     ClusterMap.applyBatch(spark, path, pairs1, spark.range(4 * n).toDF())
     ClusterMap.applyBatch(spark, path, pairs2, spark.range(200000L, 200000L + n).toDF())
@@ -97,6 +97,59 @@ class ClusterMapSpec extends SparkSpec {
     assert(got.size == 5 * n)
     assert(got == cc)
     assert(got(3L) == 0L && got(200000L) == 0L && got(4 * n - 1) == 4 * (n - 1))
+  }
+
+  test("both tiers persist the same members, merge pointers and assignments") {
+    // two stored clusters, a batch that merges them under a new smaller id,
+    // a batch that merges that component again, and a replay
+    val batches = Seq(
+      (pairsDf((10L, 11L)), idsDf(10L, 11L)),
+      (pairsDf((20L, 21L)), idsDf(20L, 21L)),
+      (pairsDf((5L, 11L), (5L, 21L)), idsDf(5L)),
+      (pairsDf((3L, 20L), (30L, 31L)), idsDf(3L, 30L, 31L)))
+    val state = TwoTier.assertSame { tuning =>
+      val path = graft.util.TempDirs.scratch("cmap-tiers").toString
+      ClusterMap.init(spark, path, buckets = 4)
+      (batches :+ batches.last).foreach { case (ps, ids) =>
+        ClusterMap.applyBatch(spark, path, ps, ids, tuning = tuning)
+      }
+      val (data, head) = IndexState.open(spark, path)
+      def bag(df: DataFrame) = df.collect().map(_.toSeq).groupBy(identity).map { case (k, v) => k -> v.length }
+      Map(
+        "assignments" -> asMap(ClusterMap.assignments(spark, path)),
+        "members" -> bag(head.scan(spark, data, "members").select("id", "root", "syn")),
+        "merges" -> bag(head.scan(spark, data, "merges").select("from_root", "to_root", "seq")))
+    }
+    assert(state("assignments") ==
+      Map(3L -> 3L, 5L -> 3L, 10L -> 3L, 11L -> 3L, 20L -> 3L, 21L -> 3L, 30L -> 30L, 31L -> 30L))
+  }
+
+  test("mergeClosure equals a plain chain-follow over random descending pointer forests, on both tiers") {
+    import graft.sources.IndexLog
+    import org.scalacheck.Gen
+    // every pointer targets a smaller id; a from-root may carry several
+    // pointers, of which the smallest target counts
+    val pointer = for {
+      from <- Gen.chooseNum(1L, 60L)
+      to <- Gen.chooseNum(0L, from - 1)
+    } yield (from, to)
+    val forests = Gen.listOf(pointer)
+    val params = Gen.Parameters.default.withSize(50)
+    (0 until 6).flatMap(i => forests(params, org.scalacheck.rng.Seed(101L + i))).foreach { ptrs =>
+      val parent = ptrs.groupBy(_._1).map { case (from, ps) => from -> ps.map(_._2).min }
+      def follow(x: Long): Long = parent.get(x).fold(x)(follow)
+      val path = graft.util.TempDirs.scratch("cmap-closure").toString
+      ClusterMap.init(spark, path, buckets = 4)
+      val (data, head) = IndexState.open(spark, path)
+      IndexLog.mutate(spark, data, head, head.seq + 1, head.counters, Seq(IndexLog.Write(
+        "merges", ClusterMap.MergesDir, None,
+        ptrs.map { case (f, t) => (f, t, head.seq + 1) }.toDF("from_root", "to_root", "seq").coalesce(1))))
+      val logged = IndexState.open(spark, path)._2
+      val state = TwoTier.assertSame(
+        tuning => Map("closure" -> asMap(ClusterMap.mergeClosure(spark, data, logged, tuning))),
+        s"pointers $ptrs")
+      assert(state("closure") == parent.keySet.map(f => f -> follow(f)).toMap, s"pointers $ptrs")
+    }
   }
 
   test("a later document merges two existing clusters via a downward pointer") {

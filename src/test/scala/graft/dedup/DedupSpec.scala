@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.SparkSpec
+import graft.{SparkSpec, Tuning, TwoTier}
 import graft.ann.Ann
 import org.apache.spark.sql.functions._
 
@@ -309,13 +309,13 @@ class DedupSpec extends SparkSpec {
 
   test("connected components report non-convergence on a deep chain (distributed loop)") {
     // a 12-node path has diameter 11 > maxIter=2 propagation rounds;
-    // inMemThreshold=0 forces the distributed loop whose budget is under test
+    // ceiling 0 forces the distributed loop whose budget is under test
     val chain = (1L until 12L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val (_, convergedShallow) =
-      Dedup.connectedComponentsWithStatus(chain, maxIter = 2, inMemThreshold = 0)
+      Dedup.connectedComponentsWithStatus(chain, maxIter = 2, TwoTier.Distributed)
     assert(!convergedShallow)
     val (labels, converged) =
-      Dedup.connectedComponentsWithStatus(chain, maxIter = 20, inMemThreshold = 0)
+      Dedup.connectedComponentsWithStatus(chain, maxIter = 20, TwoTier.Distributed)
     assert(converged)
     assert(labels.collect().forall(_.getLong(1) == 1L))
     // the driver-side union-find (default path for batch-sized pair sets)
@@ -332,30 +332,32 @@ class DedupSpec extends SparkSpec {
         .filter(p => p._1 != p._2).distinct.toDF("id_a", "id_b")
       def asMap(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val fast = asMap(Dedup.connectedComponentsWithStatus(pairs)._1)
-      val dist = asMap(Dedup.connectedComponentsWithStatus(pairs, 40, inMemThreshold = 0)._1)
-      assert(fast == dist, s"seed $seed: union-find != distributed min-label")
+      TwoTier.assertSame(
+        tuning => Map("labels" -> asMap(Dedup.connectedComponentsWithStatus(pairs, 40, tuning)._1)),
+        s"seed $seed: union-find != distributed min-label")
     }
   }
 
   test("seed-ceiling driver CC equals the distributed loop above the batch ceiling") {
     // the seed/rebuild contraction class: a pair set ABOVE the 65 536 batch
     // ceiling (so the default path would take the distributed loop) but
-    // within Dedup.SeedCcPairs — 100k random edges over 30k nodes, driver
-    // union-find vs distributed min-label must agree exactly
+    // within Tuning.SeedCcPairs — 100k random edges over 30k nodes, driver
+    // union-find (the seed-scale ceiling) vs distributed min-label must
+    // agree exactly
     val rnd = new scala.util.Random(41)
     val edges = Vector.fill(100000)((rnd.nextInt(30000).toLong, rnd.nextInt(30000).toLong))
       .filter(p => p._1 != p._2)
-    assert(edges.size > Dedup.InMemCcPairs)
+    assert(edges.size > Tuning().collectCeiling && edges.size <= Tuning.SeedCcPairs)
     val pairs = edges.toDF("id_a", "id_b").repartition(8)
     def asMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val (fastDf, fastConverged) =
-      Dedup.connectedComponentsWithStatus(pairs, maxIter = 40, inMemThreshold = Dedup.SeedCcPairs)
-    assert(fastConverged)
-    val fast = asMap(fastDf)
-    val dist = asMap(Dedup.connectedComponentsWithStatus(pairs, 40, inMemThreshold = 0)._1)
-    assert(fast == dist, "seed-ceiling union-find != distributed min-label")
+    val fast = TwoTier.assertSame(
+      { tuning =>
+        val (labels, converged) = Dedup.connectedComponentsWithStatus(pairs, maxIter = 40, tuning.seedScale)
+        Map("labels" -> asMap(labels), "converged" -> converged)
+      },
+      "seed-ceiling union-find != distributed min-label")
+    assert(fast("converged") == true)
   }
 
   test("corpus-cleaning composition: near-dup pairs → components → keep-filtered corpus") {

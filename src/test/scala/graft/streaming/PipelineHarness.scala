@@ -19,7 +19,7 @@ final class PipelineHarness(
     pk: String,
     initial: DataFrame,
     docColumns: Seq[String] = Nil,
-    tuning: graft.cdc.IncrementalEngine.Tuning = graft.cdc.IncrementalEngine.Tuning()
+    tuning: graft.Tuning = graft.Tuning()
 ) {
   val dir: String = Files.createTempDirectory(s"graft-pipeline-$table").toString
   private val feed = s"$dir/feed"

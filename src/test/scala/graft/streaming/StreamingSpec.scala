@@ -752,8 +752,8 @@ class StreamingSpec extends SparkSpec {
     // ending with a 300-insert batch whose shared term overflows the
     // per-term impact cap (ties in imp_micro broken by id). Persisted state
     // and probes must be identical.
+    import graft.{Tuning, TwoTier}
     import graft.ann.Ann
-    import graft.cdc.IncrementalEngine.Tuning
     import graft.functions.Retrieval
     import graft.sources.IndexState
     import org.scalacheck.Gen
@@ -802,8 +802,6 @@ class StreamingSpec extends SparkSpec {
           delivered.lastOption.foreach(k => p.applyBatch(h.batch(events(states(k), batches(k)): _*)))
           h
         }
-        val (dist, fused) = (run(Tuning(inSetThreshold = 0)), run(Tuning()))
-
         def rowsOf(df: DataFrame): Set[Seq[Any]] =
           df.collect().map(_.toSeq.map {
             case a: scala.collection.Seq[_] => a.toList
@@ -835,9 +833,12 @@ class StreamingSpec extends SparkSpec {
             "lsh rows" -> logged(lsh, "vectors", Some("neighbor_id")),
             "lsh probe" -> rowsOf(Ann.lshTopKIndexed(lsh, vecQueries, "qid", "embedding", 5, planes = 4, dim = 8)))
         }
-        val (d, f) = (state(dist), state(fused))
-        d.keys.foreach(k => if (f(k) != d(k)) fail(s"$k differs between tiers (random batches=$random)"))
-        Seq(dist, fused).foreach(h => graft.util.TempDirs.delete(java.nio.file.Paths.get(h.dir)))
+        TwoTier.assertSame(
+          { tuning =>
+            val h = run(tuning)
+            try state(h) finally graft.util.TempDirs.delete(java.nio.file.Paths.get(h.dir))
+          },
+          s"random batches=$random")
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{GraftSync, SparkSpec}
+import graft.{GraftSync, SparkSpec, TwoTier}
 import graft.ann.Ann
 import graft.catalog.{Catalog, TableMeta}
 import graft.functions.Retrieval
@@ -150,7 +150,7 @@ class SyncPipelineSpec extends SparkSpec {
     val finalState = Seq((2L, "note text REWRITTEN two", mkVec(42L))) ++ Seq(3L, 4L, 5L, 6L).map(note)
     val h = new PipelineHarness(
       spark, "note", "id", seedState.toDF("id", "text", "embedding"), Seq("id", "text"),
-      tuning = graft.cdc.IncrementalEngine.Tuning(inSetThreshold = 1))
+      tuning = graft.Tuning(inSetThreshold = 1))
     val dir = h.dir
     val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val pipeline = h.pipeline(
@@ -348,9 +348,11 @@ class SyncPipelineSpec extends SparkSpec {
       // other table: ignored
       ("INSERT", "x", null, """{"id": 9}""", 5L)
     ).toDF("tg_op", "tbl", "old", "new", "txid")
-    val rows = SyncPipeline.changeRows(batch, load, "t", "id", Seq("text"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSet
-    assert(rows == Set(("DELETE", 1L, null), ("UPDATE", 2L, "beta"), ("DELETE", 3L, null)))
+    // the literal tier and the broadcast semi-join derive the same rows
+    val rows = TwoTier.assertSame(tuning =>
+      Map("rows" -> SyncPipeline.changeRows(batch, load, "t", "id", Seq("text"), tuning)
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSet))
+    assert(rows("rows") == Set(("DELETE", 1L, null), ("UPDATE", 2L, "beta"), ("DELETE", 3L, null)))
   }
 
   test("changeRows: empty and foreign-table-only batches yield empty (streaming idle path)") {
@@ -363,9 +365,50 @@ class SyncPipelineSpec extends SparkSpec {
     val foreign = Seq(("INSERT", "x", null: String, """{"id": 9}""", 1L))
       .toDF("tg_op", "tbl", "old", "new", "txid")
     assert(SyncPipeline.changeRows(foreign, load, "t", "id", Seq("text")).count() == 0)
-    // an empty affected set stays on the literal tier even at threshold 0
-    // (0 <= 0): the zero-value isin must not throw
+    // the default-tier calls above take the literal tier with a zero-value
+    // isin, which must not throw; at threshold 0 the empty set takes the
+    // semi-join tier, also empty
     assert(SyncPipeline.changeRows(
-      foreign, load, "t", "id", Seq("text"), inSetThreshold = 0).count() == 0)
+      foreign, load, "t", "id", Seq("text"), TwoTier.Distributed).count() == 0)
+  }
+
+  test("a cluster consumer persists the same assignments, merges and stored keys on both tiers") {
+    // clusters {10, 11} and {20, 21} share no 3-shingle pair above the
+    // threshold; doc 5 overlaps both (Jaccard ≈ 0.57 each), so its batch
+    // merges two stored clusters under the smaller id
+    def words(from: Int, to: Int) = (from to to).map(w => s"w$w").mkString(" ")
+    val texts = Map(
+      10L -> s"${words(1, 20)} tag10", 11L -> s"${words(1, 20)} tag11",
+      20L -> s"${words(11, 30)} tag20", 21L -> s"${words(11, 30)} tag21",
+      40L -> "a third cluster of its own kind here", 41L -> "a third cluster of its own kind now",
+      5L -> s"${words(6, 25)} tag5", 22L -> s"${words(11, 30)} tag22")
+    def source(ids: Long*) = ids.map(i => (i, texts(i))).toDF("id", "text")
+    def bag(df: DataFrame) = df.collect().map(_.toSeq).groupBy(identity).map { case (k, v) => k -> v.length }
+    val state = TwoTier.assertSame { tuning =>
+      val h = new PipelineHarness(spark, "note", "id", source(10L, 11L, 20L, 21L, 40L), Seq("id"), tuning)
+      val (map, sig) = (s"${h.dir}/cluster", s"${h.dir}/cluster-sig")
+      val p = h.pipeline(SyncPipeline.ClusterConsumer(
+        map, sig, "text", bands = 32, rowsPerBand = 2, sigBuckets = 4, mapBuckets = 4))
+      p.seed()
+      h.rows = source(5L, 10L, 11L, 20L, 40L, 41L)
+      p.applyBatch(h.batch(("INSERT", 5L), ("INSERT", 41L), ("DELETE", 21L)))
+      h.rows = source(5L, 10L, 11L, 20L, 22L, 40L, 41L)
+      val last = h.batch(("INSERT", 22L), ("UPDATE", 40L))
+      p.applyBatch(last)
+      p.applyBatch(last) // at-least-once
+      val (data, head) = graft.sources.IndexState.open(spark, map)
+      val got = Map(
+        "assignments" -> bag(graft.dedup.ClusterMap.assignments(spark, map)),
+        "merges" -> bag(head.scan(spark, data, "merges").select("from_root", "to_root", "seq")),
+        "keys" -> bag(graft.dedup.SignatureIndex.storedKeys(spark, sig)))
+      graft.util.TempDirs.delete(java.nio.file.Paths.get(h.dir))
+      got
+    }
+    val assigned = state("assignments").asInstanceOf[Map[Seq[Any], Int]].keySet
+      .map(r => r(0).asInstanceOf[Long] -> r(1).asInstanceOf[Long]).toMap
+    assert(assigned == Map(5L -> 5L, 10L -> 5L, 11L -> 5L, 20L -> 5L, 21L -> 5L, 22L -> 5L,
+      40L -> 40L, 41L -> 40L), assigned)
+    assert(state("merges").asInstanceOf[Map[Seq[Any], Int]].keySet.map(r => r.take(2)) ==
+      Set(Seq(10L, 5L), Seq(20L, 5L)))
   }
 }
