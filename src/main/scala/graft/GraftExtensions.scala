@@ -1,6 +1,6 @@
 package graft
 
-import graft.expr.{SquashMeta, VectorBinaryOp, VectorOp, VectorSumAgg}
+import graft.expr.{PackSigns, SquashMeta, VectorBinaryOp, VectorOp, VectorSumAgg}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -24,21 +24,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     * FunctionsSpec.
     */
   private def binarizeExpr(v: Expression, dim: Int): Expression = {
-    import org.apache.spark.sql.catalyst.expressions.{Add, Cast, ElementAt, GreaterThanOrEqual, If, Literal, CreateArray, RaiseError, Size}
-    import org.apache.spark.sql.types.DoubleType
+    import org.apache.spark.sql.catalyst.expressions.{GreaterThanOrEqual, If, Literal, RaiseError, Size}
     require(dim > 0, s"vec_binarize: dim must be positive, got $dim")
-    val words = (dim + 63) / 64
-    val packed = CreateArray((0 until words).map { w =>
-      (w * 64 until math.min(dim, (w + 1) * 64))
-        .map { j =>
-          If(
-            GreaterThanOrEqual(Cast(ElementAt(v, Literal(j + 1)), DoubleType), Literal(0.0)),
-            Literal(1L << (j % 64)),
-            Literal(0L)
-          ): Expression
-        }
-        .reduce(Add(_, _))
-    })
+    val packed = PackSigns(v, dim)
     // Same short-vector guard as the Column form (VectorFunctions.binarize).
     If(
       GreaterThanOrEqual(Size(v), Literal(dim)),

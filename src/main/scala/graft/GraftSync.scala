@@ -84,7 +84,7 @@ final class GraftSync(
     Plugins(docs, plugins)
   }
 
-  /** Full snapshot → materialized index v0. */
+  /** Full snapshot → a fresh materialized index. */
   def snapshot(): Unit = {
     progress.phaseName = "snapshot"
     sync.snapshot()
@@ -98,9 +98,10 @@ final class GraftSync(
     * pages; a crashed run resumes at the first incomplete page). The
     * document space is chunked by the index's own root-id bucket hash;
     * each completed chunk is a SNAPSHOT_PROGRESS line, so a process that
-    * dies mid-snapshot loses at most one chunk's work. The index becomes
-    * visible (CURRENT flip) only when every chunk is done — identical
-    * content to [[snapshot]].
+    * dies mid-snapshot loses at most one chunk's work. The chunks write
+    * beside the live index, and the snapshot becomes visible with one
+    * index log entry only when every chunk is done — identical content to
+    * [[snapshot]].
     *
     * The chunk predicate is pushed into the ROOT table scan (it is an
     * expression over the root's primary-key columns), so the joins,
@@ -195,18 +196,17 @@ final class GraftSync(
     }
     val prepared = prepare(fresh).cache()
     try {
-      val resynced = sync.applyBatch(prepared, opsSink)
+      // distinct txids of one batch: bounded driver-side collect (≤ batch
+      // size), same magnitude as the reference's checkpoint computation.
+      // The checkpoint commits in the batch's own log entry.
+      val txids = prepared.select(col("txid")).distinct().collect().map(_.getLong(0))
+      val checkpoint = Option.when(txids.nonEmpty) {
+        val wm = math.max(ck.fold(Long.MinValue)(_.watermark), txids.min - 1)
+        graft.sources.IndexLog.Checkpoint(wm, (ck.fold(Set.empty[Long])(_.applied) ++ txids).filter(_ > wm))
+      }
+      val resynced = sync.applyBatch(prepared, opsSink, checkpoint)
       progress.batchesApplied.incrementAndGet()
       progress.docsResynced.addAndGet(resynced)
-      // distinct txids of one batch: bounded driver-side collect (≤ batch
-      // size), same magnitude as the reference's checkpoint computation
-      val txids = prepared.select(col("txid")).distinct().collect().map(_.getLong(0))
-      if (txids.nonEmpty) {
-        val oldWm = ck.fold(Long.MinValue)(_.watermark)
-        val wm = math.max(oldWm, txids.min - 1)
-        val applied = (ck.fold(Set.empty[Long])(_.applied) ++ txids).filter(_ > wm)
-        state.saveCheckpoint(wm, applied)
-      }
     } finally prepared.unpersist()
   }
 

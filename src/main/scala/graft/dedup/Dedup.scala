@@ -269,6 +269,9 @@ object Dedup {
   /** The xxhash64 rotate-XOR band keys of [[minhashLsh]] as a reusable
     * (id, key) frame — the production form of the persisted signature
     * index the incremental path probes.
+    * An id with two different texts raises an error instead of merging
+    * both into keys that match neither; the check (min = max of a text
+    * hash) rides in the signature aggregation, so it costs no Spark job.
     */
   private[graft] def prodBandKeys(
       docs: DataFrame,
@@ -287,6 +290,7 @@ object Dedup {
     // are driven by the (small) candidate list, which shrinks first.
     val sh = docs.select(
       col(id).as("id"),
+      xxhash64(col(text)).as("th"),
       TF.wordShingles(col(text), shingleN).as("sh")
     ).filter(size(col("sh")) > 0)
     // signature via explode + k codegen'd min-aggregates (map-side
@@ -301,9 +305,9 @@ object Dedup {
       Array.fill(k)(rnd.nextLong())
     }
     val hashed = sh
-      .select(col("id"), explode(col("sh")).as("s"))
-      .select(col("id"), xxhash64(col("s")).as("h"))
-      .select(col("id") +: (0 until k).map { i =>
+      .select(col("id"), col("th"), explode(col("sh")).as("s"))
+      .select(col("id"), col("th"), xxhash64(col("s")).as("h"))
+      .select(col("id") +: col("th") +: (0 until k).map { i =>
         val r = (i * 7) % 63 + 1
         val rotated = call_function("shiftleft", col("h"), lit(r))
           .bitwiseOR(call_function("shiftrightunsigned", col("h"), lit(64 - r)))
@@ -311,11 +315,14 @@ object Dedup {
       }: _*)
     val sig = hashed
       .groupBy("id")
-      .agg(min(col("h0")).as("m0"), (1 until k).map(i => min(col(s"h$i")).as(s"m$i")): _*)
+      .agg(min(col("th")).as("th_lo"),
+        max(col("th")).as("th_hi") +: (0 until k).map(i => min(col(s"h$i")).as(s"m$i")): _*)
     val bandCols = (0 until bands).map { b =>
       hash((0 until rowsPerBand).map(r => col(s"m${b * rowsPerBand + r}")): _*)
     }
-    sig.select(col("id"), posexplode(array(bandCols: _*)))
+    val oneText = when(col("th_lo") === col("th_hi"), array(bandCols: _*)).otherwise(raise_error(concat(
+      lit("prodBandKeys: id "), col("id").cast("string"), lit(" has two texts; collapse to one row per id first"))))
+    sig.select(col("id"), posexplode(oneText))
       .select(col("id"), concat_ws(":", col("pos"), col("col")).as("key"))
   }
 

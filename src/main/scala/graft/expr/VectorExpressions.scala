@@ -1,10 +1,10 @@
 package graft.expr
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType, FloatType, LongType}
 
 /** Native Catalyst expressions for vector math over `array<float>` /
   * `array<double>` columns, with `doGenCode` emitting a tight primitive
@@ -127,4 +127,38 @@ case class VectorBinaryOp(left: Expression, right: Expression, op: VectorOp)
       newLeft: Expression,
       newRight: Expression
   ): Expression = copy(left = newLeft, right = newRight)
+}
+
+/** Sign-bit packing ([[graft.functions.VectorFunctions.binarize]] and its
+  * SQL mirror `vec_binarize`): the first `dim` components as ceil(dim/64)
+  * longs, bit j of word j/64 set iff component j ≥ 0 in Spark's order (NaN
+  * sets its bit, a null component does not). Any numeric array is cast to
+  * `array<double>`, which keeps every sign. One loop whatever `dim` — a
+  * per-component unrolled expression outgrows Janino's 64 KB method limit
+  * at dim 70. Callers guard `size ≥ dim`.
+  */
+case class PackSigns(child: Expression, dim: Int) extends UnaryExpression with ImplicitCastInputTypes {
+
+  override def inputTypes: Seq[ArrayType] = Seq(ArrayType(DoubleType))
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+
+  override protected def nullSafeEval(a: Any): Any = PackSigns.pack(a.asInstanceOf[ArrayData], dim)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, a => s"${PackSigns.getClass.getName}.MODULE$$.pack($a, $dim)")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
+}
+
+object PackSigns {
+  def pack(x: ArrayData, dim: Int): ArrayData = {
+    val words = new Array[Long]((dim + 63) / 64)
+    var j = 0
+    while (j < math.min(dim, x.numElements())) {
+      if (!x.isNullAt(j) && !(x.getDouble(j) < 0)) words(j / 64) |= 1L << (j % 64)
+      j += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(words)
+  }
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.expr.{VectorBinaryOp, VectorOp, VectorSumAgg}
+import graft.expr.{PackSigns, VectorBinaryOp, VectorOp, VectorSumAgg}
 import org.apache.spark.sql.{Column, GraftColumnBridge => ExpressionUtils}
 import org.apache.spark.sql.functions._
 
@@ -68,23 +68,15 @@ object VectorFunctions {
   /** Binary (sign-bit) quantization: `dim` sign bits packed into
     * ceil(dim/64) longs (`array<bigint>`) — 32× smaller than float32 on
     * disk and through every scan. Bit j of word j/64 is set iff component
-    * j ≥ 0 (the random-hyperplane code with identity planes). The per-word
-    * sums are plan-time unrolled, so packing is one codegen'd projection —
-    * no higher-order functions.
+    * j ≥ 0 (the random-hyperplane code with identity planes). Packing is
+    * one codegen'd loop ([[graft.expr.PackSigns]]), whatever `dim`.
     */
   def binarize(v: Column, dim: Int): Column = {
     require(dim > 0, s"dim must be positive, got $dim")
-    val words = (dim + 63) / 64
-    val packed = array((0 until words).map { w =>
-      (w * 64 until math.min(dim, (w + 1) * 64))
-        .map { j =>
-          when(element_at(v, j + 1) >= 0, lit(1L << (j % 64))).otherwise(lit(0L))
-        }
-        .reduce(_ + _)
-    }: _*)
+    val packed = ExpressionUtils.column(PackSigns(ExpressionUtils.expression(v), dim))
     // Guard the contract: a vector shorter than `dim` would silently pack
-    // the missing components as 0 bits (out-of-bounds element_at → null →
-    // otherwise-branch). Fail loudly instead; one size() load per row.
+    // the missing components as 0 bits. Fail loudly instead; one size()
+    // load per row.
     when(size(v) >= dim, packed).otherwise(
       raise_error(
         concat(

@@ -6,7 +6,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
 
 import java.nio.charset.StandardCharsets
 
-/** The commit log of a persisted index (BM25 postings, LSH buckets, IVF-PQ
+/** The commit log of a persisted index (the doc index
+  * [[graft.sinks.MaterializedIndex]], BM25 postings, LSH buckets, IVF-PQ
   * cells, [[graft.dedup.ClusterMap]] members and merge pointers,
   * [[graft.dedup.SignatureIndex]] band keys): `<dataDir>/_graft_log/<seq>`,
   * one entry per mutation.
@@ -27,6 +28,7 @@ import java.nio.charset.StandardCharsets
   * {{{
   * #graft-log 1
   * #counters,<n_docs>,<dl_sum>,<buckets>
+  * #checkpoint,<watermark>,<applied txid>,...
   * #kind,<kind>,<dir>,<partition column>,<data schema json>
   * <kind>,<bucket>,<seq>,<length>,<file>
   * }}}
@@ -34,14 +36,21 @@ import java.nio.charset.StandardCharsets
   *   - `#counters` carries the BM25 corpus counters (zero for the vector
   *     indexes), which a mutation updates exactly and a probe scores with;
   *     the dedup indexes keep only their bucket count there.
+  *   - `#checkpoint` (the doc index only, optional) is the txid checkpoint
+  *     of the change feed ([[Checkpoint]]), committed in the same create as
+  *     the batch's files; an entry carries it forward until a batch
+  *     replaces it.
   *   - `#kind` gives the scan shape of each kind of file: its directory
   *     under the data dir, the column its `<column>=<value>/` partition
   *     directories encode (empty for a flat directory), and its schema —
   *     so a read needs no listing and no footer inference. A kind whose
-  *     shape is recorded but which lists no file scans as empty.
-  *   - File lines have the shape of the [[graft.sinks.MaterializedIndex]]
-  *     manifest; `file` is relative to the kind's directory, `bucket` is
-  *     the partition value (-1 when flat) and `seq` the entry that added
+  *     shape is recorded but which lists no file scans as empty. A
+  *     directory holding [[SeqDir]] is per entry: each entry's files of
+  *     the kind live under the directory named with its own seq (the doc
+  *     index's `v_<seq>/docs`), so a mutation writes beside the files the
+  *     head lists instead of into their directory.
+  *   - In a file line, `file` is relative to the kind's directory, `bucket`
+  *     is the partition value (-1 when flat) and `seq` the entry that added
   *     the file.
   *
   * The entry's number is the mutation seq, the stamp of the rows it wrote
@@ -60,11 +69,22 @@ object IndexLog {
   /** Test-only failure injection: called with `write:<kind>` after each
     * data write of a mutation and with `commit` just before the entry is
     * created. A throw leaves the files written so far on disk, unlogged —
-    * a crash.
+    * a crash. Generation promotion ([[IndexState.compactAndSwap]]) calls
+    * it at its own steps, `promote:staged|renamed|ready`.
     */
   @volatile private[graft] var crashHook: String => Unit = _ => ()
 
   final case class Counters(nDocs: Long, dlSum: Long, buckets: Int)
+
+  /** The doc index's txid checkpoint (the reference's checkpoint file,
+    * `pgsync/sync.py:1581-1656,1890-1893`): every txid ≤ `watermark` is
+    * applied, and `applied` holds the exact txids above it already applied
+    * (see [[graft.GraftSync.applyChanges]]).
+    */
+  final case class Checkpoint(watermark: Long, applied: Set[Long])
+
+  /** The placeholder of a per-entry kind directory (see the class doc). */
+  val SeqDir = "{seq}"
 
   /** How to scan one kind of file: its directory relative to the data dir
     * ("" for the data dir itself), its partition column, its data schema
@@ -79,15 +99,22 @@ object IndexLog {
     */
   final case class Added(shapes: Map[String, Shape], files: Seq[LoggedFile])
 
-  final case class Entry(seq: Long, counters: Counters, shapes: Map[String, Shape], files: Seq[LoggedFile]) {
+  final case class Entry(
+      seq: Long,
+      counters: Counters,
+      shapes: Map[String, Shape],
+      files: Seq[LoggedFile],
+      checkpoint: Option[Checkpoint] = None
+  ) {
 
     def has(kind: String): Boolean = files.exists(_.kind == kind)
 
     /** The entry after a mutation at `seq`: every file of this one plus the
-      * mutation's. A kind keeps the shape it was first written with.
+      * mutation's, and this one's checkpoint. A kind keeps the shape it was
+      * first written with.
       */
     def next(seq: Long, counters: Counters, added: Added): Entry =
-      Entry(seq, counters, added.shapes ++ shapes, files ++ added.files)
+      Entry(seq, counters, added.shapes ++ shapes, files ++ added.files, checkpoint)
 
     /** Exactly this entry's files of `kind` under `dataDir`, with its
       * partition column (see [[ManifestFileIndex]]).
@@ -95,11 +122,12 @@ object IndexLog {
     def scan(spark: SparkSession, dataDir: String, kind: String): DataFrame = {
       val shape = shapes.getOrElse(kind,
         throw new IllegalStateException(s"$dataDir: the index log records no '$kind' files"))
-      val root = kindRoot(dataDir, shape)
-      val listed = files.filter(_.kind == kind).map { f =>
-        f.bucket -> new FileStatus(f.length, false, 0, 0L, 0L, new Path(root, f.file))
+      val own = files.filter(_.kind == kind)
+      val roots = (if (own.isEmpty) Seq(seq) else own.map(_.seq)).distinct.map(kindRoot(dataDir, shape, _)).distinct
+      val listed = own.map { f =>
+        f.bucket -> new FileStatus(f.length, false, 0, 0L, 0L, new Path(kindRoot(dataDir, shape, f.seq), f.file))
       }
-      ManifestFileIndex.scan(spark, ManifestFileIndex(Seq(root), shape.partitionColumn, listed), shape.schema)
+      ManifestFileIndex.scan(spark, ManifestFileIndex(roots, shape.partitionColumn, listed), shape.schema)
     }
   }
 
@@ -125,33 +153,53 @@ object IndexLog {
   private def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def kindRoot(dataDir: String, shape: Shape): Path =
-    if (shape.dir.isEmpty) new Path(dataDir) else new Path(dataDir, shape.dir)
+  /** The directory of one kind's files added at `seq`. */
+  private def kindRoot(dataDir: String, shape: Shape, seq: Long): Path = {
+    val dir = shape.dir.replace(SeqDir, seq.toString)
+    if (dir.isEmpty) new Path(dataDir) else new Path(dataDir, dir)
+  }
 
-  /** The head entry of `dataDir`'s log: one listing and one file read on
-    * the driver. An index without a log was written by an older layout and
-    * must be rebuilt.
+  private def seqsOf(f: FileSystem, dir: Path): Seq[Long] =
+    try f.listStatus(dir).toSeq.flatMap(st => st.getPath.getName.toLongOption)
+    catch { case _: java.io.FileNotFoundException => Nil }
+
+  /** The head entry of `dataDir`'s log, None when the log is empty or
+    * absent: one listing and one file read on the driver.
     */
-  def head(spark: SparkSession, dataDir: String): Entry = {
+  def latest(spark: SparkSession, dataDir: String): Option[Entry] = {
     val f = fs(spark, dataDir)
     val dir = new Path(dataDir, Dir)
-    def attempt(): Option[Entry] = {
-      val seqs =
-        try f.listStatus(dir).toSeq.flatMap(st => st.getPath.getName.toLongOption)
-        catch { case _: java.io.FileNotFoundException => Nil }
-      if (seqs.isEmpty)
-        throw new IllegalStateException(
-          s"$dataDir has no index log ($Dir): it was written by an older index layout " +
-            "or never built; rebuild the index (writeBm25Index / writeLshIndex / writePqIndex / " +
-            "ClusterMap.init / SignatureIndex.write)")
-      val n = seqs.max
-      try Some(parse(n, readText(f, new Path(dir, n.toString))))
-      catch { case _: java.io.FileNotFoundException => None }
-    }
+    def attempt(): Option[Option[Entry]] =
+      seqsOf(f, dir).maxOption match {
+        case None => Some(None)
+        case Some(n) =>
+          try Some(Some(parse(n, readText(f, new Path(dir, n.toString)))))
+          catch { case _: java.io.FileNotFoundException => None }
+      }
     // the head can be deleted between the listing and the read by two
     // commits in a row (see [[commit]]): the next listing finds their head
     attempt().orElse(attempt()).getOrElse(
       throw new IllegalStateException(s"$dataDir: the index log head moved twice during one read"))
+  }
+
+  /** [[latest]] of an index that must exist. An index without a log was
+    * written by an older layout and must be rebuilt.
+    */
+  def head(spark: SparkSession, dataDir: String): Entry =
+    latest(spark, dataDir).getOrElse(
+      throw new IllegalStateException(
+        s"$dataDir has no index log ($Dir): it was written by an older index layout " +
+          "or never built; rebuild the index (writeBm25Index / writeLshIndex / writePqIndex / " +
+          "ClusterMap.init / SignatureIndex.write, or GraftSync.snapshot for the doc index)"))
+
+  /** Every entry still in the log — the head and its predecessor after any
+    * commit. A reader racing two commits can miss one; only the single
+    * writer calls this.
+    */
+  def entries(spark: SparkSession, dataDir: String): Seq[Entry] = {
+    val f = fs(spark, dataDir)
+    val dir = new Path(dataDir, Dir)
+    seqsOf(f, dir).sorted.map(n => parse(n, readText(f, new Path(dir, n.toString))))
   }
 
   /** Run `writes` concurrently and return exactly the files they added: the
@@ -161,19 +209,27 @@ object IndexLog {
     * after each write.
     */
   def write(spark: SparkSession, dataDir: String, seq: Long, writes: Seq[Write]): Added = {
-    val f = fs(spark, dataDir)
     val shapes = writes.map { w =>
       w.kind -> Shape(w.dir, w.partitionColumn,
         StructType(w.rows.schema.filterNot(c => w.partitionColumn.contains(c.name)).map(_.copy(nullable = true))))
     }.toMap
-    def listed(): Set[LoggedFile] = writes.flatMap(w => list(f, dataDir, w.kind, shapes(w.kind), seq)).toSet
-    val before = listed()
+    val before = listAll(spark, dataDir, seq, shapes).files.toSet
     graft.util.Par.all(writes.map { w => () =>
       val out = w.rows.write.mode(w.mode)
-      w.partitionColumn.fold(out)(c => out.partitionBy(c)).parquet(kindRoot(dataDir, shapes(w.kind)).toString)
+      w.partitionColumn.fold(out)(c => out.partitionBy(c)).parquet(kindRoot(dataDir, shapes(w.kind), seq).toString)
       crashHook(s"write:${w.kind}")
     })
-    Added(shapes, (listed() -- before).toSeq.sortBy(l => (l.kind, l.bucket, l.file)))
+    Added(shapes, listAll(spark, dataDir, seq, shapes).files.filterNot(before))
+  }
+
+  /** Every data file now under the directories of `shapes` at `seq`,
+    * stamped with `seq`: what a build written over several calls (the doc
+    * index's resumable snapshot, one call per chunk) adds when it commits.
+    */
+  def listAll(spark: SparkSession, dataDir: String, seq: Long, shapes: Map[String, Shape]): Added = {
+    val f = fs(spark, dataDir)
+    val files = shapes.toSeq.flatMap { case (k, s) => list(f, dataDir, k, s, seq) }
+    Added(shapes, files.sortBy(l => (l.kind, l.bucket, l.file)))
   }
 
   /** The data files under one kind's directory (Spark's `_SUCCESS`,
@@ -187,7 +243,7 @@ object IndexLog {
       val n = st.getPath.getName
       st.isFile && !n.startsWith("_") && !n.startsWith(".")
     }
-    val root = kindRoot(dataDir, shape)
+    val root = kindRoot(dataDir, shape, seq)
     shape.partitionColumn match {
       case None => ls(root).filter(data).map(st => LoggedFile(kind, -1L, seq, st.getLen, st.getPath.getName))
       case Some(c) =>
@@ -238,20 +294,26 @@ object IndexLog {
     val kinds = e.shapes.toSeq.sortBy(_._1).map { case (k, s) =>
       s"#kind,$k,${s.dir},${s.partitionColumn.getOrElse("")},${s.schema.json}"
     }
+    val checkpoint = e.checkpoint.map(k => (s"#checkpoint,${k.watermark}" +: k.applied.toSeq.sorted).mkString(","))
     val files = e.files.map(l => s"${l.kind},${l.bucket},${l.seq},${l.length},${l.file}")
-    ((Header +: s"#counters,${c.nDocs},${c.dlSum},${c.buckets}" +: kinds) ++ files).mkString("", "\n", "\n")
+    ((Header +: s"#counters,${c.nDocs},${c.dlSum},${c.buckets}" +: (checkpoint.toSeq ++ kinds)) ++ files)
+      .mkString("", "\n", "\n")
   }
 
   private def parse(seq: Long, text: String): Entry = {
     val lines = text.split("\n").filter(_.nonEmpty).toSeq
     require(lines.headOption.contains(Header), s"log entry $seq: unknown format '${lines.headOption.getOrElse("")}'")
     var counters = Counters(0L, 0L, 0)
+    var checkpoint = Option.empty[Checkpoint]
     val shapes = Map.newBuilder[String, Shape]
     val files = Seq.newBuilder[LoggedFile]
     lines.tail.foreach { line =>
       if (line.startsWith("#counters,")) {
         val Array(_, n, d, b) = line.split(",", 4)
         counters = Counters(n.toLong, d.toLong, b.toInt)
+      } else if (line.startsWith("#checkpoint,")) {
+        val txids = line.split(",").toSeq.tail.map(_.toLong)
+        checkpoint = Some(Checkpoint(txids.head, txids.tail.toSet))
       } else if (line.startsWith("#kind,")) {
         val Array(_, k, dir, part, json) = line.split(",", 5)
         shapes += k -> Shape(dir, Option(part).filter(_.nonEmpty), DataType.fromJson(json).asInstanceOf[StructType])
@@ -260,6 +322,6 @@ object IndexLog {
         files += LoggedFile(k, b.toLong, s.toLong, len.toLong, file)
       }
     }
-    Entry(seq, counters, shapes.result(), files.result())
+    Entry(seq, counters, shapes.result(), files.result(), checkpoint)
   }
 }

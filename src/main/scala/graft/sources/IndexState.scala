@@ -148,6 +148,8 @@ object IndexState {
     * flip that makes it current. Then the age-based GC ([[gcExpired]]):
     * superseded generations (and the legacy root data) are deleted only
     * once their successor's ready marker is [[gcGraceMs]] old.
+    * Crash points ([[IndexLog.crashHook]]): `promote:renamed` before the
+    * marker (no reader resolves that generation), `promote:ready` after it.
     */
   def promoteStaging(spark: SparkSession, path: String, stagingPath: String): Unit = {
     val f = fs(spark, path)
@@ -157,7 +159,9 @@ object IndexState {
       f.rename(new Path(stagingPath), genDir),
       s"promoteStaging: could not move $stagingPath to $genDir"
     )
+    IndexLog.crashHook("promote:renamed")
     f.create(new Path(s"$path/$GenPrefix$next/$ReadyMarker"), false).close()
+    IndexLog.crashHook("promote:ready")
     gcExpired(spark, path, next)
   }
 
@@ -323,7 +327,8 @@ object IndexState {
     * generation is born tombstone-free (the rewrite dropped those rows, and
     * the tombstones are generation-scoped), so no post-flip cleanup touches
     * files a racing reader may hold. Returns whether the promotion
-    * happened.
+    * happened. Crash point `promote:staged`: staging written, nothing
+    * promoted; a retry rewrites it.
     */
   def compactAndSwap(spark: SparkSession, path: String, compact: String => Unit): Boolean = {
     val seqNow = IndexLog.head(spark, dataPath(spark, path)).seq
@@ -331,6 +336,7 @@ object IndexState {
     val staging = path + StagingSuffix
     deleteDir(spark, staging) // abandoned residue from a crashed attempt
     compact(staging)
+    IndexLog.crashHook("promote:staged")
     if (!stagingHasData(spark, staging)) {
       deleteDir(spark, staging)
       writeRefusedSeq(spark, path, seqNow)

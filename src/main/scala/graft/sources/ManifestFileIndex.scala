@@ -8,9 +8,8 @@ import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, 
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.{LongType, StructType}
 
-/** A [[FileIndex]] over a fixed file list taken from a manifest or a commit
-  * log ([[graft.sinks.MaterializedIndex]]'s `v_N/manifest`,
-  * [[IndexLog]]'s `_graft_log/<seq>`): listing is a constant, so
+/** A [[FileIndex]] over a fixed file list taken from a commit log entry
+  * ([[IndexLog]]'s `_graft_log/<seq>`): listing is a constant, so
   * constructing a read launches no Spark job — no partition discovery, no
   * parallel listing job once a read spans more than 32 directories — and a
   * case class, so two reads of the same files compare equal (plan reuse,

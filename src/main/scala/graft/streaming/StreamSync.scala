@@ -6,6 +6,7 @@ import graft.catalog.Catalog
 import graft.cdc.{Changes, IncrementalEngine, Lineage}
 import graft.schema.Node
 import graft.sinks.MaterializedIndex
+import graft.sources.IndexLog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -49,7 +50,7 @@ final class StreamSync(
   private def withPlugins(structured: DataFrame): DataFrame =
     graft.transform.Plugins(structured, plugins)
 
-  /** Full snapshot → materialized index version 0 (`pull()`,
+  /** Full snapshot → a fresh materialized index (`pull()`,
     * `sync.py:1895-1945`).
     */
   def snapshot(): Unit =
@@ -60,8 +61,14 @@ final class StreamSync(
     * `opsSink`, when set, receives the batch's (`op`, `_id`, `doc`) rows —
     * derived from the SAME cached resolution/re-assembly the local commit
     * uses, so publishing to a remote index costs no second engine pass.
+    * `checkpoint` commits with the batch's docs (see
+    * [[MaterializedIndex.commit]]).
     */
-  def applyBatch(batch: DataFrame, opsSink: Option[DataFrame => Unit] = None): Long = {
+  def applyBatch(
+      batch: DataFrame,
+      opsSink: Option[DataFrame => Unit] = None,
+      checkpoint: Option[IndexLog.Checkpoint] = None
+  ): Long = {
     if (batch.isEmpty) return 0L
     val lineage = state.lineage
     val affected = engine.affectedRoots(batch, lineage).cache()
@@ -82,8 +89,8 @@ final class StreamSync(
         sink(indexOps.unionAll(deleteOps))
       }
       // only the re-assembled roots' rows: the index rewrites just the
-      // affected buckets and inherits the rest via its manifest
-      state.commit(affected, flat, Lineage.fromDocs(structured))
+      // affected buckets and inherits the rest through its log entry
+      state.commit(affected, flat, Lineage.fromDocs(structured), checkpoint)
       // affected is cached and already materialized by the commit's writes,
       // so this count is a cached-partition scan, not a re-resolution — the
       // per-batch "docs re-synced" number the status surface reports

@@ -87,11 +87,11 @@ class GraftSyncSpec extends SparkSpec {
     sync1.snapshotChunk(1, 4)
     Seq(("junk-id", "junk-doc")).toDF("_id", "doc")
       .write.parquet(s"$dir/v_0/docs/bucket=2") // chunk 2's partial debris
-    assert(!sync1.state.exists, "index must not be visible half-built (no CURRENT)")
+    assert(!sync1.state.exists, "index must not be visible half-built (no log entry)")
     assert(sync1.state.pendingSnapshotChunks.contains(Seq(2, 3)))
 
     // restart: a NEW facade over the same dir skips the completed chunks,
-    // replaces the crashed chunk's debris, finishes, and flips CURRENT
+    // replaces the crashed chunk's debris, finishes, and commits its entry
     val sync2 = GraftSync(spark, schemaJson, cat, load, dir)
     sync2.snapshotResumable(4)
     assert(sync2.state.exists)
@@ -269,8 +269,8 @@ class GraftSyncSpec extends SparkSpec {
     )
     assert(syncs.map(_.schema.index) == Seq("idx_a", "idx_b"))
     syncs.foreach(_.snapshot())
-    assert(Files.exists(java.nio.file.Paths.get(s"$base/idx_a/CURRENT")))
-    assert(Files.exists(java.nio.file.Paths.get(s"$base/idx_b/CURRENT")))
+    assert(Files.exists(java.nio.file.Paths.get(s"$base/idx_a/_graft_log/0")))
+    assert(Files.exists(java.nio.file.Paths.get(s"$base/idx_b/_graft_log/0")))
   }
 
   test("fromConfigSource reads a local config file into the same syncs as fromConfig") {

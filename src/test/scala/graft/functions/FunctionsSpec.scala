@@ -106,7 +106,20 @@ class FunctionsSpec extends SparkSpec {
     assert(r.getLong(0) == 2L) // signs differ at components 2 and 3
     assert(r.getSeq[Long](1) == Seq(2L)) // bit 1 set (component 2 >= 0)
     // the SQL mirror must agree with the Scala Column form bit-for-bit
-    // (including the 2-word boundary)
+    // (including the 2-word boundary), and both must compile: with the
+    // interpreted fallback off, a plan outgrowing Janino's 64 KB limit fails
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try binarizeAgreement()
+    finally spark.conf.unset("spark.sql.codegen.fallback")
+    // non-literal dim fails with the documented contract, not an opaque eval error
+    val err = intercept[org.apache.spark.sql.AnalysisException] {
+      Seq((1, Array(1.0f))).toDF("n", "a").createOrReplaceTempView("vb")
+      spark.sql("SELECT vec_binarize(a, n) FROM vb").collect()
+    }
+    assert(err.getMessage.contains("dim must be a literal"))
+  }
+
+  private def binarizeAgreement(): Unit = {
     val cross = (0 until 20).map { i =>
       (i.toLong, Array.tabulate(70)(j => math.sin(i * 7 + j * 3).toFloat))
     }.toDF("id", "v")
@@ -129,12 +142,6 @@ class FunctionsSpec extends SparkSpec {
           VectorFunctions.binarize(col("b.v"), 70), 2).as("h"))
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(hamAgree.collect().forall(r => scalaHam((r.getLong(0), r.getLong(1))) == r.getLong(2)))
-    // non-literal dim fails with the documented contract, not an opaque eval error
-    val err = intercept[org.apache.spark.sql.AnalysisException] {
-      Seq((1, Array(1.0f))).toDF("n", "a").createOrReplaceTempView("vb")
-      spark.sql("SELECT vec_binarize(a, n) FROM vb").collect()
-    }
-    assert(err.getMessage.contains("dim must be a literal"))
   }
 
   test("vec_binarize / vec_hamming raise on size mismatch instead of silent nulls") {

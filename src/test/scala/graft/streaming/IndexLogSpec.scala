@@ -140,6 +140,36 @@ class IndexLogSpec extends SparkSpec {
     }
   }
 
+  test("crash matrix (bm25 compaction): a crash at any promotion step keeps the index readable, the retry equals a rebuild") {
+    def build(): String = {
+      val p = graft.util.TempDirs.scratch("log-crash-bm25-compact").toString
+      bm25.build(corpus(base), p)
+      bm25.mutate(p, true)
+      p
+    }
+    def compact(p: String): Unit = { IndexState.compactAndSwap(spark, p, Retrieval.compactBm25Index(spark, p, _)); () }
+    val rebuilt = { val p = graft.util.TempDirs.scratch("log-crash-bm25-rebuild").toString; bm25.build(corpus(after), p); bm25.state(p) }
+    val before = bm25.state(build())
+    val reached = { val p = build(); pointsOf(compact(p)).map(_._1).filter(promotion) }
+    assert(reached == Seq("promote:staged", "promote:renamed", "promote:ready"), reached)
+    reached.foreach { point =>
+      val p = build()
+      crashAt(point)(compact(p))
+      // before the ready marker the previous generation is untouched; after
+      // it the compacted one reads the same rows (its impact caps are fresh)
+      val crashed = bm25.state(p)
+      val promoted = point == "promote:ready"
+      before.foreach { case (k, v) =>
+        if (!promoted || !driftsFromRebuild(k)) assert(crashed(k) == v, s"$point: $k changed by the crashed compaction")
+      }
+      assert(IndexState.currentGen(spark, p).isDefined == promoted, point)
+      compact(p)
+      bm25.state(p).foreach { case (k, v) =>
+        if (!driftsFromRebuild(k)) assert(v == rebuilt(k), s"$point: $k after the retried compaction differs from a rebuild")
+      }
+    }
+  }
+
   test("a probe racing mutations reads one log head, never a mix of two") {
     // each batch flips docs 1..6 between two texts: one fused commit
     // tombstones every old posting and appends every new one, so a probe
@@ -234,15 +264,18 @@ class IndexLogSpec extends SparkSpec {
   }
 
   /** Crash `mutate` on a fresh `build()` at each point it reaches: the crash
-    * changes nothing `state` shows, and the replay's state equals the
-    * uncrashed run's, which is returned. `state` counts rows, so a replay
-    * that also adopted the crashed run's files differs.
+    * changes nothing `state` shows — unless the point comes after the step
+    * that `published` the mutation, when the state is already the
+    * uncrashed run's — and the replay's state equals the uncrashed run's,
+    * which is returned. `state` counts rows, so a replay that also adopted
+    * the crashed run's files differs.
     */
   private def dedupCrashMatrix(
       build: () => String,
       mutate: String => Unit,
       state: String => Map[String, Any],
-      points: Set[String]
+      points: Set[String],
+      published: Set[String] = Set.empty
   ): Map[String, Any] = {
     val clean = { val p = build(); mutate(p); state(p) }
     val reached = { val p = build(); pointsOf(mutate(p)) }
@@ -252,7 +285,8 @@ class IndexLogSpec extends SparkSpec {
     reached.foreach { case (point, nth) =>
       val p = build()
       crashAt(point, nth)(mutate(p))
-      assert(state(p) == before, s"$point #$nth: a crash before the commit changed the index")
+      if (published(point)) assert(state(p) == clean, s"$point #$nth: a crash after the flip lost the mutation")
+      else assert(state(p) == before, s"$point #$nth: a crash before the commit changed the index")
       mutate(p)
       state(p).foreach { case (k, v) =>
         assert(v == clean(k), s"$point #$nth: $k after the replay differs from one delivery")
@@ -282,6 +316,11 @@ class IndexLogSpec extends SparkSpec {
     assert(clean("merges") == Map(Seq(10L, 5L, 3L) -> 1, Seq(20L, 5L, 3L) -> 1))
   }
 
+  /** The promotion steps of [[IndexState.compactAndSwap]]; only a crash
+    * after the ready marker leaves the compacted generation current.
+    */
+  private val promotion = Set("promote:staged", "promote:renamed", "promote:ready")
+
   test("crash matrix (cluster map compaction): a crashed compaction leaves the generation, the replay promotes") {
     // a chain 30 -> 20 -> 10: two pointers over four members
     val batches = Seq(Seq(30L, 31L) -> Seq((30L, 31L)), Seq(20L) -> Seq((20L, 31L)), Seq(10L) -> Seq((10L, 20L)))
@@ -291,8 +330,9 @@ class IndexLogSpec extends SparkSpec {
       batches.foreach { case (i, ps) => applyPairs(p, i, ps) }
       p
     }
-    val clean = dedupCrashMatrix(build, p => { assert(ClusterMap.maybeCompact(spark, p, maxMergeRatio = 0.2)); () },
-      clusterMapState, Set("write:members", "commit"))
+    // the replay after `promote:ready` finds nothing left to compact
+    val clean = dedupCrashMatrix(build, p => { ClusterMap.maybeCompact(spark, p, maxMergeRatio = 0.2); () },
+      clusterMapState, Set("write:members", "commit") ++ promotion, published = Set("promote:ready"))
     assert(clean("generation") == true && clean("merges") == Map.empty)
     assert(clean("assignments") == ccOf(batches.flatMap(_._2), batches.flatMap(_._1)))
   }
@@ -313,6 +353,20 @@ class IndexLogSpec extends SparkSpec {
       Set("write:keys", "commit"))
     assert(clean("keys").asInstanceOf[Map[Seq[Any], Int]].keySet ==
       rowsOf(SignatureIndex.bandKeys(stored.unionByName(arriving), "id", "text", m).select("id", "key")))
+  }
+
+  test("band keys refuse an id with two texts (the corpus plus an UPDATE of doc 2)") {
+    val m = SignatureIndex.Model(portable = false, shingleN = 3, bands = 8, rowsPerBand = 2,
+      threshold = 0.5, maxBucket = 1000, buckets = 4)
+    val stored = corpus(base).select("id", "text")
+    def keys(df: DataFrame) = rowsOf(SignatureIndex.bandKeys(df, "id", "text", m).select("id", "key"))
+    assert(keys(stored).count(_.head == 2L) == 8)
+    // merged, the two texts of doc 2 would key bands that match neither
+    val err = intercept[Exception](keys(stored.unionByName(Seq((2L, "window spark rewritten")).toDF("id", "text"))))
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("id 2 has two texts")), err)
+    // the same text twice is one document
+    assert(keys(stored.unionByName(stored.filter(col("id") === 2L))) == keys(stored))
   }
 
   test("a cluster map or signature index written before the log asks for a rebuild on apply and on read") {
